@@ -1,5 +1,6 @@
 package graft
 
+import graft.command.Json
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR
@@ -105,18 +106,13 @@ object Bench {
       }.sorted
       name -> times(times.length / 2)
     }
-    // Seconds at millisecond resolution: the timings carry ±30% shared-VM
-    // noise, so sub-ms digits are pure line width (the full-suite line was
-    // ~6 KB with 9 significant decimals, ~3.9 KB at 3).
-    def sec(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + sec(v) }
       .mkString("{", ",", "}")
-    val fj = failures.map { case (k, v) =>
-      "\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    }.mkString("{", ",", "}")
+    val fj = failures.map { case (k, v) => "\"" + k + "\":" + Json.escapeQ(v) }
+      .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val fullLine =
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":$qs,"failures":$fj,"reps":$reps,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":$qs,"failures":$fj,"reps":$reps,"sf":${Json.escapeQ(sfDir)}}"""
     println(fullLine)
     // The round driver stores only a ~2000-char tail of this process's
     // output, and the 163-entry line above never fits — every BENCH_r*.json
@@ -135,7 +131,18 @@ object Bench {
       System.err.println(s"[bench] per-query file write failed: ${e.getMessage}")
       ""
     }
-    println(s"""{"metric":"total","value":${sec(total)},"unit":"sec","nqueries":${results.size},"nfailures":${failures.size},"per_query_file":"$filePointer","reps":$reps,"sf":"$sfDir"}""")
+    println(summaryLine(total, results.size, failures.size, filePointer,
+      reps, sfDir))
     spark.stop()
   }
+
+  // Seconds at millisecond resolution: the timings carry ±30% shared-VM
+  // noise, so sub-ms digits are pure line width (the full-suite line was
+  // ~6 KB with 9 significant decimals, ~3.9 KB at 3).
+  private def sec(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** The short final line; the two paths are JSON-escaped. */
+  def summaryLine(total: Double, nqueries: Int, nfailures: Int,
+                  perQueryFile: String, reps: Int, sfDir: String): String =
+    s"""{"metric":"total","value":${sec(total)},"unit":"sec","nqueries":$nqueries,"nfailures":$nfailures,"per_query_file":${Json.escapeQ(perQueryFile)},"reps":$reps,"sf":${Json.escapeQ(sfDir)}}"""
 }

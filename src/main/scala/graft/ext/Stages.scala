@@ -70,21 +70,23 @@ object Stages {
     }
   }
 
+  /** Sequence number of each [[materialize]] call, shared by the explain
+    * files and the stage timings so both number a stage the same. */
+  private val stageSeq = new AtomicLong(0)
+
   /** Dev-only plan evidence hook (r16): `-Dgraft.stageExplainDir=<dir>`
     * writes each materialized stage's `.explain("formatted")` to
     * `<dir>/stage-NNN.txt` before it runs — the pipeline-internal plans
     * (x54/x57/x75 candidate stages…) are invisible in a final query's
     * explain because the checkpoint cuts the lineage. No cost when the
     * property is unset. */
-  private val explainCounter = new AtomicLong(0)
-  private def maybeExplain(df: DataFrame): Unit =
+  private def maybeExplain(df: DataFrame, n: Long): Unit =
     sys.props.get("graft.stageExplainDir").foreach { d =>
       val dir = java.nio.file.Paths.get(d)
       Files.createDirectories(dir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      Files.write(dir.resolve(
-        f"stage-${explainCounter.incrementAndGet()}%03d.txt"),
+      Files.write(dir.resolve(f"stage-$n%03d.txt"),
         txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
 
@@ -92,11 +94,11 @@ object Stages {
     * the stage-cut frame. Eager in all modes (the stage computes once,
     * here, not lazily per downstream consumer). */
   def materialize(df: DataFrame): DataFrame = {
-    maybeExplain(df)
+    val n = stageSeq.incrementAndGet()
+    maybeExplain(df, n)
     // Dev-only stage timing (r16): -Dgraft.stageTimeLog prints seconds per
     // materialized stage to stderr, numbered in step with stageExplainDir.
     if (sys.props.contains("graft.stageTimeLog")) {
-      val n = explainCounter.get()
       val t0 = System.nanoTime()
       val out = materialize0(df)
       System.err.println(

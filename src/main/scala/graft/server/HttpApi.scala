@@ -5,7 +5,7 @@ import graft.command.Json
 import graft.engine.GraftDb
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, TimeUnit}
 
 /** HTTP API in front of the engine — same surface as the reference's hyper
   * service (`http/src/service.rs:111-148`): `GET /ping` → "pong",
@@ -14,12 +14,30 @@ import java.util.concurrent.Executors
   * `DB::query` exists at `db/src/db.rs:223` with no route). Store access
   * serializes inside GraftDb's lock, the analog of the reference's global
   * `Arc<Mutex<store>>` (`http/src/service.rs:31`).
+  *
+  * Every accepted connection gets `TCP_NODELAY`. The JDK server flushes the
+  * response headers in `sendResponseHeaders` and [[respond]] then writes
+  * the body as a second small segment; with Nagle's algorithm on, that
+  * body waits for the client's ACK of the headers, which a delayed-ACK
+  * client holds for ~40 ms. On a kept-alive connection every response
+  * paid that stall (44 ms per ping or single-row INSERT, against ~0.3 ms
+  * of engine work). The switch is the JDK's own property
+  * `sun.net.httpserver.nodelay`, set here unless the operator already set
+  * it. Caveat: the JDK reads it once per JVM, when the first
+  * `HttpServer.create` initializes its server config, so a
+  * `com.sun.net.httpserver` server created elsewhere in the JVM before the
+  * first `HttpApi` fixes the setting for every later server
+  * (HttpApiSpec's keep-alive latency test fails if that happens).
   */
 final class HttpApi(db: GraftDb, port: Int = 0, threads: Int = 4,
                     cluster: Option[graft.engine.ClusterControl] = None) {
 
+  System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
-  server.setExecutor(Executors.newFixedThreadPool(threads))
+  // Default thread names (pool-N-thread-M) are kept on purpose: perfbench
+  // finds the request threads by that prefix.
+  private val pool = Executors.newFixedThreadPool(threads)
+  server.setExecutor(pool)
 
   server.createContext("/", new HttpHandler {
     override def handle(ex: HttpExchange): Unit = {
@@ -103,7 +121,13 @@ final class HttpApi(db: GraftDb, port: Int = 0, threads: Int = 4,
   }
 
   def start(): Unit = server.start()
-  def stop(): Unit = server.stop(0)
+  /** Stops accepting, then retires the request threads: handlers already
+    * running get up to 5 s to finish before this returns. */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    pool.awaitTermination(5, TimeUnit.SECONDS)
+  }
   /** Bound port (use port=0 in tests — same trick as the reference's
     * ephemeral-port tests, `http/src/service.rs:104-108`). */
   def listeningPort: Int = server.getAddress.getPort

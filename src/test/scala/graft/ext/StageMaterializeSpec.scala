@@ -58,4 +58,16 @@ class StageMaterializeSpec extends SparkSpec {
       }
     }
   }
+
+  test("stage timings are numbered without stageExplainDir") {
+    val buf = new java.io.ByteArrayOutputStream()
+    val err = System.err
+    sys.props("graft.stageTimeLog") = "1"
+    System.setErr(new java.io.PrintStream(buf, true))
+    try (1 to 2).foreach(_ => Stages.materialize(spark.range(3).toDF()))
+    finally { System.setErr(err); sys.props -= "graft.stageTimeLog" }
+    val ns = """\[stage (\d+)\]""".r.findAllMatchIn(buf.toString)
+      .map(_.group(1).toInt).toSeq
+    assert(ns.size == 2 && ns.head > 0 && ns(1) == ns.head + 1, buf.toString)
+  }
 }

@@ -2,8 +2,11 @@ package graft.server
 
 import graft.SparkSpec
 import graft.engine.GraftDb
-import java.net.URI
+import java.io.{BufferedInputStream, ByteArrayOutputStream}
+import java.net.{Socket, URI}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
 
 /** Service-level tests over a real socket on an ephemeral port — mirrors
   * the reference's hyper tests (/root/reference/http/src/service.rs:222-316)
@@ -180,5 +183,90 @@ class HttpApiSpec extends SparkSpec {
       assert(w.statusCode() == 400 &&
         w.body().contains("read statements only"))
     } finally { api.stop(); db.close() }
+  }
+
+  /** A bare HTTP/1.1 client on one kept-alive socket. Each request goes out
+    * in a single write, as a pooled client sends it; the reply is read by
+    * its Content-length. */
+  private final class RawConn(port: Int) {
+    private val sock = new Socket("127.0.0.1", port)
+    sock.setTcpNoDelay(true)
+    sock.setSoTimeout(10000)
+    private val in = new BufferedInputStream(sock.getInputStream)
+
+    def request(method: String, path: String, body: String = ""): (Int, String) = {
+      val b = body.getBytes(UTF_8)
+      sock.getOutputStream.write((s"$method $path HTTP/1.1\r\nHost: localhost\r\n" +
+        s"Content-Length: ${b.length}\r\n\r\n").getBytes(UTF_8) ++ b)
+      val status = line().split(" ")(1).toInt
+      var len = 0
+      var h = line()
+      while (h.nonEmpty) {
+        val Array(k, v) = h.split(":", 2)
+        if (k.trim.equalsIgnoreCase("content-length")) len = v.trim.toInt
+        h = line()
+      }
+      (status, new String(in.readNBytes(len), UTF_8))
+    }
+
+    private def line(): String = {
+      val buf = new ByteArrayOutputStream()
+      var c = in.read()
+      while (c != '\n') {
+        if (c < 0) throw new java.io.EOFException("connection closed")
+        if (c != '\r') buf.write(c)
+        c = in.read()
+      }
+      buf.toString(UTF_8)
+    }
+
+    def close(): Unit = sock.close()
+  }
+
+  test("kept-alive connection answers without the Nagle/delayed-ACK stall") {
+    withServer { (_, base) =>
+      val conn = new RawConn(URI.create(base).getPort)
+      try {
+        assert(conn.request("POST", "/db/execute",
+          """{"request":{"transaction":false,"statements":[
+            {"sql":"CREATE TABLE t (id INTEGER PRIMARY KEY, v TEXT)"}]}}""")._1 == 200)
+        def timed(f: => (Int, String)): (Double, (Int, String)) = {
+          val t0 = System.nanoTime()
+          val r = f
+          ((System.nanoTime() - t0) / 1e6, r)
+        }
+        val pings = (1 to 20).map(_ => timed(conn.request("GET", "/ping")))
+        val inserts = (1 to 20).map(i => timed(conn.request("POST", "/db/execute",
+          s"""{"request":{"transaction":false,"statements":[
+            {"sql":"INSERT INTO t(v) VALUES('r$i')"}]}}""")))
+        assert(pings.forall(_._2 == (200, "pong")))
+        assert(inserts.map(_._2) == (1 to 20).map(i =>
+          (200, s"""[{"last_insert_id":$i,"rows_affected":1}]""")))
+        def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+        val (ping, insert) = (median(pings.map(_._1)), median(inserts.map(_._1)))
+        // With Nagle on, each response's body waits ~40 ms for the
+        // client's delayed ACK of the headers: both medians were 44 ms.
+        assert(ping < 20, f"median ping $ping%.1f ms")
+        assert(insert < 20, f"median insert $insert%.1f ms")
+      } finally conn.close()
+    }
+  }
+
+  test("stop() retires the request pool's threads") {
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(_.getName.startsWith("pool-"))
+    val before = poolThreads
+    val api = new HttpApi(GraftDb.openInMemory(spark), port = 0)
+    api.start()
+    val c = HttpClient.newHttpClient()
+    (1 to 8).foreach { _ =>
+      assert(get(c, s"http://127.0.0.1:${api.listeningPort}/ping").body() == "pong")
+    }
+    val started = poolThreads -- before
+    assert(started.nonEmpty)
+    api.stop()
+    started.foreach(_.join(5000))
+    assert(started.forall(!_.isAlive),
+      s"alive after stop(): ${started.filter(_.isAlive).map(_.getName)}")
   }
 }
