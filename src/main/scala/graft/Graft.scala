@@ -86,7 +86,11 @@ object Graft {
   def dedupGroups(spark: SparkSession, dir: String): DataFrame =
     ext.Dedup.componentsQuery(spark, dir)
 
-  /** Min-label-propagation connected components over any pair graph. */
+  /** Min-label-propagation connected components over any pair graph.
+    * Output is one `id, label` row per distinct vertex: duplicate `nodes`
+    * ids are deduplicated, and a vertex found only in `edges` appears once
+    * its component holds a vertex of `nodes` (pass every vertex in `nodes`
+    * — see [[ext.Components.minLabelPropagation]]). */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           srcCol: String, dstCol: String,
                           maxIters: Int = 50): DataFrame =

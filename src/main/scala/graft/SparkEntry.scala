@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.command.Parameter
 import graft.engine.SqlText
 import graft.operators.Queries
-import graft.ext.{Dedup, Extensions, Multimodal, Similarity}
+import graft.ext.{CorpusGraph, Dedup, Extensions, Multimodal, Similarity}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -42,8 +42,22 @@ object SparkEntry {
       |  FROM s) t
       |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
 
+  /** x104/x105/x109: the declared CTE that re-derives a corpus-graph
+    * stage is bound to the session-shared one ([[CorpusGraph]]), so the
+    * three rows in one session derive each stage once. */
+  private val sharedStages =
+    Map[String, (SparkSession, String) => Map[String, DataFrame]](
+      "x104_overlap_matrix" -> ((s, d) => Map("f" -> CorpusGraph.docFp(s, d))),
+      "x105_pagerank" ->
+        ((s, d) => Map("pairs" -> CorpusGraph.mirrorPairs(s, d))),
+      "x109_triangles" ->
+        ((s, d) => Map("e" -> CorpusGraph.mirrorPairs(s, d).toDF("u", "v")))
+    ).withDefaultValue(
+      (_: SparkSession, _: String) => Map.empty[String, DataFrame])
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    sqlBacked.map(q => q.name -> Tables.sql(q.spark)).toMap ++ Map(
+    sqlBacked.map(q => q.name ->
+      Tables.sql(q.spark, q.materialize, sharedStages(q.name))).toMap ++ Map(
       // overrides the SQL-text variant in Extensions: same oracle, but the
       // unigram side runs on dictionary-encoded bitset masks (see Scaladoc)
       "x54_ngram_jaccard" -> ((s: SparkSession, d: String) => Dedup.ngramJaccard(s, d)),
@@ -210,53 +224,6 @@ object SparkEntry {
       // value-identical to x76 and shares its DuckDB twin. See ext/Decontam.
       "x95_bloom_decontam" -> ((s: SparkSession, d: String) =>
         graft.ext.Decontam.bloomDecontamQuery(s, d)),
-      // x114: overrides the SQL-text variant — same oracle, but the
-      // 5-gram stream materializes ONCE for its two consumers instead of
-      // being recomputed per CTE reference (see Extensions.boilerplateQuery)
-      "x114_boilerplate" -> ((s: SparkSession, d: String) =>
-        Extensions.boilerplateQuery(s, d)),
-      // x110: overrides the SQL-text variant — same oracle, but the
-      // DISTINCT basket stream materializes ONCE for its four consumers
-      // instead of being recomputed per CTE reference (r16; see
-      // Extensions.assocRulesQuery)
-      "x110_assoc_rules" -> ((s: SparkSession, d: String) =>
-        Extensions.assocRulesQuery(s, d)),
-      // x98: overrides the SQL-text variant — same oracle, but the fused
-      // vocabulary aggregate materializes ONCE for its three consumers
-      // (r16; see Extensions.dsirSampleQuery)
-      "x98_dsir_sample" -> ((s: SparkSession, d: String) =>
-        Extensions.dsirSampleQuery(s, d)),
-      // x78/x106: override the SQL-text variants — same oracles, but the
-      // vocabulary (and x106's bigram stream) materialize ONCE instead of
-      // re-deriving the corpus explode per CTE reference (r16; see
-      // Extensions.unigramLmQuery / bigramLmQuery)
-      "x78_unigram_lm" -> ((s: SparkSession, d: String) =>
-        Extensions.unigramLmQuery(s, d)),
-      "x106_bigram_lm" -> ((s: SparkSession, d: String) =>
-        Extensions.bigramLmQuery(s, d)),
-      // x79/x85: same pattern — the (doc, token, tf) frame / the two
-      // count vocabularies materialize once, and x85's bigrams come from
-      // the map-only word_ngrams kernel instead of a per-doc lead window
-      // (r16; see Extensions.tfidfQuery / collocationsQuery)
-      "x79_tfidf" -> ((s: SparkSession, d: String) =>
-        Extensions.tfidfQuery(s, d)),
-      "x85_collocations" -> ((s: SparkSession, d: String) =>
-        Extensions.collocationsQuery(s, d)),
-      // x105: host-graph PageRank over the mirror graph (edge = two
-      // sources serving word-set-identical docs); 5 damped iterations on
-      // integer-quantized contributions so both engines carry identical
-      // trajectories. See ext/Rank.
-      "x105_pagerank" -> ((s: SparkSession, d: String) =>
-        graft.ext.Rank.hostRankQuery(s, d)),
-      // x104/x109: override the SQL-text variants in Extensions — same
-      // oracles, but the fingerprint frame (x104) and the mirror-edge set
-      // (x109, = x105's) come from the session shared-stage registry, so
-      // running the three graph rows in one session derives each
-      // corpus-scale stage once. See ext/CorpusGraph.
-      "x104_overlap_matrix" -> ((s: SparkSession, d: String) =>
-        graft.ext.CorpusGraph.overlapMatrixQuery(s, d)),
-      "x109_triangles" -> ((s: SparkSession, d: String) =>
-        graft.ext.CorpusGraph.trianglesQuery(s, d)),
       // q86: interval overlap self-join — every pair of same-user events
       // whose 5-minute windows overlap, via the time-banded equi-join in
       // operators/IntervalJoin (the q56 banding idea on the time axis);
@@ -621,7 +588,6 @@ object SparkEntry {
       ("x95_bloom_decontam" ->
         Extensions.all.find(_.name == "x76_decontam").get.duck) +
       ("x100_bpe_encode" -> graft.ext.Bpe.encodeDuck) +
-      ("x105_pagerank" -> graft.ext.Rank.duckSql) +
       ("q86_interval_join" ->
         """SELECT a.user_id, a.event_id AS id_a, b.event_id AS id_b
           |FROM events a JOIN events b

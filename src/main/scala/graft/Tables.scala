@@ -167,11 +167,15 @@ object Tables {
     * lookup when already installed) so SQL-text queries can use the
     * codegen kernels (word_ngrams, graft_levenshtein, ...) — this is the
     * ANALYTICS session path only; the OLTP engine's private session keeps
-    * its closed SQLite-parity registry. */
-  def sql(q: String): (SparkSession, String) => DataFrame =
+    * its closed SQLite-parity registry. The CTEs named in `materialize`
+    * are computed once and `bind` supplies CTE bodies from session frames
+    * (see [[graft.ext.Stages.sql]]). */
+  def sql(q: String, materialize: Seq[String] = Nil,
+          bind: (SparkSession, String) => Map[String, DataFrame] =
+            (_, _) => Map.empty): (SparkSession, String) => DataFrame =
     (spark, dir) => {
       graft.functions.GraftFunctions.register(spark)
       ensure(spark, dir)
-      spark.sql(q)
+      graft.ext.Stages.sql(spark, q, materialize, bind(spark, dir))
     }
 }

@@ -1,20 +1,6 @@
 package graft.engine
 
-import graft.command.{Request, Response, RowsResult}
 import org.apache.spark.sql.SparkSession
-
-/** The store seam between the API layer and the engine — the analog of the
-  * reference's `store::Database` / `store::RaftControl` traits
-  * (`store/src/lib.rs:7-28` in /root/reference), which there have no
-  * production implementation (only a test mock). Here both sides are real:
-  * [[GraftDb]] implements [[Database]], and [[SparkClusterControl]] maps
-  * the membership surface onto Spark's own cluster manager (dynamic
-  * executor membership replaces Raft conf-change — SURVEY.md §2.1 A16).
-  */
-trait Database {
-  def execute(req: Request): Either[String, Seq[Response]]
-  def query(req: Request): Either[String, Seq[RowsResult]]
-}
 
 /** Read-consistency level for queries (rqlite's none/weak/strong vocabulary;
   * SURVEY §3.2 maps them onto snapshot-version selection — see the
@@ -32,27 +18,17 @@ object ReadLevel {
   }
 }
 
+/** The cluster surface `/status` reports — the analog of the reference's
+  * `store::RaftControl` (`store/src/lib.rs:7-28`). Membership itself
+  * (the reference's join/remove, Raft conf-change) is owned by Spark's
+  * resource manager (dynamic executor membership — SURVEY.md §2.1 A16),
+  * so only the read side exists here. */
 trait ClusterControl {
-  /** The reference's join/remove mutate Raft membership; on Spark the
-    * resource manager owns membership, so these are diagnostics. */
-  def join(nodeId: String, addr: String): Either[String, Unit]
-  def remove(nodeId: String): Either[String, Unit]
   def leaderId: String
   def members: Seq[String]
 }
 
-final class DbStore(db: GraftDb) extends Database {
-  override def execute(req: Request): Either[String, Seq[Response]] =
-    db.execute(req)
-  override def query(req: Request): Either[String, Seq[RowsResult]] =
-    db.query(req)
-}
-
 final class SparkClusterControl(spark: SparkSession) extends ClusterControl {
-  override def join(nodeId: String, addr: String): Either[String, Unit] =
-    Left("cluster membership is managed by the Spark resource manager")
-  override def remove(nodeId: String): Either[String, Unit] =
-    Left("cluster membership is managed by the Spark resource manager")
   /** The Spark driver plays the leader role (single writer, owns the plan). */
   override def leaderId: String = spark.sparkContext.applicationId
   override def members: Seq[String] = {

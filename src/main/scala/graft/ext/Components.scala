@@ -61,7 +61,16 @@ object Components {
                         b: java.math.BigDecimal): Boolean =
     (a == null && b == null) || (a != null && b != null && a.compareTo(b) == 0)
 
-  /** @param nodes one column `id` (every vertex, including singletons)
+  /** Vertices that appear only in `edges` are not filtered out: such a
+    * vertex gets a row once its component holds a vertex of `nodes` (a
+    * component made only of edge-only vertices gets none). The label-sum
+    * convergence test is exact only when every vertex is in `nodes`: a
+    * row added in the same round as an equal label drop leaves the sum
+    * unchanged, so an edge-only vertex can end with a label that is not
+    * its component's minimum. Pass every vertex in `nodes`. Duplicate
+    * `nodes` ids are deduplicated: every id appears once in the output.
+    *
+    * @param nodes one column `id` (every vertex, including singletons)
     * @param edges two columns (undirected pairs; symmetrized internally)
     * @return `id, label` where label = min id reachable (component id)
     */

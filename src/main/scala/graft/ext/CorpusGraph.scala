@@ -10,8 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Both stages go through [[Stages.shared]], so a session running several
   * of these operators over one corpus pays the corpus-scale derivation
-  * once; each row's VALUE is unchanged (its DuckDB twin still re-derives
-  * everything from raw text — the hash compare pins the equivalence).
+  * once. Each row runs its declared SQL with the CTE that re-derives a
+  * stage bound to the shared one (`SparkEntry`, [[Stages.sql]]); its
+  * VALUE is unchanged (its DuckDB twin still re-derives everything from
+  * raw text — the hash compare pins the equivalence).
   *
   * Scale shape (unchanged from the inlined forms): the fingerprint frame
   * is one map-only pass over `documents`; the mirror-pair stage is one
@@ -50,42 +52,12 @@ object CorpusGraph {
   def mirrorPairs(spark: SparkSession, dir: String): DataFrame = {
     val fp = docFp(spark, dir)
     Stages.shared(spark, "mirrorPairs") {
-      fp.createOrReplaceTempView("__graft_fp_mp")
-      val out = Stages.materialize(spark.sql(
+      Stages.materialize(Stages.sql(spark,
         """SELECT DISTINCT LEAST(a.source, b.source) AS s1,
           |       GREATEST(a.source, b.source) AS s2
-          |FROM __graft_fp_mp a JOIN __graft_fp_mp b
+          |FROM f a JOIN f b
           |  ON a.fp = b.fp AND a.doc_id < b.doc_id
-          | AND a.source <> b.source""".stripMargin))
-      spark.catalog.dropTempView("__graft_fp_mp")
-      out
+          | AND a.source <> b.source""".stripMargin, bind = Map("f" -> fp)))
     }
-  }
-
-  /** x104: per-(lang, lang) duplicate pairs and distinct duplicate groups
-    * — the cross-source contamination report, now reading the shared
-    * fingerprint stage. */
-  def overlapMatrixQuery(spark: SparkSession, dir: String): DataFrame = {
-    docFp(spark, dir).createOrReplaceTempView("__graft_fp")
-    spark.sql(
-      """WITH p AS (SELECT LEAST(a.lang, b.lang) AS lang_a,
-        |        GREATEST(a.lang, b.lang) AS lang_b, a.fp
-        |      FROM __graft_fp a JOIN __graft_fp b
-        |        ON a.fp = b.fp AND a.doc_id < b.doc_id)
-        |SELECT lang_a, lang_b, CAST(COUNT(*) AS BIGINT) AS dup_pairs,
-        |       CAST(COUNT(DISTINCT fp) AS BIGINT) AS dup_groups
-        |FROM p GROUP BY lang_a, lang_b ORDER BY lang_a, lang_b""".stripMargin)
-  }
-
-  /** x109: oriented two-paths (a<b<c) over the shared mirror-edge set,
-    * closed with a semi-probe back onto the edges. */
-  def trianglesQuery(spark: SparkSession, dir: String): DataFrame = {
-    mirrorPairs(spark, dir).createOrReplaceTempView("__graft_mirror_e")
-    spark.sql(
-      """WITH e AS (SELECT s1 AS u, s2 AS v FROM __graft_mirror_e),
-        |t AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
-        |      FROM e e1 JOIN e e2 ON e1.v = e2.u
-        |                JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v)
-        |SELECT a, b, c FROM t ORDER BY a, b, c""".stripMargin)
   }
 }

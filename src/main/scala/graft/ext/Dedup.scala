@@ -959,16 +959,15 @@ object Dedup {
     * usually the most complete one). One join of the component labels to
     * per-doc token counts + one keyed window (WindowGroupLimit-prunable);
     * everything upstream is x75's scale story. */
-  def keepBestQuery(spark: SparkSession, dir: String): DataFrame = {
-    componentsQuery(spark, dir).createOrReplaceTempView("__x108_comp")
-    spark.sql(
+  def keepBestQuery(spark: SparkSession, dir: String): DataFrame =
+    Stages.sql(spark,
       """WITH q AS (SELECT doc_id,
         |             size(array_remove(split(LOWER(text), ' '), '')) AS ntoks
         |           FROM documents)
         |SELECT c.doc_id, c.comp, CAST(q.ntoks AS INT) AS ntoks,
         |  ROW_NUMBER() OVER (PARTITION BY c.comp
         |                     ORDER BY q.ntoks DESC, c.doc_id) = 1 AS keep
-        |FROM __x108_comp c JOIN q ON c.doc_id = q.doc_id
-        |ORDER BY c.doc_id""".stripMargin)
-  }
+        |FROM comp c JOIN q ON c.doc_id = q.doc_id
+        |ORDER BY c.doc_id""".stripMargin,
+      bind = Map("comp" -> componentsQuery(spark, dir)))
 }

@@ -147,7 +147,8 @@ object Extensions {
     // construction), then aggregates on |types|² keys. All ratios are
     // integer-count divisions FLOOR-half-up-rounded at 6dp (the q77/x94
     // idiom), so both engines render identical values. The basket count
-    // rides in as a scalar subquery, not a cross join.
+    // rides in as a scalar subquery, not a cross join. The driver
+    // materializes the basket stream `b` once for its four references.
     Q.same("x110_assoc_rules",
       """WITH b AS (SELECT DISTINCT user_id,
         |             CAST(date_trunc('day', ts) AS DATE) AS d, event_type
@@ -171,7 +172,8 @@ object Extensions {
         |       / 1000000.0 AS DECIMAL(18,6)) AS DOUBLE) AS lift
         |FROM p JOIN i ia ON p.ante = ia.event_type
         |       JOIN i ic ON p.cons = ic.event_type
-        |ORDER BY ante, cons""".stripMargin),
+        |ORDER BY ante, cons""".stripMargin,
+      materialize = Seq("b")),
 
     // x111 per-document novelty scoring — what fraction of each doc's
     // distinct word 3-grams first appear IN that doc (first = smallest
@@ -283,34 +285,34 @@ object Extensions {
     // by gram hits × 5) → one anti-join on (doc, position) → per-doc
     // agg. Every join is keyed; the boilerplate set is df-thresholded so
     // it is tiny and broadcastable at any corpus size.
+    // Spark side: grams come from the word_ngrams kernel and the 5-gram
+    // stream `pos` materializes once for its two consumers (the df
+    // aggregate and the matched-position collect). Everything after the
+    // df-threshold decision is a pure function of (doc's tokens, its
+    // matched gram starts), so the covered-position explode, the
+    // token-position anti-join and the per-doc sort-collect md5 are one
+    // map-side boilerplate_strip call per doc (value parity with that
+    // shape pinned in BoilerplateSpec; the DuckDB twin keeps it).
     Q("x114_boilerplate",
       """WITH toks AS (SELECT doc_id, source,
         |                array_remove(split(LOWER(text), ' '), '') AS tk
         |              FROM documents),
-        |pos AS (SELECT doc_id, source, p + 1 AS i,
-        |          concat_ws(' ', element_at(tk, p + 1), element_at(tk, p + 2),
-        |                    element_at(tk, p + 3), element_at(tk, p + 4),
-        |                    element_at(tk, p + 5)) AS gram
-        |        FROM (SELECT doc_id, source, tk,
-        |                posexplode(sequence(1, size(tk) - 4)) AS (p, _i)
-        |              FROM toks WHERE size(tk) >= 5)),
+        |pos AS (SELECT doc_id, source, p + 1 AS i, gram
+        |        FROM toks
+        |        LATERAL VIEW posexplode(word_ngrams(tk, 5)) AS p, gram),
         |bp AS (SELECT source, gram
         |       FROM (SELECT source, gram, COUNT(DISTINCT doc_id) AS df
         |             FROM pos GROUP BY source, gram)
         |       WHERE df >= 10),
-        |cover AS (SELECT DISTINCT p.doc_id, explode(sequence(p.i, p.i + 4)) AS j
-        |          FROM pos p JOIN bp b ON p.source = b.source AND p.gram = b.gram),
-        |tokpos AS (SELECT doc_id, source, p + 1 AS j, tok
-        |           FROM (SELECT doc_id, source, posexplode(tk) AS (p, tok)
-        |                 FROM toks)),
-        |kept AS (SELECT t.doc_id, t.j, t.tok
-        |         FROM tokpos t LEFT JOIN cover c
-        |           ON t.doc_id = c.doc_id AND t.j = c.j
-        |         WHERE c.doc_id IS NULL)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS kept_toks,
-        |  md5(CAST(array_join(sort_array(collect_list(
-        |    concat(tok, ':', CAST(j AS STRING)))), ' ') AS BINARY)) AS clean_fp
-        |FROM kept GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |mi AS (SELECT p.doc_id, collect_list(p.i) AS mpos
+        |       FROM pos p JOIN bp b ON p.source = b.source AND p.gram = b.gram
+        |       GROUP BY p.doc_id),
+        |s AS (SELECT t.doc_id,
+        |        boilerplate_strip(t.tk,
+        |          COALESCE(m.mpos, CAST(array() AS ARRAY<INT>))) AS st
+        |      FROM toks t LEFT JOIN mi m ON t.doc_id = m.doc_id)
+        |SELECT doc_id, st.kept_toks AS kept_toks, st.clean_fp AS clean_fp
+        |FROM s WHERE st IS NOT NULL ORDER BY doc_id""".stripMargin,
       """WITH toks AS (SELECT doc_id, source,
         |                list_filter(string_split(LOWER(text), ' '), t -> t <> '') AS tk
         |              FROM documents),
@@ -334,7 +336,8 @@ object Extensions {
         |         WHERE c.doc_id IS NULL)
         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS kept_toks,
         |  md5(array_to_string(list_sort(list(tok || ':' || CAST(j AS VARCHAR))), ' ')) AS clean_fp
-        |FROM kept GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+        |FROM kept GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+      materialize = Seq("pos")),
 
     // x115 stratified K-fold assignment — the cross-validation split an
     // eval pipeline needs with EXACT per-stratum balance: rank docs
@@ -1002,12 +1005,15 @@ object Extensions {
     // aggregation is exact and order-independent — the established suite
     // pattern for cross-engine FP aggregation (a double SUM would be
     // shuffle-order-dependent in the last ulp).
+    // Spark side: the vocabulary `v` materializes once and the token total
+    // n is its SUM (≡ COUNT(*) of the stream, exact), so the corpus explode
+    // runs once for `v` and once for the scoring join.
     Q("x78_unigram_lm",
       """WITH t AS (SELECT doc_id,
         |             explode(array_remove(split(LOWER(text), ' '), '')) AS tok
         |           FROM documents),
         |v AS (SELECT tok, CAST(COUNT(*) AS DOUBLE) AS c FROM t GROUP BY tok),
-        |n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nn FROM t),
+        |n AS (SELECT CAST(SUM(c) AS DOUBLE) AS nn FROM v),
         |s AS (SELECT t.doc_id, COUNT(*) AS ntoks,
         |        SUM(CAST(ROUND(LN(v.c / n.nn), 5) AS DECIMAL(18,5))) AS slp
         |      FROM t JOIN v ON t.tok = v.tok CROSS JOIN n
@@ -1026,22 +1032,27 @@ object Extensions {
         |      GROUP BY t.doc_id)
         |SELECT doc_id, CAST(ntoks AS BIGINT) AS ntoks,
         |  CAST(CAST(FLOOR(CAST(slp AS DOUBLE) / ntoks * 10000.0 + 0.5) / 10000.0 AS DECIMAL(18,4)) AS DOUBLE) AS logp
-        |FROM s ORDER BY doc_id""".stripMargin),
+        |FROM s ORDER BY doc_id""".stripMargin,
+      materialize = Seq("v")),
 
     // x79 TF-IDF keyword extraction — top-3 terms per doc (tagging /
     // retrieval-feature step). tf and df are two hash aggregates shuffled
     // on (doc, token) / token; the per-doc top-3 runs through the rank
     // window WindowGroupLimit prunes. Tie-break on the token makes the
     // winners unique, so the rows hash-compare.
+    // Spark side: the (doc, token, tf) frame materializes once; df and the
+    // doc count derive from it (one tf row per (doc, token), so COUNT(*)
+    // per token ≡ COUNT(DISTINCT doc_id) over the stream): one corpus
+    // explode instead of three.
     Q("x79_tfidf",
       """WITH t AS (SELECT doc_id,
         |             explode(array_remove(split(LOWER(text), ' '), '')) AS tok
         |           FROM documents),
         |tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS DOUBLE) AS tf
         |       FROM t GROUP BY doc_id, tok),
-        |df AS (SELECT tok, CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS df
-        |       FROM t GROUP BY tok),
-        |n AS (SELECT CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS nd FROM t),
+        |df AS (SELECT tok, CAST(COUNT(*) AS DOUBLE) AS df
+        |       FROM tf GROUP BY tok),
+        |n AS (SELECT CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS nd FROM tf),
         |s AS (SELECT tf.doc_id, tf.tok,
         |        tf.tf * LN((n.nd + 1.0) / (df.df + 1.0)) AS score
         |      FROM tf JOIN df ON tf.tok = df.tok CROSS JOIN n),
@@ -1069,7 +1080,8 @@ object Extensions {
         |      FROM s)
         |SELECT doc_id, CAST(rn AS INT) AS rn, tok,
         |  CAST(CAST(ROUND(score, 4) AS DECIMAL(18,4)) AS DOUBLE) AS score
-        |FROM w WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin),
+        |FROM w WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin,
+      materialize = Seq("tf")),
 
     // x84 (B54/B71) edit-distance verify for fuzzy dedup: candidate pairs
     // come from the x52 bag-of-words fingerprint (word-SET-equal docs —
@@ -1113,21 +1125,22 @@ object Extensions {
     // set, which at a real vocabulary is millions of surviving bigrams);
     // the rn window then runs over the 20 survivors only. Support floor
     // c2 ≥ 5 bounds the ranked set. Bigrams never cross doc boundaries
-    // (per-doc lead window / per-doc comprehension). At 100 TB: two count
-    // shuffles (bigram, token) + a broadcast of the two scalar totals.
+    // (per-doc word_ngrams kernel / per-doc comprehension). At 100 TB: two
+    // count shuffles (bigram, token) + a broadcast of the two scalar
+    // totals. Spark side: the two count vocabularies c1 and cb
+    // materialize once each, and the totals are their SUMs (≡ the stream
+    // COUNT(*)s, exact BIGINT).
     Q("x85_collocations",
-      """WITH tp AS (SELECT doc_id, pos, tok
-        |  FROM (SELECT doc_id, array_remove(split(LOWER(text), ' '), '') AS toks
-        |        FROM documents)
-        |  LATERAL VIEW posexplode(toks) AS pos, tok),
-        |bg AS (SELECT tok AS w1,
-        |         lead(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-        |       FROM tp),
-        |b2 AS (SELECT w1, w2 FROM bg WHERE w2 IS NOT NULL),
-        |cb AS (SELECT w1, w2, COUNT(*) AS c2 FROM b2 GROUP BY w1, w2),
-        |c1 AS (SELECT tok, COUNT(*) AS c1 FROM tp GROUP BY tok),
-        |tot AS (SELECT (SELECT COUNT(*) FROM tp) AS n,
-        |               (SELECT COUNT(*) FROM b2) AS m),
+      """WITH d AS (SELECT array_remove(split(LOWER(text), ' '), '') AS toks
+        |      FROM documents),
+        |c1 AS (SELECT tok, COUNT(*) AS c1
+        |       FROM (SELECT explode(toks) AS tok FROM d) GROUP BY tok),
+        |cb AS (SELECT substring_index(g, ' ', 1) AS w1,
+        |              substring_index(g, ' ', -1) AS w2, COUNT(*) AS c2
+        |       FROM (SELECT explode(word_ngrams(toks, 2)) AS g FROM d)
+        |       GROUP BY w1, w2),
+        |tot AS (SELECT (SELECT SUM(c1) FROM c1) AS n,
+        |               (SELECT SUM(c2) FROM cb) AS m),
         |s AS (SELECT concat_ws(' ', cb.w1, cb.w2) AS bigram, cb.c2,
         |        (CAST(cb.c2 AS DOUBLE) * CAST(tot.n AS DOUBLE)
         |           * CAST(tot.n AS DOUBLE))
@@ -1170,7 +1183,8 @@ object Extensions {
         |SELECT CAST(rn AS INT) AS rn, bigram, CAST(c2 AS BIGINT) AS c2,
         |  CAST(CAST(FLOOR(lift * 10000.0 + 0.5) / 10000.0
         |       AS DECIMAL(18,4)) AS DOUBLE) AS lift
-        |FROM w ORDER BY rn""".stripMargin),
+        |FROM w ORDER BY rn""".stripMargin,
+      materialize = Seq("c1", "cb")),
 
     // x86 (B54/B73) URL parsing + domain blocklist — the web-corpus
     // curation step that drops blocklisted domains before the per-domain
@@ -1542,7 +1556,9 @@ object Extensions {
     // scan+explode+aggregate AND the src⟕tgt join; COALESCE(g.c, 0) ≡ the
     // conditional count (0 when the token never appears with lang='en'),
     // nt ≡ SUM of that column, so every lr double is bit-identical — the
-    // unchanged DuckDB twin (still the two-aggregate shape) pins it.
+    // unchanged DuckDB twin (still the two-aggregate shape) pins it. The
+    // driver materializes the fused vocabulary `src` once for its three
+    // consumers.
     Q("x98_dsir_sample",
       """WITH t AS (SELECT doc_id, lang,
         |             explode(array_remove(split(LOWER(text), ' '), '')) AS tok
@@ -1604,7 +1620,8 @@ object Extensions {
         |  u16,
         |  CAST(u16 AS BIGINT) * 10000
         |    < CAST(FLOOR(10000.0 / (1.0 + EXP(-score)) + 0.5) AS BIGINT) * 65536 AS sampled
-        |FROM f ORDER BY doc_id""".stripMargin),
+        |FROM f ORDER BY doc_id""".stripMargin,
+      materialize = Seq("src")),
 
     // x99 text normalization — the canonical pre-dedup canonicalization
     // pass (lowercase, strip non-alphanumerics, collapse whitespace) every
@@ -1677,7 +1694,10 @@ object Extensions {
     // partial aggregation collapses almost everything map-side), two
     // equi-joins back to the position stream, one per-doc sum. The log
     // terms ROUND→DECIMAL before summing (the x78 order-independence
-    // idiom).
+    // idiom). The driver materializes the vocabulary `u` and the bigram
+    // position stream `bp` once each; inlined, each is re-derived per
+    // reference (22 exchanges / 3 corpus scans,
+    // plans/r16/x106_bigram_lm_before.txt).
     Q("x106_bigram_lm",
       """WITH t AS (SELECT doc_id, array_remove(split(LOWER(text), ' '), '') AS tk
         |           FROM documents),
@@ -1722,7 +1742,8 @@ object Extensions {
         |      GROUP BY bp.doc_id)
         |SELECT doc_id, CAST(npairs AS BIGINT) AS npairs,
         |  CAST(CAST(FLOOR(CAST(slp AS DOUBLE) / npairs * 10000.0 + 0.5) / 10000.0 AS DECIMAL(18,4)) AS DOUBLE) AS logp
-        |FROM s ORDER BY doc_id""".stripMargin),
+        |FROM s ORDER BY doc_id""".stripMargin,
+      materialize = Seq("u", "bp")),
 
     // x107 leakage-free train/test split — the composition every eval
     // pipeline needs done ATOMICALLY: a deterministic 90/10 doc split
@@ -1811,6 +1832,13 @@ object Extensions {
         |SELECT lang_a, lang_b, CAST(COUNT(*) AS BIGINT) AS dup_pairs,
         |       CAST(COUNT(DISTINCT fp) AS BIGINT) AS dup_groups
         |FROM p GROUP BY lang_a, lang_b ORDER BY lang_a, lang_b""".stripMargin),
+
+    // x105 host-graph PageRank over the mirror graph (texts and plan notes
+    // in ext/Rank): `edges` and `nodes` materialize once, so each level
+    // CTE is referenced once by the next and the inlined chain stays
+    // linear in the iteration count.
+    Q("x105_pagerank", Rank.sparkSql, Rank.duckSql,
+      materialize = Seq("edges", "nodes")),
 
     // x103 table profiling — the ANALYZE/stats-collection pass every
     // engine (and every data-quality pipeline) runs before planning or
@@ -2002,352 +2030,12 @@ object Extensions {
   /** DataFrame form of x114 for pipeline composition ([[Pipeline.curate]]'s
     * opt-in pre-stage): strip per-source frequent-5-gram boilerplate and
     * rebuild `text` from the surviving tokens in original order (n_chars
-    * recomputed; other columns pass through). Same plan shape as the x114
-    * row — keyed joins only, df-thresholded boilerplate set. Documents
-    * whose tokens are ALL boilerplate drop (empty docs are of no use to
-    * any downstream stage, and the q46-family sketches skip empties
-    * anyway).
+    * recomputed; other columns pass through). Same boilerplate definition
+    * as the x114 row — keyed joins only, df-thresholded boilerplate set.
+    * Documents whose tokens are ALL boilerplate drop (empty docs are of no
+    * use to any downstream stage, and the q46-family sketches skip
+    * empties anyway).
     */
-  /** x114 driver query (r15/r16): the SQL-text formulation's `pos` CTE (the
-    * 5-gram stream) is consumed twice — the df-threshold aggregate AND
-    * the matched-position collect — and CTE inlining recomputes it per
-    * use. This DataFrame form derives the gram stream ONCE through
-    * [[graft.ext.Stages.materialize]] (on a cluster: reliable checkpoint
-    * / intermediate table) and both consumers read the materialized
-    * blocks. Grams come from the codegen word_ngrams kernel; the per-doc
-    * tail (covered-position cover of the matched grams, kept-token count,
-    * position-tagged md5) is the fused boilerplate_strip kernel (r16 —
-    * value parity with the old explode + anti-join + sort-collect shape
-    * pinned in BoilerplateSpec), and the DuckDB twin still pins the exact
-    * surviving tokens. */
-  /** x78 driver query (r16): the SQL-text formulation's token stream `t`
-    * is referenced three times (vocabulary aggregate, global token count,
-    * per-doc scoring join) and CTE inlining re-derived the corpus explode
-    * per reference. This form materializes the VOCABULARY (Zipfian —
-    * broadcast-sized at any corpus scale) once and derives the global
-    * token count from it (SUM of the per-token counts ≡ COUNT(*) of the
-    * stream — exact), so the corpus token stream is exploded once for the
-    * aggregate and once for the scoring join. Expressions unchanged; the
-    * unchanged DuckDB twin pins value identity. */
-  def unigramLmQuery(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): org.apache.spark.sql.DataFrame = {
-    import Stages.StageOps
-    graft.Tables.ensure(spark, dir)
-    spark.sql(
-      """SELECT tok, CAST(COUNT(*) AS DOUBLE) AS c
-        |FROM (SELECT explode(array_remove(split(LOWER(text), ' '), '')) AS tok
-        |      FROM documents)
-        |GROUP BY tok""".stripMargin)
-      .stageMaterialize
-      .createOrReplaceTempView("__x78_v")
-    val out = spark.sql(
-      """WITH t AS (SELECT doc_id,
-        |             explode(array_remove(split(LOWER(text), ' '), '')) AS tok
-        |           FROM documents),
-        |n AS (SELECT CAST(SUM(c) AS DOUBLE) AS nn FROM __x78_v),
-        |s AS (SELECT t.doc_id, COUNT(*) AS ntoks,
-        |        SUM(CAST(ROUND(LN(v.c / n.nn), 5) AS DECIMAL(18,5))) AS slp
-        |      FROM t JOIN __x78_v v ON t.tok = v.tok CROSS JOIN n
-        |      GROUP BY t.doc_id)
-        |SELECT doc_id, CAST(ntoks AS BIGINT) AS ntoks,
-        |  CAST(CAST(FLOOR(CAST(slp AS DOUBLE) / ntoks * 10000.0 + 0.5) / 10000.0 AS DECIMAL(18,4)) AS DOUBLE) AS logp
-        |FROM s ORDER BY doc_id""".stripMargin)
-    spark.catalog.dropTempView("__x78_v")
-    out
-  }
-
-  /** x106 driver query (r16): the SQL-text formulation re-derived the
-    * token frame per reference (unigram aggregate AND bigram stream) and
-    * the bigram stream per reference (bigram aggregate AND scoring join)
-    * — 22 exchanges / 3 corpus scans
-    * (plans/r16/x106_bigram_lm_before.txt). This form materializes the
-    * bigram POSITION stream once (the x114 pos-stage pattern) and the
-    * unigram vocabulary once (Zipfian — broadcast-sized at any scale;
-    * the global token count n derives from the corpus explode exactly as
-    * before). Expressions unchanged; the unchanged DuckDB twin pins
-    * value identity. */
-  def bigramLmQuery(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): org.apache.spark.sql.DataFrame = {
-    import Stages.StageOps
-    graft.functions.GraftFunctions.register(spark)
-    graft.Tables.ensure(spark, dir)
-    spark.sql(
-      """SELECT tok, CAST(COUNT(*) AS DOUBLE) AS c1
-        |FROM (SELECT explode(array_remove(split(LOWER(text), ' '), '')) AS tok
-        |      FROM documents)
-        |GROUP BY tok""".stripMargin)
-      .stageMaterialize
-      .createOrReplaceTempView("__x106_u")
-    spark.sql(
-      """SELECT doc_id, substring_index(g, ' ', 1) AS prev,
-        |       substring_index(g, ' ', -1) AS cur FROM (
-        |  SELECT doc_id, explode(word_ngrams(tk, 2)) AS g
-        |  FROM (SELECT doc_id, array_remove(split(LOWER(text), ' '), '') AS tk
-        |        FROM documents)
-        |  WHERE size(tk) >= 2)""".stripMargin)
-      .stageMaterialize
-      .createOrReplaceTempView("__x106_bp")
-    val out = spark.sql(
-      """WITH n AS (SELECT CAST(SUM(c1) AS DOUBLE) AS nn FROM __x106_u),
-        |b2 AS (SELECT prev, cur, CAST(COUNT(*) AS DOUBLE) AS c2
-        |       FROM __x106_bp GROUP BY prev, cur),
-        |s AS (SELECT bp.doc_id, COUNT(*) AS npairs,
-        |        SUM(CAST(ROUND(LN(0.7 * b2.c2 / up.c1 + 0.3 * uc.c1 / n.nn), 5)
-        |            AS DECIMAL(18,5))) AS slp
-        |      FROM __x106_bp bp
-        |      JOIN b2 ON bp.prev = b2.prev AND bp.cur = b2.cur
-        |      JOIN __x106_u up ON bp.prev = up.tok
-        |      JOIN __x106_u uc ON bp.cur = uc.tok
-        |      CROSS JOIN n
-        |      GROUP BY bp.doc_id)
-        |SELECT doc_id, CAST(npairs AS BIGINT) AS npairs,
-        |  CAST(CAST(FLOOR(CAST(slp AS DOUBLE) / npairs * 10000.0 + 0.5) / 10000.0 AS DECIMAL(18,4)) AS DOUBLE) AS logp
-        |FROM s ORDER BY doc_id""".stripMargin)
-    Seq("__x106_u", "__x106_bp").foreach(spark.catalog.dropTempView)
-    out
-  }
-
-  /** x79 driver query (r16): the SQL-text formulation's token stream `t`
-    * is referenced three times (tf, df, and the doc-count scalar) and CTE
-    * inlining re-derived the corpus explode per reference. This form
-    * materializes the (doc, token, tf) frame once — the same rows the tf
-    * aggregate already shuffles — and derives df and the doc count FROM
-    * it (tf has exactly one row per (doc, token), so COUNT(*) per token ≡
-    * COUNT(DISTINCT doc_id) over the stream, and COUNT(DISTINCT doc_id)
-    * over tf ≡ over the stream). One corpus explode instead of three;
-    * expressions unchanged; the unchanged DuckDB twin pins value
-    * identity. */
-  def tfidfQuery(spark: org.apache.spark.sql.SparkSession,
-                 dir: String): org.apache.spark.sql.DataFrame = {
-    import Stages.StageOps
-    graft.Tables.ensure(spark, dir)
-    spark.sql(
-      """SELECT doc_id, tok, CAST(COUNT(*) AS DOUBLE) AS tf
-        |FROM (SELECT doc_id,
-        |        explode(array_remove(split(LOWER(text), ' '), '')) AS tok
-        |      FROM documents)
-        |GROUP BY doc_id, tok""".stripMargin)
-      .stageMaterialize
-      .createOrReplaceTempView("__x79_tf")
-    val out = spark.sql(
-      """WITH df AS (SELECT tok, CAST(COUNT(*) AS DOUBLE) AS df
-        |       FROM __x79_tf GROUP BY tok),
-        |n AS (SELECT CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS nd FROM __x79_tf),
-        |s AS (SELECT tf.doc_id, tf.tok,
-        |        tf.tf * LN((n.nd + 1.0) / (df.df + 1.0)) AS score
-        |      FROM __x79_tf tf JOIN df ON tf.tok = df.tok CROSS JOIN n),
-        |w AS (SELECT doc_id, tok, score,
-        |        ROW_NUMBER() OVER (PARTITION BY doc_id
-        |                           ORDER BY ROUND(score, 6) DESC, tok) AS rn
-        |      FROM s)
-        |SELECT doc_id, CAST(rn AS INT) AS rn, tok,
-        |  CAST(CAST(ROUND(score, 4) AS DECIMAL(18,4)) AS DOUBLE) AS score
-        |FROM w WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin)
-    spark.catalog.dropTempView("__x79_tf")
-    out
-  }
-
-  /** x85 driver query (r16): the SQL-text formulation derived the token
-    * position stream three times and the bigram stream twice (CTE
-    * inlining), and built bigrams through a per-doc `lead` WINDOW — a
-    * full exchange + sort of the corpus token stream predating the
-    * word_ngrams kernel. This form materializes the two vocabulary-sized
-    * count frames (unigram c1, bigram c2) once each — bigrams come from
-    * the map-only word_ngrams kernel, the same pairs the lead window
-    * produced (the x106 equivalence) — and the two scalar totals are the
-    * SUMs of those counts (≡ the stream COUNT(*)s, exact BIGINT).
-    * Downstream lift/ranking SQL unchanged; the unchanged DuckDB twin
-    * pins value identity. */
-  def collocationsQuery(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): org.apache.spark.sql.DataFrame = {
-    import Stages.StageOps
-    graft.functions.GraftFunctions.register(spark)
-    graft.Tables.ensure(spark, dir)
-    spark.sql(
-      """SELECT tok, COUNT(*) AS c1
-        |FROM (SELECT explode(array_remove(split(LOWER(text), ' '), '')) AS tok
-        |      FROM documents)
-        |GROUP BY tok""".stripMargin)
-      .stageMaterialize
-      .createOrReplaceTempView("__x85_c1")
-    spark.sql(
-      """SELECT substring_index(g, ' ', 1) AS w1,
-        |       substring_index(g, ' ', -1) AS w2, COUNT(*) AS c2
-        |FROM (SELECT explode(word_ngrams(
-        |        array_remove(split(LOWER(text), ' '), ''), 2)) AS g
-        |      FROM documents)
-        |GROUP BY w1, w2""".stripMargin)
-      .stageMaterialize
-      .createOrReplaceTempView("__x85_cb")
-    val out = spark.sql(
-      """WITH tot AS (SELECT (SELECT SUM(c1) FROM __x85_c1) AS n,
-        |              (SELECT SUM(c2) FROM __x85_cb) AS m),
-        |s AS (SELECT concat_ws(' ', cb.w1, cb.w2) AS bigram, cb.c2,
-        |        (CAST(cb.c2 AS DOUBLE) * CAST(tot.n AS DOUBLE)
-        |           * CAST(tot.n AS DOUBLE))
-        |        / (CAST(tot.m AS DOUBLE) * CAST(a.c1 AS DOUBLE)
-        |           * CAST(b.c1 AS DOUBLE)) AS lift
-        |      FROM __x85_cb cb
-        |      JOIN __x85_c1 a ON cb.w1 = a.tok
-        |      JOIN __x85_c1 b ON cb.w2 = b.tok
-        |      CROSS JOIN tot WHERE cb.c2 >= 5),
-        |t20 AS (SELECT bigram, c2, lift FROM s
-        |        ORDER BY ROUND(lift, 6) DESC, bigram LIMIT 20),
-        |w AS (SELECT bigram, c2, lift,
-        |        ROW_NUMBER() OVER (ORDER BY ROUND(lift, 6) DESC, bigram) AS rn
-        |      FROM t20)
-        |SELECT CAST(rn AS INT) AS rn, bigram, CAST(c2 AS BIGINT) AS c2,
-        |  CAST(CAST(FLOOR(lift * 10000.0 + 0.5) / 10000.0
-        |       AS DECIMAL(18,4)) AS DOUBLE) AS lift
-        |FROM w ORDER BY rn""".stripMargin)
-    Seq("__x85_c1", "__x85_cb").foreach(spark.catalog.dropTempView)
-    out
-  }
-
-  /** x98 driver query (r16): the SQL-text formulation re-derived the
-    * corpus token aggregate per CTE reference — the before-plan has 12
-    * parquet scans / 6 corpus explodes for what is ONE vocabulary-sized
-    * statistic (plans/r16/x98_dsir_sample_before.txt). This DataFrame
-    * form (a) fuses the src/tgt aggregates (the Q-text r16 change — tgt's
-    * count rides as a conditional COUNT column) and (b) materializes the
-    * fused vocabulary frame once (it is Zipfian-vocabulary-sized — tiny
-    * at any corpus scale); the log-ratio table, the per-doc scoring join
-    * and the md5-uniform sampler are the Q-text shape unchanged, so the
-    * unchanged DuckDB twin pins value identity. */
-  def dsirSampleQuery(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): org.apache.spark.sql.DataFrame = {
-    import Stages.StageOps
-    graft.Tables.ensure(spark, dir)
-    spark.sql(
-      """SELECT tok, COUNT(*) AS c,
-        |       COUNT(CASE WHEN lang = 'en' THEN 1 END) AS ct
-        |FROM (SELECT lang,
-        |        explode(array_remove(split(LOWER(text), ' '), '')) AS tok
-        |      FROM documents)
-        |GROUP BY tok""".stripMargin)
-      .stageMaterialize
-      .createOrReplaceTempView("__x98_src")
-    val out = spark.sql(
-      """WITH t AS (SELECT doc_id, lang,
-        |             explode(array_remove(split(LOWER(text), ' '), '')) AS tok
-        |           FROM documents),
-        |ns AS (SELECT CAST(SUM(c) AS DOUBLE) AS n, CAST(COUNT(*) AS DOUBLE) AS v FROM __x98_src),
-        |nt AS (SELECT CAST(COALESCE(SUM(ct), 0) AS DOUBLE) AS n FROM __x98_src),
-        |r AS (SELECT s.tok,
-        |        CAST(ROUND(LN(((s.ct + 1.0) / (nt.n + ns.v))
-        |                    / ((s.c + 1.0) / (ns.n + ns.v))), 5) AS DECIMAL(18,5)) AS lr
-        |      FROM __x98_src s
-        |      CROSS JOIN nt CROSS JOIN ns),
-        |d AS (SELECT t.doc_id, COUNT(*) AS ntoks, SUM(r.lr) AS slr
-        |      FROM t JOIN r ON t.tok = r.tok GROUP BY t.doc_id),
-        |u AS (SELECT doc_id,
-        |        CAST((((instr('0123456789abcdef', substr(md5(text), 1, 1)) - 1) * 16
-        |              + (instr('0123456789abcdef', substr(md5(text), 2, 1)) - 1)) * 16
-        |              + (instr('0123456789abcdef', substr(md5(text), 3, 1)) - 1)) * 16
-        |              + (instr('0123456789abcdef', substr(md5(text), 4, 1)) - 1) AS INT) AS u16
-        |      FROM documents),
-        |f AS (SELECT d.doc_id, d.ntoks,
-        |        CAST(d.slr AS DOUBLE) / d.ntoks AS score, u.u16
-        |      FROM d JOIN u ON d.doc_id = u.doc_id)
-        |SELECT doc_id, CAST(ntoks AS BIGINT) AS ntoks,
-        |  CAST(CAST(FLOOR(score * 10000.0 + 0.5) / 10000.0 AS DECIMAL(18,4)) AS DOUBLE) AS lr_score,
-        |  CAST(FLOOR(10000.0 / (1.0 + EXP(-score)) + 0.5) AS INT) AS p_bps,
-        |  u16,
-        |  CAST(u16 AS BIGINT) * 10000
-        |    < CAST(FLOOR(10000.0 / (1.0 + EXP(-score)) + 0.5) AS BIGINT) * 65536 AS sampled
-        |FROM f ORDER BY doc_id""".stripMargin)
-    spark.catalog.dropTempView("__x98_src")
-    out
-  }
-
-  /** x110 driver query (r16): the SQL-text formulation's `b` CTE (the
-    * DISTINCT (user, day, event_type) basket stream) is referenced FOUR
-    * times — the basket count, the per-item counts, and both sides of the
-    * pair self-join — and Spark's CTE inlining recomputed it per
-    * reference: four events scans + four DISTINCT aggregates
-    * (plans/r16/x110_assoc_rules_before.txt). This DataFrame form
-    * materializes `b` once (guide §2.4; on a cluster: reliable checkpoint
-    * / intermediate table); every expression downstream is the Q-text
-    * unchanged, so the DuckDB twin pins value identity. */
-  def assocRulesQuery(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): org.apache.spark.sql.DataFrame = {
-    import Stages.StageOps
-    graft.Tables.ensure(spark, dir)
-    spark.sql(
-      """SELECT DISTINCT user_id,
-        |       CAST(date_trunc('day', ts) AS DATE) AS d, event_type
-        |FROM events""".stripMargin)
-      .stageMaterialize
-      .createOrReplaceTempView("__x110_b")
-    val out = spark.sql(
-      """WITH nb AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n
-        |       FROM (SELECT DISTINCT user_id, d FROM __x110_b)),
-        |i AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS ni
-        |      FROM __x110_b GROUP BY event_type),
-        |p AS (SELECT x.event_type AS ante, y.event_type AS cons,
-        |        CAST(COUNT(*) AS BIGINT) AS nab
-        |      FROM __x110_b x JOIN __x110_b y
-        |        ON x.user_id = y.user_id AND x.d = y.d
-        |       AND x.event_type <> y.event_type
-        |      GROUP BY x.event_type, y.event_type)
-        |SELECT p.ante, p.cons, p.nab,
-        |  CAST(CAST(FLOOR(p.nab / (SELECT n FROM nb) * 1000000.0 + 0.5)
-        |       / 1000000.0 AS DECIMAL(18,6)) AS DOUBLE) AS support,
-        |  CAST(CAST(FLOOR(CAST(p.nab AS DOUBLE) / ia.ni * 1000000.0 + 0.5)
-        |       / 1000000.0 AS DECIMAL(18,6)) AS DOUBLE) AS confidence,
-        |  CAST(CAST(FLOOR(CAST(p.nab AS DOUBLE) / ia.ni
-        |       / (ic.ni / (SELECT n FROM nb)) * 1000000.0 + 0.5)
-        |       / 1000000.0 AS DECIMAL(18,6)) AS DOUBLE) AS lift
-        |FROM p JOIN i ia ON p.ante = ia.event_type
-        |       JOIN i ic ON p.cons = ic.event_type
-        |ORDER BY ante, cons""".stripMargin)
-    spark.catalog.dropTempView("__x110_b")
-    out
-  }
-
-  def boilerplateQuery(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): org.apache.spark.sql.DataFrame = {
-    import Stages.StageOps
-    graft.functions.GraftFunctions.register(spark)
-    graft.Tables.ensure(spark, dir)
-    spark.sql(
-      """SELECT doc_id, source,
-        |       array_remove(split(LOWER(text), ' '), '') AS tk
-        |FROM documents""".stripMargin)
-      .createOrReplaceTempView("__x114_toks")
-    spark.sql(
-      """SELECT doc_id, source, p + 1 AS i, gram
-        |FROM __x114_toks
-        |LATERAL VIEW posexplode(word_ngrams(tk, 5)) AS p, gram""".stripMargin)
-      .stageMaterialize
-      .createOrReplaceTempView("__x114_pos")
-    // r16: everything after the df-threshold decision is a pure function of
-    // (doc's token array, its matched gram start positions), so the old
-    // covered-position explode (5× gram-stream blowup) + DISTINCT + the
-    // full corpus token-position anti-join + the per-doc sort-collect md5
-    // collapse into ONE map-side boilerplate_strip kernel call per doc
-    // (guide §2.4 remove shuffles outright + §4; value parity pinned in
-    // BoilerplateSpec and by the unchanged DuckDB twin). The only shuffles
-    // left are the df aggregate and the per-doc matched-position collect.
-    val out = spark.sql(
-      """WITH bp AS (SELECT source, gram
-        |       FROM (SELECT source, gram, COUNT(DISTINCT doc_id) AS df
-        |             FROM __x114_pos GROUP BY source, gram)
-        |       WHERE df >= 10),
-        |mi AS (SELECT p.doc_id, collect_list(p.i) AS mpos
-        |       FROM __x114_pos p
-        |       JOIN bp b ON p.source = b.source AND p.gram = b.gram
-        |       GROUP BY p.doc_id),
-        |s AS (SELECT t.doc_id,
-        |        boilerplate_strip(t.tk,
-        |          COALESCE(m.mpos, CAST(array() AS ARRAY<INT>))) AS st
-        |      FROM __x114_toks t LEFT JOIN mi m ON t.doc_id = m.doc_id)
-        |SELECT doc_id, st.kept_toks AS kept_toks, st.clean_fp AS clean_fp
-        |FROM s WHERE st IS NOT NULL ORDER BY doc_id""".stripMargin)
-    Seq("__x114_toks", "__x114_pos").foreach(spark.catalog.dropTempView)
-    out
-  }
-
   def stripBoilerplate(docs: org.apache.spark.sql.DataFrame,
                        minDf: Long = 10): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._

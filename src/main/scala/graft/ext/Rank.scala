@@ -1,10 +1,5 @@
 package graft.ext
 
-import Stages.StageOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
-import graft.Tables
-
 /** Host-graph PageRank over the mirror graph (x105).
   *
   * Web-corpus curation weighs documents by host quality; the classic
@@ -35,6 +30,17 @@ import graft.Tables
   * iteration's rank then FLOOR-half-up-rounds at 7dp, so both engines
   * carry bit-identical trajectories through all 5 iterations. The DuckDB
   * twin replays the identical chain as 5 unrolled CTE levels.
+  *
+  * Plan (Spark side): Spark inlines repeated CTE references, so run as
+  * plain SQL the text re-derives `edges`/`deg`/`nodes` per reference
+  * across the 5 levels — 238 operators and 70 Exchanges for a 20-host
+  * graph (plans/r16/x105_pagerank_before.txt), growing exponentially
+  * with the iteration count. The driver row instead binds `pairs` to the
+  * session-shared mirror-pair stage ([[CorpusGraph.mirrorPairs]], also
+  * x109's edge set) and materializes `edges` and `nodes` once
+  * ([[Stages.sql]]); every remaining CTE is then referenced exactly once
+  * by the next level, so the inlined chain stays LINEAR (5 ×
+  * join+agg+join) and runs as one job.
   */
 object Rank {
 
@@ -86,64 +92,4 @@ object Rank {
     """md5(array_to_string(list_sort(list_distinct(
       |      list_filter(string_split(LOWER(text), ' '), t -> t <> ''))), ' '))"""
       .stripMargin)
-
-  /** Spark side of x105 — the corpus-scale stage is the SHARED mirror-pair
-    * set ([[CorpusGraph.mirrorPairs]], also x109's edge set and derived
-    * from x104's fingerprint stage), materialized once per session.
-    *
-    * r16: Spark INLINES repeated CTE references, so the old single-SQL
-    * form re-derived `edges`/`deg`/`nodes` per reference across the 5
-    * levels — the physical plan had 238 operators and 70 Exchanges for a
-    * 20-host graph (plans/r16/x105_pagerank_before.txt), all fixed job
-    * latency, and the plan (and planning time) grew exponentially with
-    * the iteration count. Now `edges` and `nodes` materialize ONCE (guide
-    * §3.3 "materialising an intermediate truncates the plan"; on a
-    * cluster: reliable checkpoints); every remaining CTE is referenced
-    * exactly once by the next level, so the inlined chain stays LINEAR
-    * (5 × join+agg+join) and runs as one job. Arithmetic per level is the
-    * IDENTICAL text, so the FLOOR-quantized trajectories — and the DuckDB
-    * twin's unrolled-CTE replay — are unchanged. */
-  def hostRankQuery(spark: SparkSession, dir: String): DataFrame = {
-    import Stages.StageOps
-    Tables.ensure(spark, dir)
-    CorpusGraph.mirrorPairs(spark, dir).createOrReplaceTempView("__x105_pairs")
-    spark.sql(
-      """SELECT s1 AS src, s2 AS dst FROM __x105_pairs
-        |UNION ALL SELECT s2 AS src, s1 AS dst FROM __x105_pairs""".stripMargin)
-      .stageMaterialize
-      .createOrReplaceTempView("__x105_edges")
-    spark.sql(
-      """SELECT d.node, d.deg, n.cnt
-        |FROM (SELECT src AS node, CAST(COUNT(*) AS DOUBLE) AS deg
-        |      FROM __x105_edges GROUP BY src) d
-        |CROSS JOIN (SELECT CAST(COUNT(DISTINCT src) AS DOUBLE) AS cnt
-        |            FROM __x105_edges) n""".stripMargin)
-      .stageMaterialize
-      .createOrReplaceTempView("__x105_nodes")
-    // With edges and nodes materialized, every CTE below is referenced
-    // exactly ONCE by the next level, so inlining keeps the plan LINEAR in
-    // the iteration count (5 × join+agg+join) and the whole chain runs as
-    // one job — no per-level checkpoints needed.
-    val levels = (1 to Iters).map { k =>
-      s"""c$k AS (SELECT e.dst AS node,
-         |        SUM(CAST(FLOOR(p.pr / p.deg * 1000000000.0 + 0.5) AS BIGINT)) AS contrib
-         |      FROM __x105_edges e JOIN p${k - 1} p ON e.src = p.node
-         |      GROUP BY e.dst),
-         |p$k AS (SELECT n.node, n.deg,
-         |        FLOOR(((1.0 - $Damping) / n.cnt
-         |               + $Damping * (CAST(c.contrib AS DOUBLE) / 1000000000.0))
-         |              * 10000000.0 + 0.5) / 10000000.0 AS pr
-         |      FROM __x105_nodes n JOIN c$k c ON n.node = c.node)""".stripMargin
-    }
-    val out = spark.sql(
-      s"""WITH p0 AS (SELECT node, deg,
-         |         FLOOR(1.0 / cnt * 10000000.0 + 0.5) / 10000000.0 AS pr
-         |       FROM __x105_nodes),
-         |${levels.mkString(",\n")}
-         |SELECT node AS host,
-         |  CAST(CAST(pr AS DECIMAL(18,7)) AS DOUBLE) AS pagerank
-         |FROM p$Iters ORDER BY host""".stripMargin)
-    Seq("__x105_edges", "__x105_nodes").foreach(spark.catalog.dropTempView)
-    out
-  }
 }

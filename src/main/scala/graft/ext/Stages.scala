@@ -4,7 +4,10 @@ import java.nio.file.{Files, Path}
 import java.util.Comparator
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.graft.GraftSql
 
 /** Cluster-switchable stage materialization for the multi-stage pipelines
   * (dedup candidate generation, label propagation, PageRank edges, BPE
@@ -136,6 +139,54 @@ object Stages {
       s"graft.stageMaterialize=$other (expected local | reliable | table)")
   }
 
+  /** Run the declared SQL `text` with some of its CTEs computed once.
+    *
+    * Spark inlines deterministic CTEs, so a CTE referenced several times
+    * is re-derived once per reference. Here each CTE named in
+    * `materialize` is computed once through [[materialize]] (`WITH <its
+    * earlier definitions> SELECT * FROM name`), walking the definitions in
+    * order, and that stage replaces the CTE's body; every reference then
+    * reads the materialized blocks. A name in `bind` replaces the body of
+    * the same-named CTE with the given frame, or adds a CTE of that name
+    * when the text has none. Either way the name is scoped to this one
+    * statement: the session catalog is never touched, so concurrent
+    * callers cannot clobber each other.
+    *
+    * The text stays the query's only definition (the reference runs each
+    * statement's text unchanged, `db/src/db.rs:278`); `materialize` only
+    * chooses where the plan is cut. A `materialize` name that the text
+    * does not define is rejected. With nothing to materialize or bind
+    * this is `spark.sql(text)`. */
+  def sql(spark: SparkSession, text: String,
+          materialize: Seq[String] = Nil,
+          bind: Map[String, DataFrame] = Map.empty): DataFrame = {
+    if (materialize.isEmpty && bind.isEmpty) return spark.sql(text)
+    val (body, declared) = GraftSql.parsePlan(spark, text) match {
+      case w: UnresolvedWith => (w.child, w.cteRelations)
+      case p => (p, Nil)
+    }
+    val unknown = materialize.filterNot(n => declared.exists(_._1 == n))
+    require(unknown.isEmpty,
+      s"Stages.sql: no CTE named ${unknown.mkString(", ")} to materialize")
+    def alias(name: String, df: DataFrame) =
+      SubqueryAlias(name, df.queryExecution.analyzed)
+    val added = bind.keys.filterNot(n => declared.exists(_._1 == n))
+      .toSeq.sorted.map(n => (n, alias(n, bind(n)), Option.empty[Int]))
+    val defs = (added ++ declared).foldLeft(Vector.empty[CteDef]) {
+      case (done, (name, cte, depth)) =>
+        val own = bind.get(name).fold(cte)(alias(name, _))
+        val stage =
+          if (!materialize.contains(name)) own
+          else alias(name, Stages.materialize(GraftSql.ofRows(spark,
+            UnresolvedWith(UnresolvedRelation(Seq(name)),
+              done :+ ((name, own, depth))))))
+        done :+ ((name, stage, depth))
+    }
+    GraftSql.ofRows(spark, UnresolvedWith(body, defs))
+  }
+
+  private type CteDef = (String, SubqueryAlias, Option[Int])
+
   /** Import in pipeline files: `df.stageMaterialize` replaces the old
     * hard-coded `df.localCheckpoint()`. */
   implicit class StageOps(private val df: DataFrame) extends AnyVal {
@@ -171,7 +222,8 @@ object Stages {
   private val buildCounter = new AtomicLong(0)
   private val entrySeq = new AtomicLong(0)
   // One lock per live session: builds within a session serialize (their
-  // scaffolding temp views are session-global — __x54u_tp, __graft_fp_mp —
+  // scaffolding temp views are session-global — the PPJoin build's
+  // __x54u_tp —
   // so two concurrent builds in one session could drop/re-register each
   // other's views). ReentrantLock, so a build composing [[shared]] for its
   // own inputs (same thread) re-enters freely; distinct sessions never

@@ -21,9 +21,18 @@ object Queries {
     * in r4 for exactly this). Nested types may appear freely in intermediate
     * expressions; the projected outputs must be scalars (use `array_join` /
     * `array_to_string` to flatten).
+    *
+    * `materialize` names CTEs of the Spark text that the driver computes
+    * once instead of once per reference ([[graft.ext.Stages.sql]]). It is
+    * part of the row's data, like its texts: it moves where the plan is
+    * cut, never what the query returns.
     */
-  final case class Q(name: String, spark: String, duck: String)
-  object Q { def same(name: String, sql: String): Q = Q(name, sql, sql) }
+  final case class Q(name: String, spark: String, duck: String,
+                     materialize: Seq[String] = Nil)
+  object Q {
+    def same(name: String, sql: String, materialize: Seq[String] = Nil): Q =
+      Q(name, sql, sql, materialize)
+  }
 
   val all: Seq[Q] = Seq(
     // Q01 (B1,B9) full scan + projection — analog of dust's

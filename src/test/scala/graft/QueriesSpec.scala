@@ -36,6 +36,23 @@ class QueriesSpec extends SparkSpec {
       s"rows without an oracle: ${qs.keySet -- SparkEntry.oracleSql.keySet}")
   }
 
+  test("every materialize name is a top-level CTE of its row's Spark text") {
+    // parse only: a renamed CTE fails here, not first in the oracle sweep
+    import org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith
+    import org.apache.spark.sql.graft.GraftSql
+    val rows = (Queries.all ++ Extensions.all).filter(_.materialize.nonEmpty)
+    assert(rows.size >= 8, rows.map(_.name))
+    rows.foreach { q =>
+      val ctes = GraftSql.parsePlan(spark, q.spark) match {
+        case w: UnresolvedWith => w.cteRelations.map(_._1).toSet
+        case _ => Set.empty[String]
+      }
+      val missing = q.materialize.filterNot(ctes)
+      assert(missing.isEmpty,
+        s"${q.name}: no CTE named ${missing.mkString(", ")}")
+    }
+  }
+
   test("q55: SqlText.bind renders the template to exactly the oracle text") {
     import graft.command.Parameter
     val bound = graft.engine.SqlText.bind(Queries.q55ParamTemplate, Seq(
@@ -76,11 +93,15 @@ class QueriesSpec extends SparkSpec {
     assert(plan.contains("TakeOrderedAndProject"), plan)
   }
 
+  /** The plan the driver runs for `name` (materialized CTEs included). */
+  private def driverPlan(name: String): String =
+    SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
+
   test("x85: global top-k is a distributed TakeOrderedAndProject") {
     // the rn window must see only the 20 survivors — the candidate set
     // (all support-filtered bigrams; millions at a real vocabulary) goes
     // through per-partition top-k heaps, never a single-partition window
-    val plan = run("x85_collocations").queryExecution.executedPlan.toString
+    val plan = driverPlan("x85_collocations")
     assert(plan.contains("TakeOrderedAndProject"), plan.take(2000))
   }
 
@@ -122,7 +143,7 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("x98: DSIR joins shuffle on token/doc keys, never nested-loop") {
-    val plan = run("x98_dsir_sample").queryExecution.executedPlan.toString
+    val plan = driverPlan("x98_dsir_sample")
     // the vocab-side joins are equi-joins; the two single-row totals
     // (nt/ns) broadcast — any BNLJ beyond those 1-row sides is a plan bug
     assert(!plan.contains("CartesianProduct"), plan.take(3000))
@@ -147,8 +168,8 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("x105: pagerank is deterministic and mass stays within rounding") {
-    val a = graft.ext.Rank.hostRankQuery(spark, sfDir).collect()
-    val b = graft.ext.Rank.hostRankQuery(spark, sfDir).collect()
+    val a = SparkEntry.queries("x105_pagerank")(spark, sfDir).collect()
+    val b = SparkEntry.queries("x105_pagerank")(spark, sfDir).collect()
     assert(a.toSeq == b.toSeq, "pagerank must be run-deterministic")
     assert(a.length > 1, "host graph degenerated to <2 nodes")
     val mass = a.map(_.getDouble(1)).sum

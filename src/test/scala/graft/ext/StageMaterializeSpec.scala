@@ -8,7 +8,8 @@ import graft.{SparkEntry, SparkSpec}
   * default), `table` (parquet intermediate tables) — must be
   * value-identical on the pipelines that use staging the hardest: the
   * PPJoin candidate stage (x54), min-label propagation over its pairs
-  * (x75), and the keep-best resolution on top of both (x108). */
+  * (x75), the keep-best resolution on top of both (x108), and the
+  * declared-SQL rows whose CTEs [[Stages.sql]] materializes (x106, x110). */
 class StageMaterializeSpec extends SparkSpec {
 
   private def withMode[A](m: String)(f: => A): A = {
@@ -23,7 +24,8 @@ class StageMaterializeSpec extends SparkSpec {
   private def rows(q: String): Seq[String] =
     SparkEntry.queries(q)(spark, sfDir).collect().map(_.toString).sorted.toSeq
 
-  for (q <- Seq("x54_ngram_jaccard", "x75_components", "x108_keep_best")) {
+  for (q <- Seq("x54_ngram_jaccard", "x75_components", "x108_keep_best",
+                 "x106_bigram_lm", "x110_assoc_rules")) {
     test(s"$q is value-identical under local / reliable / table modes") {
       val local = withMode("local")(rows(q))
       assert(local.nonEmpty, s"$q returned no rows at $sfDir")
