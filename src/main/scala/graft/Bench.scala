@@ -7,9 +7,10 @@ import org.apache.spark.sql.SparkSession
   * and prints the full per-query JSON line (the original contract), then a
   * SHORT final JSON line (total + failure count + pointer to the per-query
   * file) sized to survive the driver's 2000-char output tail. The full
-  * per-query JSON is also written to bench_per_query.json (override:
-  * SPARK_GRAFT_BENCH_JSON). Optional args: comma-separated query names to
-  * run a subset (dev use); no args = full suite (driver contract).
+  * per-query JSON is also written to bench_per_query_c<cpus>.json
+  * (override: SPARK_GRAFT_BENCH_JSON). Optional args: comma-separated
+  * query names to run a subset (dev use); no args = full suite (driver
+  * contract).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -120,10 +121,9 @@ object Bench {
     // mid-string. Additions only: persist the full per-query JSON to a file
     // and END with a short, complete JSON line (total + failure count +
     // file pointer) that always fits inside the tail.
-    val perQueryFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON",
-      "bench_per_query.json")
     val filePointer = try {
-      val p = java.nio.file.Paths.get(perQueryFile).toAbsolutePath
+      val p = java.nio.file.Paths.get(perQueryPath(sys.env, cpus))
+        .toAbsolutePath
       java.nio.file.Files.write(p,
         (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       p.toString
@@ -140,6 +140,12 @@ object Bench {
   // noise, so sub-ms digits are pure line width (the full-suite line was
   // ~6 KB with 9 significant decimals, ~3.9 KB at 3).
   private def sec(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** Where the full per-query line goes: SPARK_GRAFT_BENCH_JSON, else a
+    * file named for the CPU count, so a run on fewer cores does not
+    * overwrite the file of a run on more. */
+  def perQueryPath(env: Map[String, String], cpus: String): String =
+    env.getOrElse("SPARK_GRAFT_BENCH_JSON", s"bench_per_query_c$cpus.json")
 
   /** The short final line; the two paths are JSON-escaped. */
   def summaryLine(total: Double, nqueries: Int, nfailures: Int,

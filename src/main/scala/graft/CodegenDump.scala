@@ -9,6 +9,8 @@ import org.apache.spark.sql.SparkSession
   * the formatted plan (which never shows CSE).
   *
   * Usage: sbt "runMain graft.CodegenDump <outFile> <queryName>"
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_MASTER (default
+  * local[SPARK_GRAFT_CPUS]).
   */
 object CodegenDump {
   def main(args: Array[String]): Unit = {
@@ -16,16 +18,15 @@ object CodegenDump {
     val name = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    val spark = Sessions.withMaster(SparkSession.builder()
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       // AQE wraps the plan in AdaptiveSparkPlan, which codegenString
       // cannot traverse before execution — disable for the dump (the
       // per-stage generated code is identical either way)
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.ui.enabled", "false"), master).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fn = SparkEntry.queries(name)
     val txt = org.apache.spark.sql.execution.debug.codegenString(

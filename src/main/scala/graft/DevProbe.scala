@@ -9,20 +9,21 @@ import org.apache.spark.sql.SparkSession
   * regression shows up as run1 ≫ run3).
   *
   * Usage: sbt "runMain graft.DevProbe <queryName> [queryName2 ...]"
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_WARM_DIR, SPARK_GRAFT_CPUS,
+  * SPARK_GRAFT_MASTER (default local[SPARK_GRAFT_CPUS]).
   */
 object DevProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    val spark = Sessions.withMaster(SparkSession.builder()
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.ui.enabled", "false"), master).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val names = if (args.nonEmpty) args.toSeq else Seq("q18_tpch_q1")

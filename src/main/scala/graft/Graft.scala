@@ -89,8 +89,9 @@ object Graft {
   /** Min-label-propagation connected components over any pair graph.
     * Output is one `id, label` row per distinct vertex: duplicate `nodes`
     * ids are deduplicated, and a vertex found only in `edges` appears once
-    * its component holds a vertex of `nodes` (pass every vertex in `nodes`
-    * — see [[ext.Components.minLabelPropagation]]). */
+    * its component holds a vertex of `nodes`, labelled with that
+    * component's smallest `nodes` id (see
+    * [[ext.Components.minLabelPropagation]]). */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           srcCol: String, dstCol: String,
                           maxIters: Int = 50): DataFrame =

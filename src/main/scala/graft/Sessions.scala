@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared session wiring for the driver-contract mains (Verify/Bench).
+/** Shared session wiring for the driver-contract mains (Verify/Bench) and
+  * the dev mains (DevProbe/PlanDump/CodegenDump), all of which honour
+  * SPARK_GRAFT_MASTER.
   *
   * `local-cluster[...]` masters launch executors as SEPARATE JVMs from
   * SPARK_HOME, which know nothing about this application's classes: any

@@ -1,14 +1,28 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Registers the driver testdata parquet tables as temp views.
   *
   * Mirrors the reference's catalog seam: dust opens one SQLite database and
-  * every statement resolves tables in it (reference `db/src/db.rs:77-101`).
-  * Here "the database" is a directory of parquet tables registered as views;
-  * Catalyst resolves them, and the parquet source gives predicate pushdown +
-  * column pruning for free (verified in QueriesSpec via explain()).
+  * every statement resolves tables in it (reference `db/src/db.rs:77-101`),
+  * so opening a table costs a file open. Here "the database" is a directory
+  * of parquet tables registered as views; Catalyst resolves them, and the
+  * parquet source gives predicate pushdown + column pruning for free
+  * (verified in QueriesSpec via explain()).
+  *
+  * Registration starts no Spark job. `spark.read.parquet(path)` infers the
+  * schema with a distributed footer read (`ParquetUtils.inferSchema` →
+  * `SchemaMergeUtils.mergeSchemasInParallel`), one Spark job per table even
+  * for a single file, so a fresh session paid ten jobs before its first
+  * query. [[readParquet]] reads the one footer that inference would read,
+  * on the driver, and hands the schema to the reader; the engine's
+  * snapshot and time-travel opens use it too.
   *
   * At 100 TB these would be bucketed/partitioned managed tables; the view
   * registration is idempotent and cached per (session, dir) so per-query
@@ -49,7 +63,7 @@ object Tables {
       // drift failing the shared registration loop.
       names.foreach { n =>
         try {
-          val raw = spark.read.parquet(s"$dir/$n.parquet")
+          val raw = readParquet(spark, s"$dir/$n.parquet")
           val df = n match {
             case "events"     => pinSchema(n, normalizeEventsTs(raw))
             case "embeddings" => normalizeEmbedding(raw)
@@ -68,6 +82,68 @@ object Tables {
       spark.conf.set(RegisteredKey, dir)
     }
   }
+
+  /** `spark.read.parquet(path)` without the schema-inference job: the
+    * schema comes from [[footerSchema]] and goes to the reader, which then
+    * only lists the files. Layouts [[footerSchema]] does not cover fall
+    * back to Spark's own inference. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read.parquet(path))(
+      spark.read.schema(_).parquet(path))
+
+  /** The schema Spark's inference reads for `path`, read on the driver
+    * (the reader then makes every field nullable, as it does for an
+    * inferred schema).
+    *
+    * Picks the file `ParquetUtils.inferSchema` picks when schema merging is
+    * off: among the visible files (Spark's hidden-name rule) sorted by path,
+    * `_common_metadata`, else `_metadata`, else the first data file. Its
+    * footer goes through `ParquetFileFormat.readSchemaFromFooter` with the
+    * converter `mergeSchemasInParallel` builds from the session conf (read
+    * at call time, so [[ensure]]'s `nanosAsLong` applies).
+    *
+    * None (inference decides) when schema merging is on, when `path` is a
+    * directory holding subdirectories (partitioned or nested layouts), or
+    * when it holds no visible file. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState
+    val c = state.conf
+    val hadoopConf = state.newHadoopConf()
+    val root = new Path(path)
+    // a file lists as itself, a directory as its children
+    val files: Seq[FileStatus] = root.getFileSystem(hadoopConf)
+      .listStatus(root).toSeq.filterNot(f => hidden(f.getPath.getName))
+    if (c.isParquetSchemaMergingEnabled || files.isEmpty ||
+        files.exists(_.isDirectory)) None
+    else {
+      val sorted = files.sortBy(_.getPath.toString)
+      def named(n: String) = sorted.find(_.getPath.getName == n)
+      val chosen = named("_common_metadata").orElse(named("_metadata"))
+        .getOrElse(sorted.head)
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(chosen, hadoopConf))
+      val footer =
+        try new Footer(chosen.getPath, reader.getFooter)
+        finally reader.close()
+      Some(ParquetFileFormat.readSchemaFromFooter(footer,
+        new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = c.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
+          nanosAsLong = c.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation =
+            c.parquetReaderRespectUnknownTypeAnnotation)))
+    }
+  }
+
+  /** Spark's file-listing rule (`HadoopFSUtils.shouldFilterOutPathName`):
+    * `_`- and `.`-prefixed names and `._COPYING_` files are skipped, except
+    * partition directories and the parquet summary files. */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
 
   /** Rebuild `ts` as microsecond TimestampType from whichever encoding the
     * parquet file used (see ensure's doc). Public for the encoding

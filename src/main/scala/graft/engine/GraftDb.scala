@@ -5696,7 +5696,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     val df =
       if (paths.isEmpty)
         session.createDataFrame(session.sparkContext.emptyRDD[Row], schema)
-      else session.read.parquet(paths: _*)
+      // the schema the bucket files were written with: no inference job
+      else session.read.schema(schema).parquet(paths: _*)
     if (bigParts.size > 64) {
       val live = liveBigFrames()
       bigParts.keySet.removeIf(k => !live.containsKey(k))
@@ -6325,7 +6326,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           Left(s"no snapshot of '$table' at version $version " +
             s"(retained: ${versions().mkString(",")})")
         else {
-          val df = session.read.parquet(pq.toString)
+          val df = graft.Tables.readParquet(session, pq.toString)
           val cols = df.columns.filterNot(c => c == "__ord" || c == "__rowid")
           Right(df.orderBy("__ord").select(cols.head, cols.tail: _*))
         }
@@ -6357,7 +6358,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         try ls.forEach { p =>
           val n = p.getFileName.toString
           if (n.endsWith(".parquet") && Files.isDirectory(p)) {
-            val df = s.read.parquet(p.toString)
+            val df = graft.Tables.readParquet(s, p.toString)
             val cols = df.columns
               .filterNot(c => c == "__ord" || c == "__rowid")
             df.orderBy("__ord").select(cols.head, cols.tail: _*)
@@ -6426,7 +6427,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           val store: Store =
             if (!Files.exists(pq)) Mem(Vector.empty)
             else {
-              val df = session.read.parquet(pq.toString)
+              val df = graft.Tables.readParquet(session, pq.toString)
               val probe = df.limit(math.min(maxDriverRows,
                 Int.MaxValue - 2L).toInt + 1).collect()
               if (probe.length > maxDriverRows)

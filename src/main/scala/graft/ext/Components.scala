@@ -21,12 +21,15 @@ import org.apache.spark.sql.types.DecimalType
   *    your own label" folds into the same grouped `min` as the
   *    neighbour pull — each iteration is ONE shuffle join + ONE
   *    partial-aggregated groupBy, no join back to the previous labels;
-  *  - labels only ever DECREASE, so the exact DECIMAL(38,0) sum of all
-  *    labels is strictly decreasing until the fixpoint; the sum rides
-  *    the materialization job via `Dataset.observe` (CollectMetrics
-  *    accumulates in the same tasks that write the checkpoint), and
-  *    sum(k) = sum(k-1) IS convergence — zero extra jobs, one scalar of
-  *    driver traffic per iteration;
+  *  - labels only ever DECREASE and rows are only ever ADDED (a vertex
+  *    seen only in `edges` gets its row once a labelled neighbour
+  *    reaches it), so a round that changes anything either adds a row
+  *    or, adding none, lowers the exact DECIMAL(38,0) sum of all labels.
+  *    The sum alone is not enough: an added row can cancel an equal
+  *    label drop. Row count and sum ride the materialization job via one
+  *    `Dataset.observe` (CollectMetrics accumulates in the same tasks
+  *    that write the checkpoint), and both unchanged IS convergence —
+  *    zero extra jobs, two scalars of driver traffic per iteration;
   *  - `localCheckpoint()` (cluster: reliable checkpoint) truncates the
   *    lineage so the plan does not grow with the iteration count.
   *
@@ -49,6 +52,7 @@ object Components {
     * never overflow at any corpus scale. */
   private val labelSum =
     F.sum(col("label").cast(DecimalType(38, 0))).as("lsum")
+  private val labelRows = F.count(lit(1)).as("rows")
 
   private def asBig(v: Any): java.math.BigDecimal = v match {
     case null => null
@@ -63,12 +67,9 @@ object Components {
 
   /** Vertices that appear only in `edges` are not filtered out: such a
     * vertex gets a row once its component holds a vertex of `nodes` (a
-    * component made only of edge-only vertices gets none). The label-sum
-    * convergence test is exact only when every vertex is in `nodes`: a
-    * row added in the same round as an equal label drop leaves the sum
-    * unchanged, so an edge-only vertex can end with a label that is not
-    * its component's minimum. Pass every vertex in `nodes`. Duplicate
-    * `nodes` ids are deduplicated: every id appears once in the output.
+    * component made only of edge-only vertices gets none), labelled with
+    * its component's minimum `nodes` id. Duplicate `nodes` ids are
+    * deduplicated: every id appears once in the output.
     *
     * @param nodes one column `id` (every vertex, including singletons)
     * @param edges two columns (undirected pairs; symmetrized internally)
@@ -87,9 +88,10 @@ object Components {
 
     val obs0 = org.apache.spark.sql.Observation("graft-cc-init")
     var labels = nodes.select(col("id"), col("id").as("label"))
-      .observe(obs0, labelSum)
+      .observe(obs0, labelSum, labelRows)
       .stageMaterialize
     var prevSum = asBig(obs0.get("lsum"))
+    var prevRows = obs0.get("rows")
     var iter = 0
     var changed = true
     while (changed) {
@@ -99,17 +101,19 @@ object Components {
       // Each vertex pulls the smallest label in its closed neighbourhood
       // (self-loop included). The groupBy(min) runs with a map-side
       // partial aggregate, so the shuffle carries one candidate row per
-      // (vertex, map partition); the label-sum metric is collected by the
-      // same tasks that write the checkpoint.
+      // (vertex, map partition); the label-sum and row-count metrics are
+      // collected by the same tasks that write the checkpoint.
       val obs = org.apache.spark.sql.Observation(s"graft-cc-iter-$iter")
       val next = sym.join(labels, sym("t") === labels("id"))
         .groupBy(sym("s").as("id"))
         .agg(min("label").as("label"))
-        .observe(obs, labelSum)
+        .observe(obs, labelSum, labelRows)
         .stageMaterialize
       val s = asBig(obs.get("lsum"))
-      changed = !sumsEqual(s, prevSum)
+      val rows = obs.get("rows")
+      changed = !sumsEqual(s, prevSum) || rows != prevRows
       prevSum = s
+      prevRows = rows
       labels.unpersist()
       labels = next
       iter += 1

@@ -134,7 +134,8 @@ object Stages {
       val spark = df.sparkSession
       val out = tableBase().resolve(s"stage-${counter.incrementAndGet()}")
       df.write.mode("overwrite").parquet(out.toString)
-      spark.read.parquet(out.toString)
+      // the schema just written: reading it back needs no inference job
+      spark.read.schema(df.schema).parquet(out.toString)
     case other => throw new IllegalArgumentException(
       s"graft.stageMaterialize=$other (expected local | reliable | table)")
   }

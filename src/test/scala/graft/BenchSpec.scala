@@ -14,4 +14,11 @@ class BenchSpec extends AnyFunSuite {
     assert(js.get("value").asDouble == 12.346)
     assert(js.get("nqueries").asInt == 163 && js.get("nfailures").asInt == 2)
   }
+
+  test("the per-query file is named for the CPU count unless overridden") {
+    assert(Bench.perQueryPath(Map.empty, "32") == "bench_per_query_c32.json")
+    assert(Bench.perQueryPath(Map.empty, "8") == "bench_per_query_c8.json")
+    assert(Bench.perQueryPath(Map("SPARK_GRAFT_BENCH_JSON" -> "/tmp/b.json"), "8") ==
+      "/tmp/b.json")
+  }
 }

@@ -41,6 +41,13 @@ class ComponentsSpec extends SparkSpec {
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L))
   }
 
+  test("an edge-only vertex added in the round its neighbour's label drops still converges") {
+    // round 1 adds vertex 3 (label 5) while vertex 5 drops from 5 to 0:
+    // the label sum stays 5, so only the row count shows the change
+    assert(run(Seq(0L, 5L), Seq((5L, 3L), (0L, 5L))) ==
+      Map(0L -> 0L, 3L -> 0L, 5L -> 0L))
+  }
+
   test("non-convergence within maxIters fails loudly, never silently") {
     val e = intercept[IllegalStateException] {
       run(0L to 9L, (0L to 8L).map(i => (i, i + 1)), maxIters = 2)
