@@ -33,48 +33,15 @@ object Bench {
       .config("spark.ui.enabled", "false"), master).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // Warm the session (JIT, codegen cache, parquet footer reads) so the
-    // first timed query doesn't absorb one-time startup cost. Best-effort:
-    // a data-shape surprise here must degrade to per-query err rows in the
-    // timed loop below, not kill the JVM before a single query runs.
-    try {
-      Tables.ensure(spark, sfDir)
-      Tables.names.foreach(t => spark.table(t).limit(1).count())
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] table warmup failed: ${e.getMessage}")
-    }
-    spark.range(1000).selectExpr("sum(id)").collect()
-
     val wanted: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
       if (args.nonEmpty) {
         val keep = args(0).split(",").toSet
         SparkEntry.queries.filter { case (k, _) => keep.contains(k) }
       } else SparkEntry.queries
 
-    // Warm each query's GENERATED code on a small dataset first: the plan
-    // shape (and therefore the Janino classes + their JIT) is identical
-    // across scale factors, so the timed run below measures steady-state
-    // execution rather than one-time compilation of ~65 distinct
-    // whole-stage-codegen classes (measured: 2-8x first-run penalty per
-    // query). sf0.01, not sf0.001: the 50-row scale runs the generated
-    // loops too few iterations to trigger C2 JIT compilation of the big
-    // 64-aggregate sketch classes, so their first full-scale run executed
-    // mixed interpreted/C1 while C2 compiled in the background (measured:
-    // x57 35 s first run vs 11 s steady-state — the r2/r3 bench-tail
-    // mystery). DuckDB's baseline has no per-query codegen or JIT; this
-    // removes the JVM-only artifact while every timed byte of real work
-    // still runs at the full scale factor, cold.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.01")
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      wanted.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => } // warmup is best-effort
-        spark.catalog.clearCache()
-      }
-      System.gc()
-    }
+    warm(spark, sfDir, warmDir, wanted.toSeq.sortBy(_._1).map(_._2))
 
     // Variance reduction (dev knob): SPARK_GRAFT_BENCH_REPS=k reports the
     // MEDIAN of k timed runs per query. Default 1 — the driver contract —
@@ -134,6 +101,48 @@ object Bench {
     println(summaryLine(total, results.size, failures.size, filePointer,
       reps, sfDir))
     spark.stop()
+  }
+
+  /** Everything before the timed loop.
+    *
+    * First each query's GENERATED code is warmed on a small dataset,
+    * `warmDir`: the plan shape (and therefore the Janino classes + their
+    * JIT) is identical across scale factors, so the timed run measures
+    * steady-state execution rather than one-time compilation of ~65
+    * distinct whole-stage-codegen classes (measured: 2-8x first-run
+    * penalty per query). sf0.01, not sf0.001: the 50-row scale runs the
+    * generated loops too few iterations to trigger C2 JIT compilation of
+    * the big 64-aggregate sketch classes, so their first full-scale run
+    * executed mixed interpreted/C1 while C2 compiled in the background
+    * (measured: x57 35 s first run vs 11 s steady-state — the r2/r3
+    * bench-tail mystery). DuckDB's baseline has no per-query codegen or
+    * JIT; this removes the JVM-only artifact while every timed byte of
+    * real work still runs at the full scale factor, cold.
+    *
+    * Then the session is warmed on `sfDir` (parquet footer reads, view
+    * registration), AFTER the code warm-up: that loop registers
+    * `warmDir`'s views, and the first timed query would otherwise pay for
+    * registering `sfDir`'s again inside its timer. Best-effort: a
+    * data-shape surprise here must degrade to per-query err rows in the
+    * timed loop, not kill the JVM before a single query runs. */
+  def warm(spark: SparkSession, sfDir: String, warmDir: String,
+           queries: Seq[(SparkSession, String) => org.apache.spark.sql.DataFrame]): Unit = {
+    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
+      queries.foreach { fn =>
+        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+        catch { case _: Throwable => } // warmup is best-effort
+        spark.catalog.clearCache()
+      }
+      System.gc()
+    }
+    try {
+      Tables.ensure(spark, sfDir)
+      Tables.names.foreach(t => spark.table(t).limit(1).count())
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] table warmup failed: ${e.getMessage}")
+    }
+    spark.range(1000).selectExpr("sum(id)").collect()
   }
 
   // Seconds at millisecond resolution: the timings carry ±30% shared-VM

@@ -1,10 +1,14 @@
 package graft
 
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graft.GraftSql
 import org.apache.spark.sql.types.StructType
 
 /** Registers the driver testdata parquet tables as temp views.
@@ -24,9 +28,21 @@ import org.apache.spark.sql.types.StructType
   * on the driver, and hands the schema to the reader; the engine's
   * snapshot and time-travel opens use it too.
   *
+  * The ten opens run concurrently. Each costs tens of milliseconds (footer
+  * read, relation resolution, the view command) and none depends on
+  * another, so one after another they were most of a fresh session's
+  * set-up while the other cores sat idle. Each open runs on a pool thread
+  * through [[org.apache.spark.sql.graft.GraftSql.onPool]],
+  * which carries the caller's session (so `SQLConf.get` there is the
+  * caller's conf) and the caller's SparkContext local properties (so a job
+  * an open starts, e.g. schema inference when merging is on, carries the
+  * caller's job group, description and scheduler pool). An open must not
+  * take the `Tables` monitor: [[ensure]] holds it while it waits.
+  *
   * At 100 TB these would be bucketed/partitioned managed tables; the view
-  * registration is idempotent and cached per (session, dir) so per-query
-  * overhead is one conf lookup.
+  * registration is idempotent and cached per (session, dir), so once a
+  * session holds a dir's views a query pays one monitor acquire and one
+  * conf lookup for them.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -41,7 +57,8 @@ object Tables {
   def registeredDir(spark: SparkSession): Option[String] =
     spark.conf.getOption(RegisteredKey)
 
-  /** Register all testdata views for `dir` (idempotent).
+  /** Register all testdata views for `dir` (idempotent), the ten opens
+    * concurrently (see the object doc); returns once every open has ended.
     *
     * events.parquet has stored ts in two encodings across testdata
     * generations: TIMESTAMP(NANOS) (which Spark's parquet reader rejects
@@ -57,31 +74,38 @@ object Tables {
   def ensure(spark: SparkSession, dir: String): Unit = synchronized {
     if (!spark.conf.getOption(RegisteredKey).contains(dir)) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Per-table isolation: one unreadable/drifted table must only red the
-      // queries that reference it (TABLE_OR_VIEW_NOT_FOUND), not all of
-      // them — round 8 lost its whole scoreboard to a single-table schema
-      // drift failing the shared registration loop.
-      names.foreach { n =>
-        try {
-          val raw = readParquet(spark, s"$dir/$n.parquet")
-          val df = n match {
-            case "events"     => pinSchema(n, normalizeEventsTs(raw))
-            case "embeddings" => normalizeEmbedding(raw)
-            case _            => pinSchema(n, raw)
-          }
-          df.createOrReplaceTempView(n)
-        } catch {
-          case e: Throwable =>
-            // drop any same-named view from a previously registered dir:
-            // a loud TABLE_OR_VIEW_NOT_FOUND beats silently stale data
-            spark.catalog.dropTempView(n)
-            System.err.println(
-              s"[tables] skipping view '$n' ($dir): ${e.getMessage}")
-        }
-      }
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val opens = names.map(n => GraftSql.onPool(spark)(register(spark, dir, n)))
+      // wait for every open before rethrowing a failure (only `register`'s
+      // error handling can throw), so none still runs once `ensure` returns
+      opens.foreach(Await.ready(_, Duration.Inf))
+      opens.foreach(_.value.get.get)
       spark.conf.set(RegisteredKey, dir)
     }
   }
+
+  /** Open one table of `dir` and register it as view `n`. Per-table
+    * isolation: one unreadable/drifted table must only red the queries
+    * that reference it (TABLE_OR_VIEW_NOT_FOUND), not all of them — round
+    * 8 lost its whole scoreboard to a single-table schema drift failing
+    * the shared registration loop. */
+  private def register(spark: SparkSession, dir: String, n: String): Unit =
+    try {
+      val raw = readParquet(spark, s"$dir/$n.parquet")
+      val df = n match {
+        case "events"     => pinSchema(n, normalizeEventsTs(raw))
+        case "embeddings" => normalizeEmbedding(raw)
+        case _            => pinSchema(n, raw)
+      }
+      df.createOrReplaceTempView(n)
+    } catch {
+      case e: Throwable =>
+        // drop any same-named view from a previously registered dir:
+        // a loud TABLE_OR_VIEW_NOT_FOUND beats silently stale data
+        spark.catalog.dropTempView(n)
+        System.err.println(
+          s"[tables] skipping view '$n' ($dir): ${e.getMessage}")
+    }
 
   /** `spark.read.parquet(path)` without the schema-inference job: the
     * schema comes from [[footerSchema]] and goes to the reader, which then

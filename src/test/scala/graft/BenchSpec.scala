@@ -1,9 +1,10 @@
 package graft
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.Paths
 
-class BenchSpec extends AnyFunSuite {
+import com.fasterxml.jackson.databind.ObjectMapper
+
+class BenchSpec extends SparkSpec {
 
   test("the short final line stays JSON when the paths hold quotes and backslashes") {
     val file = """/tmp/per "query" \ run.json"""
@@ -20,5 +21,18 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.perQueryPath(Map.empty, "8") == "bench_per_query_c8.json")
     assert(Bench.perQueryPath(Map("SPARK_GRAFT_BENCH_JSON" -> "/tmp/b.json"), "8") ==
       "/tmp/b.json")
+  }
+
+  test("the warm step leaves the benchmark dir's views registered, not the warm dir's") {
+    val warmDir = Paths.get(sfDir).resolveSibling("sf0.01").toString
+    val s = spark.newSession()
+    val dirs = scala.collection.mutable.ArrayBuffer[String]()
+    Bench.warm(s, sfDir, warmDir, Seq { (sp, d) =>
+      dirs += d
+      SparkEntry.queries("q01_scan")(sp, d)
+    })
+    assert(dirs.toSeq === Seq(warmDir))
+    // the first timed query finds sfDir registered and pays no registration
+    assert(Tables.registeredDir(s) === Some(sfDir))
   }
 }

@@ -1,8 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -117,6 +118,26 @@ class TablesEncodingSpec extends SparkSpec {
     assert(session.table("region").count() === 2) // healthy table usable
     // broken table fails loudly (not stale data from a previous dir)
     intercept[Exception] { session.table("events").count() }
+  }
+
+  test("re-registering onto a dir with one truncated table drops only its view") {
+    val session = spark.newSession()
+    Tables.ensure(session, sfDir)
+    val copy = tmp()
+    Tables.names.foreach { n =>
+      val bytes = Files.readAllBytes(Paths.get(sfDir, s"$n.parquet"))
+      Files.write(Paths.get(copy, s"$n.parquet"),
+        if (n == "lineitem") bytes.take(bytes.length / 2) else bytes)
+    }
+    Tables.ensure(session, copy) // must not throw
+    assert(Tables.registeredDir(session) === Some(copy))
+    Tables.names.filterNot(_ == "lineitem").foreach { n =>
+      val files = session.table(n).inputFiles.toSeq
+      assert(files.nonEmpty && files.forall(_.contains(copy)), s"$n: $files")
+    }
+    // the truncated table fails loudly, not with the old dir's rows
+    val e = intercept[AnalysisException](session.table("lineitem"))
+    assert(e.getCondition === "TABLE_OR_VIEW_NOT_FOUND")
   }
 
   test("embedding element-type drift (float64 regeneration) normalizes to float") {

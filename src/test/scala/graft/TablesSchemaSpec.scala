@@ -187,6 +187,22 @@ class TablesSchemaSpec extends SparkSpec {
     assert(s.table("lineitem").count() === spark.read.parquet(s"$sfDir/lineitem.parquet").count())
   }
 
+  test("Tables.ensure's concurrent opens start their jobs as the caller's") {
+    // With schema merging on, footerSchema leaves the schema to Spark's
+    // inference: one job per table, started on a pool thread. Each must
+    // carry the local property jobsOf sets on this thread, or a job started
+    // off it slips past the no-job check above. A pool thread inherits the
+    // properties of the thread that created it, so only a second round, on
+    // threads the first made, shows a task that does not copy them.
+    for (_ <- 1 to 2) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.parquet.mergeSchema", "true")
+      val jobs = jobsOf(Tables.ensure(s, sfDir))
+      assert(inferenceJobs(jobs).size === Tables.names.size, jobs)
+      assert(Tables.names.forall(n => s.catalog.tableExists(n)))
+    }
+  }
+
   test("a GraftDb reopen and a ?version=N read start no schema-inference job") {
     val root = tmp()
     val db = GraftDb.open(spark, root).fold(e => fail(e), identity)
