@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.io.PrintWriter
 import java.security.MessageDigest
+import graft.command.Json
 
 /** Differential-testing driver, Spark side (VERDICT r10 #1): generate
   * seeded random Spark∩DuckDB queries (graft.tools.SqlFuzz), run each on
@@ -46,12 +47,12 @@ object Fuzz {
         val rec =
           try {
             val (n, digest, sample) = run(spark, sql)
-            s"""{"seed":$seed,"sql":${js(sql)},"rows":$n,""" +
-              s""""digest":"$digest","sample":${js(sample)}}"""
+            s"""{"seed":$seed,"sql":${Json.escapeQ(sql)},"rows":$n,""" +
+              s""""digest":"$digest","sample":${Json.escapeQ(sample)}}"""
           } catch {
             case e: Throwable =>
               errs += 1
-              s"""{"seed":$seed,"sql":${js(sql)},"err":${js(
+              s"""{"seed":$seed,"sql":${Json.escapeQ(sql)},"err":${Json.escapeQ(
                   s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")}}"""
           }
         w.println(rec)
@@ -115,15 +116,4 @@ object Fuzz {
   private def md5(s: String): String =
     MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
-
-  /** JSON string literal (same escaping rules as Verify's). */
-  private def js(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

@@ -370,14 +370,8 @@ object Dedup {
                    threshold: Double = 0.8): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     Tables.ensure(spark, dir)
-    def ckpt(sql: String, view: String): Unit =
-      spark.sql(sql).stageMaterialize.createOrReplaceTempView(view)
-
-    // unigram candidate+verify stage (shared with x75; see below)
-    unigramPairs(spark, threshold).createOrReplaceTempView("__x54_q")
-
-    // distinct word-trigram set per doc as SORTED xxhash64 arrays for the
-    // j3 verify, computed MAP-ONLY by the codegen'd ngram_hashes_sorted
+    // r3: distinct word-trigram set per doc as SORTED xxhash64 arrays for
+    // the j3 verify, computed MAP-ONLY by the codegen'd ngram_hashes_sorted
     // kernel (r15; one tight loop over the token array the doc already
     // carries). The previous posexplode → two lead() windows → collect_list
     // re-aggregate detour paid one exchange + a per-doc sort just to pair
@@ -390,16 +384,17 @@ object Dedup {
     // bits (P ≈ d²/2⁶⁵ per pair, d ≈ 50 — negligible, deterministic for a
     // fixed corpus so the oracle hash pins it). Docs with < 3 tokens get
     // no row (the old GROUP BY over zero trigram rows), preserving the
-    // LEFT-JOIN null extension below.
-    ckpt(
-      """SELECT doc_id, ranks3, CAST(size(ranks3) AS BIGINT) AS n3
-        |FROM (SELECT doc_id,
-        |        ngram_hashes_sorted(
-        |          array_remove(split(LOWER(text), ' '), ''), 3) AS ranks3
-        |      FROM documents)
-        |WHERE size(ranks3) > 0""".stripMargin, "__x54_r3")
-    val out = spark.sql(
-      s"""SELECT doc_a, doc_b,
+    // LEFT-JOIN null extension below. q is the unigram candidate+verify
+    // stage (shared with x75; see below).
+    Stages.sql(spark,
+      """WITH r3 AS (
+         |  SELECT doc_id, ranks3, CAST(size(ranks3) AS BIGINT) AS n3
+         |  FROM (SELECT doc_id,
+         |          ngram_hashes_sorted(
+         |            array_remove(split(LOWER(text), ' '), ''), 3) AS ranks3
+         |        FROM documents)
+         |  WHERE size(ranks3) > 0)
+         |SELECT doc_a, doc_b,
          |  CAST(CAST(FLOOR(j1 * 10000.0 + 0.5) / 10000.0 AS DECIMAL(18,4)) AS DOUBLE) AS j1,
          |  CAST(CAST(FLOOR((CASE WHEN n3a + n3b - i3 > 0 THEN
          |           CAST(i3 AS DOUBLE) / CAST(n3a + n3b - i3 AS DOUBLE)
@@ -409,9 +404,11 @@ object Dedup {
          |          COALESCE(fa.ranks3, CAST(array() AS ARRAY<BIGINT>)),
          |          COALESCE(fb.ranks3, CAST(array() AS ARRAY<BIGINT>))) AS i3,
          |        COALESCE(fa.n3, 0) AS n3a, COALESCE(fb.n3, 0) AS n3b
-         |      FROM __x54_q q
-         |      LEFT JOIN __x54_r3 fa ON fa.doc_id = q.doc_a
-         |      LEFT JOIN __x54_r3 fb ON fb.doc_id = q.doc_b)""".stripMargin)
+         |      FROM q
+         |      LEFT JOIN r3 fa ON fa.doc_id = q.doc_a
+         |      LEFT JOIN r3 fb ON fb.doc_id = q.doc_b)""".stripMargin,
+      materialize = Seq("r3"),
+      bind = Map("q" -> unigramPairs(spark, threshold)))
       // materialize BEFORE the global sort: a range-partitioned ORDER BY
       // first runs a sampling pass over its child to pick partition
       // boundaries, and an unmaterialized child means the whole verify
@@ -419,28 +416,27 @@ object Dedup {
       // makes the sampling pass a cheap block-manager re-read.
       .stageMaterialize
       .orderBy("doc_a", "doc_b")
-    // drop the scaffolding views: the returned plan holds the checkpointed
-    // RDDs directly, and dangling view references would pin their blocks in
-    // the block manager after the caller is done (clearCache can't free
-    // localCheckpoint blocks — only GC of the last RDD reference does)
-    Seq("__x54_r3", "__x54_q")
-      .foreach(spark.catalog.dropTempView)
-    out
   }
 
-  // DISTINCT tokens per doc, deduped MAP-SIDE via array_distinct before
+  // tp: DISTINCT tokens per doc, deduped MAP-SIDE via array_distinct before
   // the explode (r15): the PPJoin stage only consumes per-doc token SETS,
   // so deduping inside the row removes the `SELECT DISTINCT doc_id, lang,
   // tok` exchange+aggregate the exploded stream previously paid twice
   // (dictionary build AND rank join-back) — guide §2.3 "aggregate before
   // you shuffle". (The trigram stages that needed positions derive their
   // grams map-only via ngram_hashes_sorted now, so positions are gone.)
-  private val tokenSetSql =
-    """SELECT doc_id, lang, tok
-      |FROM (SELECT doc_id, lang,
-      |        array_distinct(array_remove(split(LOWER(text), ' '), '')) AS toks
-      |      FROM documents)
-      |LATERAL VIEW explode(toks) AS tok""".stripMargin
+  // Not materialized: each text that references it re-derives it inline.
+  private val tokenSets =
+    """tp AS (
+      |  SELECT doc_id, lang, tok
+      |  FROM (SELECT doc_id, lang,
+      |          array_distinct(array_remove(split(LOWER(text), ' '), '')) AS toks
+      |        FROM documents)
+      |  LATERAL VIEW explode(toks) AS tok)""".stripMargin
+
+  /** Bitset-mask width (64-bit words, i.e. 1024 ranks) past which the
+    * PPJoin build switches to the rank-array verify. */
+  private val MaskWords = 16
 
   /** The PPJoin unigram candidate+verify stage of [[ngramJaccard]]: all
     * pairs with word-set Jaccard >= threshold, each emitted exactly once,
@@ -450,12 +446,13 @@ object Dedup {
     * (doc_a, doc_b, j1) — callers pay no recomputation when they branch.
     * Caller must have run Tables.ensure + GraftFunctions.register.
     *
-    * Each intermediate is materialized via [[Stages.materialize]]: (a) the
-    * lineage truncation keeps Spark's DeduplicateRelations from flakily
-    * throwing UnresolvedException when a windowed+joined subtree is
-    * referenced multiple times through CTE inlining, and (b) each stage is
-    * computed exactly once (the monolithic-CTE formulation recomputed the
-    * interpreted-lambda tokenization per referencing branch — 3× cost).
+    * Each multiply-referenced intermediate is a `materialize` CTE of
+    * [[Stages.sql]]: (a) the lineage truncation keeps Spark's
+    * DeduplicateRelations from flakily throwing UnresolvedException when a
+    * windowed+joined subtree is referenced multiple times through CTE
+    * inlining, and (b) each stage is computed exactly once (the
+    * monolithic-CTE formulation recomputed the interpreted-lambda
+    * tokenization per referencing branch — 3× cost).
     * On a cluster run with `-Dgraft.stageMaterialize=reliable|table` these
     * become fault-tolerant checkpoints / parquet intermediate tables.
     */
@@ -463,30 +460,30 @@ object Dedup {
                                 threshold: Double): DataFrame =
     // shared across x54 (trigram join-back), x75 (component edges) and
     // x108 (keep-best on x75) — one PPJoin per (session, dir, threshold);
-    // the returned frame is fully materialized and its temp views dropped,
-    // so the cached value is self-contained
+    // the returned frame is fully materialized, so the cached value is
+    // self-contained
     Stages.shared(spark, "unigramPairs", s"t=$threshold") {
       unigramPairsBuild(spark, threshold)
     }
 
-  private def unigramPairsBuild(spark: SparkSession,
-                                threshold: Double): DataFrame = {
-    spark.sql(tokenSetSql).createOrReplaceTempView("__x54u_tp")
+  /** `maskWords` is the bitset-mask cutover ([[MaskWords]]); a spec passes
+    * 0 or Int.MaxValue to force one verify branch. */
+  private[ext] def unigramPairsBuild(spark: SparkSession, threshold: Double,
+                                     maskWords: Int = MaskWords): DataFrame = {
     // per-lang df-ascending dictionary: token → rank (rarest first);
     // the stream is already distinct per doc, so COUNT(*) IS the doc
     // frequency — no DISTINCT pre-aggregate. The widest-vocabulary scalar
     // (mask width) rides the dictionary's materialization job via observe
     // (r16) instead of a separate MAX job over the checkpointed rows.
     val vObs = org.apache.spark.sql.Observation("graft-x54-maxvocab")
-    spark.sql(
-      """SELECT lang, tok,
-        |  ROW_NUMBER() OVER (PARTITION BY lang ORDER BY COUNT(*), tok) AS rank
-        |FROM __x54u_tp
-        |GROUP BY lang, tok""".stripMargin)
-      .observe(vObs, org.apache.spark.sql.functions.max(
-        org.apache.spark.sql.functions.col("rank")).as("maxRank"))
+    val dict = spark.sql(
+      s"""WITH $tokenSets
+         |SELECT lang, tok,
+         |  ROW_NUMBER() OVER (PARTITION BY lang ORDER BY COUNT(*), tok) AS rank
+         |FROM tp
+         |GROUP BY lang, tok""".stripMargin)
+      .observe(vObs, max(col("rank")).as("maxRank"))
       .stageMaterialize
-      .createOrReplaceTempView("__x54_v1")
     val maxVocab = vObs.get("maxRank") match {
       case null => 0 // empty corpus: no ranks at all
       case n: Number => n.intValue()
@@ -498,30 +495,24 @@ object Dedup {
     // ladder's 31 words: one long), but row width grows LINEARLY with
     // vocabulary, which at web-corpus vocab (millions of distinct
     // tokens) turns the prefix join into a vocabulary-sized shuffle.
-    // Past the cutover (-Dgraft.x54MaskWords, default 16 words = 1024
-    // ranks) the build switches to the classical PPJoin shape: carry the
-    // sorted rank array (O(|doc|), vocabulary-INDEPENDENT), verify with
-    // the codegen'd two-pointer sorted_intersect_count, and take the
-    // lowest shared prefix rank via array_intersect on the (short)
-    // prefix slices. Same candidate set, same exact j1 — DedupSpec pins
-    // value identity of the two paths; the 8×/64× scale smokes run the
-    // array path end-to-end (their vocab crosses the cutover).
-    val maskWordsMax =
-      sys.props.get("graft.x54MaskWords").map(_.toInt).getOrElse(16)
-    val out = if (nMask <= maskWordsMax) maskPairs(spark, threshold, nMask)
-              else arrayPairs(spark, threshold)
-    Seq("__x54u_tp", "__x54_v1").foreach(spark.catalog.dropTempView)
-    out
+    // Past the cutover ([[MaskWords]]) the build switches to the
+    // classical PPJoin shape: carry the sorted rank array (O(|doc|),
+    // vocabulary-INDEPENDENT), verify with the codegen'd two-pointer
+    // sorted_intersect_count, and take the lowest shared prefix rank via
+    // array_intersect on the (short) prefix slices. Same candidate set,
+    // same exact j1 — DedupSpec pins value identity of the two paths; the
+    // 8×/64× scale smokes run the array path end-to-end (their vocab
+    // crosses the cutover).
+    if (nMask <= maskWords) maskPairs(spark, threshold, nMask, dict)
+    else arrayPairs(spark, threshold, dict)
   }
 
-  /** Bitset-mask PPJoin verify (small-vocabulary branch); expects the
-    * `__x54u_tp` / `__x54_v1` views registered. */
+  /** Bitset-mask PPJoin verify (small-vocabulary branch) over the rank
+    * dictionary `dict` (lang, tok, rank). */
   private def maskPairs(spark: SparkSession, threshold: Double,
-                        nMask: Int): DataFrame = {
-    def ckpt(sql: String, view: String): Unit =
-      spark.sql(sql).stageMaterialize.createOrReplaceTempView(view)
-    // Per-doc unigram features in ONE aggregation (no per-doc windows, no
-    // join-back): sorted rank array + set size + full bitset masks. The
+                        nMask: Int, dict: DataFrame): DataFrame = {
+    // r1: per-doc unigram features in ONE aggregation (no per-doc windows,
+    // no join-back): sorted rank array + set size + full bitset masks. The
     // PREFIX masks derive afterwards in pure codegen: the prefix is the
     // L = ⌊(1−t)·n⌋+1 smallest ranks, i.e. every rank ≤ ranks1[L], so
     // p_k = m_k & low-bits(prefixMax) per 64-bit word.
@@ -544,19 +535,6 @@ object Dedup {
          |           ELSE shiftrightunsigned(CAST(-1 AS BIGINT),
          |                CAST($hi - pm AS INT)) END) AS p$k""".stripMargin
     }.mkString(", ")
-    ckpt(
-      s"""SELECT doc_id, lang, n1, ranks1, $prefixCols,
-         |       ${(0 until nMask).map(k => s"m$k").mkString(", ")}
-         |FROM (SELECT doc_id, lang, n1, ranks1,
-         |        element_at(ranks1,
-         |          CAST(n1 - CEIL($threshold * n1) + 1 AS INT)) AS pm,
-         |        ${(0 until nMask).map(k => s"m$k").mkString(", ")}
-         |      FROM (SELECT doc_id, lang, COUNT(*) AS n1,
-         |              sort_array(collect_list(rank)) AS ranks1, $maskCols
-         |            FROM (SELECT tp.doc_id, tp.lang, v.rank
-         |                  FROM __x54u_tp tp
-         |                  JOIN __x54_v1 v ON tp.lang = v.lang AND tp.tok = v.tok)
-         |            GROUP BY doc_id, lang))""".stripMargin, "__x54_r1")
     val interSum = (0 until nMask)
       .map(k => s"bit_count(a.m$k & b.m$k)").mkString(" + ")
     // keep this pair only at the LOWEST shared prefix rank → exactly one
@@ -576,57 +554,58 @@ object Dedup {
       }.mkString(" ")
       s"CASE $whens ELSE -1 END"
     }
+    val masks = (0 until nMask).map(k => s"m$k").mkString(", ")
     val maskList = (0 until nMask).map(k => s"m$k, p$k").mkString(", ")
-    spark.sql(
-      s"""SELECT lang, doc_id, n1, $maskList, prank
-         |FROM __x54_r1 LATERAL VIEW explode(
-         |  slice(ranks1, 1, CAST(n1 - CEIL($threshold * n1) + 1 AS INT)))
-         |  AS prank""".stripMargin)
-      .createOrReplaceTempView("__x54_pf")
-    // inter/j1 computed ONCE in an inner projection (repeating the popcount
-    // sum per reference defeats codegen subexpression reuse), dedup + j1
-    // filters applied in the same codegen stage — no extra shuffle. The
+    // pf: one probe row per prefix rank. The final select computes
+    // inter/j1 ONCE in an inner projection (repeating the popcount sum per
+    // reference defeats codegen subexpression reuse), dedup + j1 filters
+    // applied in the same codegen stage — no extra shuffle. The caller's
     // checkpoint materializes the (small) verified pair set so both
     // callers' downstream branches re-read blocks instead of re-running
     // the candidate join.
-    val out = spark.sql(
-      s"""SELECT doc_a, doc_b,
+    Stages.sql(spark,
+      s"""WITH $tokenSets,
+         |r1 AS (
+         |  SELECT doc_id, lang, n1, ranks1, $prefixCols, $masks
+         |  FROM (SELECT doc_id, lang, n1, ranks1,
+         |          element_at(ranks1,
+         |            CAST(n1 - CEIL($threshold * n1) + 1 AS INT)) AS pm,
+         |          $masks
+         |        FROM (SELECT doc_id, lang, COUNT(*) AS n1,
+         |                sort_array(collect_list(rank)) AS ranks1, $maskCols
+         |              FROM (SELECT tp.doc_id, tp.lang, v.rank
+         |                    FROM tp JOIN v1 v ON tp.lang = v.lang AND tp.tok = v.tok)
+         |              GROUP BY doc_id, lang))),
+         |pf AS (
+         |  SELECT lang, doc_id, n1, $maskList, prank
+         |  FROM r1 LATERAL VIEW explode(
+         |    slice(ranks1, 1, CAST(n1 - CEIL($threshold * n1) + 1 AS INT)))
+         |    AS prank)
+         |SELECT doc_a, doc_b,
          |       CAST(inter AS DOUBLE) / CAST(na + nb - inter AS DOUBLE) AS j1
          |FROM (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          |        a.n1 AS na, b.n1 AS nb, $interSum AS inter,
          |        a.prank AS prank, $lowBitIdx AS lowbit
-         |      FROM __x54_pf a JOIN __x54_pf b
+         |      FROM pf a JOIN pf b
          |        ON a.lang = b.lang AND a.prank = b.prank
          |       AND a.doc_id < b.doc_id
          |       AND LEAST(a.n1, b.n1) >= $threshold * GREATEST(a.n1, b.n1))
          |WHERE prank - 1 = lowbit
          |  AND CAST(inter AS DOUBLE) / CAST(na + nb - inter AS DOUBLE)
-         |        >= $threshold""".stripMargin)
+         |        >= $threshold""".stripMargin,
+      materialize = Seq("r1"), bind = Map("v1" -> dict))
       .stageMaterialize
-    Seq("__x54_r1", "__x54_pf").foreach(spark.catalog.dropTempView)
-    out
   }
 
-  /** Classical PPJoin verify (wide-vocabulary branch): per-doc payload is
-    * the sorted rank array — O(|doc|) regardless of vocabulary width —
-    * with the exact intersection count from the codegen'd two-pointer
-    * merge and single emission at the lowest shared prefix rank. Expects
-    * the `__x54u_tp` / `__x54_v1` views registered. */
-  private def arrayPairs(spark: SparkSession, threshold: Double): DataFrame = {
-    def ckpt(sql: String, view: String): Unit =
-      spark.sql(sql).stageMaterialize.createOrReplaceTempView(view)
-    ckpt(
-      s"""SELECT doc_id, lang, n1, ranks1,
-         |  slice(ranks1, 1, CAST(n1 - CEIL($threshold * n1) + 1 AS INT))
-         |    AS pref
-         |FROM (SELECT doc_id, lang, COUNT(*) AS n1,
-         |        sort_array(collect_list(rank)) AS ranks1
-         |      FROM (SELECT tp.doc_id, tp.lang, v.rank
-         |            FROM __x54u_tp tp
-         |            JOIN __x54_v1 v ON tp.lang = v.lang AND tp.tok = v.tok)
-         |      GROUP BY doc_id, lang)""".stripMargin, "__x54_r1a")
-    // Probe rows carry ONLY (lang, doc_id, n1, pref, prank) — the short
-    // prefix slice (~(1−t)·|doc|), never the full ranks1 array. The
+  /** Classical PPJoin verify (wide-vocabulary branch) over the rank
+    * dictionary `dict`: per-doc payload is the sorted rank array —
+    * O(|doc|) regardless of vocabulary width — with the exact intersection
+    * count from the codegen'd two-pointer merge and single emission at the
+    * lowest shared prefix rank. */
+  private def arrayPairs(spark: SparkSession, threshold: Double,
+                         dict: DataFrame): DataFrame =
+    // pfa: probe rows carry ONLY (lang, doc_id, n1, pref, prank) — the
+    // short prefix slice (~(1−t)·|doc|), never the full ranks1 array. The
     // r13-measured /tmp scratch of the pair-stage sort (~40–50 GB at
     // 128×, the single-VM boundary) was dominated by every exploded
     // probe row dragging its O(|doc|) ranks1 through the shuffle; with
@@ -634,38 +613,44 @@ object Dedup {
     // longs per probe row) and the verify arrays join back AFTER the
     // candidate pairs are deduped — two cheap doc_id equi-joins over the
     // (small) candidate set instead of a corpus×prefix-wide payload.
-    spark.sql(
-      """SELECT lang, doc_id, n1, pref, prank
-        |FROM __x54_r1a LATERAL VIEW explode(pref) AS prank""".stripMargin)
-      .createOrReplaceTempView("__x54_pfa")
-    // candidate pairs, each emitted exactly once at the LOWEST shared
-    // prefix rank (the pref slices are short — array_intersect stays
-    // cheap); the length filter prunes before the dedup test
-    ckpt(
-      s"""SELECT doc_a, doc_b
-         |FROM (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |        a.prank AS prank,
-         |        array_min(array_intersect(a.pref, b.pref)) AS lowpr
-         |      FROM __x54_pfa a JOIN __x54_pfa b
-         |        ON a.lang = b.lang AND a.prank = b.prank
-         |       AND a.doc_id < b.doc_id
-         |       AND LEAST(a.n1, b.n1) >= $threshold * GREATEST(a.n1, b.n1))
-         |WHERE prank = lowpr""".stripMargin, "__x54_cand")
-    val out = spark.sql(
-      s"""SELECT doc_a, doc_b,
+    // cand: candidate pairs, each emitted exactly once at the LOWEST
+    // shared prefix rank (the pref slices are short — array_intersect
+    // stays cheap); the length filter prunes before the dedup test.
+    Stages.sql(spark,
+      s"""WITH $tokenSets,
+         |r1a AS (
+         |  SELECT doc_id, lang, n1, ranks1,
+         |    slice(ranks1, 1, CAST(n1 - CEIL($threshold * n1) + 1 AS INT))
+         |      AS pref
+         |  FROM (SELECT doc_id, lang, COUNT(*) AS n1,
+         |          sort_array(collect_list(rank)) AS ranks1
+         |        FROM (SELECT tp.doc_id, tp.lang, v.rank
+         |              FROM tp JOIN v1 v ON tp.lang = v.lang AND tp.tok = v.tok)
+         |        GROUP BY doc_id, lang)),
+         |pfa AS (
+         |  SELECT lang, doc_id, n1, pref, prank
+         |  FROM r1a LATERAL VIEW explode(pref) AS prank),
+         |cand AS (
+         |  SELECT doc_a, doc_b
+         |  FROM (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |          a.prank AS prank,
+         |          array_min(array_intersect(a.pref, b.pref)) AS lowpr
+         |        FROM pfa a JOIN pfa b
+         |          ON a.lang = b.lang AND a.prank = b.prank
+         |         AND a.doc_id < b.doc_id
+         |         AND LEAST(a.n1, b.n1) >= $threshold * GREATEST(a.n1, b.n1))
+         |  WHERE prank = lowpr)
+         |SELECT doc_a, doc_b,
          |       CAST(inter AS DOUBLE) / CAST(na + nb - inter AS DOUBLE) AS j1
          |FROM (SELECT c.doc_a, c.doc_b, fa.n1 AS na, fb.n1 AS nb,
          |        sorted_intersect_count(fa.ranks1, fb.ranks1) AS inter
-         |      FROM __x54_cand c
-         |      JOIN __x54_r1a fa ON fa.doc_id = c.doc_a
-         |      JOIN __x54_r1a fb ON fb.doc_id = c.doc_b)
+         |      FROM cand c
+         |      JOIN r1a fa ON fa.doc_id = c.doc_a
+         |      JOIN r1a fb ON fb.doc_id = c.doc_b)
          |WHERE CAST(inter AS DOUBLE) / CAST(na + nb - inter AS DOUBLE)
-         |        >= $threshold""".stripMargin)
+         |        >= $threshold""".stripMargin,
+      materialize = Seq("r1a", "cand"), bind = Map("v1" -> dict))
       .stageMaterialize
-    Seq("__x54_r1a", "__x54_pfa", "__x54_cand")
-      .foreach(spark.catalog.dropTempView)
-    out
-  }
 
   /** 64-bit SimHash over the word bag: bit b is the sign of the sum of
     * (±1 by bit b of xxhash64(word)).
@@ -823,35 +808,32 @@ object Dedup {
                        mod: Int = 20, threshold: Double = 0.8): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     Tables.ensure(spark, dir)
-    spark.sql(
-      """SELECT doc_id, lang, text FROM documents
-        |UNION ALL
-        |SELECT doc_id + 1000000 AS doc_id, lang,
-        |  array_join(slice(array_remove(split(LOWER(text), ' '), ''), 4, 12),
-        |             ' ') AS text
-        |FROM documents WHERE doc_id < 10""".stripMargin)
-      .createOrReplaceTempView("__x82_docs")
-    // distinct trigram hashes MAP-ONLY via ngram_hashes_sorted (r15) —
+    // t3: distinct trigram hashes MAP-ONLY via ngram_hashes_sorted (r15) —
     // same replacement as the x54 trigram stage: no posexplode, no window
     // exchange, value parity pinned in NGramsEditDistanceSpec. Docs with
     // < 3 tokens keep getting no row (null extension below).
-    spark.sql(
-      """SELECT doc_id, lang, h3, CAST(size(h3) AS BIGINT) AS n3
-        |FROM (SELECT doc_id, lang,
-        |        ngram_hashes_sorted(
-        |          array_remove(split(LOWER(text), ' '), ''), 3) AS h3
-        |      FROM __x82_docs)
-        |WHERE size(h3) > 0""".stripMargin)
-      .stageMaterialize
-      .createOrReplaceTempView("__x82_t3")
-    val out = spark.sql(
-      s"""WITH probe_pf AS (
-         |  SELECT doc_id, lang, n3, h FROM __x82_t3
+    Stages.sql(spark,
+      s"""WITH docs AS (
+         |  SELECT doc_id, lang, text FROM documents
+         |  UNION ALL
+         |  SELECT doc_id + 1000000 AS doc_id, lang,
+         |    array_join(slice(array_remove(split(LOWER(text), ' '), ''), 4, 12),
+         |               ' ') AS text
+         |  FROM documents WHERE doc_id < 10),
+         |t3 AS (
+         |  SELECT doc_id, lang, h3, CAST(size(h3) AS BIGINT) AS n3
+         |  FROM (SELECT doc_id, lang,
+         |          ngram_hashes_sorted(
+         |            array_remove(split(LOWER(text), ' '), ''), 3) AS h3
+         |        FROM docs)
+         |  WHERE size(h3) > 0),
+         |probe_pf AS (
+         |  SELECT doc_id, lang, n3, h FROM t3
          |  LATERAL VIEW explode(
          |    slice(h3, 1, CAST(n3 - CEIL($threshold * n3) + 1 AS INT))) AS h
          |  WHERE doc_id % $mod = 0 OR doc_id >= 1000000),
          |postings AS (
-         |  SELECT doc_id, lang, h FROM __x82_t3 LATERAL VIEW explode(h3) AS h),
+         |  SELECT doc_id, lang, h FROM t3 LATERAL VIEW explode(h3) AS h),
          |cand AS (
          |  SELECT p.doc_id AS probe, c.doc_id AS cand
          |  FROM probe_pf p JOIN postings c
@@ -862,8 +844,8 @@ object Dedup {
          |    CAST(sorted_intersect_count(a.h3, b.h3) AS DOUBLE)
          |      / CAST(a.n3 AS DOUBLE) AS c
          |  FROM cand
-         |  JOIN __x82_t3 a ON a.doc_id = cand.probe
-         |  JOIN __x82_t3 b ON b.doc_id = cand.cand),
+         |  JOIN t3 a ON a.doc_id = cand.probe
+         |  JOIN t3 b ON b.doc_id = cand.cand),
          |m AS (
          |  SELECT probe, COUNT(*) AS containers, MIN(cand) AS first_container,
          |         MAX(c) AS cmax
@@ -873,15 +855,13 @@ object Dedup {
          |  CAST(m.first_container AS BIGINT) AS first_container,
          |  CAST(CAST(FLOOR(m.cmax * 10000.0 + 0.5) / 10000.0
          |       AS DECIMAL(18,4)) AS DOUBLE) AS cmax
-         |FROM (SELECT doc_id FROM __x82_docs
+         |FROM (SELECT doc_id FROM docs
          |      WHERE doc_id % $mod = 0 OR doc_id >= 1000000) d
-         |LEFT JOIN __x82_t3 t ON t.doc_id = d.doc_id
+         |LEFT JOIN t3 t ON t.doc_id = d.doc_id
          |LEFT JOIN m ON m.probe = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin)
+         |ORDER BY d.doc_id""".stripMargin,
+      materialize = Seq("t3"))
       .stageMaterialize
-    Seq("__x82_docs", "__x82_t3")
-      .foreach(spark.catalog.dropTempView)
-    out
   }
 
   /** x84 driver query: fingerprint-blocked edit-distance verify, skew-proof.

@@ -222,14 +222,13 @@ object Stages {
     new java.util.concurrent.ConcurrentHashMap[SharedKey, SharedEntry]()
   private val buildCounter = new AtomicLong(0)
   private val entrySeq = new AtomicLong(0)
-  // One lock per live session: builds within a session serialize (their
-  // scaffolding temp views are session-global — the PPJoin build's
-  // __x54u_tp —
-  // so two concurrent builds in one session could drop/re-register each
-  // other's views). ReentrantLock, so a build composing [[shared]] for its
-  // own inputs (same thread) re-enters freely; distinct sessions never
-  // contend. The lock lives INSIDE the weak per-session identity entry
-  // (ADVICE r11): its lifetime is exactly the session's — no explicit
+  // One lock per live session: builds within a session serialize, so
+  // concurrent callers that miss on the same stage wait for ONE build
+  // instead of each deriving it (SharedStageSpec pins one build per key).
+  // ReentrantLock, so a build composing [[shared]] for its own inputs
+  // (same thread) re-enters freely; distinct sessions never contend. The
+  // lock lives INSIDE the weak per-session identity entry (ADVICE r11):
+  // its lifetime is exactly the session's — no explicit
   // removal ever happens, so invalidate() can't yank a lock out from under
   // an in-flight build (which would let a fresh lock admit a second
   // concurrent build in the same session), and a service churning
@@ -312,8 +311,8 @@ object Stages {
     * build may freely call [[shared]] for its own inputs — the per-session
     * lock is reentrant, and a corpus-scale build never blocks lookups from
     * other sessions. Builds within ONE session serialize (see
-    * [[sessionIds]]) so concurrent builds can't clobber each other's
-    * session-global scaffolding temp views. */
+    * [[sessionIds]]), so concurrent callers missing on one key wait for a
+    * single build. */
   def shared(spark: org.apache.spark.sql.SparkSession, stage: String,
              params: String = "")(build: => DataFrame): DataFrame = {
     val dir = graft.Tables.registeredDir(spark).getOrElse("")

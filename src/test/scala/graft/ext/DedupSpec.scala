@@ -210,29 +210,19 @@ class DedupSpec extends SparkSpec {
   }
 
   test("mask and array PPJoin verify paths are value-identical (x54)") {
-    // the vocabulary-adaptive cutover (graft.x54MaskWords) must be
-    // invisible in values: same candidates, same exact j1, one emission
-    // per pair — only the carried payload (vocab-wide bitset vs
-    // vocab-independent sorted rank array) differs
-    val old = sys.props.get("graft.x54MaskWords")
-    def run(): Seq[String] = {
-      Stages.clearShared()
-      Dedup.ngramJaccard(spark, sfDir).collect().map(_.toString).sorted.toSeq
-    }
-    try {
-      sys.props("graft.x54MaskWords") = "1000000" // force bitset branch
-      val mask = run()
-      sys.props("graft.x54MaskWords") = "0" // force rank-array branch
-      val arr = run()
-      assert(mask.nonEmpty)
-      assert(arr == mask, s"paths diverged: ${arr.diff(mask).take(3)} vs " +
-        s"${mask.diff(arr).take(3)}")
-    } finally {
-      old match {
-        case Some(v) => sys.props("graft.x54MaskWords") = v
-        case None    => sys.props -= "graft.x54MaskWords"
-      }
-      Stages.clearShared()
-    }
+    // the vocabulary-adaptive cutover (Dedup.MaskWords) must be invisible
+    // in values: same candidates, same exact j1, one emission per pair —
+    // only the carried payload (vocab-wide bitset vs vocab-independent
+    // sorted rank array) differs
+    graft.functions.GraftFunctions.register(spark)
+    graft.Tables.ensure(spark, sfDir)
+    def run(maskWords: Int): Seq[String] =
+      Dedup.unigramPairsBuild(spark, 0.8, maskWords)
+        .collect().map(_.toString).sorted.toSeq
+    val mask = run(Int.MaxValue) // force bitset branch
+    val arr = run(0) // force rank-array branch
+    assert(mask.nonEmpty)
+    assert(arr == mask, s"paths diverged: ${arr.diff(mask).take(3)} vs " +
+      s"${mask.diff(arr).take(3)}")
   }
 }

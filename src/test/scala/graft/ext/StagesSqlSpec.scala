@@ -65,12 +65,49 @@ class StagesSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     Tables.ensure(spark, sfDir)
     Stages.clearShared() // rebuild the shared stages inside the window
     val before = views
-    Seq("x104_overlap_matrix", "x105_pagerank", "x108_keep_best",
+    Seq("x54_ngram_jaccard", "x75_components", "x82_containment",
+      "x104_overlap_matrix", "x105_pagerank", "x108_keep_best",
       "x109_triangles", "x78_unigram_lm", "x79_tfidf", "x85_collocations",
       "x98_dsir_sample", "x106_bigram_lm", "x110_assoc_rules",
       "x114_boilerplate").foreach { q =>
       SparkEntry.queries(q)(spark, sfDir).collect()
     }
     assert(views -- before == Set.empty[String])
+  }
+
+  test("x54 and x82 leave same-named user views alone") {
+    Tables.ensure(spark, sfDir)
+    spark.range(3).toDF("n").createOrReplaceTempView("__x82_docs")
+    spark.range(10, 15).toDF("n").createOrReplaceTempView("__x54_r3")
+    try {
+      Stages.clearShared() // run the PPJoin build inside the window too
+      Seq("x82_containment", "x54_ngram_jaccard").foreach { q =>
+        SparkEntry.queries(q)(spark, sfDir).collect()
+      }
+      assert(ints(spark.table("__x82_docs").orderBy("n")) == Seq(0L, 1L, 2L))
+      assert(ints(spark.table("__x54_r3").orderBy("n")) == (10L to 14L))
+    } finally Seq("__x82_docs", "__x54_r3").foreach(spark.catalog.dropTempView)
+  }
+
+  test("x54 and x82 from four threads on one session match a serial run") {
+    Tables.ensure(spark, sfDir)
+    val qs = Seq("x82_containment", "x54_ngram_jaccard")
+    def run(order: Seq[String]): Map[String, Seq[String]] = order.map { q =>
+      q -> SparkEntry.queries(q)(spark, sfDir).collect().map(_.toString).toSeq
+    }.toMap
+    val serial = run(qs)
+    Stages.clearShared() // the four callers race for the PPJoin build
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val runs = (0 until 4).map { i =>
+        val order = if (i % 2 == 0) qs else qs.reverse
+        pool.submit(new java.util.concurrent.Callable[Map[String, Seq[String]]] {
+          def call(): Map[String, Seq[String]] = run(order)
+        })
+      }
+      runs.foreach { f =>
+        assert(f.get(5, java.util.concurrent.TimeUnit.MINUTES) == serial)
+      }
+    } finally pool.shutdownNow()
   }
 }
