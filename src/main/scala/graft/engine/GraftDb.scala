@@ -133,7 +133,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     }
     r
   }
-  private var appliedBatch = 0L
+  @volatile private var appliedBatch = 0L // see journalSeq
   private var closed = false
   private val lock = new Object
   // AFTER ROW triggers (SQLite pass-through surface, reference forwards
@@ -6148,25 +6148,33 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   // The statement journal is the functional analog of dust's Raft log
   // (DOC/DESIGN.md:49): an ordered, durable record of committed batches,
   // appended BEFORE apply. The snapshot (SURVEY §7.4) is columnar: every
-  // checkpoint writes each table to root/v{N}/{table}.parquet, then
-  // atomically swaps manifest.json — a POINTER (version + table meta), not
-  // the data — and truncates the journal. Recovery = read the manifest's
-  // snapshot version, replay the journal suffix. Per-commit durability is
-  // the journal append alone; checkpoint cadence is a knob
-  // ([[CheckpointEvery]] batches, or explicit [[checkpoint]]).
+  // checkpoint writes each table to root/v{N}/{table}.parquet — a Mem
+  // table as one file written on the driver ([[SnapshotWriter]], no Spark
+  // job), a spilled table by Spark's distributed writer — then atomically
+  // swaps manifest.json — a POINTER (version + table meta), not the data —
+  // and truncates the journal. The manifest names the version only after
+  // every table file is complete. Recovery = read the manifest's snapshot
+  // version, replay the journal suffix. Per-commit durability is the
+  // journal append alone; checkpoint cadence is [[CheckpointEvery]]
+  // batches, or an explicit [[checkpoint]].
+  //
+  // journalSeq, appliedBatch and version change under the lock only; they
+  // and the checkpoint figures are volatile so [[snapshotStatus]] can read
+  // them without it (`/status` never waits behind a writer).
 
-  private var journalSeq = 0L
-  private var version = 0L
+  @volatile private var journalSeq = 0L
+  @volatile private var version = 0L
+  @volatile private var checkpoints = 0L
+  @volatile private var lastCheckpointMs = 0.0
   // Snapshot cadence (batches between automatic checkpoints). Durability
   // does NOT depend on this — the per-batch journal append is the commit;
   // the checkpoint only compacts (bounds recovery replay and journal
   // growth, DOC/DESIGN.md:54-55's "configurable number of changes"). Each
-  // checkpoint is a Spark parquet write (~0.3 s even for tiny tables), so
-  // a small cadence dominates single-row OLTP throughput: at 64 it charged
-  // ~4.7 ms to every insert (measured via OltpBench — 194 ops/sec where
-  // the statement apply itself costs ~0.3 ms); 512 keeps replay bounded at
-  // a few hundred statements (sub-second with the literal fast path) while
-  // the amortized snapshot cost drops under the apply cost.
+  // checkpoint rewrites every table in full while it holds the lock — a
+  // Mem table on this thread, a spilled table as a Spark job — so its cost
+  // grows with the database and is amortized over the cadence; 512 keeps
+  // recovery replay at a few hundred statements (sub-second with the
+  // literal fast path).
   private val CheckpointEvery = 512L
 
   // One long-lived append stream instead of an open/append/close cycle per
@@ -6214,6 +6222,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   }
 
   private def checkpointLocked(): Unit = root.foreach { r =>
+    val t0 = System.nanoTime()
     version += 1
     val vdir = r.resolve(s"v$version")
     Files.createDirectories(vdir)
@@ -6223,23 +6232,25 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     tables.values.filterNot(_.temp).foreach { ts =>
       // __ord preserves the engine's row order (insertion/update order is
       // observable through SELECT *); __rowid is the SQLite rowid. A Mem
-      // table is one driver-sized file; a spilled table writes its
+      // table is one driver-sized file written on this thread
+      // ([[SnapshotWriter]], no Spark job); a spilled table writes its
       // partitions in parallel straight from the materialized version —
       // the table never transits the driver.
-      val out = vdir.resolve(ts.d.name.toLowerCase + ".parquet").toString
+      val out = vdir.resolve(ts.d.name.toLowerCase + ".parquet")
       ts.store match {
         case Mem(rows) =>
           val schema = StructType(
             StructField("__ord", LongType, nullable = false) +:
               StructField("__rowid", LongType, nullable = false) +:
               ts.d.schema.fields)
-          val data = rows.zipWithIndex.map { case ((rid, vals), i) =>
-            Row.fromSeq(i.toLong +: rid +: vals)
-          }.asJava
-          session.createDataFrame(data, schema).coalesce(1)
-            .write.mode("overwrite").parquet(out)
+          // a leftover of an interrupted checkpoint of this version
+          deleteRecursively(out)
+          SnapshotWriter.write(session, out, schema,
+            rows.iterator.zipWithIndex.map { case ((rid, vals), i) =>
+              Row.fromSeq(i.toLong +: rid +: vals)
+            })
         case Big(df, _, _) =>
-          df.write.mode("overwrite").parquet(out)
+          df.write.mode("overwrite").parquet(out.toString)
       }
     }
     appliedBatch = journalSeq
@@ -6284,6 +6295,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     // entirely to the next open(), unbounded disk growth for a long-lived
     // server issuing scoped UPDATE/DELETEs)
     sweepBigGenerations(r)
+    checkpoints += 1
+    lastCheckpointMs = (System.nanoTime() - t0) / 1e6
   }
 
   // Snapshot retention for time-travel reads (-Dgraft.retainVersions=N,
@@ -6292,6 +6305,15 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   // as Delta/Iceberg retention before VACUUM.
   private val retainVersions: Long =
     math.max(2L, sys.props.getOrElse("graft.retainVersions", "2").toLong)
+
+  /** The snapshot state `/status` reports, read without the lock: the live
+    * snapshot version, the journal batches since that checkpoint, this
+    * instance's checkpoint count and the last checkpoint's duration. */
+  def snapshotStatus: GraftDb.SnapshotStatus = {
+    val applied = appliedBatch // before journalSeq: the difference stays >= 0
+    GraftDb.SnapshotStatus(version, journalSeq - applied, checkpoints,
+      lastCheckpointMs)
+  }
 
   /** Snapshot versions currently readable by [[tableAsOf]] (ascending).
     * Bounded by the retention knob; empty for in-memory databases. */
@@ -6600,6 +6622,10 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
 }
 
 object GraftDb {
+  /** See [[GraftDb.snapshotStatus]]. */
+  final case class SnapshotStatus(version: Long, journalSinceCheckpoint: Long,
+                                  checkpoints: Long, lastCheckpointMs: Double)
+
   /** A well-formed committed journal line failed to APPLY on reopen —
     * distinct from a torn trailing line (which just ends replay) and
     * from an unusable root (the reference's open error). open() surfaces

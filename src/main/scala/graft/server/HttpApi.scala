@@ -57,12 +57,20 @@ final class HttpApi(db: GraftDb, port: Int = 0, threads: Int = 4,
 
   /** Cluster diagnostics — the reference's RaftControl surface
     * (`store/src/lib.rs:18-28`) mapped onto Spark's cluster manager via
-    * [[graft.engine.SparkClusterControl]]. */
+    * [[graft.engine.SparkClusterControl]] — plus the engine's snapshot
+    * state ([[graft.engine.GraftDb.snapshotStatus]], read without the
+    * engine lock, so a status request never waits behind a writer). */
   private def handleStatus(ex: HttpExchange): Unit = {
     val leader = Json.escape(cluster.map(_.leaderId).getOrElse("unknown"))
     val members = cluster.map(_.members).getOrElse(Nil)
       .map(m => "\"" + Json.escape(m) + "\"").mkString("[", ",", "]")
-    respond(ex, 200, s"""{"leader":"$leader","members":$members}""")
+    val s = db.snapshotStatus
+    val ms = "%.3f".formatLocal(java.util.Locale.ROOT, s.lastCheckpointMs)
+    val snapshot = s"""{"version":${s.version},""" +
+      s""""journal_since_checkpoint":${s.journalSinceCheckpoint},""" +
+      s""""checkpoints":${s.checkpoints},"last_checkpoint_ms":$ms}"""
+    respond(ex, 200,
+      s"""{"leader":"$leader","members":$members,"snapshot":$snapshot}""")
   }
 
   private def handleExecute(ex: HttpExchange): Unit =

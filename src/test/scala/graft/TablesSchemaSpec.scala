@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import graft.command.{Request, Statement, Value}
 import graft.engine.GraftDb
@@ -9,7 +8,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -34,38 +32,6 @@ class TablesSchemaSpec extends SparkSpec {
   private def assertSameSchema(s: SparkSession, path: String): Unit = {
     assert(Tables.footerSchema(s, path).isDefined, path)
     assert(Tables.readParquet(s, path).schema === s.read.parquet(path).schema, path)
-  }
-
-  private val JobTag = "graft.test.jobTag"
-
-  /** Stage names of every job `body` starts on this thread, one Seq per
-    * job. The listener bus delivers in order, so once a marker job run
-    * after `body` has arrived, so have all of `body`'s jobs. */
-  private def jobsOf(body: => Unit): Seq[Seq[String]] = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new ConcurrentLinkedQueue[Seq[String]]()
-    @volatile var markerSeen = false
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(JobTag)).foreach {
-          case `tag`               => seen.add(e.stageInfos.map(_.name))
-          case t if t == tag + "!" => markerSeen = true
-          case _                   =>
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setLocalProperty(JobTag, tag)
-      try body finally sc.setLocalProperty(JobTag, null)
-      sc.setLocalProperty(JobTag, tag + "!")
-      try sc.parallelize(1 to 1, 1).count()
-      finally sc.setLocalProperty(JobTag, null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markerSeen, "marker job never reached the listener")
-    } finally sc.removeSparkListener(l)
-    seen.asScala.toSeq
   }
 
   /** The schema-inference job is named after the `parquet(...)` reader call. */

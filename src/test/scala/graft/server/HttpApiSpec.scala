@@ -43,6 +43,41 @@ class HttpApiSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  test("GET /status reports the snapshot state and it advances on checkpoint") {
+    val root = java.nio.file.Files.createTempDirectory("graft-status").toString
+    val db = GraftDb.open(spark, root).fold(e => fail(e), identity)
+    val api = new HttpApi(db, port = 0)
+    api.start()
+    try {
+      val c = HttpClient.newHttpClient()
+      val url = s"http://127.0.0.1:${api.listeningPort}/status"
+      val om = new com.fasterxml.jackson.databind.ObjectMapper()
+      def snapshot() = {
+        val r = get(c, url)
+        assert(r.statusCode() == 200, r.body())
+        om.readTree(r.body()).path("snapshot")
+      }
+      val fields = Seq("version", "journal_since_checkpoint", "checkpoints",
+        "last_checkpoint_ms")
+      val s0 = snapshot()
+      assert(s0.fieldNames().asScala.toSeq == fields, s0)
+      assert(fields.map(s0.path(_).asDouble()) == Seq(0.0, 0.0, 0.0, 0.0))
+      db.executeStringStmt("CREATE TABLE kv (k INTEGER PRIMARY KEY, v TEXT)")
+      db.executeStringStmt("INSERT INTO kv VALUES (1, 'one')")
+      assert(snapshot().path("journal_since_checkpoint").asLong() == 2)
+      db.checkpoint().fold(e => fail(e), identity)
+      val s1 = snapshot()
+      assert(s1.path("version").asLong() == 1)
+      assert(s1.path("checkpoints").asLong() == 1)
+      assert(s1.path("journal_since_checkpoint").asLong() == 0)
+      assert(s1.path("last_checkpoint_ms").asDouble() > 0)
+      db.executeStringStmt("INSERT INTO kv VALUES (2, 'two')")
+      db.checkpoint().fold(e => fail(e), identity)
+      val s2 = snapshot()
+      assert(s2.path("version").asLong() == 2 && s2.path("checkpoints").asLong() == 2)
+    } finally { api.stop(); db.close() }
+  }
+
   test("GET /ping returns pong (service.rs:243-252)") {
     withServer { (c, base) =>
       val r = get(c, s"$base/ping")
