@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.engine.GraftDb
-import graft.command.{Json, Value}
+import graft.engine.{GraftDb, ReadLevel}
+import graft.command.{Json, Request, RowsResult, Statement, Value}
 import java.io.PrintWriter
 import java.nio.file.Files
 
@@ -24,6 +24,12 @@ import java.nio.file.Files
   *             checkpoint + close + REOPEN at a generator-chosen clean
   *             point ("ckpt" op), exercising journal replay, manifest
   *             recovery, and generation GC under live traffic.
+  *
+  * Every probe that runs outside an explicit transaction runs again at
+  * `level=none`, and in disk8 right after a checkpoint also at the latest
+  * snapshot version: all read paths must give the weak read's envelope.
+  * A difference is recorded on the probe as `levelDiff`, which the checker
+  * reports as a divergence.
   *
   * Usage: runMain graft.OltpFuzzRun <outFile> <seedStart> <count>
   */
@@ -96,6 +102,8 @@ object OltpFuzzRun {
     }
     if (mode == "disk8") sys.props("graft.bigPartRows") = "4"
     var db = open(root, cap)
+    // no write since the last checkpoint: the latest version is current
+    var atCheckpoint = false
     try {
       ops.foreach { op =>
         op.kind match {
@@ -108,8 +116,10 @@ object OltpFuzzRun {
               db.close()
               db = open(root, cap)
             }
+            atCheckpoint = root.isDefined
             emit("""{"k":"c"}""")
           case "x" =>
+            atCheckpoint = false
             db.executeStringStmt(op.sql) match {
               case Left(batchErr) =>
                 emit(s"""{"k":"x","sql":${Json.escapeQ(op.sql)},""" +
@@ -121,20 +131,26 @@ object OltpFuzzRun {
                   s""""err":${Json.escapeQ(r.error)}}""")
             }
           case "q" =>
-            db.queryStringStmt(op.sql) match {
-              case Left(batchErr) =>
-                // a single-statement batch's refusal IS that statement's
-                // error (sqlite reports it per statement)
-                emit(s"""{"k":"q","sql":${Json.escapeQ(op.sql)},""" +
-                  s""""err":${Json.escapeQ(batchErr)}}""")
-              case Right(rs) =>
-                val r = rs.head
-                val cols = r.columns.map(Json.escapeQ).mkString("[", ",", "]")
-                val vals = r.values.map(_.map(cell).mkString("[", ",", "]"))
-                  .mkString("[", ",", "]")
-                emit(s"""{"k":"q","sql":${Json.escapeQ(op.sql)},""" +
-                  s""""cols":$cols,"vals":$vals}""")
-            }
+            // a single-statement batch's refusal IS that statement's error
+            // (sqlite reports it per statement)
+            val weak = probe(db.queryStringStmt(op.sql))
+            val req = Request(transaction = false, Seq(Statement(op.sql)))
+            val others =
+              if (db.inTransaction) Nil
+              else ("none" -> db.query(req, ReadLevel.None)) +:
+                (if (atCheckpoint) Seq("version" -> db.queryAsOf(req,
+                  db.versions().last)) else Nil)
+            // a write is refused at the other levels and ends the
+            // checkpoint's currency
+            val reads = others.filterNot(_._2.left.exists(
+              _.endsWith("read statements only")))
+            if (reads.size < others.size) atCheckpoint = false
+            val diffs = reads.map { case (l, r) => (l, probe(r)) }
+              .collect { case (l, b) if b != weak => s"$l: {$b}" }
+            val levelDiff =
+              if (diffs.isEmpty) ""
+              else s""","levelDiff":${Json.escapeQ(diffs.mkString("; "))}"""
+            emit(s"""{"k":"q","sql":${Json.escapeQ(op.sql)},$weak$levelDiff}""")
         }
       }
     } finally {
@@ -147,6 +163,16 @@ object OltpFuzzRun {
     }
     sb.append("]}")
     sb.toString
+  }
+
+  /** A probe's envelope fields: its error, or its columns and values. */
+  private def probe(r: Either[String, Seq[RowsResult]]): String = r match {
+    case Left(err) => s""""err":${Json.escapeQ(err)}"""
+    case Right(rs) =>
+      val cols = rs.head.columns.map(Json.escapeQ).mkString("[", ",", "]")
+      val vals = rs.head.values.map(_.map(cell).mkString("[", ",", "]"))
+        .mkString("[", ",", "]")
+      s""""cols":$cols,"vals":$vals"""
   }
 
   /** Canonical probe cell: integers bare, text as JSON string, reals as

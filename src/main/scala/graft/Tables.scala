@@ -5,6 +5,7 @@ import scala.concurrent.duration.Duration
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
@@ -145,8 +146,12 @@ object Tables {
       def named(n: String) = sorted.find(_.getPath.getName == n)
       val chosen = named("_common_metadata").orElse(named("_metadata"))
         .getOrElse(sorted.head)
+      // read options over the session's conf: the one-argument open builds
+      // them over a fresh default Configuration, which re-reads
+      // core-default.xml and core-site.xml from the classpath on each call
       val reader = ParquetFileReader.open(
-        HadoopInputFile.fromStatus(chosen, hadoopConf))
+        HadoopInputFile.fromStatus(chosen, hadoopConf),
+        HadoopReadOptions.builder(hadoopConf).build())
       val footer =
         try new Footer(chosen.getPath, reader.getFooter)
         finally reader.close()

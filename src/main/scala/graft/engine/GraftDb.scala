@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, expr, lit, lower, rtrim}
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import com.fasterxml.jackson.databind.JsonNode
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -39,22 +40,28 @@ import scala.jdk.CollectionConverters._
 final class GraftDb private (parent: SparkSession, root: Option[Path],
                              maxDriverRows: Long) {
 
-  private val session = parent.newSession()
-  session.conf.set("spark.sql.session.timeZone", "UTC")
-  // Upstream hazard (found by the OLTP fuzzer, seed 70): after long chains
-  // of Big-store mutations, the optimizer's Union constraint rewrite
-  // (UnionBase.rewriteConstraints) can hit "key not found: attr#N" when a
-  // child's inferred constraints mention attributes outside the rewrite
-  // map. Engine-internal statement plans are OLTP-sized, so constraint
-  // propagation buys nothing here — disable it on the engine's PRIVATE
-  // session (user analytics sessions are untouched).
-  session.conf.set("spark.sql.constraintPropagation.enabled", "false")
-  // SQLite core scalar functions (date/time family + misc) on the PRIVATE
-  // session only — the reference's delegated SQLite gives its users these
-  // on every query (db/src/db.rs:278); see SqliteFunctions for semantics
-  SqliteFunctions.register(session, () => csLike)
-  SqliteFunctions.registerConnState(session, () => lastRowId,
-    () => lastChanges, () => totalChanges)
+  /** A private session of this connection: the engine's own, and one per
+    * lock-free read (`level=none`, `?version=N`). */
+  private def connSession(): SparkSession = {
+    val s = parent.newSession()
+    s.conf.set("spark.sql.session.timeZone", "UTC")
+    // Upstream hazard (found by the OLTP fuzzer, seed 70): after long chains
+    // of Big-store mutations, the optimizer's Union constraint rewrite
+    // (UnionBase.rewriteConstraints) can hit "key not found: attr#N" when a
+    // child's inferred constraints mention attributes outside the rewrite
+    // map. Engine-internal statement plans are OLTP-sized, so constraint
+    // propagation buys nothing here (user analytics sessions are untouched).
+    s.conf.set("spark.sql.constraintPropagation.enabled", "false")
+    // SQLite core scalar functions (date/time family + misc) — the
+    // reference's delegated SQLite gives its users these on every query
+    // (db/src/db.rs:278); see SqliteFunctions for semantics
+    SqliteFunctions.register(s, () => csLike)
+    SqliteFunctions.registerConnState(s, () => lastRowId,
+      () => lastChanges, () => totalChanges)
+    s
+  }
+
+  private val session = connSession()
 
   // PRAGMA case_sensitive_like state (SQLite default: insensitive). Set
   // through the journaled PRAGMA path, so crash replay reproduces the
@@ -177,15 +184,33 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       views: mutable.LinkedHashMap[String, (String, String, String)],
       trigs: mutable.LinkedHashMap[String, TriggerDef])
   private val savepoints = mutable.ListBuffer.empty[Savepoint]
-  // last committed snapshot version, published for lock-free `none` reads
-  // (stores are immutable values; the volatile swap selects the version)
-  @volatile private var committed: Vector[(TableDef, Store)] = Vector.empty
-  @volatile private var committedViews: Vector[(String, String)] = Vector.empty
-
-  private def publishCommitted(): Unit = {
-    committed = tables.values.toVector.map(ts => (ts.d, ts.store))
-    committedViews = viewDefs.values.toVector.map(v => (v._1, v._2))
+  /** The schema objects a read resolves against: the live catalogs
+    * (weak/strong), the last committed ones (`none`) or a snapshot
+    * manifest's (`?version=N`, [[load]]). */
+  private final case class Catalog(
+      tables: Iterable[TableState],
+      indexes: Iterable[Ddl.CreateIndex],
+      views: Iterable[(String, String, String)],
+      triggers: Iterable[TriggerDef],
+      userVersion: Long,
+      schemaVersion: Long) {
+    def table(name: String): Option[TableState] =
+      tables.find(_.d.name.equalsIgnoreCase(name))
   }
+
+  private def liveCatalog(work: Tables): Catalog =
+    Catalog(work.values, indexes.values, viewDefs.values, triggers.values,
+      userVersion, schemaVersion)
+
+  // last committed version, published for lock-free `none` reads (stores
+  // are immutable values; the volatile swap selects the version)
+  @volatile private var committed: Catalog =
+    Catalog(Nil, Nil, Nil, Nil, 0L, 0L)
+
+  private def publishCommitted(): Unit =
+    committed = Catalog(tables.values.map(_.copyState).toVector,
+      indexes.values.toVector, viewDefs.values.toVector,
+      triggers.values.toVector, userVersion, schemaVersion)
 
   // ---------- public API (the store seam, reference store/src/lib.rs:7-28) --
 
@@ -204,8 +229,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     else {
       closed = true; journalCloseStream()
       // Big bucket files are NOT deleted here: a lock-free `none`-level
-      // read may still be scanning them (queryCommitted runs outside this
-      // lock by design). Superseded generations are refcount-swept at
+      // read may still be scanning them (it runs outside this lock by
+      // design). Superseded generations are refcount-swept at
       // checkpoint time ([[sweepBigGenerations]]); whatever remains is
       // dead weight on disk until the next open() on this root sweeps it.
       rootLock.foreach { case (ch, lk) =>
@@ -219,6 +244,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   def enableFkConstraints(flag: Boolean): Unit =
     lock.synchronized { fkEnabled = flag }
   def fkConstraints(): Boolean = lock.synchronized { fkEnabled }
+
+  /** Fuzzer probe: is an explicit transaction (BEGIN, SAVEPOINT) open? */
+  private[graft] def inTransaction: Boolean = lock.synchronized(openTx.isDefined)
 
   /** Test probe: is the table on the Spark-resident (spilled) store? */
   private[engine] def isSpilled(table: String): Boolean = lock.synchronized {
@@ -317,157 +345,101 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     *    is fully applied before reading (the analog of a consensus read);
     *  - `weak` (default): leader-local read behind the lock — sees every
     *    committed write, no journal assertion;
-    *  - `none`: lock-free read of the last COMMITTED snapshot version on a
-    *    private session — never blocks behind a writer, may trail an
-    *    in-flight batch (stale-tolerant follower read).
+    *  - `none`: lock-free read of the last COMMITTED version on a reader
+    *    session — never blocks behind a writer, may trail an in-flight
+    *    batch (stale-tolerant follower read). Read statements only.
+    *
+    * Every level and [[queryAsOf]] read through one pipeline —
+    * [[registerCatalog]] then [[runBatch]] — and differ only in the session
+    * and the table frames they pass; weak/strong also run writes here.
     */
   def query(req: Request, level: ReadLevel): Either[String, Seq[RowsResult]] =
     level match {
-      case ReadLevel.None => queryCommitted(req)
+      case ReadLevel.None =>
+        if (closed) return Left("db connection is already closed")
+        val cat = committed // volatile read: one consistent version
+        val s = connSession()
+        registerCatalog(s, cat, cat.tables.map(storeFrame(s, _)))
+        runBatch(req, s, cat, ())(_ =>
+          Left("level=none supports read statements only"))
       case _ => lock.synchronized {
         if (closed) return Left("db connection is already closed")
         if (level == ReadLevel.Strong && journalSeq != appliedBatch)
           return Left("strong read failed: journal not fully applied")
-        val out = Seq.newBuilder[RowsResult]
-        req.statements.foreach { s =>
-          val sql = SqlText.bind(s.sql, s.parameters)
-          if (sql.trim.nonEmpty) {
-            // reads on this connection see the open explicit tx's
-            // uncommitted state (SQLite: the tx is connection-scoped)
-            val readTables = openTx.map(_.work).getOrElse(tables)
-            if (sql.trim.toUpperCase.startsWith("PRAGMA FOREIGN_KEYS") &&
-              !sql.contains("=")) {
-              // PRAGMA read: one row, SQLite reports 0/1 (db/src/db.rs:133-140)
-              out += RowsResult(Seq("foreign_keys"), Seq("integer"),
-                Seq(Seq(Value.Integer(if (fkEnabled) 1 else 0))))
-            } else if (valuePragmaRe.findFirstMatchIn(sql).isDefined) {
-              out += valuePragma(
-                valuePragmaRe.findFirstMatchIn(sql).get.group(1))
-            } else if (tableInfoRe.findFirstMatchIn(sql).isDefined) {
-              out += tableInfo(readTables,
-                tableInfoRe.findFirstMatchIn(sql).get.group(1))
-            } else if (tableXinfoRe.findFirstMatchIn(sql).isDefined) {
-              out += tableInfo(readTables,
-                tableXinfoRe.findFirstMatchIn(sql).get.group(1), xinfo = true)
-            } else if (indexListRe.findFirstMatchIn(sql).isDefined) {
-              out += indexList(readTables,
-                indexListRe.findFirstMatchIn(sql).get.group(1))
-            } else if (indexInfoRe.findFirstMatchIn(sql).isDefined) {
-              out += indexInfo(readTables,
-                indexInfoRe.findFirstMatchIn(sql).get.group(1))
-            } else if (isRowReturning(sql)) {
-              runSelect(readTables, sql) match {
-                case Right(r) => out += r
-                case Left(err) => return Left(err)
-              }
-            } else {
-              // the reference's _query prepares+steps any statement — DDL/DML
-              // executes and yields rows if it has them (RETURNING) or the
-              // empty envelope (db/src/db.rs:764-768). Writes through this
-              // path journal like execute-path writes (same durability) and
-              // carry the same determinism requirement.
-              nonDeterministic(sql).foreach(f => return Left(
-                s"non-deterministic function $f is not allowed in an " +
-                  "execute batch (statement-log replication requires " +
-                  "deterministic SQL)"))
-              splitReturning(sql) match {
-                case Some((base, retList)) =>
-                  runReturning(sql, base, retList) match {
-                    case Right(rr) => out += rr
-                    case Left(err) => return Left(err)
-                  }
+        // reads on this connection see the open explicit tx's
+        // uncommitted state (SQLite: the tx is connection-scoped)
+        def visible = openTx.map(_.work).getOrElse(tables)
+        runBatch(req, session, liveCatalog(visible), registerViews(visible)) {
+          sql =>
+            // the reference's _query prepares+steps any statement — DDL/DML
+            // executes and yields rows if it has them (RETURNING) or the
+            // empty envelope (db/src/db.rs:764-768). Writes through this
+            // path journal like execute-path writes (same durability) and
+            // carry the same determinism requirement.
+            nonDeterministic(sql) match {
+              case Some(f) => Left(s"non-deterministic function $f is not " +
+                "allowed in an execute batch (statement-log replication " +
+                "requires deterministic SQL)")
+              case None => splitReturning(sql) match {
+                case Some((base, retList)) => runReturning(sql, base, retList)
                 case None =>
                   journalAppend(tx = false, Seq(sql))
-                  dispatch(tables, reqTx = false, sql) match {
-                    case Right(_) => persist(); out += RowsResult(Nil, Nil, Nil)
-                    case Left(err) => return Left(err)
+                  dispatch(tables, reqTx = false, sql).map { _ =>
+                    persist(); RowsResult(Nil, Nil, Nil)
                   }
               }
             }
-          }
         }
-        Right(out.result())
       }
     }
 
-  /** Lock-free `none`-level read: registers the last committed snapshot's
-    * (immutable) row vectors on a fresh session, so a long write batch never
-    * blocks it. Row-returning statements only — stale reads can't mutate. */
-  private def queryCommitted(req: Request): Either[String, Seq[RowsResult]] = {
-    if (closed) return Left("db connection is already closed")
-    val snap = committed // volatile read: one consistent version
-    val s = parent.newSession()
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    // the same SQLite function surface as the weak/strong path — the
-    // `none` level is still THIS connection (connection-state functions
-    // included; registration is map inserts, negligible per-read cost)
-    SqliteFunctions.register(s, () => csLike)
-    SqliteFunctions.registerConnState(s, () => lastRowId,
-      () => lastChanges, () => totalChanges)
-    snap.foreach {
-      case (td, Mem(rows)) =>
-        val data = rows.map { case (_, vals) => Row.fromSeq(vals) }.asJava
-        val base = withQueryCollations(td, s.createDataFrame(data, td.schema))
-        (if (td.withoutRowid) base.orderBy(wrOrder(td).map(col): _*)
-         else base).createOrReplaceTempView(td.name)
-        if (!td.withoutRowid) {
-          // rowid pseudo-column view (same contract as registerViews')
-          val ridData = rows.map { case (rid, vals) =>
-            Row.fromSeq(rid +: vals) }.asJava
-          val ridSchema = StructType(
-            StructField("__rowid", LongType, nullable = false) +:
-              td.schema.fields)
-          withQueryCollations(td, s.createDataFrame(ridData, ridSchema))
-            .createOrReplaceTempView(ridView(td.name))
-        }
-      case (td, Big(df, _, _)) =>
-        // a DataFrame is bound to the engine's private session; re-root its
-        // (already materialized) RDD on the fresh reader session. Sort by
-        // __ord before dropping it — same insertion-order contract as the
-        // locked view registration.
-        val rooted = s.createDataFrame(df.rdd, df.schema)
-        val base = withQueryCollations(td,
-          rooted.orderBy(col("__ord")).drop("__ord", "__rowid"))
-        (if (td.withoutRowid) base.orderBy(wrOrder(td).map(col): _*)
-         else base).createOrReplaceTempView(td.name)
-        if (!td.withoutRowid)
-          withQueryCollations(td, rooted.orderBy(col("__ord")).drop("__ord"))
-            .createOrReplaceTempView(ridView(td.name))
-    }
-    def ridInfo(name: String): Option[SqlText.RowidInfo] =
-      snap.collectFirst {
-        case (td, _) if td.name.equalsIgnoreCase(name) && !td.withoutRowid =>
-          SqlText.RowidInfo(td.rowidAlias.map(_.name),
-            td.cols.exists(c => Set("rowid", "_rowid_", "oid")
-              .contains(c.name.toLowerCase)),
-            td.cols.map(_.name))
-      }
-    committedViews.foreach { case (name, select) =>
-      try SqliteRewrite.run(s, SqlText.fixQuotedIdents(select), csLike)
-        .createOrReplaceTempView(name)
-      catch { case _: Exception => }
-    }
+  /** Run a query batch on `s`: read statements through [[readOne]]
+    * against `cat` (re-evaluated per statement, since a write may change
+    * it), every other statement through `write`. The first error ends the
+    * batch. */
+  private def runBatch(req: Request, s: SparkSession, cat: => Catalog,
+      register: => Unit)(write: String => Either[String, RowsResult])
+      : Either[String, Seq[RowsResult]] = {
     val out = Seq.newBuilder[RowsResult]
     req.statements.foreach { st =>
       val sql = SqlText.bind(st.sql, st.parameters)
-      if (sql.trim.nonEmpty) {
-        if (!isRowReturning(sql))
-          return Left("level=none supports read statements only")
-        if (sql.trim.toUpperCase.startsWith("PRAGMA FOREIGN_KEYS"))
-          out += RowsResult(Seq("foreign_keys"), Seq("integer"),
-            Seq(Seq(Value.Integer(if (fkEnabled) 1 else 0))))
-        else if (valuePragmaRe.findFirstMatchIn(sql).isDefined)
-          out += valuePragma(valuePragmaRe.findFirstMatchIn(sql).get.group(1))
-        else
-          try out += envelope(SqliteRewrite.run(s,
-            SqlText.mapCollations(SqlText.exposeRowid(
-              SqlText.aliasSelectList(SqlText.fixQuotedIdents(sql)),
-              ridInfo)).fold(e => return Left(e),
-              identity), csLike))
-          catch { case e: Exception => return Left(friendlyError(e)) }
-      }
+      if (sql.trim.nonEmpty)
+        (if (isRowReturning(sql)) readOne(s, cat, sql, register)
+         else write(sql)) match {
+          case Right(r) => out += r
+          case Left(e) => return Left(e)
+        }
     }
     Right(out.result())
+  }
+
+  /** One read statement against `cat`. The pragmas answer from the
+    * catalog and the connection state; any other statement runs on `s`
+    * once `register` has brought its views up to date. */
+  private def readOne(s: SparkSession, cat: Catalog, sql: String,
+                      register: => Unit): Either[String, RowsResult] = {
+    def arg(re: scala.util.matching.Regex) =
+      re.findFirstMatchIn(sql).map(_.group(1))
+    if (sql.trim.toUpperCase.startsWith("PRAGMA FOREIGN_KEYS"))
+      // PRAGMA read: one row, SQLite reports 0/1 (db/src/db.rs:133-140)
+      Right(RowsResult(Seq("foreign_keys"), Seq("integer"),
+        Seq(Seq(Value.Integer(if (fkEnabled) 1 else 0)))))
+    else arg(valuePragmaRe).map(valuePragma(cat, _))
+      .orElse(arg(tableInfoRe).map(tableInfo(cat, _)))
+      .orElse(arg(tableXinfoRe).map(tableInfo(cat, _, xinfo = true)))
+      .orElse(arg(indexListRe).map(indexList(cat, _)))
+      .orElse(arg(indexInfoRe).map(indexInfo(cat, _)))
+      .map(Right(_))
+      .getOrElse(try {
+        register
+        // alias FIRST (envelope column names keep the SQLite spelling of
+        // `expr COLLATE NOCASE`), then expose the rowid pseudo-column,
+        // then map the collation names for Catalyst
+        SqlText.mapCollations(SqlText.exposeRowid(
+            SqlText.aliasSelectList(SqlText.fixQuotedIdents(sql)),
+            rowidInfoOf(cat.table)))
+          .map(q => envelope(SqliteRewrite.run(s, q, csLike)))
+      } catch { case e: Exception => Left(friendlyError(e)) })
   }
 
   // ---------- RETURNING (SQLite 3.35+ DML surface) -------------------------
@@ -609,7 +581,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       try returningDf(visible0, ts.d, Vector.empty, retList).schema
       catch { case e: Exception => return Left(retError(e)) }
     }
-    journalAppend(tx = false, Seq(sql))
+    journalAppend(tx = false, Seq(sql), returning = true)
     retArmed = true; retCaptured = None
     val r = try dispatch(tables, reqTx = false, base) finally retArmed = false
     val out = r match {
@@ -686,12 +658,15 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   private def firstWord(sql: String): String =
     sql.trim.takeWhile(c => Character.isLetter(c)).toUpperCase
 
+  /** A read: a row-returning query, or a pragma that reports (the
+    * connection and value pragmas, table and index introspection). */
   private def isRowReturning(sql: String): Boolean =
     (Set("SELECT", "VALUES", "WITH", "EXPLAIN", "SHOW")
       .contains(firstWord(sql)) && splitWithDml(sql).isEmpty) ||
       sql.trim.toUpperCase.startsWith("PRAGMA FOREIGN_KEYS") &&
         !sql.contains("=") ||
-      valuePragmaRe.findFirstMatchIn(sql).isDefined
+      Seq(valuePragmaRe, tableInfoRe, tableXinfoRe, indexListRe, indexInfoRe)
+        .exists(_.findFirstMatchIn(sql).isDefined)
 
   // Word-boundary matches only (substring matching flagged identifiers like
   // `brand(` via `rand(`); literals are stripped first so quoted data can
@@ -1048,9 +1023,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * the affinity's canonical name. table_info hides generated columns
     * and renumbers cids over the visible ones; table_xinfo keeps every
     * column with hidden = 2 (VIRTUAL) / 3 (STORED), probed live. */
-  private def tableInfo(work: Tables, tname: String,
+  private def tableInfo(cat: Catalog, tname: String,
                         xinfo: Boolean = false): RowsResult =
-    work.get(tname.toLowerCase) match {
+    cat.table(tname) match {
       case None => RowsResult(Nil, Nil, Nil)
       case Some(ts) =>
         val cols = Seq("cid", "name", "type", "notnull", "dflt_value",
@@ -1103,9 +1078,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * the un-renumbered cid) — and (-2, NULL) for an expression position.
     * A WITHOUT ROWID PK appears here (origin 'pk') even though
     * sqlite_master hides it (both probed live). */
-  private def indexRoster(work: Tables, tname: String)
+  private def indexRoster(cat: Catalog, tname: String)
       : Seq[(String, Boolean, String, Boolean, Seq[(Int, Option[String])])] =
-    work.get(tname.toLowerCase) match {
+    cat.table(tname) match {
       case None => Nil
       case Some(ts) =>
         val td = ts.d
@@ -1124,7 +1099,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         // constraints in column order, the table-level PK clause at its
         // declared position — probed live, ADVICE r13)
         td.autoIndexSpecs.foreach { case (isPk, cs) => emitAuto(isPk, cs) }
-        val named = indexes.values.toVector
+        val named = cat.indexes.toVector
           .filter(_.table.equalsIgnoreCase(td.name))
           .map { ix =>
             val cols = ix.cols.indices.map { k =>
@@ -1139,8 +1114,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   /** PRAGMA index_list(t): (seq, name, unique, origin, partial) — the
     * empty envelope (empty cols too — the reference's first-row
     * type-sniffing contract) for a missing or index-less table. */
-  private def indexList(work: Tables, tname: String): RowsResult = {
-    val rows = indexRoster(work, tname).zipWithIndex.map {
+  private def indexList(cat: Catalog, tname: String): RowsResult = {
+    val rows = indexRoster(cat, tname).zipWithIndex.map {
       case ((name, uq, origin, partial, _), i) =>
         Seq[Value](Value.Integer(i.toLong), Value.Text(name),
           Value.Integer(if (uq) 1 else 0), Value.Text(origin),
@@ -1154,8 +1129,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   /** PRAGMA index_info(ix): (seqno, cid, name) — the empty envelope for
     * an unknown index; expression positions report (-2, NULL), probed
     * live. */
-  private def indexInfo(work: Tables, iname: String): RowsResult = {
-    val entry = work.keysIterator.flatMap(indexRoster(work, _))
+  private def indexInfo(cat: Catalog, iname: String): RowsResult = {
+    val entry = cat.tables.iterator.flatMap(ts => indexRoster(cat, ts.d.name))
       .find(_._1.equalsIgnoreCase(iname))
     val rows = entry.toSeq.flatMap(_._5.zipWithIndex.map {
       case ((ci, cn), k) =>
@@ -1204,7 +1179,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   private val valuePragmaRe =
     """(?is)^\s*PRAGMA\s+(JOURNAL_MODE|PAGE_SIZE|USER_VERSION|SCHEMA_VERSION|INTEGRITY_CHECK|QUICK_CHECK|DATABASE_LIST|COLLATION_LIST)\s*;?\s*$""".r
 
-  private def valuePragma(name: String): RowsResult = name.toLowerCase match {
+  private def valuePragma(cat: Catalog, name: String): RowsResult =
+    name.toLowerCase match {
     case "integrity_check" | "quick_check" =>
       // constraints hold by construction (validate() gates every commit)
       RowsResult(Seq(name.toLowerCase), Seq("text"),
@@ -1229,10 +1205,10 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         Seq(Seq(Value.Integer(4096L))))
     case "schema_version" =>
       RowsResult(Seq("schema_version"), Seq("integer"),
-        Seq(Seq(Value.Integer(schemaVersion))))
+        Seq(Seq(Value.Integer(cat.schemaVersion))))
     case _ =>
       RowsResult(Seq("user_version"), Seq("integer"),
-        Seq(Seq(Value.Integer(userVersion))))
+        Seq(Seq(Value.Integer(cat.userVersion))))
   }
 
   private val ctasRe =
@@ -1850,7 +1826,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                     case Left(e) => err = Some(e)
                     case Right(sub) =>
                       val r =
-                        if (isRowReturning(sub)) runSelect(work, sub).map(_ => 0L)
+                        if (isRowReturning(sub))
+                          readOne(session, liveCatalog(work), sub,
+                            registerViews(work)).map(_ => 0L)
                         else executeOne(work, sub)
                       r.left.foreach(e => err = Some(e))
                   }
@@ -5413,11 +5391,11 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
 
   // ---------- query execution ---------------------------------------------
 
-  /** [[SqlText.RowidInfo]] lookup over the working tables (rowid tables
+  /** [[SqlText.RowidInfo]] lookup over a table lookup (rowid tables
     * only; WITHOUT ROWID has no rowid pseudo-column, probed live). */
-  private def rowidInfoOf(work: Tables)(name: String)
+  private def rowidInfoOf(table: String => Option[TableState])(name: String)
       : Option[SqlText.RowidInfo] =
-    work.get(name.toLowerCase).collect {
+    table(name).collect {
       case ts if !ts.d.withoutRowid =>
         SqlText.RowidInfo(ts.d.rowidAlias.map(_.name),
           ts.d.cols.exists(c => Set("rowid", "_rowid_", "oid")
@@ -5430,29 +5408,12 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * the INTEGER PRIMARY KEY alias) resolves. */
   private def rowidDml(work: Tables, sql: String): String =
     if (!SqlText.mentionsRowid(sql)) sql
-    else dmlTableName(sql).flatMap(rowidInfoOf(work)) match {
+    else dmlTableName(sql).flatMap(rowidInfoOf(n => work.get(n.toLowerCase))) match {
       case Some(ri) if !ri.shadowed =>
         SqlText.replaceRowidTokens(sql,
           ri.ipk.map(n => s"`$n`").getOrElse("`__rowid`"))
       case _ => sql
     }
-
-  private def runSelect(work: Tables, sql0: String): Either[String, RowsResult] =
-    try {
-      registerViews(work)
-      // alias FIRST (envelope column names keep the SQLite spelling of
-      // `expr COLLATE NOCASE`), then expose the rowid pseudo-column,
-      // then map the collation names for Catalyst
-      val sql = SqlText.mapCollations(
-          SqlText.exposeRowid(
-            SqlText.aliasSelectList(SqlText.fixQuotedIdents(sql0)),
-            rowidInfoOf(work))) match {
-        case Left(e) => return Left(e)
-        case Right(s2) => s2
-      }
-      val df = ssql(sql)
-      Right(envelope(df))
-    } catch { case e: Exception => Left(friendlyError(e)) }
 
   /** Build the Rows envelope. Empty results carry empty columns/types for
     * parity with the reference's first-row type sniffing
@@ -5722,7 +5683,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       case _ =>
     }
     tables.values.foreach(ts => add(ts.store))
-    committed.foreach { case (_, st) => add(st) }
+    committed.tables.foreach(ts => add(ts.store))
     openTx.foreach(_.work.values.foreach(ts => add(ts.store)))
     savepoints.foreach(_.work.values.foreach(ts => add(ts.store)))
     live
@@ -5853,9 +5814,14 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       big.nextOrd, big.df.schema)
   }
 
-  /** The ord/rowid-prefixed DataFrame of a store, for either representation. */
-  private def storeDf(d: TableDef, st: Store): DataFrame = st match {
-    case Big(df, _, _) => df
+  /** The ord/rowid-prefixed DataFrame of a store, for either
+    * representation, on the engine session or (re-rooted) on `s`. */
+  private def storeDf(d: TableDef, st: Store,
+                      s: SparkSession = session): DataFrame = st match {
+    case Big(df, _, _) =>
+      // a DataFrame is bound to the engine's session; re-root its (already
+      // materialized) RDD on a reader session
+      if (s eq session) df else s.createDataFrame(df.rdd, df.schema)
     case Mem(rows) =>
       val schema = StructType(
         StructField("__ord", LongType, nullable = false) +:
@@ -5864,10 +5830,13 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       val data = rows.zipWithIndex.map { case ((rid, vals), i) =>
         Row.fromSeq(i.toLong +: rid +: vals)
       }.asJava
-      session.createDataFrame(data, schema)
+      s.createDataFrame(data, schema)
   }
 
   private def ridDf(ts: TableState): DataFrame = storeDf(ts.d, ts.store)
+
+  private def storeFrame(s: SparkSession, ts: TableState) =
+    (ts.d, storeDf(ts.d, ts.store, s), ts.store.isInstanceOf[Mem])
 
   /** Crossing the cap converts a Mem table to the Spark-resident store.
     * One-way by design (hysteresis: a spilled table shrinking below the cap
@@ -5997,6 +5966,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   private def wrOrder(td: TableDef): Seq[String] =
     if (td.pkSet.nonEmpty) td.pkSet else td.cols.filter(_.pk).map(_.name)
 
+  /** The engine session's views for a statement over `work`. */
   private def registerViews(work: Tables): Unit = {
     // stale statement-scoped CTE views go first (a dead CTE name must not
     // resolve; a live one re-registers at the end, shadowing tables)
@@ -6012,34 +5982,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       session.catalog.dropTempView(ridView(n))
     }
     registeredViews = current
-    work.values.foreach { ts =>
-      val df = withQueryCollations(ts.d, ridDf(ts))
-      df.createOrReplaceTempView(ridView(ts.d.name))
-      // A Big store's physical layout is not insertion order (merges append
-      // relocated slices), so sort by __ord before dropping it: SELECT *
-      // observes insertion order exactly like the Mem vector — the order the
-      // store's contract documents. Catalyst's EliminateSorts strips the
-      // sort wherever downstream operators don't observe ordering, so
-      // aggregates/joins over the view pay nothing.
-      val ordered =
-        if (ts.d.withoutRowid)
-          // WITHOUT ROWID scans in PRIMARY KEY order (clustered B-tree,
-          // probed live) — under the key's collation via the cast above
-          df.orderBy(wrOrder(ts.d).map(col): _*)
-        else ts.store match {
-          case _: Big => df.orderBy(col("__ord"))
-          case _ => df
-        }
-      ordered.drop("__ord", "__rowid").createOrReplaceTempView(ts.d.name)
-    }
-    // SQL views expand over the tables just registered, in creation order
-    // (view-on-view works). A broken view (underlying table dropped) stays
-    // unregistered and errors lazily at use — SQLite's behavior.
-    viewDefs.values.foreach { case (name, select, _) =>
-      try ssql(SqlText.fixQuotedIdents(select))
-        .createOrReplaceTempView(name)
-      catch { case _: Exception => session.catalog.dropTempView(name) }
-    }
+    registerCatalog(session, liveCatalog(work),
+      work.values.map(storeFrame(session, _)))
     // statement-scoped CTEs LAST so they shadow same-named tables/views
     // (SQLite's resolution order). Each CTE view re-derives the full
     // prefix list, so recursion and chained references need no ordering
@@ -6054,7 +5998,41 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           .createOrReplaceTempView(pendingCtes(k)._1)
       }
     }
-    registerMaster(work)
+  }
+
+  /** Register a read's catalog on `s`. `frames` pairs each table with its
+    * `__ord`/`__rowid`-prefixed frame on `s` and whether that frame already
+    * lists the rows in order (a Mem vector does; a spilled store or a
+    * snapshot file sorts by `__ord`). Each table gets its `__rid_` view
+    * and its named view; then the SQL views, then `sqlite_master`. */
+  private def registerCatalog(s: SparkSession, cat: Catalog,
+      frames: Iterable[(TableDef, DataFrame, Boolean)]): Unit = {
+    frames.foreach { case (td, frame, inOrder) =>
+      val df = withQueryCollations(td, frame)
+      df.createOrReplaceTempView(ridView(td.name))
+      // A Big store's physical layout is not insertion order (merges
+      // append relocated slices), so sort by __ord before dropping it:
+      // SELECT * observes insertion order exactly like the Mem vector.
+      // Catalyst's EliminateSorts strips the sort wherever downstream
+      // operators don't observe ordering, so aggregates/joins pay nothing.
+      val ordered =
+        if (td.withoutRowid)
+          // WITHOUT ROWID scans in PRIMARY KEY order (clustered B-tree,
+          // probed live) — under the key's collation via the cast above
+          df.orderBy(wrOrder(td).map(col): _*)
+        else if (inOrder) df
+        else df.orderBy(col("__ord"))
+      ordered.drop("__ord", "__rowid").createOrReplaceTempView(td.name)
+    }
+    // SQL views expand over the tables just registered, in creation order
+    // (view-on-view works). A broken view (underlying table dropped) stays
+    // unregistered and errors lazily at use — SQLite's behavior.
+    cat.views.foreach { case (name, select, _) =>
+      try SqliteRewrite.run(s, SqlText.fixQuotedIdents(select), csLike)
+        .createOrReplaceTempView(name)
+      catch { case _: Exception => s.catalog.dropTempView(name) }
+    }
+    registerMaster(s, cat)
   }
 
   private var masterFp: Int = 0
@@ -6069,20 +6047,24 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * pages for tables/indexes are deterministic ordinals — SQLite's
     * values are page-allocation accidents no re-implementation can
     * reproduce, so differential probes compare type/name/tbl_name/sql.
-    * Rebuilt only when a catalog fingerprint moves (DDL, tx rollback),
-    * not per statement. */
-  private def registerMaster(work: Tables): Unit = {
-    val fp = (schemaVersion, work.keysIterator.toVector,
-      indexes.keysIterator.toVector, viewDefs.keysIterator.toVector,
-      triggers.keysIterator.toVector).##
-    if (masterRegistered && fp == masterFp) return
-    masterFp = fp
-    masterRegistered = true
+    * On the engine session it is rebuilt only when a catalog fingerprint
+    * moves (DDL, tx rollback), not per statement. */
+  private def registerMaster(s: SparkSession, cat: Catalog): Unit = {
+    if (s eq session) {
+      val fp = (cat.schemaVersion,
+        cat.tables.map(_.d.name.toLowerCase).toVector,
+        cat.indexes.map(_.name.toLowerCase).toVector,
+        cat.views.map(_._1.toLowerCase).toVector,
+        cat.triggers.map(_.name.toLowerCase).toVector).##
+      if (masterRegistered && fp == masterFp) return
+      masterFp = fp
+      masterRegistered = true
+    }
     val rows = Vector.newBuilder[Row]
     var page = 2L
     // TEMP tables live in SQLite's separate temp schema (sqlite_temp_master),
     // not in sqlite_master (probed live; ADVICE r14)
-    work.values.filterNot(_.temp).foreach { ts =>
+    cat.tables.filterNot(_.temp).foreach { ts =>
       val td = ts.d
       rows += Row("table", td.name, td.name, page, ts.createSql)
       page += 1
@@ -6102,14 +6084,14 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       // same source-order numbering as indexRoster (ADVICE r13)
       td.autoIndexSpecs.foreach { case (isPk, _) => emitAuto(isPk) }
     }
-    indexes.values.foreach { ix =>
+    cat.indexes.foreach { ix =>
       rows += Row("index", ix.name, ix.table, page, ix.sql)
       page += 1
     }
-    viewDefs.values.foreach { case (name, _, sql) =>
+    cat.views.foreach { case (name, _, sql) =>
       rows += Row("view", name, name, 0L, sql)
     }
-    triggers.values.foreach { t =>
+    cat.triggers.foreach { t =>
       rows += Row("trigger", t.name, t.table, 0L, t.sql)
     }
     val schema = StructType(Seq(
@@ -6118,7 +6100,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       StructField("tbl_name", StringType, nullable = true),
       StructField("rootpage", LongType, nullable = true),
       StructField("sql", StringType, nullable = true)))
-    val masterDf = session.createDataFrame(rows.result().asJava, schema)
+    val masterDf = s.createDataFrame(rows.result().asJava, schema)
     masterDf.createOrReplaceTempView("sqlite_master")
     // SQLite 3.33+ alias (the modern name in docs and client code)
     masterDf.createOrReplaceTempView("sqlite_schema")
@@ -6129,11 +6111,11 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     // per schema like SQLite's separate temp database file.
     val tempRows = Vector.newBuilder[Row]
     var tpage = 2L
-    work.values.filter(_.temp).foreach { ts =>
+    cat.tables.filter(_.temp).foreach { ts =>
       tempRows += Row("table", ts.d.name, ts.d.name, tpage, ts.createSql)
       tpage += 1
     }
-    val tempDf = session.createDataFrame(tempRows.result().asJava, schema)
+    val tempDf = s.createDataFrame(tempRows.result().asJava, schema)
     tempDf.createOrReplaceTempView("sqlite_temp_master")
     tempDf.createOrReplaceTempView("sqlite_temp_schema")
   }
@@ -6189,11 +6171,16 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     journalOut = None
   }
 
-  private def journalAppend(tx: Boolean, stmts: Seq[String]): Unit =
+  /** `returning` marks a query-path RETURNING statement: its replay arms
+    * the same capture, so a statement the live run refused at the driver
+    * cap ([[retTooMany]]) is refused again on reopen. */
+  private def journalAppend(tx: Boolean, stmts: Seq[String],
+                            returning: Boolean = false): Unit =
     root.foreach { r =>
       journalSeq += 1
       val sb = pendingStreamBatch
-        .map(id => s""""streamBatch":$id,""").getOrElse("")
+        .map(id => s""""streamBatch":$id,""").getOrElse("") +
+        (if (returning) "\"returning\":true," else "")
       val line = s"""{"id":$journalSeq,$sb"transaction":$tx,"statements":[""" +
         stmts.map(s => "\"" + Json.escape(s) + "\"").mkString(",") + "]}\n"
       val os = journalOut.getOrElse {
@@ -6223,8 +6210,11 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
 
   private def checkpointLocked(): Unit = root.foreach { r =>
     val t0 = System.nanoTime()
-    version += 1
-    val vdir = r.resolve(s"v$version")
+    val next = version + 1
+    val vdir = r.resolve(s"v$next")
+    // a leftover of an interrupted checkpoint of this version: unpublished,
+    // so nothing reads it
+    deleteRecursively(vdir)
     Files.createDirectories(vdir)
     // TEMP tables are connection-scoped and never durable (ADVICE r14):
     // they are excluded from the snapshot and the manifest below, so a
@@ -6243,8 +6233,6 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             StructField("__ord", LongType, nullable = false) +:
               StructField("__rowid", LongType, nullable = false) +:
               ts.d.schema.fields)
-          // a leftover of an interrupted checkpoint of this version
-          deleteRecursively(out)
           SnapshotWriter.write(session, out, schema,
             rows.iterator.zipWithIndex.map { case ((rid, vals), i) =>
               Row.fromSeq(i.toLong +: rid +: vals)
@@ -6255,7 +6243,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     }
     appliedBatch = journalSeq
     val sb = new StringBuilder
-    sb.append(s"""{"appliedBatch":$appliedBatch,"version":$version,""")
+    sb.append(s"""{"appliedBatch":$appliedBatch,"version":$next,""")
     sb.append(s""""lastStreamBatch":$lastStreamBatch,""")
     sb.append(s""""lastRowId":$lastRowId,"fk":$fkEnabled,"tables":[""")
     sb.append(tables.values.filterNot(_.temp).map { ts =>
@@ -6272,11 +6260,16 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     sb.append(triggers.values.map(t =>
       "\"" + Json.escape(t.sql) + "\"").mkString(","))
     sb.append(s"""],"userVersion":$userVersion,"schemaVersion":$schemaVersion}""")
+    val manifest = sb.toString.getBytes("UTF-8")
+    // the version's own catalog, for reads of it after later DDL
+    Files.write(vdir.resolve("manifest.json"), manifest)
     // pointer swap: readers always see a complete version
     val tmp = r.resolve("manifest.json.tmp")
-    Files.write(tmp, sb.toString.getBytes("UTF-8"))
+    Files.write(tmp, manifest)
     Files.move(tmp, r.resolve("manifest.json"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    // published: from here [[versions]], [[queryAsOf]] and `/status` see it
+    version = next
     // journal truncation: everything ≤ appliedBatch is in the snapshot
     // (close the append stream first — a delete under an open stream would
     // keep appending to the unlinked inode)
@@ -6306,27 +6299,52 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   private val retainVersions: Long =
     math.max(2L, sys.props.getOrElse("graft.retainVersions", "2").toLong)
 
-  /** The snapshot state `/status` reports, read without the lock: the live
-    * snapshot version, the journal batches since that checkpoint, this
-    * instance's checkpoint count and the last checkpoint's duration. */
+  /** The snapshot state `/status` reports, read without the lock: the
+    * published snapshot version, the journal batches since that
+    * checkpoint, this instance's checkpoint count and the last
+    * checkpoint's duration. */
   def snapshotStatus: GraftDb.SnapshotStatus = {
     val applied = appliedBatch // before journalSeq: the difference stays >= 0
     GraftDb.SnapshotStatus(version, journalSeq - applied, checkpoints,
       lastCheckpointMs)
   }
 
-  /** Snapshot versions currently readable by [[tableAsOf]] (ascending).
-    * Bounded by the retention knob; empty for in-memory databases. */
+  /** Snapshot versions currently readable by [[tableAsOf]] and
+    * [[queryAsOf]] (ascending): the retained `v{N}` dirs up to the
+    * published manifest's version. A dir above it is a checkpoint in
+    * progress, or the leftover of one that never published, and is not
+    * listed. Empty for in-memory databases. */
   def versions(): Seq[Long] = root.toSeq.flatMap { r =>
+    val published = version
     val s = Files.list(r)
     try {
       val out = Seq.newBuilder[Long]
       s.forEach { p =>
         val n = p.getFileName.toString
-        if (n.matches("v\\d+") && Files.isDirectory(p)) out += n.drop(1).toLong
+        if (n.matches("v\\d+") && Files.isDirectory(p) &&
+          n.drop(1).toLong <= published) out += n.drop(1).toLong
       }
       out.result().sorted
     } finally s.close()
+  }
+
+  /** The dir of a readable snapshot version (see [[versions]]). */
+  private def versionDir(version: Long): Either[String, Path] = root match {
+    case None => Left("time travel requires a disk-backed database")
+    case Some(r) =>
+      val vs = versions()
+      if (vs.contains(version)) Right(r.resolve(s"v$version"))
+      else Left(s"no snapshot at version $version " +
+        s"(retained: ${vs.mkString(",")})")
+  }
+
+  /** A table's snapshot file in `vdir`, as its ord/rowid-prefixed frame
+    * on `s`. */
+  private def snapshotFrame(s: SparkSession, vdir: Path,
+                            table: String): Option[DataFrame] = {
+    val pq = vdir.resolve(table.toLowerCase + ".parquet")
+    if (Files.exists(pq)) Some(graft.Tables.readParquet(s, pq.toString))
+    else None
   }
 
   /** Time-travel read: the committed contents of `table` at snapshot
@@ -6340,81 +6358,43 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * error, never silently-current data).
     */
   def tableAsOf(table: String, version: Long): Either[String, DataFrame] =
-    root match {
-      case None => Left("time travel requires a disk-backed database")
-      case Some(r) =>
-        val pq = r.resolve(s"v$version").resolve(table.toLowerCase + ".parquet")
-        if (!Files.exists(pq))
-          Left(s"no snapshot of '$table' at version $version " +
-            s"(retained: ${versions().mkString(",")})")
-        else {
-          val df = graft.Tables.readParquet(session, pq.toString)
-          val cols = df.columns.filterNot(c => c == "__ord" || c == "__rowid")
-          Right(df.orderBy("__ord").select(cols.head, cols.tail: _*))
-        }
+    versionDir(version).flatMap { vdir =>
+      snapshotFrame(session, vdir, table)
+        .map(df => df.orderBy("__ord").drop("__ord", "__rowid"))
+        .toRight(s"no snapshot of '$table' at version $version " +
+          s"(retained: ${versions().mkString(",")})")
     }
 
   /** Time-travel read batch — the SQL surface over [[tableAsOf]], wired to
     * the envelope as `/db/query?version=N` (the same query-parameter shape
-    * as `?level=`). Runs the batch's row-returning statements on a fresh
-    * session whose tables are the v{version} snapshot parquet copies, in
-    * the engine's row order with internal columns stripped. Lock-free:
-    * snapshots are immutable full copies, so reads never see partial
-    * state. TOCTOU caveat (shared with every file-snapshot system): a
-    * concurrent checkpoint whose retention GC expires the requested
-    * version mid-read fails that read loudly (file-not-found → error
-    * envelope) — never silently-current data; re-query `versions()` and
-    * retry. */
+    * as `?level=`). The same pipeline as [[query]] (SQLite semantics,
+    * rowid, collations, pragmas, `sqlite_master`) on a reader session
+    * whose tables are the v{version} snapshot files, under that version's
+    * own catalog (`v{N}/manifest.json`), so a table altered or dropped
+    * after N still reads as it was at N. A version written before
+    * versions carried a manifest reads under the current manifest's
+    * catalog. Only published versions ([[versions]]) are readable.
+    * Read statements only.
+    *
+    * Lock-free: snapshots are immutable full copies, so reads never see
+    * partial state. TOCTOU caveat (shared with every file-snapshot
+    * system): a concurrent checkpoint whose retention GC expires the
+    * requested version mid-read fails that read loudly (file-not-found →
+    * error envelope) — never silently-current data; re-query `versions()`
+    * and retry. */
   def queryAsOf(req: Request, version: Long): Either[String, Seq[RowsResult]] = {
     if (closed) return Left("db connection is already closed")
-    root match {
-      case None => Left("time travel requires a disk-backed database")
-      case Some(r) =>
-        val vdir = r.resolve(s"v$version")
-        if (!Files.isDirectory(vdir))
-          return Left(s"no snapshot at version $version " +
-            s"(retained: ${versions().mkString(",")})")
-        val s = parent.newSession()
-        s.conf.set("spark.sql.session.timeZone", "UTC")
-        val ls = Files.list(vdir)
-        try ls.forEach { p =>
-          val n = p.getFileName.toString
-          if (n.endsWith(".parquet") && Files.isDirectory(p)) {
-            val df = graft.Tables.readParquet(s, p.toString)
-            val cols = df.columns
-              .filterNot(c => c == "__ord" || c == "__rowid")
-            df.orderBy("__ord").select(cols.head, cols.tail: _*)
-              .createOrReplaceTempView(n.stripSuffix(".parquet"))
-          }
-        } finally ls.close()
-        // SQL views are schema objects, not versioned data: resolve the
-        // current committed definitions over the versioned tables (same
-        // registration as the `none`-level read)
-        committedViews.foreach { case (name, select) =>
-          try s.sql(SqlText.fixQuotedIdents(select))
-            .createOrReplaceTempView(name)
-          catch { case _: Exception => }
-        }
-        val out = Seq.newBuilder[RowsResult]
-        req.statements.foreach { st =>
-          val sql = SqlText.bind(st.sql, st.parameters)
-          if (sql.trim.nonEmpty) {
-            if (!isRowReturning(sql))
-              return Left("version reads support read statements only")
-            if (sql.trim.toUpperCase.startsWith("PRAGMA FOREIGN_KEYS"))
-              out += RowsResult(Seq("foreign_keys"), Seq("integer"),
-                Seq(Seq(Value.Integer(if (fkEnabled) 1 else 0))))
-            else if (valuePragmaRe.findFirstMatchIn(sql).isDefined)
-              out += valuePragma(valuePragmaRe.findFirstMatchIn(sql).get.group(1))
-            else
-              try out += envelope(s.sql(
-                SqlText.mapCollations(SqlText.aliasSelectList(
-                  SqlText.fixQuotedIdents(sql))).fold(e => return Left(e),
-                  identity)))
-              catch { case e: Exception => return Left(friendlyError(e)) }
-          }
-        }
-        Right(out.result())
+    versionDir(version).flatMap { vdir =>
+      val own = vdir.resolve("manifest.json")
+      val cat0 = readManifest(
+        if (Files.exists(own)) own else vdir.resolveSibling("manifest.json"))._2
+      val s = connSession()
+      val frames = cat0.tables.toVector.flatMap(ts =>
+        snapshotFrame(s, vdir, ts.d.name).map((ts, _)))
+      val cat = cat0.copy(tables = frames.map(_._1))
+      registerCatalog(s, cat, frames.map { case (ts, df) => (ts.d, df, false) })
+      runBatch(req, s, cat, ())(_ =>
+        Left("version reads support read statements only"))
     }
   }
 
@@ -6426,6 +6406,43 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       finally s.close()
     }
 
+  /** The catalog a manifest records: its tables (with `nextRowId`, and an
+    * empty store [[load]] fills), indexes, views, triggers and pragma
+    * values. Shared by [[load]] and version reads. */
+  private def readManifest(mf: Path): (JsonNode, Catalog) = {
+    val n = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Files.readString(mf))
+    val ts = Vector.newBuilder[TableState]
+    n.path("tables").forEach { t =>
+      val createSql = t.path("createSql").asText()
+      Ddl.parseCreate(createSql).foreach { c =>
+        ts += new TableState(c.table, createSql, Mem(Vector.empty),
+          t.path("nextRowId").asLong(1))
+      }
+    }
+    val ixs = Vector.newBuilder[Ddl.CreateIndex]
+    n.path("indexes").forEach(s => ixs ++= Ddl.parseCreateIndex(s.asText()))
+    val views = Vector.newBuilder[(String, String, String)]
+    n.path("views").forEach { s =>
+      s.asText() match {
+        case createViewRe(_, name, select) => views += ((name, select, s.asText()))
+        case _ =>
+      }
+    }
+    val trigs = Vector.newBuilder[TriggerDef]
+    n.path("triggers").forEach { s =>
+      s.asText() match {
+        case createTriggerRe(_, name, _, event, _, tname, _, _, body) =>
+          trigs += TriggerDef(name, event.toUpperCase, tname,
+            SqlText.splitTopLevel(body, ';').map(_.trim).filter(_.nonEmpty),
+            s.asText())
+        case _ =>
+      }
+    }
+    (n, Catalog(ts.result(), ixs.result(), views.result(), trigs.result(),
+      n.path("userVersion").asLong(0), n.path("schemaVersion").asLong(0)))
+  }
+
   private def load(): Unit = root.foreach { r =>
     // stale Big bucket files from a previous process (crash before close)
     // are dead — recovery rebuilds stores from the snapshot + journal
@@ -6433,25 +6450,19 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     catch { case _: Exception => }
     val mf = r.resolve("manifest.json")
     if (Files.exists(mf)) {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val n = om.readTree(Files.readString(mf))
+      val (n, cat) = readManifest(mf)
       appliedBatch = n.path("appliedBatch").asLong(0)
       journalSeq = appliedBatch
       lastStreamBatch = n.path("lastStreamBatch").asLong(-1)
       version = n.path("version").asLong(0)
       lastRowId = n.path("lastRowId").asLong(0)
       fkEnabled = n.path("fk").asBoolean(false)
-      n.path("tables").forEach { t =>
-        Ddl.parseCreate(t.path("createSql").asText()).foreach { c =>
-          val td = c.table
-          val pq = r.resolve(s"v$version")
-            .resolve(td.name.toLowerCase + ".parquet")
-          val store: Store =
-            if (!Files.exists(pq)) Mem(Vector.empty)
-            else {
-              val df = graft.Tables.readParquet(session, pq.toString)
-              val probe = df.limit(math.min(maxDriverRows,
-                Int.MaxValue - 2L).toInt + 1).collect()
+      cat.tables.foreach { ts =>
+        snapshotFrame(session, r.resolve(s"v$version"), ts.d.name).foreach {
+          df =>
+            val probe = df.limit(math.min(maxDriverRows,
+              Int.MaxValue - 2L).toInt + 1).collect()
+            ts.store =
               if (probe.length > maxDriverRows)
                 // over-cap: stay Spark-resident. localCheckpoint detaches
                 // the store from the version dir so the rolling GC of old
@@ -6460,36 +6471,16 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               else Mem(probe.toVector
                 .sortBy(_.getLong(0)) // __ord: the engine's row order
                 .map { row =>
-                  (row.getLong(1), td.cols.indices.map(i => row.get(i + 2)))
+                  (row.getLong(1), ts.d.cols.indices.map(i => row.get(i + 2)))
                 })
-            }
-          tables(td.name.toLowerCase) =
-            new TableState(td, t.path("createSql").asText(), store,
-              t.path("nextRowId").asLong(1))
         }
+        tables(ts.d.name.toLowerCase) = ts
       }
-      n.path("indexes").forEach { s =>
-        Ddl.parseCreateIndex(s.asText()).foreach(ci =>
-          indexes(ci.name.toLowerCase) = ci)
-      }
-      n.path("views").forEach { s =>
-        s.asText() match {
-          case createViewRe(_, name, select) =>
-            viewDefs(name.toLowerCase) = (name, select, s.asText())
-          case _ =>
-        }
-      }
-      n.path("triggers").forEach { s =>
-        s.asText() match {
-          case createTriggerRe(_, name, _, event, _, tname, _, _, body) =>
-            triggers(name.toLowerCase) = TriggerDef(name, event.toUpperCase,
-              tname, SqlText.splitTopLevel(body, ';')
-                .map(_.trim).filter(_.nonEmpty), s.asText())
-          case _ =>
-        }
-      }
-      userVersion = n.path("userVersion").asLong(0)
-      schemaVersion = n.path("schemaVersion").asLong(0)
+      cat.indexes.foreach(ci => indexes(ci.name.toLowerCase) = ci)
+      cat.views.foreach(v => viewDefs(v._1.toLowerCase) = v)
+      cat.triggers.foreach(t => triggers(t.name.toLowerCase) = t)
+      userVersion = cat.userVersion
+      schemaVersion = cat.schemaVersion
     }
     // crash recovery: replay journal entries after the manifest point
     val jf = r.resolve("journal.jsonl")
@@ -6517,8 +6508,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               val stmts = Seq.newBuilder[Statement]
               n.path("statements").forEach(s => stmts += Statement(s.asText))
               val applied =
-                try executeReplay(
-                  n.path("transaction").asBoolean(false), stmts.result())
+                try executeReplay(n.path("transaction").asBoolean(false),
+                  stmts.result(), n.path("returning").asBoolean(false))
                 catch { case e: Exception =>
                   throw new GraftDb.RecoveryFailed(
                     s"journal replay failed at batch $id: " +
@@ -6562,8 +6553,10 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
 
   /** Re-run one journaled batch during recovery. Returns true iff the
     * batch applied (no failed statement rolled a tx back) — the streaming
-    * watermark must only advance on applied stamps. */
-  private def executeReplay(tx: Boolean, stmts: Seq[Statement]): Boolean = {
+    * watermark must only advance on applied stamps. `returning` arms the
+    * RETURNING capture as the live query path did ([[journalAppend]]). */
+  private def executeReplay(tx: Boolean, stmts: Seq[Statement],
+                            returning: Boolean): Boolean = {
     journalSeq += 1
     if (tx && openTx.isDefined) { persist(); return false } // mirrors execute()
     val work: Tables = if (tx) snapshot() else tables
@@ -6598,11 +6591,16 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           lastRowId = preScalars._1; fkEnabled = preScalars._2
           csLike = preScalars._3; userVersion = preScalars._4
         }
-        val r: Either[String, Long] =
+        def run(): Either[String, Long] = {
+          retArmed = returning
           try dispatch(work, tx, s.sql)
+          finally { retArmed = false; retCaptured = None }
+        }
+        val r: Either[String, Long] =
+          try run()
           catch { case e1: Exception =>
             restore()
-            try dispatch(work, tx, s.sql)
+            try run()
             catch { case e2: Exception =>
               if (Option(e1.getMessage) == Option(e2.getMessage))
                 Left(friendlyError(e2))

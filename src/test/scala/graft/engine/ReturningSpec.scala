@@ -223,4 +223,28 @@ class ReturningSpec extends SparkSpec {
     val (_, logRows) = q(db, "SELECT tag FROM log ORDER BY id")
     assert(logRows == Seq(Seq("i:3"), Seq("i:4")))
   }
+
+  test("a RETURNING statement refused at the driver cap is refused again on replay") {
+    // crash-fuzz seed 910031: the journal line of a cap-refused query-path
+    // RETURNING statement must not apply when the database reopens
+    val root = java.nio.file.Files.createTempDirectory("graft-ret-replay")
+      .resolve("db").toString
+    val db = GraftDb.open(spark, root, 8).fold(e => fail(e), identity)
+    exec(db, "CREATE TABLE t0 (id INTEGER PRIMARY KEY, a INTEGER, b TEXT)")
+    exec(db, "INSERT INTO t0 VALUES " +
+      (1 to 12).map(i => s"($i, $i, 'w$i')").mkString(", "))
+    val before = q(db, "SELECT id, b FROM t0 ORDER BY id")
+    val stmt = "UPDATE t0 AS tgt SET b = src.b || 'bo' FROM t0 AS src " +
+      "WHERE tgt.id = src.id + 1 RETURNING id, b"
+    val refused = db.queryStringStmt(stmt)
+    assert(refused.left.exists(_.startsWith(
+      "too many rows for RETURNING processing on t0")), refused)
+    assert(q(db, "SELECT id, b FROM t0 ORDER BY id") == before)
+    db.close()
+    val reopened = GraftDb.open(spark, root, 8).fold(e => fail(e), identity)
+    try {
+      assert(q(reopened, "SELECT id, b FROM t0 ORDER BY id") == before)
+      assert(reopened.queryStringStmt(stmt) == refused)
+    } finally reopened.close()
+  }
 }

@@ -67,4 +67,56 @@ class TimeTravelSpec extends SparkSpec {
     assert(e.contains("disk-backed"), e)
     db.close()
   }
+
+  test("only published versions are listed and readable") {
+    val root = tmp()
+    val db = GraftDb.open(spark, root).fold(e => fail(e), identity)
+    ok(db, "CREATE TABLE a (x INTEGER)")
+    ok(db, "CREATE TABLE b (y INTEGER)")
+    ok(db, "INSERT INTO a VALUES (1)")
+    ok(db, "INSERT INTO b VALUES (2)")
+    db.checkpoint().fold(e => fail(e), identity) // v1
+    db.close()
+    // the leftover of a checkpoint that wrote one table and never published
+    val r = java.nio.file.Paths.get(root)
+    Files.createDirectories(r.resolve("v2"))
+    val src = r.resolve("v1").resolve("a.parquet")
+    Files.walk(src).forEach { p =>
+      val dst = r.resolve("v2").resolve("a.parquet").resolve(src.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
+    }
+    val reopened = GraftDb.open(spark, root).fold(e => fail(e), identity)
+    try {
+      assert(reopened.versions() === Seq(1L))
+      assert(reopened.snapshotStatus.version === 1L)
+      val q = Request(transaction = false, Seq(Statement("SELECT x FROM a")))
+      assert(reopened.queryAsOf(q, 2) ===
+        Left("no snapshot at version 2 (retained: 1)"))
+      assert(reopened.tableAsOf("a", 2).isLeft)
+      assert(reopened.queryAsOf(q, 1).map(_.head.values) ===
+        Right(Seq(Seq(Value.Integer(1)))))
+      // the next checkpoint replaces the leftover and publishes v2 whole
+      reopened.checkpoint().fold(e => fail(e), identity)
+      assert(reopened.versions() === Seq(1L, 2L))
+      val both = Request(transaction = false,
+        Seq(Statement("SELECT x FROM a"), Statement("SELECT y FROM b")))
+      assert(reopened.queryAsOf(both, 2).map(_.map(_.values)) ===
+        Right(Seq(Seq(Seq(Value.Integer(1))), Seq(Seq(Value.Integer(2))))))
+    } finally reopened.close()
+  }
+
+  test("a version without its own manifest reads under the current catalog") {
+    val root = tmp()
+    val db = GraftDb.open(spark, root).fold(e => fail(e), identity)
+    ok(db, "CREATE TABLE kv (k INTEGER PRIMARY KEY, v TEXT COLLATE NOCASE)")
+    ok(db, "INSERT INTO kv VALUES (1, 'One'), (2, 'two')")
+    db.checkpoint().fold(e => fail(e), identity) // v1
+    // as a checkpoint written before versions carried their manifest
+    Files.delete(java.nio.file.Paths.get(root, "v1", "manifest.json"))
+    val q = Request(transaction = false,
+      Seq(Statement("SELECT k FROM kv WHERE v = 'one'")))
+    assert(db.queryAsOf(q, 1).map(_.head.values) ===
+      Right(Seq(Seq(Value.Integer(1)))))
+    db.close()
+  }
 }

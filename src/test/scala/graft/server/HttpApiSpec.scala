@@ -201,12 +201,6 @@ class HttpApiSpec extends SparkSpec {
       assert(r2.statusCode() == 200, r2.body())
       assert(r2.body() ==
         """[{"columns":["v"],"types":["text"],"values":[["uno"],["two"]]}]""")
-      // SQL views resolve on the version surface too (current definition
-      // over the versioned tables — same contract as the none-level read)
-      db.executeStringStmt("CREATE VIEW vv AS SELECT v FROM t")
-      val rv = post(c, s"$base/db/query?version=1",
-        """{"request":{"transaction":false,"statements":[{"sql":"SELECT v FROM vv"}]}}""")
-      assert(rv.statusCode() == 200 && rv.body().contains("one"), rv.body())
       // expired/unknown version fails loudly, never serves current data
       val bad = post(c, s"$base/db/query?version=99", q)
       assert(bad.statusCode() == 400 && bad.body().contains("no snapshot"))
@@ -217,6 +211,63 @@ class HttpApiSpec extends SparkSpec {
         """{"request":{"transaction":false,"statements":[{"sql":"DELETE FROM t"}]}}""")
       assert(w.statusCode() == 400 &&
         w.body().contains("read statements only"))
+      // SQL views resolve on the version surface under that version's own
+      // catalog: a view created after v2 is in v3, not in v2
+      db.executeStringStmt("CREATE VIEW vv AS SELECT v FROM t")
+      assert(db.checkpoint().isRight) // v3
+      val vq =
+        """{"request":{"transaction":false,"statements":[{"sql":"SELECT v FROM vv"}]}}"""
+      val rv = post(c, s"$base/db/query?version=3", vq)
+      assert(rv.statusCode() == 200 && rv.body().contains("uno"), rv.body())
+      val rv2 = post(c, s"$base/db/query?version=2", vq)
+      assert(rv2.statusCode() == 400 && rv2.body() == "no such table: vv",
+        rv2.body())
+    } finally { api.stop(); db.close() }
+  }
+
+  test("/db/query, ?level=none and ?version=N give one body; unpublished versions are refused") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-http-levels-")
+    val db = GraftDb.open(spark, dir.resolve("db").toString)
+      .fold(e => fail(e), identity)
+    val api = new HttpApi(db, port = 0)
+    api.start()
+    try {
+      val c = HttpClient.newHttpClient()
+      val base = s"http://127.0.0.1:${api.listeningPort}"
+      Seq("CREATE TABLE t(id INTEGER PRIMARY KEY, name TEXT, v INTEGER)",
+        "INSERT INTO t VALUES (7,'Bob',7), (3,'alice',2), (9,'Carl',9)",
+        "CREATE VIEW vt AS SELECT name, v / 2 AS half FROM t")
+        .foreach(db.executeStringStmt)
+      assert(db.checkpoint().isRight) // v1
+      def q(sql: String) =
+        s"""{"request":{"transaction":false,"statements":[{"sql":"$sql"}]}}"""
+      // each answered by python3's sqlite3 (SQLite 3.40.1) as the body says
+      Seq(
+        "SELECT 7 / 2, typeof(7 / 2)" ->
+          """[{"columns":["7 / 2","typeof(7 / 2)"],"types":["integer","text"],"values":[[3,"integer"]]}]""",
+        "SELECT rowid, id FROM t ORDER BY id" ->
+          """[{"columns":["id","id"],"types":["integer","integer"],"values":[[3,3],[7,7],[9,9]]}]""",
+        "SELECT name FROM t WHERE name LIKE 'b%'" ->
+          """[{"columns":["name"],"types":["text"],"values":[["Bob"]]}]""",
+        "SELECT * FROM vt ORDER BY half" ->
+          """[{"columns":["name","half"],"types":["text","integer"],"values":[["alice",1],["Bob",3],["Carl",4]]}]""",
+        "SELECT name FROM sqlite_master ORDER BY name" ->
+          """[{"columns":["name"],"types":["text"],"values":[["t"],["vt"]]}]""",
+        "PRAGMA table_info(t)" ->
+          ("""[{"columns":["cid","name","type","notnull","dflt_value","pk"],""" +
+            """"types":["integer","text","text","integer","text","integer"],""" +
+            """"values":[[0,"id","INTEGER",0,null,1],[1,"name","TEXT",0,null,0],""" +
+            """[2,"v","INTEGER",0,null,0]]}]""")
+      ).foreach { case (sql, expected) =>
+        Seq("", "?level=none", "?version=1").foreach { p =>
+          val r = post(c, s"$base/db/query$p", q(sql))
+          assert(r.statusCode() == 200, s"$p [$sql]: ${r.body()}")
+          assert(r.body() == expected, s"$p [$sql]")
+        }
+      }
+      val unpublished = post(c, s"$base/db/query?version=2", q("SELECT 1"))
+      assert(unpublished.statusCode() == 400)
+      assert(unpublished.body() == "no snapshot at version 2 (retained: 1)")
     } finally { api.stop(); db.close() }
   }
 

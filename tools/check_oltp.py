@@ -15,7 +15,9 @@ statement:
   - query ops: column names and canonical values (integer/text/null —
     the generator's whole domain);
   - "c" ops (engine-side checkpoint + reopen) are no-ops for SQLite: the
-    engine's recovered state must keep matching this same connection.
+    engine's recovered state must keep matching this same connection;
+  - a query op carrying "levelDiff" (the engine's level=none or latest
+    version read differed from its weak read) is a divergence.
 
 Exit 1 on any divergence; prints seed, op index, SQL and both sides.
 """
@@ -251,6 +253,11 @@ for line in open(path):
             prior_err = True  # reopen resets the engine's conn registers
             continue
         sql_i = rec["ops"][i].get("sql", "")
+        if rec["ops"][i].get("levelDiff"):
+            # the engine's read levels disagreed with its own weak read
+            bad = (i, sql_i, {"levels": "agree"},
+                   {"levelDiff": rec["ops"][i]["levelDiff"]})
+            break
         if re.match(r"(?i)\s*PRAGMA\s+foreign_keys\s*=\s*ON", sql_i):
             fk_armed = True
         elif re.match(r"(?i)\s*PRAGMA\s+foreign_keys\s*=\s*OFF", sql_i):
