@@ -75,21 +75,56 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   private def ssql(sqlText: String): DataFrame =
     SqliteRewrite.run(session, sqlText, csLike)
 
-  /** Table row storage. [[Mem]] is the driver-side vector — exact SQLite
-    * row-order/rowid semantics at OLTP size. [[Big]] is the form a table
-    * spills to once it crosses [[maxDriverRows]] (SURVEY §7.4's
-    * partition-scoped copy-on-write): rows live as an immutable
-    * materialized DataFrame with `__ord` (insertion order) and `__rowid`
-    * columns; every mutation derives a NEW DataFrame as a Spark job (never
-    * mutates, never collects the table), and constraint validation runs as
-    * joins/aggregations ([[validateBig]]). Both are immutable values, so
-    * tx snapshots / savepoints / the `none`-level committed version are
-    * reference copies for either representation. */
+  /** Table row storage. A table's rows have one order, SQLite's: a rowid
+    * table is a B-tree keyed by rowid, so an unordered scan returns rows
+    * in rowid order (WITHOUT ROWID tables scan in PRIMARY KEY order,
+    * [[wrOrder]], over synthetic rowids). [[Mem]] is the driver-side
+    * vector, kept sorted by rowid — every write goes through [[memStore]].
+    * [[Big]] is the form a table spills to once it crosses
+    * [[maxDriverRows]] (SURVEY §7.4's partition-scoped copy-on-write):
+    * rows live as an immutable materialized DataFrame with a `__rowid`
+    * column ahead of the data columns, in no physical order (a read sorts
+    * by `__rowid`); every mutation derives a NEW DataFrame as a Spark job
+    * (never mutates, never collects the table), and constraint validation
+    * runs as joins/aggregations ([[validateBulk]]). Both are immutable
+    * values, so tx snapshots / savepoints / the `none`-level committed
+    * version are reference copies for either representation. Statement
+    * order — the order triggers fire and RETURNING lists rows in — is not
+    * a store order: each statement takes it from its own candidates. */
   private sealed trait Store
   private final case class Mem(rows: Vector[(Long, IndexedSeq[Any])])
       extends Store
-  private final case class Big(df: DataFrame, n: Long, nextOrd: Long)
-      extends Store
+  private final case class Big(df: DataFrame, n: Long) extends Store
+
+  /** The [[Mem]] store holding `kept` — rows of a rowid-ordered store,
+    * some dropped or rewritten in place under their own rowids — plus
+    * `added`, rows that are new or whose rowid changed, in any order.
+    * Most statements add at or near the tail (interleaved clients send
+    * ids slightly out of order), so only the rows after the splice point
+    * are merged; nothing re-sorts the store. */
+  private def memStore(kept: Vector[(Long, IndexedSeq[Any])],
+      added: Iterable[(Long, IndexedSeq[Any])] = Nil): Mem =
+    if (added.isEmpty) Mem(kept)
+    else {
+      val low = added.iterator.map(_._1).min
+      val at =
+        if (kept.isEmpty || kept.last._1 < low) kept.size
+        else kept.view.map(_._1).search(low).insertionPoint
+      Mem(kept.take(at) ++ (kept.drop(at) ++ added).sortBy(_._1))
+    }
+
+  /** `rows` after an UPDATE whose changed rows are `upd`, each as (old
+    * rowid, new rowid, values…): a row keeping its rowid is rewritten in
+    * place, a rekeyed one moves to its new place. */
+  private def memUpdated(rows: Vector[(Long, IndexedSeq[Any])],
+                         upd: Array[Row]): Mem = {
+    val byOld = upd.iterator.map(r => r.getLong(0) -> r).toMap
+    def row(r: Row) = (r.getLong(1), (2 until r.length).map(r.get).toIndexedSeq)
+    val moved = upd.filter(r => r.getLong(1) != r.getLong(0))
+    val gone = moved.iterator.map(_.getLong(0)).toSet
+    memStore(rows.collect { case (rid, v) if !gone(rid) =>
+      byOld.get(rid).fold((rid, v))(row) }, moved.map(row))
+  }
 
   private final class TableState(
       val d: TableDef,
@@ -104,7 +139,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     def copyState = new TableState(d, createSql, store, nextRowId, temp)
     def rowCount: Long = store match {
       case Mem(r) => r.size.toLong
-      case Big(_, n, _) => n
+      case Big(_, n) => n
     }
   }
 
@@ -528,8 +563,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   /** Evaluate a RETURNING list over captured row images (empty `rows` =
     * prepare-time analysis only). The capture registers as a temp view
     * aliased to the TABLE name (qualified refs resolve), with the rowid
-    * pseudo-column exposed unless a declared column shadows it, `__ord`
-    * pinning SQLite's observable order, and `*` expanded to the declared
+    * pseudo-column exposed unless a declared column shadows it, `__seq`
+    * pinning the capture's statement order, and `*` expanded to the declared
     * columns. Item naming is SQLite's: alias, bare column name, else the
     * verbatim expression text ([[SqlText.aliasSelectList]]). */
   private def returningDf(work: Tables, td: TableDef,
@@ -538,7 +573,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     // WITHOUT ROWID tables have no rowid pseudo-column to expose
     val shadowed = td.withoutRowid ||
       td.cols.exists(_.name.equalsIgnoreCase("rowid"))
-    val fields = StructField("__ord", LongType, nullable = false) +:
+    val fields = StructField("__seq", LongType, nullable = false) +:
       ((if (shadowed) Array.empty[StructField]
         else Array(StructField("rowid", LongType, nullable = false))) ++
         td.schema.fields)
@@ -555,7 +590,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     }
     ssql(SqlText.aliasSelectList(
       s"SELECT ${expanded.mkString(", ")} FROM __graft_ret AS `${td.name}`") +
-      " ORDER BY __ord")
+      " ORDER BY __seq")
   }
 
   /** Map a Spark analysis error on the RETURNING projection to SQLite's
@@ -1305,7 +1340,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         case s: String => s.equalsIgnoreCase(tname); case _ => false
       }
       ts.store match {
-        case Mem(rows) => ts.store = Mem(renameTo match {
+        case Mem(rows) => ts.store = memStore(renameTo match {
           case None => rows.filterNot(r => matches(r._2))
           case Some(nn) => rows.map(r =>
             if (matches(r._2)) (r._1, IndexedSeq[Any](nn, r._2(1))) else r)
@@ -1353,11 +1388,11 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             case s: String => s.equalsIgnoreCase(td.name); case _ => false
           })
           if (i >= 0)
-            ts.store = Mem(rows.updated(i,
+            ts.store = memStore(rows.updated(i,
               (rows(i)._1, IndexedSeq[Any](rows(i)._2.head, newSeq))))
           else {
             val rid = rowidBase(ts)
-            ts.store = Mem(rows :+ ((rid, IndexedSeq[Any](td.name, newSeq))))
+            ts.store = memStore(rows, Seq((rid, IndexedSeq[Any](td.name, newSeq))))
             ts.nextRowId = rid + 1
           }
         case b: Big =>
@@ -1365,12 +1400,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             .lower(col("name")) =!= td.name.toLowerCase)
           val rid = rowidBase(ts)
           val one = session.createDataFrame(
-            Seq(Row(b.nextOrd, rid, td.name, newSeq)).asJava,
-            StructType(Seq(
-              StructField("__ord", LongType, nullable = false),
-              StructField("__rowid", LongType, nullable = false),
-              StructField("name", StringType, nullable = true),
-              StructField("seq", LongType, nullable = true))))
+            Seq(Row(rid, td.name, newSeq)).asJava, ridSchema(ts.d))
           ts.store = mkBig(upd.unionByName(one))
       }
     }
@@ -1417,13 +1447,13 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     val probe =
       cast.limit(math.min(maxDriverRows, Int.MaxValue - 2L).toInt + 1).collect()
     if (probe.length > maxDriverRows) {
-      val big = mkBig(withOrdRowid(cast, 0L, 1L))
+      val big = mkBig(withRowid(cast, 1L))
       work(key) = new TableState(td, createSql, big, big.n + 1L)
     } else {
       val rows = probe.toVector.zipWithIndex.map { case (r, i) =>
         ((i + 1).toLong, (0 until r.length).map(r.get).toIndexedSeq)
       }
-      work(key) = new TableState(td, createSql, Mem(rows), rows.size + 1L)
+      work(key) = new TableState(td, createSql, memStore(rows), rows.size + 1L)
     }
     Right(0)
   }
@@ -1592,11 +1622,13 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * re-enters itself, and a body error rolls back the whole statement
     * (statement-level atomicity, captured live from SQLite 3.40). The outer
     * statement's lastRowId and rows_affected are preserved across firing. */
-  /** Set by [[applyPolicySeq]]'s Upsert branch during `run`: the exact
-    * per-candidate firing tape (INSERT/UPDATE interleaved in candidate
-    * order, no-op DO UPDATEs included) — SQLite semantics a value diff
-    * cannot reproduce. Cleared before every wrapped statement. */
-  private var upsertFirings: Option[
+  /** Set by [[applyPolicySeq]] during `run`: an INSERT's exact
+    * per-candidate firing tape in statement order — the landed rows of a
+    * plain INSERT, REPLACE's re-inserts, upsert's INSERT/UPDATE
+    * interleaving with its no-op DO UPDATEs — none of which a diff of the
+    * rowid-ordered store can reproduce. Cleared before every wrapped
+    * statement. */
+  private var insertFirings: Option[
     Seq[(String, Option[IndexedSeq[Any]], Option[IndexedSeq[Any]])]] = None
 
   /** Set by the sequential REPLACE branches (insert policy + update
@@ -1641,7 +1673,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           StructType(Seq(StructField("__qr", LongType, nullable = false))))
         b.df.join(broadcast(rdf), col("__rowid") === col("__qr"), "left_semi")
           .collect()
-          .map(r => r.getLong(1) -> (2 until 2 + n).map(r.get).toIndexedSeq)
+          .map(r => r.getLong(0) -> (1 to n).map(r.get).toIndexedSeq)
           .toMap
       }
   }
@@ -1742,7 +1774,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           case _ => None
         }
       else None
-    upsertFirings = None
+    insertFirings = None
     updPolicyFirings = None
     run match {
       case l @ Left(_) => l
@@ -1758,22 +1790,23 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           "(?is)^\\s*(REPLACE|INSERT\\s+OR\\s+REPLACE)\\b".r
             .findFirstIn(sql).isDefined
         // (event, NEW row, OLD row) per affected row. Firing order is
-        // SQLite's (probed live, fuzz-pinned): INSERT in candidate order,
-        // upserts as the exact per-candidate tape, UPDATE per MATCHED row
-        // and DELETE per removed row in rowid order.
+        // SQLite's (probed live, fuzz-pinned): INSERT as the exact
+        // per-candidate tape (statement order, not the store's rowid
+        // order), UPDATE per MATCHED row and DELETE per removed row in
+        // rowid order.
         val firings: Seq[(String, Option[IndexedSeq[Any]], Option[IndexedSeq[Any]])] =
-          try (upsertFirings, updMatched) match {
+          try (insertFirings, updMatched) match {
             // a conflict-policy UPDATE's applied-rows tape (already
             // driver-capped at collection) beats the WHERE-matched set:
             // skipped and displaced rows must not fire
             case _ if kind == "UPDATE" && updPolicyFirings.isDefined =>
               updPolicyFirings.get
             case (Some(tape), _) if kind == "INSERT" =>
-              // upsert's per-candidate tape, and (since fuzz seed 360645)
-              // REPLACE's exact INSERT tape — the value diff missed a
-              // displacement re-inserting identical values. Same
-              // driver-row contract as the diff paths: more firings than
-              // maxDriverRows fails loudly with full statement undo.
+              // the statement's per-candidate tape (REPLACE's since fuzz
+              // seed 360645 — a value diff missed a displacement
+              // re-inserting identical values). Same driver-row contract
+              // as the diff paths: more firings than maxDriverRows fails
+              // loudly with full statement undo.
               if (tape.size > maxDriverRows) throw new TriggerDiffTooLarge
               tape
             case (_, Some(rids)) if kind == "UPDATE" =>
@@ -1796,8 +1829,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                 } ++ (if (kind == "DELETE")
                   beforeVec.collect {
                     case (rid, vals) if !afterMap.contains(rid) =>
-                      (rid, ("DELETE", None, Some(vals)))
-                  }.sortBy(_._1).map(_._2)
+                      ("DELETE", None, Some(vals))
+                  }
                 else Vector.empty)
               case _ =>
                 bigTriggerDiff(td, beforeStore, afterStore, kind, isReplace)
@@ -1914,7 +1947,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             if (!key.contains(null) && !seen.add(key))
               return Left(s"UNIQUE constraint failed: $desc")
           }
-        case Big(df, _, _) =>
+        case Big(df, _) =>
           // distributed pre-scan: keys with a NULL never conflict (SQLite)
           val names = idxs.map(ts.d.cols(_).name)
           val dup = df
@@ -1948,15 +1981,15 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     def alterStore(st: Store,
                    f: Vector[(Long, IndexedSeq[Any])] => Vector[(Long, IndexedSeq[Any])],
                    g: DataFrame => DataFrame): Store = st match {
-      case Mem(rows) => Mem(f(rows))
-      case Big(df, n, no) =>
+      case Mem(rows) => memStore(f(rows))
+      case Big(df, n) =>
         val nd = g(df)
         // the projection still scans the parent's generation files but is
         // (by design) invisible to bigParts — pin those dirs so the
         // checkpoint-time sweep can't delete them under the live frame
         val dirs = bigRefDirs(df)
         if (dirs.nonEmpty) bigDirPins.put(nd, dirs)
-        Big(nd, n, no)
+        Big(nd, n)
     }
     def replaceEntry(oldKey: String, newKey: String, st: TableState): Unit = {
       val entries = work.toSeq.map { case (k, v) =>
@@ -2757,8 +2790,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           case Mem(memRows) =>
             applyPolicySeq(td, policy, memRows, candidates, lastId,
               explicitFlags, autoBase, rowidIdx).flatMap {
-              case (fin, touched, insRids, affected, lastOpt) =>
-                validateIdx(work, td, fin, touched) match {
+              case (kept, added, touched, insRids, affected, lastOpt) =>
+                validateIdx(work, td, kept ++ added, touched) match {
                   case Left((err, k)) =>
                     // SQLite: rows inserted BEFORE the failing row still
                     // advance last_insert_rowid even though the statement
@@ -2768,7 +2801,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                       // OR FAIL keeps the prefix (all valid — k is the
                       // FIRST failure) and reports the error; FK failures
                       // are not policy-resolved and abort wholesale
-                      ts.store = Mem(fin.take(memRows.size + k))
+                      ts.store = memStore(kept, added.take(k))
+                      insertFirings = insertFirings.map(_.take(k))
                       ts.nextRowId = candidates.take(k).foldLeft(autoBase) {
                         case (nx, (rid, _)) => math.max(nx, rid + 1)
                       }
@@ -2781,7 +2815,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                       Right(k.toLong)
                     } else Left(err)
                   case Right(_) =>
-                    ts.store = Mem(fin)
+                    ts.store = memStore(kept, added)
                     ts.nextRowId = nextId
                     lastOpt.foreach(noteLid)
                     maybeSpill(ts)
@@ -2804,10 +2838,13 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * per-candidate order. Shared by the Mem path (base = the whole table)
     * and the spilled path (base = the interacting slice, which by
     * construction contains every row a candidate can conflict with, so the
-    * outcomes are identical). Returns (final base rows, rows to validate,
-    * per-validated-row inserted rowid — Some for rows this statement
-    * INSERTED, None for upsert-updated rows — rows_affected, last inserted
-    * id). The inserted-rid column lets callers reproduce SQLite's
+    * outcomes are identical). `base` is in rowid order. Returns (the base
+    * rows kept under their own rowids, in base order; the rows that land
+    * — inserted, or rekeyed by DO UPDATE — in statement order; rows to
+    * validate; per-validated-row inserted rowid — Some for rows this
+    * statement INSERTED, None for upsert-updated rows — rows_affected,
+    * last inserted id) and sets the statement's [[insertFirings]]. The
+    * inserted-rid column lets callers reproduce SQLite's
     * last_insert_rowid() on ABORTED statements: rows inserted before the
     * first failing row still advance the connection counter even though
     * the statement is undone (fuzz-pinned, check_oltp.py).
@@ -2823,15 +2860,20 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       candidates: IndexedSeq[(Long, IndexedSeq[Any])], lastId: Long,
       explicitFlags: IndexedSeq[Boolean], autoBase: Long, rowidIdx: Int)
       : Either[String, (Vector[(Long, IndexedSeq[Any])],
+                        Vector[(Long, IndexedSeq[Any])],
                         Seq[IndexedSeq[Any]], IndexedSeq[Option[Long]],
-                        Long, Option[Long])] =
+                        Long, Option[Long])] = {
+    def inserts(rows: Seq[(Long, IndexedSeq[Any])]) =
+      Some(rows.map(r => ("INSERT", Some(r._2): Option[IndexedSeq[Any]],
+        None: Option[IndexedSeq[Any]])))
     policy match {
       case Conflict.Abort | Conflict.Fail =>
         captureRet(td, candidates.toVector)
+        insertFirings = inserts(candidates)
         // conflicts surface through validateIdx's uniqueness scan; the
         // FAIL prefix (rows before the first failing candidate) is cut
         // there, where the failing index is known
-        Right((base ++ candidates, candidates.map(_._2),
+        Right((base, candidates.toVector, candidates.map(_._2),
           candidates.map(c => Some(c._1)),
           candidates.size.toLong, Some(lastId)))
       case Conflict.Ignore =>
@@ -2859,9 +2901,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               .collect().map(_.getInt(0)).toSet
             catch { case _: Exception => Set.empty[Int] }
           }
-        var cur = base
+        var landed = Vector.empty[(Long, IndexedSeq[Any])]
         var nextAuto = autoBase
-        val kept = Vector.newBuilder[(Long, IndexedSeq[Any])]
         candidates.zipWithIndex.foreach { case ((rid0, vals0), ci) =>
           // insert-time rowid: on a plain rowid table skipped candidates
           // never consumed one; an AUTOINCREMENT register consumes per
@@ -2872,18 +2913,19 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           val nn = td.cols.zipWithIndex.exists { case (c, i) =>
             c.notNull && !c.isRowidAlias && vals(i) == null
           }
-          val uq = cur.exists { case (_, r) => conflicts(specs, r, vals) }
+          val uq = (base.iterator ++ landed.iterator)
+            .exists { case (_, r) => conflicts(specs, r, vals) }
           if (!nn && !uq && !checkFailed(ci)) {
-            cur :+= ((rid, vals)); kept += ((rid, vals))
+            landed :+= ((rid, vals))
             nextAuto = math.max(nextAuto, rid + 1)
           }
         }
-        val ins = kept.result()
-        // RETURNING reports only the candidates that actually landed
-        // (skipped rows are invisible — probed live)
-        captureRet(td, ins)
-        Right((cur, ins.map(_._2), ins.map(r => Some(r._1)),
-          ins.size.toLong, ins.lastOption.map(_._1)))
+        // RETURNING and triggers see only the candidates that actually
+        // landed (skipped rows are invisible — probed live)
+        captureRet(td, landed)
+        insertFirings = inserts(landed)
+        Right((base, landed, landed.map(_._2), landed.map(r => Some(r._1)),
+          landed.size.toLong, landed.lastOption.map(_._1)))
       case Conflict.Replace =>
         // each candidate deletes the rows it conflicts with, then lands;
         // the displaced images feed fkParentDelta's ON DELETE action leg
@@ -2891,25 +2933,27 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         // victim too — same contract as the trigger tape)
         val specs = uniqueSpecs(td)
         var cur = base
+        var landed = Vector.empty[(Long, IndexedSeq[Any])]
         val victims = Vector.newBuilder[IndexedSeq[Any]]
         candidates.foreach { case (rid, vals) =>
-          val (gone, kept2) =
-            cur.partition { case (_, r) => conflicts(specs, r, vals) }
-          victims ++= gone.map(_._2)
-          cur = kept2 :+ ((rid, vals))
+          def hit(r: (Long, IndexedSeq[Any])) = conflicts(specs, r._2, vals)
+          val (gone, kept2) = cur.partition(hit)
+          val (goneL, landed2) = landed.partition(hit)
+          victims ++= gone.map(_._2) ++= goneL.map(_._2)
+          cur = kept2
+          landed = landed2 :+ ((rid, vals))
         }
         replaceVictims = Some(victims.result())
-        // exact INSERT-firing tape, per candidate in statement order: the
-        // before/after value diff is blind to a displacement that
-        // re-inserts IDENTICAL values under the same rowid — SQLite still
-        // fires the INSERT trigger (fuzz seed 360645, probed live)
-        upsertFirings = Some(candidates.map(c =>
-          ("INSERT", Some(c._2), None)))
+        // every candidate fires INSERT: a displacement that re-inserts
+        // IDENTICAL values under the same rowid still fires (fuzz seed
+        // 360645, probed live)
+        insertFirings = inserts(candidates)
         // RETURNING: one row per surviving insert; displaced rows are
         // invisible (probed live)
         captureRet(td, candidates.toVector)
-        Right((cur, candidates.map(_._2), candidates.map(c => Some(c._1)),
-          candidates.size.toLong, Some(lastId)))
+        Right((cur, landed, candidates.map(_._2),
+          candidates.map(c => Some(c._1)), candidates.size.toLong,
+          Some(lastId)))
       case Conflict.Upsert(clauses) =>
         val all = uniqueSpecs(td)
         // Phase 1 — target validation, clause order (probed live: every
@@ -3003,7 +3047,12 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               s"no such column: $n"))
           }
         })
+        // base rows keep their places; inserted and rekeyed rows land
+        // after them, in statement order (one scan order: base, landed)
         var cur = base
+        var landed = Vector.empty[(Long, IndexedSeq[Any])]
+        def rows = cur.iterator ++ landed.iterator
+        def at(h: Int) = if (h < cur.size) cur(h) else landed(h - cur.size)
         var affected = 0L
         var lastInserted: Option[Long] = None
         val touched = Vector.newBuilder[IndexedSeq[Any]]
@@ -3028,8 +3077,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               case Right(lbl) => lbl.map(l => s"CHECK constraint failed: $l")
             }
           }.orElse(all.collectFirst {
-            case spec if cur.indices.exists(j =>
-              j != exclude && conflicts(Seq(spec), cur(j)._2, img)) =>
+            case spec if rows.zipWithIndex.exists { case ((_, r), j) =>
+              j != exclude && conflicts(Seq(spec), r, img) } =>
               s"UNIQUE constraint failed: ${spec._2}"
           })
         // exact firing tape for the trigger layer: SQLite fires the upsert
@@ -3060,7 +3109,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           var ck = -1
           var k = 0
           while (k < clauseSpecs.size && hit < 0) {
-            val h = cur.indexWhere { case (_, r) =>
+            val h = rows.indexWhere { case (_, r) =>
               conflicts(clauseSpecs(k), r, vals) }
             if (h >= 0) { hit = h; ck = k }
             k += 1
@@ -3071,13 +3120,13 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             // it entirely — no update, no trigger firing, no RETURNING
             // row, and NO fall-through to later clauses (probed live)
             val whereOk = clauses(ck).where.forall { w =>
-              val sub = substituteUpsertRefs(w, td, cur(hit)._2, vals)
+              val sub = substituteUpsertRefs(w, td, at(hit)._2, vals)
               val row = ssql(
                 s"SELECT COALESCE(CAST(($sub) AS BOOLEAN), false)").head
               row.getBoolean(0)
             }
             if (resolved.nonEmpty && whereOk) { // DO UPDATE; NOTHING skips
-              val (orid, orow) = cur(hit)
+              val (orid, orow) = at(hit)
               val upd = orow.toArray
               resolved.foreach {
                 case (ci, FromExc(si)) => upd(ci) = vals(si)
@@ -3100,7 +3149,10 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                 lastInserted.foreach(noteLid)
                 return Left(e)
               }
-              cur = cur.updated(hit, (keptRid, u))
+              if (hit >= cur.size)
+                landed = landed.updated(hit - cur.size, (keptRid, u))
+              else if (keptRid == orid) cur = cur.updated(hit, (orid, u))
+              else { cur = cur.patch(hit, Nil, 1); landed :+= ((keptRid, u)) }
               touched += u
               insRids += None
               fir += (("UPDATE", Some(u), Some(orow)))
@@ -3112,7 +3164,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               lastInserted.foreach(noteLid)
               return Left(e)
             }
-            cur :+= ((rid, vals))
+            landed :+= ((rid, vals))
             touched += vals
             insRids += Some(rid)
             fir += (("INSERT", Some(vals), None))
@@ -3122,23 +3174,24 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             affected += 1
           }
         }
-        upsertFirings = Some(fir.result())
+        insertFirings = Some(fir.result())
         captureRet(td, retBuf.result())
-        Right((cur, touched.result(), insRids.result(), affected,
+        Right((cur, landed, touched.result(), insRids.result(), affected,
           lastInserted))
     }
+  }
 
   /** Rows of a spilled table that share a uniqueness key with any
     * candidate: one broadcast semi-join per spec, collected. Bounded by
     * candidates × specs rows — spec keys are unique in the table by
-    * invariant — never by the table. Returns rid -> (ord, vals). */
+    * invariant — never by the table. Returns (rid, vals) in rowid order. */
   private def collectInteracting(td: TableDef, big: Big,
       specs: Seq[USpec],
       candidates: IndexedSeq[(Long, IndexedSeq[Any])])
-      : Seq[(Long, (Long, IndexedSeq[Any]))] = {
-    if (specs.isEmpty || candidates.isEmpty) return Seq.empty
+      : Vector[(Long, IndexedSeq[Any])] = {
+    if (specs.isEmpty || candidates.isEmpty) return Vector.empty
     val n = td.cols.size
-    val out = mutable.LinkedHashMap[Long, (Long, IndexedSeq[Any])]()
+    val out = mutable.HashMap[Long, IndexedSeq[Any]]()
     specs.foreach { case (idxs, _, colls) =>
       val names = idxs.map(td.cols(_).name)
       // probe with NORMALIZED keys against normalized table columns so a
@@ -3153,12 +3206,11 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         val cond = names.lazyZip(colls).map((nm, cl) =>
           normCol(col(nm), cl) === col("__q_" + nm)).reduce(_ && _)
         big.df.join(broadcast(kdf), cond, "left_semi").collect().foreach { r =>
-          out(r.getLong(1)) =
-            (r.getLong(0), (2 until 2 + n).map(r.get).toIndexedSeq)
+          out(r.getLong(0)) = (1 to n).map(r.get).toIndexedSeq
         }
       }
     }
-    out.toSeq
+    out.toVector.sortBy(_._1)
   }
 
   /** INSERT of a driver-sized candidate batch into a spilled table: run the
@@ -3171,13 +3223,12 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       autoBase: Long, rowidIdx: Int): Either[String, Long] = {
     val td = ts.d
     val specs = uniqueSpecs(td)
-    val mini = collectInteracting(td, big, specs, candidates)
-    val base = mini.sortBy(_._2._1).map { case (rid, (_, v)) => (rid, v) }.toVector
+    val base = collectInteracting(td, big, specs, candidates)
     // the untouched remainder, for self-referencing FK checks in validate()
     val miniRidDf =
-      if (mini.isEmpty) None
+      if (base.isEmpty) None
       else Some(session.createDataFrame(
-        mini.map(m => Row(m._1)).asJava,
+        base.map(m => Row(m._1)).asJava,
         StructType(Seq(StructField("__rm", LongType, nullable = false)))))
     val keep = miniRidDf match {
       case None => big.df
@@ -3196,12 +3247,13 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     }
     applyPolicySeq(td, policy, base, candidates, lastId,
       explicitFlags, autoBase, rowidIdx).flatMap {
-      case (fin0, touched0, insRids, affected0, lastOpt0) =>
+      case (kept, added, touched0, insRids, affected0, lastOpt0) =>
         // (rows to install, affected, nextRowId, new lastRowId) — cut to
         // the OR FAIL prefix when validation names a failing index
         val resolved: Either[String, (Vector[(Long, IndexedSeq[Any])],
             Long, Long, Option[Long])] =
-          validateIdx(work, td, fin0, touched0, selfRemainder = Some(keep),
+          validateIdx(work, td, kept ++ added, touched0,
+            selfRemainder = Some(keep),
             uniqueRemainder = probeRemainder) match {
             case Left((err, k)) =>
               // partial-abort last_insert_rowid semantics — see the Mem path
@@ -3210,7 +3262,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                 // no sqlite_sequence bump for a kept prefix (probed: seq
                 // updates on statement SUCCESS only — fuzz seed 97149)
                 pendingFailError = Some(err)
-                Right((fin0.take(base.size + k), k.toLong,
+                insertFirings = insertFirings.map(_.take(k))
+                Right((kept ++ added.take(k), k.toLong,
                   candidates.take(k).foldLeft(autoBase) {
                     case (nx, (rid, _)) => math.max(nx, rid + 1)
                   }, None))
@@ -3219,31 +3272,12 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               // final rowid register: max over ALL candidates (fuzz V7)
               if (candidates.nonEmpty)
                 bumpSeq(work, td, candidates.iterator.map(_._1).max)
-              Right((fin0, affected0, nextId, lastOpt0))
+              Right((kept ++ added, affected0, nextId, lastOpt0))
           }
         resolved.map { case (fin, affected, nextId2, lastOpt) =>
-          val ordByRid = mini.map { case (rid, (o, _)) => rid -> o }.toMap
-          // REPLACE = delete + re-insert: a landed candidate moves to the
-          // END of the table exactly like the Mem vector path (and fires
-          // its INSERT trigger in candidate order — ADVICE r12 #5), so an
-          // overwriting candidate takes a FRESH tail __ord instead of the
-          // displaced row's. Upsert DO UPDATE rows update in place and
-          // keep theirs.
-          val replacedRids: Set[Long] =
-            if (policy == Conflict.Replace) candidates.map(_._1).toSet
-            else Set.empty
-          var ord = big.nextOrd
-          val schema = StructType(
-            StructField("__ord", LongType, nullable = false) +:
-              StructField("__rowid", LongType, nullable = false) +:
-              td.schema.fields)
-          val sliceRows = fin.map { case (rid, v) =>
-            val o = if (replacedRids(rid)) { val x = ord; ord += 1; x }
-              else ordByRid.getOrElse(rid, { val x = ord; ord += 1; x })
-            Row.fromSeq(o +: rid +: v)
-          }
+          val sliceRows = fin.map { case (rid, v) => Row.fromSeq(rid +: v) }
           val merged = keep.union(
-            session.createDataFrame(sliceRows.asJava, schema))
+            session.createDataFrame(sliceRows.asJava, ridSchema(td)))
           // partition-scoped INSERT: on a bucketed disk-backed store the
           // changed rows are the interacting slice (replaced/relocated
           // rowids) plus the new slice rows — plain appends touch only
@@ -3252,10 +3286,10 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                       else Option(bigParts.get(big.df))) match {
             case None => mkBig(merged)
             case Some(files) =>
-              val touched = (mini.map(_._1) ++ fin.map(_._1))
+              val touched = (base.map(_._1) ++ fin.map(_._1))
                 .map(_ / bigPartRows).toSet
               bigScopedReplace(td.name, files, merged, touched,
-                big.n - mini.size + fin.size, ord)
+                big.n - base.size + fin.size)
           }
           ts.nextRowId = nextId2
           lastOpt.foreach(noteLid)
@@ -3265,9 +3299,14 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   }
 
   /** Fully distributed bulk INSERT — a SELECT source larger than the
-    * driver cap. Candidates get __ord/__rowid via zipWithIndex, policies
-    * resolve via windows/anti-joins, and constraints check as
-    * joins/aggregations; nothing table-sized touches the driver.
+    * driver cap. Candidates get __rowid and a candidate ordinal `__ord`
+    * (statement order, only inside the candidate frames — it is never
+    * stored) via zipWithIndex, policies resolve via windows/anti-joins,
+    * and constraints check as joins/aggregations; nothing table-sized
+    * touches the driver. Row triggers armed on such a statement fire in
+    * rowid order ([[bigTriggerDiff]]), where SQLite fires in candidate
+    * order; auto rowids follow candidate order, so only explicit
+    * out-of-order ids show the difference.
     *
     * Documented divergences, bulk scale only:
     *  - auto rowids are a contiguous block from nextRowId in source order;
@@ -3308,7 +3347,6 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     val tIdx = targetCols.toArray
     val dflt = defaults.toArray
     val ridIx = rowidIdx
-    val ordBase = big.nextOrd
     val ridBase = {
       val b = rowidBase(ts)
       if (td.cols.exists(_.autoInc)) math.max(b, seqOf(work, td.name) + 1)
@@ -3328,7 +3366,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       val auto = ridIx < 0 || full(ridIx) == null
       val rid = if (auto) ridBase + i else full(ridIx).asInstanceOf[Long]
       if (ridIx >= 0) full(ridIx) = rid
-      Row.fromSeq((ordBase + i) +: rid +: (full.toSeq :+
+      Row.fromSeq(i +: rid +: (full.toSeq :+
         (if (auto) 1L else 0L)))
     }
     val candAll = {
@@ -3407,7 +3445,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           reportAt(minOrd(candDf.filter(nn).join(keyed, cond, "left_semi")),
             2, s"UNIQUE constraint failed: $desc")
         }
-        val merged = big.df.union(candDf)
+        val merged = big.df.union(candDf.drop("__ord"))
         if (fkEnabled) {
           td.cols.foreach { c =>
             c.ref.foreach { case (refTable, refColOpt) =>
@@ -3448,7 +3486,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               // OR FAIL keeps the prefix before the first failing
               // candidate (all valid — a later row never invalidates an
               // earlier one) and reports the error; FK aborts wholesale
-              val prefix = candDf.filter(col("__ord") < o)
+              val prefix = candDf.filter(col("__ord") < o).drop("__ord")
               val st = prefix.selectExpr("count(*) AS c",
                 s"coalesce(max(__rowid), ${ridBase - 1}) AS m").head()
               ts.store = mkBig(big.df.union(prefix))
@@ -3491,7 +3529,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             val names = specCols(idxs)
             val nn = notNullKeys(names)
             def nc(n2: String) = normCol(col(n2), colls(names.indexOf(n2)))
-            // intra-batch: first occurrence per key wins (insertion order)
+            // intra-batch: first occurrence per key wins (candidate order)
             val w = Window.partitionBy(names.map(nc): _*).orderBy(col("__ord"))
             k = k.withColumn("__rn", row_number().over(w))
               .filter(!nn || col("__rn") === 1).drop("__rn")
@@ -3532,9 +3570,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             else {
               val cCands = cRows.toIndexedSeq.map(r =>
                 (r.getLong(1), (2 until 2 + nCols).map(r.get).toIndexedSeq))
-              val slice = collectInteracting(td, big, specs, cCands)
-                .map { case (rid2, (_, v)) => (rid2, v) }.toVector
-              var cur = slice
+              var cur = collectInteracting(td, big, specs, cCands)
               val sv = Vector.newBuilder[Long]
               cCands.foreach { case (rid2, vals) =>
                 if (!cur.exists { case (_, r) => conflicts(specs, r, vals) }) {
@@ -3556,7 +3592,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             }
           }
         val keptC = resolved.localCheckpoint()
-        val merged = big.df.union(keptC)
+        val merged = big.df.union(keptC.drop("__ord"))
         validateBulk(work, td, keptC, merged).map { _ =>
           val ks = keptC.selectExpr("count(*) AS c",
             "max_by(__rowid, __ord) AS last").head()
@@ -3600,7 +3636,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           val cond = names.map(n2 => nc(n2) === col("__q_" + n2)).reduce(_ && _)
           keepT = keepT.join(keyed, cond, "left_anti")
         }
-        val merged = keepT.union(surv)
+        val merged = keepT.union(surv.drop("__ord"))
         validateBulk(work, td, candDf, merged).map { _ =>
           ts.store = mkBig(merged)
           ts.nextRowId = newNextId
@@ -3813,76 +3849,57 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             s"CASE WHEN $cond THEN CAST(($e) AS BIGINT) " +
               "ELSE `__rowid` END AS `__rowid`"
           }
-        val res0 = ts.store match {
-          case Mem(memRows) =>
-            val df = ssql(withGenLevels(td,
-              s"SELECT $ridSel, $proj FROM ${ridView(td.name)} AS `$eff`",
-              Seq("__rowid")))
-            val changedNewDf = ssql(withGenLevels(td,
-              s"SELECT `__rowid`, $proj FROM ${ridView(td.name)} AS `$eff` " +
-                s"WHERE $cond", Seq("__rowid")))
-            validateUpdatePerRow(work, td, beforeAllDf, df,
-              changedNewDf, changedOldDf).flatMap { _ =>
-              // RETURNING: matched rows' NEW images in rowid (scan) order
-              captureRet(td, changedNewDf.orderBy("__rowid").collect()
-                .toVector.map { r =>
-                  (r.getLong(0), (1 until r.length).map(r.get).toIndexedSeq)
-                })
-              val newRows = df.collect().toVector.map { r =>
-                (r.getLong(0), (1 until r.length).map(r.get).toIndexedSeq)
-              }.sortBy(_._1)
-              ts.store = Mem(newRows)
-              Right(affected)
-            }
-          case big: Big =>
-            // copy-on-write as a Spark job: validate the affected subset
-            // with distributed checks, then swap the version. Disk-backed
-            // dbs rewrite ONLY the rowid buckets holding matching rows
-            // (partition-scoped, see the Big-bucket helpers); memory dbs
-            // reproject every row (the CASE keeps unaffected rows
-            // bit-identical) into a fresh localCheckpoint.
-            val newDf = ssql(withGenLevels(td,
-              s"SELECT `__ord`, $ridSel, $proj FROM ${ridView(td.name)} AS `$eff`",
-              Seq("__ord", "__rowid")))
-            val changedDf = ssql(withGenLevels(td,
-              s"SELECT `__ord`, `__rowid`, $proj FROM ${ridView(td.name)} AS `$eff` " +
-                s"WHERE $cond", Seq("__ord", "__rowid")))
-            validateUpdatePerRow(work, td, beforeAllDf, newDf,
-              changedDf, changedOldDf).map { _ =>
-              // RETURNING: matched NEW images, rowid order (changedDf
-              // carries __ord, __rowid ahead of the data columns)
-              captureRet(td, changedDf.orderBy("__rowid").collect()
-                .toVector.map { r =>
-                  (r.getLong(1), (2 until r.length).map(r.get).toIndexedSeq)
-                })
-              ts.store =
-                if (root.isEmpty)
-                  Big(newDf.localCheckpoint(), big.n, big.nextOrd)
-                else Option(bigParts.get(big.df)) match {
-                  case None =>
-                    bigPartitionedFull(td.name, newDf, big.n, big.nextOrd)
-                  // Defense in depth (ADVICE r10): the scoped path evaluates
-                  // `cond` in separate jobs (touched-pid scan, bucket
-                  // rewrite) — a non-deterministic predicate could match
-                  // different rows per pass and lose writes in buckets
-                  // outside the touched set. execute()'s determinism guard
-                  // makes that unreachable through the public API; if a
-                  // future internal path ever carries one, take the full
-                  // rewrite, which evaluates the projection exactly once
-                  // into the written files.
-                  case Some(_) if alias.isDefined || ridRekey ||
-                      td.genColsOrdered.nonEmpty ||
-                      nonDeterministic(cond).isDefined =>
-                    // alias'd, rekeying and generated-column updates take
-                    // the full rewrite: the scoped helper re-derives
-                    // cond/proj SQL alias-less and level-less, and a rekey
-                    // moves rows across rowid buckets
-                    bigPartitionedFull(td.name, newDf, big.n, big.nextOrd)
-                  case Some(files) =>
-                    bigScopedUpdate(td.name, big, files, cond, proj)
-                }
-              affected
-            }
+        val newDf = ssql(withGenLevels(td,
+          s"SELECT $ridSel, $proj FROM ${ridView(td.name)} AS `$eff`",
+          Seq("__rowid")))
+        val changedDf = ssql(withGenLevels(td,
+          s"SELECT `__rowid`, $proj FROM ${ridView(td.name)} AS `$eff` " +
+            s"WHERE $cond", Seq("__rowid")))
+        val res0 = validateUpdatePerRow(work, td, beforeAllDf, newDf,
+          changedDf, changedOldDf).map { _ =>
+          // RETURNING: matched rows' NEW images in rowid (scan) order
+          captureRet(td, changedDf.orderBy("__rowid").collect()
+            .toVector.map { r =>
+              (r.getLong(0), (1 until r.length).map(r.get).toIndexedSeq)
+            })
+          ts.store = ts.store match {
+            case Mem(memRows) =>
+              memUpdated(memRows, ssql(withGenLevels(td,
+                s"SELECT `__rowid` AS `__old`, $ridSel, $proj FROM " +
+                  s"${ridView(td.name)} AS `$eff` WHERE $cond",
+                Seq("__old", "__rowid"))).collect())
+            // copy-on-write as a Spark job, validated above with
+            // distributed checks. Disk-backed dbs rewrite ONLY the rowid
+            // buckets holding matching rows (partition-scoped, see the
+            // Big-bucket helpers); memory dbs reproject every row (the
+            // CASE keeps unaffected rows bit-identical) into a fresh
+            // localCheckpoint.
+            case big: Big =>
+              if (root.isEmpty) Big(newDf.localCheckpoint(), big.n)
+              else Option(bigParts.get(big.df)) match {
+                case None => bigPartitionedFull(td.name, newDf, big.n)
+                // Defense in depth (ADVICE r10): the scoped path evaluates
+                // `cond` in separate jobs (touched-pid scan, bucket
+                // rewrite) — a non-deterministic predicate could match
+                // different rows per pass and lose writes in buckets
+                // outside the touched set. execute()'s determinism guard
+                // makes that unreachable through the public API; if a
+                // future internal path ever carries one, take the full
+                // rewrite, which evaluates the projection exactly once
+                // into the written files.
+                case Some(_) if alias.isDefined || ridRekey ||
+                    td.genColsOrdered.nonEmpty ||
+                    nonDeterministic(cond).isDefined =>
+                  // alias'd, rekeying and generated-column updates take
+                  // the full rewrite: the scoped helper re-derives
+                  // cond/proj SQL alias-less and level-less, and a rekey
+                  // moves rows across rowid buckets
+                  bigPartitionedFull(td.name, newDf, big.n)
+                case Some(files) =>
+                  bigScopedUpdate(td.name, big, files, cond, proj)
+              }
+          }
+          affected
         }
         applyFkUpdateDelta(work, td, fkDelta, res0)
   }
@@ -3960,10 +3977,10 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       else s"CAST((${setExprOf(td.rowidAlias.get).get}) AS BIGINT)"
     val oldAliases = td.cols.zipWithIndex
       .map { case (c, i) => s"`${c.name}` AS `__po$i`" }.mkString(", ")
-    val keyCols = Seq("__ord", "__rowid", "__newrid") ++
+    val keyCols = Seq("__rowid", "__newrid") ++
       td.cols.indices.map(i => s"__po$i")
     val inner =
-      s"SELECT `__ord`, `__rowid`, $newRidSel AS `__newrid`, $oldAliases, " +
+      s"SELECT `__rowid`, $newRidSel AS `__newrid`, $oldAliases, " +
         s"$newCols FROM ${ridView(td.name)} AS `$eff` WHERE $cond"
     val leveled = withGenLevels(td, inner, keyCols)
     val matchedSql =
@@ -3981,15 +3998,15 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         case _: TriggerDiffTooLarge => return Left(capMsg)
         case e: Exception => return Left(stmtError(e))
       }
-    final case class Cand(ord: Long, rid: Long, newRid: Any,
+    final case class Cand(rid: Long, newRid: Any,
         old: IndexedSeq[Any], nw: IndexedSeq[Any], ck: Option[String])
-    val nwBase = 3 + n
+    val nwBase = 2 + n
     val changed: Vector[Cand] = matched.iterator.map { r =>
       val ck = td.checks.zipWithIndex.collectFirst {
         case ((label, _), i) if r.getBoolean(nwBase + n + i) => label }
-      Cand(r.getLong(0), r.getLong(1),
-        if (r.isNullAt(2)) null else r.getLong(2),
-        (3 until 3 + n).map(r.get).toIndexedSeq,
+      Cand(r.getLong(0),
+        if (r.isNullAt(1)) null else r.getLong(1),
+        (2 until 2 + n).map(r.get).toIndexedSeq,
         (nwBase until nwBase + n).map(r.get).toIndexedSeq, ck)
     }.toVector
     if (changed.isEmpty) {
@@ -4010,10 +4027,10 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     // under some spec collides with a candidate new key (the only
     // unchanged rows any skip/displace decision can involve)
     val changedRidSet = changed.map(_.rid).toSet
-    val ridSchema =
+    val qrSchema =
       StructType(Seq(StructField("__qr", LongType, nullable = false)))
     def ridsDf(rids: Iterable[Long]) = session.createDataFrame(
-      rids.toSeq.map(Row(_)).asJava, ridSchema)
+      rids.toSeq.map(Row(_)).asJava, qrSchema)
     val baseDf = ridDf(ts)
     val unchangedDf = baseDf.join(broadcast(ridsDf(changedRidSet)),
       col("__rowid") === col("__qr"), "left_anti")
@@ -4035,17 +4052,17 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         partnersDf = Some(partnersDf.map(_.unionAll(sj)).getOrElse(sj))
       }
     }
-    val partners: Vector[(Long, Long, IndexedSeq[Any])] = partnersDf match {
+    val partners: Vector[(Long, IndexedSeq[Any])] = partnersDf match {
       case None => Vector.empty
       case Some(pdf) =>
         val rows =
           try collectCapped(pdf.dropDuplicates("__rowid"), maxDriverRows)
           catch { case _: TriggerDiffTooLarge => return Left(capMsg) }
-        rows.iterator.map(r => (r.getLong(0), r.getLong(1),
-          (2 until 2 + n).map(r.get).toIndexedSeq)).toVector
+        rows.iterator.map(r =>
+          (r.getLong(0), (1 to n).map(r.get).toIndexedSeq)).toVector
     }
     val trackedRidSet = mutable.HashSet[Long]() ++
-      changedRidSet ++ partners.iterator.map(_._2)
+      changedRidSet ++ partners.iterator.map(_._1)
     // child-side FK membership for the candidate new values: static
     // parents resolve as one semi-join each; a self-referential parent
     // additionally checks the evolving tracked state at sim time
@@ -4083,13 +4100,13 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       }
     }
     // ---- the sequential simulation (pure driver work) ----
-    val cur = mutable.HashMap[Long, (Long, IndexedSeq[Any])]()
-    changed.foreach(c => cur(c.rid) = (c.ord, c.old))
-    partners.foreach(p => cur(p._2) = (p._1, p._3))
+    val cur = mutable.HashMap[Long, IndexedSeq[Any]]()
+    changed.foreach(c => cur(c.rid) = c.old)
+    partners.foreach(p => cur(p._1) = p._2)
     val dirty = mutable.HashSet[Long]()
     val keyIdx = specs.map { case (idxs, _, colls) =>
       val m = mutable.HashMap[IndexedSeq[Any], Long]()
-      cur.foreach { case (rid, (_, vals)) =>
+      cur.foreach { case (rid, vals) =>
         val k = keyOf(vals, idxs, colls)
         if (!k.contains(null)) m(k) = rid
       }
@@ -4126,11 +4143,11 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               org.apache.spark.sql.functions.lit(collNorm(nw(ci), cl)))
             .reduce(_ && _)
           baseDf.filter(flt).collect().foreach { r =>
-            val rid = r.getLong(1)
+            val rid = r.getLong(0)
             if (!trackedRidSet.contains(rid)) {
               trackedRidSet += rid
-              val vals = (2 until 2 + n).map(r.get).toIndexedSeq
-              cur(rid) = (r.getLong(0), vals)
+              val vals = (1 to n).map(r.get).toIndexedSeq
+              cur(rid) = vals
               putKeys(rid, vals)
               // the row is tracked now: the evolving cur-scan is the
               // authority for self-referential FK membership, not the
@@ -4153,7 +4170,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       val c0 = it.next()
       cur.get(c0.rid) match {
         case None => () // displaced or moved away before its turn
-        case Some((ord, occ)) =>
+        case Some(occ) =>
           val fresh: Either[String, (Any, IndexedSeq[Any], Option[String])] =
             if (!dirty(c0.rid)) Right((c0.newRid, c0.nw, c0.ck))
             else policyReeval(td, eff, sets, ridRekey, c0.rid, occ)
@@ -4216,7 +4233,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                     val k = keyOf(nw, idxs, colls)
                     if (!k.contains(null))
                       keyIdx(s).get(k).filter(_ != c0.rid).foreach { v =>
-                        val vVals = cur(v)._2
+                        val vVals = cur(v)
                         updVictims += vVals
                         dropKeys(v, vVals)
                         cur -= v
@@ -4244,7 +4261,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               if (abortErr.isEmpty && !skip && !failed) {
                 dropKeys(c0.rid, occ)
                 cur -= c0.rid
-                cur(newRid) = (ord, nw)
+                cur(newRid) = nw
                 dirty += newRid
                 putKeys(newRid, nw)
                 fkChecks.foreach { fc =>
@@ -4253,7 +4270,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                     if (v != null) {
                       val ok = fc.exists(norm(v)) || (fc.selfRef &&
                         cur.valuesIterator.exists(t =>
-                          norm(t._2(fc.parentCol)) == norm(v)))
+                          norm(t(fc.parentCol)) == norm(v)))
                       if (!ok)
                         abortErr = Some("FOREIGN KEY constraint failed")
                     }
@@ -4276,25 +4293,18 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     }
     if (applied > 0 || cur.size != trackedRidSet.size) ts.store match {
       case Mem(memRows) =>
-        val merged = (memRows.filterNot(r => trackedRidSet.contains(r._1)) ++
-          cur.iterator.map { case (rid, (_, vals)) => (rid, vals) })
-          .sortBy(_._1)
-        ts.store = Mem(merged)
+        ts.store = memStore(
+          memRows.filterNot(r => trackedRidSet.contains(r._1)), cur)
       case big: Big =>
-        val tschema = StructType(
-          StructField("__ord", LongType, nullable = false) +:
-            StructField("__rowid", LongType, nullable = false) +:
-            td.schema.fields)
-        val updRows = cur.toSeq.sortBy(_._1).map { case (rid, (ord, vals)) =>
-          Row.fromSeq(ord +: rid +: vals) }
-        val updDf = session.createDataFrame(updRows.asJava, tschema)
+        val updDf = session.createDataFrame(cur.toSeq.map {
+          case (rid, vals) => Row.fromSeq(rid +: vals) }.asJava, ridSchema(td))
         val keepDf = big.df.join(broadcast(ridsDf(trackedRidSet)),
           col("__rowid") === col("__qr"), "left_anti")
         val newDf = keepDf.unionByName(updDf)
         val n2 = big.n - trackedRidSet.size + cur.size
         ts.store =
-          if (root.isEmpty) Big(newDf.localCheckpoint(), n2, big.nextOrd)
-          else bigPartitionedFull(td.name, newDf, n2, big.nextOrd)
+          if (root.isEmpty) Big(newDf.localCheckpoint(), n2)
+          else bigPartitionedFull(td.name, newDf, n2)
     }
     val tapeRows = tape.result()
     updPolicyFirings = Some(tapeRows)
@@ -4586,56 +4596,33 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         "ON b.`__rowid` = m.`__rowid`"
       val beforeAllDf = session.table(ridView(td.name))
       val changedOldDf = ssql(s"SELECT b.* $joinMatched")
-      ts.store match {
-        case Mem(_) =>
-          val ridSel =
-            if (!ridRekey) "b.`__rowid`"
-            else {
-              val idc = td.rowidAlias.get.name
-              s"CASE WHEN m.`__rowid` IS NOT NULL THEN m.`__v_$idc` " +
-                "ELSE b.`__rowid` END AS `__rowid`"
-            }
-          val df = ssql(withGenLevels(td,
-            s"SELECT $ridSel, $projCols $joinAll", Seq("__rowid")))
-          val changedNewDf = ssql(withGenLevels(td,
-            s"SELECT b.`__rowid`, $projCols $joinMatched", Seq("__rowid")))
-          validateUpdatePerRow(work, td, beforeAllDf, df, changedNewDf,
-            changedOldDf).flatMap { _ =>
-            captureRet(td, changedNewDf.orderBy("__rowid").collect()
-              .toVector.map { r =>
-                (r.getLong(0), (1 until r.length).map(r.get).toIndexedSeq)
-              })
-            val newRows = df.collect().toVector.map { r =>
-              (r.getLong(0), (1 until r.length).map(r.get).toIndexedSeq)
-            }.sortBy(_._1)
-            ts.store = Mem(newRows)
-            Right(affected)
-          }
-        case big: Big =>
-          val ridSel =
-            if (!ridRekey) "b.`__rowid`"
-            else {
-              val idc = td.rowidAlias.get.name
-              s"CASE WHEN m.`__rowid` IS NOT NULL THEN m.`__v_$idc` " +
-                "ELSE b.`__rowid` END AS `__rowid`"
-            }
-          val newDf = ssql(withGenLevels(td,
-            s"SELECT b.`__ord`, $ridSel, $projCols $joinAll",
-            Seq("__ord", "__rowid")))
-          val changedDf = ssql(withGenLevels(td,
-            s"SELECT b.`__ord`, b.`__rowid`, $projCols $joinMatched",
-            Seq("__ord", "__rowid")))
-          validateUpdatePerRow(work, td, beforeAllDf, newDf, changedDf,
-            changedOldDf).map { _ =>
-            captureRet(td, changedDf.orderBy("__rowid").collect()
-              .toVector.map { r =>
-                (r.getLong(1), (2 until r.length).map(r.get).toIndexedSeq)
-              })
-            ts.store =
-              if (root.isEmpty) Big(newDf.localCheckpoint(), big.n, big.nextOrd)
-              else bigPartitionedFull(td.name, newDf, big.n, big.nextOrd)
-            affected
-          }
+      val ridSel =
+        if (!ridRekey) "b.`__rowid`"
+        else {
+          val idc = td.rowidAlias.get.name
+          s"CASE WHEN m.`__rowid` IS NOT NULL THEN m.`__v_$idc` " +
+            "ELSE b.`__rowid` END AS `__rowid`"
+        }
+      val newDf = ssql(withGenLevels(td,
+        s"SELECT $ridSel, $projCols $joinAll", Seq("__rowid")))
+      val changedDf = ssql(withGenLevels(td,
+        s"SELECT b.`__rowid`, $projCols $joinMatched", Seq("__rowid")))
+      validateUpdatePerRow(work, td, beforeAllDf, newDf, changedDf,
+        changedOldDf).map { _ =>
+        captureRet(td, changedDf.orderBy("__rowid").collect()
+          .toVector.map { r =>
+            (r.getLong(0), (1 until r.length).map(r.get).toIndexedSeq)
+          })
+        ts.store = ts.store match {
+          case Mem(memRows) =>
+            memUpdated(memRows, ssql(withGenLevels(td,
+              s"SELECT b.`__rowid` AS `__old`, $ridSel, $projCols " +
+                joinMatched, Seq("__old", "__rowid"))).collect())
+          case big: Big =>
+            if (root.isEmpty) Big(newDf.localCheckpoint(), big.n)
+            else bigPartitionedFull(td.name, newDf, big.n)
+        }
+        affected
       }
     } finally session.catalog.dropTempView(mv)
     applyFkUpdateDelta(work, td, fkDelta, res0)
@@ -4825,7 +4812,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     val actionChildren = work.values.toSeq.filter(actsOf(_).nonEmpty)
     if (actionChildren.isEmpty) return Right(false)
     val doomedRows: Vector[(Long, IndexedSeq[Any])] = doomed match {
-      case Left(rows) => rows.sortBy(_._1)
+      case Left(rows) => rows
       case Right(df) =>
         val r = try collectCapped(df.orderBy("__rowid"), maxDriverRows)
         catch {
@@ -4835,7 +4822,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               "DELETE actions armed (raise maxDriverRows)")
         }
         r.toVector.map(row =>
-          (row.getLong(1), (2 until row.length).map(row.get).toIndexedSeq))
+          (row.getLong(0), (1 until row.length).map(row.get).toIndexedSeq))
     }
     if (doomedRows.isEmpty) return Right(false)
     def keyOf(ch: TableState, ci: Int, row: IndexedSeq[Any]): Any = {
@@ -5071,8 +5058,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               fkDeleteGuard(work, ts, Left(doomedRows),
                 Left(remaining)).map { _ =>
                 // RETURNING: deleted rows' OLD images in rowid (scan) order
-                captureRet(ts.d, doomedRows.sortBy(_._1))
-                ts.store = Mem(remaining)
+                captureRet(ts.d, doomedRows)
+                ts.store = memStore(remaining)
                 doomed0.size.toLong
               }
             }
@@ -5112,24 +5099,24 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               fkDeleteGuard(work, ts, Right(doomedDf),
                 Right(remainingDf)).map { _ =>
                 // RETURNING: deleted OLD images, rowid order (doomedDf is
-                // the rid view slice: __ord, __rowid, then the data cols)
+                // the rid view slice: __rowid, then the data cols)
                 captureRet(ts.d, doomedDf.orderBy("__rowid").collect()
                   .toVector.map { r =>
-                    (r.getLong(1), (2 until r.length).map(r.get).toIndexedSeq)
+                    (r.getLong(0), (1 until r.length).map(r.get).toIndexedSeq)
                   })
                 ts.store =
                   if (root.isEmpty) mkBig(remainingDf)
                   else Option(bigParts.get(big.df)) match {
                     case None =>
                       bigPartitionedFull(ts.d.name, remainingDf,
-                        big.n - affected, big.nextOrd)
+                        big.n - affected)
                     // same defense as the UPDATE branch: a non-deterministic
                     // predicate must not be re-evaluated per bucket job
                     // (unreachable via execute()'s determinism guard)
                     case Some(_) if acted ||
                         nonDeterministic(cond).isDefined =>
                       bigPartitionedFull(ts.d.name, remainingDf,
-                        big.n - affected, big.nextOrd)
+                        big.n - affected)
                     case Some(files) =>
                       bigScopedDelete(ts.d.name, big, files, cond, affected)
                   }
@@ -5459,9 +5446,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   private def ridView(name: String): String = s"__rid_$name"
 
   // ---------- spilled (Spark-resident) store helpers ----------------------
-  // A Big table's DataFrame always carries `__ord` (insertion order, for
-  // bookkeeping parity with the Mem vector's positional semantics) and
-  // `__rowid` ahead of the data columns. Mutations build a new lazy plan
+  // A Big table's DataFrame always carries `__rowid` ahead of the data
+  // columns ([[ridSchema]]). Mutations build a new lazy plan
   // over the previous MATERIALIZED version and commit via [[mkBig]]
   // (localCheckpoint = distributed materialization in the block manager;
   // on a cluster the blocks live on executors, so driver heap never holds
@@ -5472,12 +5458,13 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * gives -4 after a lone -5). Computed at statement time, NOT from the
     * monotonic nextRowId cache: SQLite re-uses top-of-table rowids freed
     * by DELETE/REPLACE/ROLLBACK, and the OLTP differential fuzzer
-    * (check_oltp.py) diffs exactly this against the real engine. */
+    * (check_oltp.py) diffs exactly this against the real engine. A
+    * rowid-ordered Mem store holds its largest rowid last. */
   private def rowidBase(ts: TableState): Long = ts.store match {
     case Mem(rows) =>
       if (rows.isEmpty) 1L
-      else rows.iterator.map(_._1).max + 1
-    case Big(df, n, _) =>
+      else rows.last._1 + 1
+    case Big(df, n) =>
       if (n == 0) 1L
       else df.selectExpr("max(__rowid)").head.getLong(0) + 1
   }
@@ -5564,11 +5551,10 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     case other => other.toString // integral types
   }
 
-  /** Materialize a new Big version and compute its bookkeeping in one job. */
+  /** Materialize a new Big version and count its rows. */
   private def mkBig(df: DataFrame): Big = {
     val c = df.localCheckpoint()
-    val r = c.selectExpr("count(*) AS c", "coalesce(max(__ord), -1) AS m").head()
-    Big(c, r.getLong(0), r.getLong(1) + 1L)
+    Big(c, c.count())
   }
 
   // ---------- partition-scoped Big mutations (disk-backed dbs) -----------
@@ -5652,7 +5638,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * (superseded/rolled-back versions' entries are dead weight — losing
     * one only costs a future full re-bucketing, never correctness). */
   private def bigFromFiles(files: Map[Long, Seq[String]], n: Long,
-                           nextOrd: Long, schema: StructType): Big = {
+                           schema: StructType): Big = {
     val paths = files.values.flatten.toSeq
     val df =
       if (paths.isEmpty)
@@ -5665,7 +5651,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       bigDirPins.keySet.removeIf(k => !live.containsKey(k))
     }
     bigParts.put(df, files)
-    Big(df, n, nextOrd)
+    Big(df, n)
   }
 
   /** Every Big DataFrame any holder can still read through: the working
@@ -5679,7 +5665,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   private def liveBigFrames(): java.util.IdentityHashMap[DataFrame, Boolean] = {
     val live = new java.util.IdentityHashMap[DataFrame, Boolean]()
     def add(st: Store): Unit = st match {
-      case Big(d, _, _) => live.put(d, true)
+      case Big(d, _) => live.put(d, true)
       case _ =>
     }
     tables.values.foreach(ts => add(ts.store))
@@ -5739,12 +5725,11 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   /** Full bucketed write of `df` — the lazy first materialization of the
     * partition-scoped layout (also the fallback when a statement touches
     * most buckets: one sequential write beats bucket-count small jobs). */
-  private def bigPartitionedFull(t: String, df: DataFrame, n: Long,
-                                 nextOrd: Long): Big = {
+  private def bigPartitionedFull(t: String, df: DataFrame, n: Long): Big = {
     val out = nextBigGenDir(t)
     df.withColumn("__pid", expr(bigPidExpr))
       .write.partitionBy("__pid").mode("overwrite").parquet(out.toString)
-    bigFromFiles(listPidDirs(out), n, nextOrd, df.schema)
+    bigFromFiles(listPidDirs(out), n, df.schema)
   }
 
   /** The touched bucket set of a predicate against the current version. */
@@ -5763,15 +5748,13 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     if (touched.isEmpty) return big
     if (2 * touched.size >= files.size)
       return bigPartitionedFull(tname, ssql(
-        s"SELECT `__ord`, `__rowid`, $proj FROM ${ridView(tname)}"),
-        big.n, big.nextOrd)
+        s"SELECT `__rowid`, $proj FROM ${ridView(tname)}"), big.n)
     val out = nextBigGenDir(tname)
-    ssql(s"SELECT `__ord`, `__rowid`, $proj FROM ${ridView(tname)} AS __rv " +
+    ssql(s"SELECT `__rowid`, $proj FROM ${ridView(tname)} AS __rv " +
         s"WHERE $bigPidExpr IN (${touched.mkString(",")})")
       .withColumn("__pid", expr(bigPidExpr))
       .write.partitionBy("__pid").mode("overwrite").parquet(out.toString)
-    bigFromFiles(files -- touched ++ listPidDirs(out), big.n, big.nextOrd,
-      big.df.schema)
+    bigFromFiles(files -- touched ++ listPidDirs(out), big.n, big.df.schema)
   }
 
   /** Partition-scoped replace: rewrite exactly `touched` buckets from the
@@ -5781,16 +5764,15 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * change. */
   private def bigScopedReplace(tname: String, files: Map[Long, Seq[String]],
                                merged: DataFrame, touched: Set[Long],
-                               n: Long, nextOrd: Long): Big = {
-    if (touched.isEmpty) return bigFromFiles(files, n, nextOrd, merged.schema)
+                               n: Long): Big = {
+    if (touched.isEmpty) return bigFromFiles(files, n, merged.schema)
     if (2 * touched.size >= files.size)
-      return bigPartitionedFull(tname, merged, n, nextOrd)
+      return bigPartitionedFull(tname, merged, n)
     val out = nextBigGenDir(tname)
     merged.where(expr(s"$bigPidExpr IN (${touched.mkString(",")})"))
       .withColumn("__pid", expr(bigPidExpr))
       .write.partitionBy("__pid").mode("overwrite").parquet(out.toString)
-    bigFromFiles(files -- touched ++ listPidDirs(out), n, nextOrd,
-      merged.schema)
+    bigFromFiles(files -- touched ++ listPidDirs(out), n, merged.schema)
   }
 
   /** Partition-scoped DELETE: rewrite the touched buckets to their
@@ -5803,7 +5785,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     if (2 * touched.size >= files.size)
       return bigPartitionedFull(tname, ssql(
         s"SELECT * FROM ${ridView(tname)} AS __rv WHERE NOT COALESCE($cond, false)"),
-        big.n - affected, big.nextOrd)
+        big.n - affected)
     val out = nextBigGenDir(tname)
     ssql(s"SELECT * FROM ${ridView(tname)} AS __rv " +
         s"WHERE $bigPidExpr IN (${touched.mkString(",")}) " +
@@ -5811,26 +5793,27 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       .withColumn("__pid", expr(bigPidExpr))
       .write.partitionBy("__pid").mode("overwrite").parquet(out.toString)
     bigFromFiles(files -- touched ++ listPidDirs(out), big.n - affected,
-      big.nextOrd, big.df.schema)
+      big.df.schema)
   }
 
-  /** The ord/rowid-prefixed DataFrame of a store, for either
-    * representation, on the engine session or (re-rooted) on `s`. */
+  /** The row schema of every store frame and snapshot file: `__rowid`,
+    * then the data columns. */
+  private def ridSchema(d: TableDef): StructType =
+    StructType(StructField("__rowid", LongType, nullable = false) +:
+      d.schema.fields)
+
+  /** The rowid-prefixed DataFrame of a store, for either representation,
+    * on the engine session or (re-rooted) on `s`. */
   private def storeDf(d: TableDef, st: Store,
                       s: SparkSession = session): DataFrame = st match {
-    case Big(df, _, _) =>
+    case Big(df, _) =>
       // a DataFrame is bound to the engine's session; re-root its (already
       // materialized) RDD on a reader session
       if (s eq session) df else s.createDataFrame(df.rdd, df.schema)
     case Mem(rows) =>
-      val schema = StructType(
-        StructField("__ord", LongType, nullable = false) +:
-          StructField("__rowid", LongType, nullable = false) +:
-          d.schema.fields)
-      val data = rows.zipWithIndex.map { case ((rid, vals), i) =>
-        Row.fromSeq(i.toLong +: rid +: vals)
-      }.asJava
-      s.createDataFrame(data, schema)
+      s.createDataFrame(
+        rows.map { case (rid, vals) => Row.fromSeq(rid +: vals) }.asJava,
+        ridSchema(d))
   }
 
   private def ridDf(ts: TableState): DataFrame = storeDf(ts.d, ts.store)
@@ -5873,8 +5856,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * driver work — the firing set is statement-sized, never table-sized,
     * and capped at [[maxDriverRows]] — an oversized trigger-armed bulk
     * UPDATE fails loudly instead of flooding the driver).
-    * Returns the same (event, NEW, OLD) tuples as the Mem diff, ordered by
-    * the table's insertion order. */
+    * Returns the same (event, NEW, OLD) tuples as the Mem diff, in rowid
+    * order (a driver-sized INSERT fires from its candidate tape instead,
+    * [[insertFirings]]). */
   private def bigTriggerDiff(td: TableDef, before: Store, after: Store,
                              kind: String, isReplace: Boolean)
       : Seq[(String, Option[IndexedSeq[Any]], Option[IndexedSeq[Any]])] = {
@@ -5884,12 +5868,12 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     val dataCols = td.cols.map(_.name)
     def vals(r: Row, off: Int): IndexedSeq[Any] =
       (off until off + n).map(r.get).toIndexedSeq
-    // left_anti keeps exactly the left side's columns: __ord, __rowid, data…
+    // left_anti keeps exactly the left side's columns: __rowid, data…
     var budget = maxDriverRows
     val added = collectCapped(adf.join(bdf.select(col("__rowid").as("__brid0")),
         col("__rowid") === col("__brid0"), "left_anti"), budget)
       .map(r => (r.getLong(0), ("INSERT",
-        Some(vals(r, 2)): Option[IndexedSeq[Any]], None: Option[IndexedSeq[Any]])))
+        Some(vals(r, 1)): Option[IndexedSeq[Any]], None: Option[IndexedSeq[Any]])))
     val bKeyed = bdf.select(col("__rowid").as("__brid") +:
       dataCols.map(c2 => col(c2).as("__o_" + c2)): _*)
     val differs = dataCols.map(c2 => !(col(c2) <=> col("__o_" + c2)))
@@ -5897,41 +5881,34 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     budget -= added.size
     val changed = collectCapped(adf.join(bKeyed, col("__rowid") === col("__brid"))
       .filter(differs), budget).map { r =>
-      val nw = vals(r, 2)
-      val old = (2 + n + 1 until 2 + n + 1 + n).map(r.get).toIndexedSeq
-      // REPLACE fires INSERT triggers in CANDIDATE order: key overwrites
-      // by the after frame's __ord (same key space as `added`) so fresh
-      // and overwritten rowids interleave as the statement listed them;
-      // UPDATE keeps rowid (= before-state matched) ordering.
-      (if (isReplace) r.getLong(0) else r.getLong(1), if (isReplace)
+      val nw = vals(r, 1)
+      // REPLACE re-inserts under the same rowid: an INSERT firing
+      (r.getLong(0), if (isReplace)
         ("INSERT", Some(nw): Option[IndexedSeq[Any]], None: Option[IndexedSeq[Any]])
       else ("UPDATE", Some(nw): Option[IndexedSeq[Any]],
-        Some(old): Option[IndexedSeq[Any]]))
+        Some(vals(r, n + 2)): Option[IndexedSeq[Any]]))
     }
     budget -= changed.size
     val removed =
       if (kind == "DELETE")
         collectCapped(bdf.join(adf.select(col("__rowid").as("__arid0")),
             col("__rowid") === col("__arid0"), "left_anti"), budget)
-          .map(r => (r.getLong(1), ("DELETE",
+          .map(r => (r.getLong(0), ("DELETE",
             None: Option[IndexedSeq[Any]],
-            Some(vals(r, 2)): Option[IndexedSeq[Any]])))
+            Some(vals(r, 1)): Option[IndexedSeq[Any]])))
       else Seq.empty
     (added ++ changed).sortBy(_._1).map(_._2) ++
       removed.sortBy(_._1).map(_._2)
   }
 
-  /** Prefix a DataFrame with contiguous __ord/__rowid starting at the given
-    * bases — RDD zipWithIndex: preserves row order, runs distributed, never
-    * collects. Used by the bulk-insert and CTAS spill paths. */
-  private def withOrdRowid(df: DataFrame, ordBase: Long,
-                           ridBase: Long): DataFrame = {
+  /** Prefix a DataFrame with contiguous __rowid starting at `ridBase` —
+    * RDD zipWithIndex: preserves row order, runs distributed, never
+    * collects. Used by the CTAS spill path. */
+  private def withRowid(df: DataFrame, ridBase: Long): DataFrame = {
     val schema = StructType(
-      StructField("__ord", LongType, nullable = false) +:
-        StructField("__rowid", LongType, nullable = false) +:
-        df.schema.fields)
+      StructField("__rowid", LongType, nullable = false) +: df.schema.fields)
     val rdd = df.rdd.zipWithIndex().map { case (r, i) =>
-      Row.fromSeq((ordBase + i) +: (ridBase + i) +: r.toSeq)
+      Row.fromSeq((ridBase + i) +: r.toSeq)
     }
     session.createDataFrame(rdd, schema)
   }
@@ -5965,6 +5942,21 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   /** PRIMARY KEY column order for a WITHOUT ROWID table's scan. */
   private def wrOrder(td: TableDef): Seq[String] =
     if (td.pkSet.nonEmpty) td.pkSet else td.cols.filter(_.pk).map(_.name)
+
+  /** A table's rowid-prefixed frame in SQLite's scan order, `__rowid`
+    * dropped: a WITHOUT ROWID table scans in PRIMARY KEY order (clustered
+    * B-tree, probed live — under the key's collation when the frame
+    * carries it, [[withQueryCollations]]), a rowid table in rowid order.
+    * `inRowidOrder` marks a frame that already lists its rows so (a Mem
+    * store's): a sort over it would cost a Spark job on every read (a
+    * point read on a 5k-row table took 102 ms with it, 37 ms without).
+    * Catalyst's EliminateSorts strips the sort wherever downstream
+    * operators don't observe ordering, so aggregates/joins pay nothing. */
+  private def scanOrdered(td: TableDef, df: DataFrame,
+                          inRowidOrder: Boolean): DataFrame =
+    (if (td.withoutRowid) df.orderBy(wrOrder(td).map(col): _*)
+     else if (inRowidOrder) df
+     else df.orderBy(col("__rowid"))).drop("__rowid")
 
   /** The engine session's views for a statement over `work`. */
   private def registerViews(work: Tables): Unit = {
@@ -6001,28 +5993,17 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   }
 
   /** Register a read's catalog on `s`. `frames` pairs each table with its
-    * `__ord`/`__rowid`-prefixed frame on `s` and whether that frame already
-    * lists the rows in order (a Mem vector does; a spilled store or a
-    * snapshot file sorts by `__ord`). Each table gets its `__rid_` view
-    * and its named view; then the SQL views, then `sqlite_master`. */
+    * `__rowid`-prefixed frame on `s` and whether that frame already lists
+    * its rows in rowid order (a Mem store does; a spilled store or a
+    * snapshot file does not). Each table gets its `__rid_` view and its
+    * named view, in SQLite's scan order ([[scanOrdered]]); then the SQL
+    * views, then `sqlite_master`. */
   private def registerCatalog(s: SparkSession, cat: Catalog,
       frames: Iterable[(TableDef, DataFrame, Boolean)]): Unit = {
-    frames.foreach { case (td, frame, inOrder) =>
+    frames.foreach { case (td, frame, inRowidOrder) =>
       val df = withQueryCollations(td, frame)
       df.createOrReplaceTempView(ridView(td.name))
-      // A Big store's physical layout is not insertion order (merges
-      // append relocated slices), so sort by __ord before dropping it:
-      // SELECT * observes insertion order exactly like the Mem vector.
-      // Catalyst's EliminateSorts strips the sort wherever downstream
-      // operators don't observe ordering, so aggregates/joins pay nothing.
-      val ordered =
-        if (td.withoutRowid)
-          // WITHOUT ROWID scans in PRIMARY KEY order (clustered B-tree,
-          // probed live) — under the key's collation via the cast above
-          df.orderBy(wrOrder(td).map(col): _*)
-        else if (inOrder) df
-        else df.orderBy(col("__ord"))
-      ordered.drop("__ord", "__rowid").createOrReplaceTempView(td.name)
+      scanOrdered(td, df, inRowidOrder).createOrReplaceTempView(td.name)
     }
     // SQL views expand over the tables just registered, in creation order
     // (view-on-view works). A broken view (underlying table dropped) stays
@@ -6220,24 +6201,17 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     // they are excluded from the snapshot and the manifest below, so a
     // restart — which is a new connection — never resurrects one.
     tables.values.filterNot(_.temp).foreach { ts =>
-      // __ord preserves the engine's row order (insertion/update order is
-      // observable through SELECT *); __rowid is the SQLite rowid. A Mem
-      // table is one driver-sized file written on this thread
-      // ([[SnapshotWriter]], no Spark job); a spilled table writes its
-      // partitions in parallel straight from the materialized version —
-      // the table never transits the driver.
+      // `__rowid` (the SQLite rowid, which also fixes the scan order) and
+      // the data columns. A Mem table is one driver-sized file written on
+      // this thread ([[SnapshotWriter]], no Spark job), in rowid order; a
+      // spilled table writes its partitions in parallel straight from the
+      // materialized version — the table never transits the driver.
       val out = vdir.resolve(ts.d.name.toLowerCase + ".parquet")
       ts.store match {
         case Mem(rows) =>
-          val schema = StructType(
-            StructField("__ord", LongType, nullable = false) +:
-              StructField("__rowid", LongType, nullable = false) +:
-              ts.d.schema.fields)
-          SnapshotWriter.write(session, out, schema,
-            rows.iterator.zipWithIndex.map { case ((rid, vals), i) =>
-              Row.fromSeq(i.toLong +: rid +: vals)
-            })
-        case Big(df, _, _) =>
+          SnapshotWriter.write(session, out, ridSchema(ts.d),
+            rows.iterator.map { case (rid, vals) => Row.fromSeq(rid +: vals) })
+        case Big(df, _) =>
           df.write.mode("overwrite").parquet(out.toString)
       }
     }
@@ -6338,17 +6312,28 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         s"(retained: ${vs.mkString(",")})")
   }
 
-  /** A table's snapshot file in `vdir`, as its ord/rowid-prefixed frame
-    * on `s`. */
+  /** A table's snapshot file in `vdir`, as its rowid-prefixed frame on
+    * `s`. A file written before stores kept rowid order also carries an
+    * `__ord` column (the old insertion order), which is dropped. */
   private def snapshotFrame(s: SparkSession, vdir: Path,
                             table: String): Option[DataFrame] = {
     val pq = vdir.resolve(table.toLowerCase + ".parquet")
-    if (Files.exists(pq)) Some(graft.Tables.readParquet(s, pq.toString))
+    if (Files.exists(pq)) Some(graft.Tables.readParquet(s, pq.toString)
+      .drop("__ord"))
     else None
   }
 
+  /** The catalog a version was written with: its own `v{N}/manifest.json`,
+    * or the root manifest for a version written before versions carried
+    * one. */
+  private def versionCatalog(vdir: Path): Catalog = {
+    val own = vdir.resolve("manifest.json")
+    readManifest(
+      if (Files.exists(own)) own else vdir.resolveSibling("manifest.json"))._2
+  }
+
   /** Time-travel read: the committed contents of `table` at snapshot
-    * `version`, in the engine's row order, internal columns stripped.
+    * `version`, in SQLite's scan order, internal columns stripped.
     *
     * The statement journal (the Raft-log analog) makes checkpoints
     * immutable full-copy snapshots, so AS OF reads are plain parquet
@@ -6359,8 +6344,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     */
   def tableAsOf(table: String, version: Long): Either[String, DataFrame] =
     versionDir(version).flatMap { vdir =>
-      snapshotFrame(session, vdir, table)
-        .map(df => df.orderBy("__ord").drop("__ord", "__rowid"))
+      versionCatalog(vdir).table(table)
+        .flatMap(ts => snapshotFrame(session, vdir, ts.d.name)
+          .map(scanOrdered(ts.d, _, inRowidOrder = false)))
         .toRight(s"no snapshot of '$table' at version $version " +
           s"(retained: ${versions().mkString(",")})")
     }
@@ -6385,14 +6371,13 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   def queryAsOf(req: Request, version: Long): Either[String, Seq[RowsResult]] = {
     if (closed) return Left("db connection is already closed")
     versionDir(version).flatMap { vdir =>
-      val own = vdir.resolve("manifest.json")
-      val cat0 = readManifest(
-        if (Files.exists(own)) own else vdir.resolveSibling("manifest.json"))._2
+      val cat0 = versionCatalog(vdir)
       val s = connSession()
       val frames = cat0.tables.toVector.flatMap(ts =>
         snapshotFrame(s, vdir, ts.d.name).map((ts, _)))
       val cat = cat0.copy(tables = frames.map(_._1))
-      registerCatalog(s, cat, frames.map { case (ts, df) => (ts.d, df, false) })
+      registerCatalog(s, cat,
+        frames.map { case (ts, df) => (ts.d, df, false) })
       runBatch(req, s, cat, ())(_ =>
         Left("version reads support read statements only"))
     }
@@ -6468,11 +6453,11 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                 // the store from the version dir so the rolling GC of old
                 // v{N} dirs can never pull files out from under it.
                 mkBig(df)
-              else Mem(probe.toVector
-                .sortBy(_.getLong(0)) // __ord: the engine's row order
-                .map { row =>
-                  (row.getLong(1), ts.d.cols.indices.map(i => row.get(i + 2)))
-                })
+              // a file written before stores kept rowid order lists its
+              // rows in the old insertion order
+              else memStore(Vector.empty, probe.map { row =>
+                (row.getLong(0), ts.d.cols.indices.map(i => row.get(i + 1)))
+              })
         }
         tables(ts.d.name.toLowerCase) = ts
       }

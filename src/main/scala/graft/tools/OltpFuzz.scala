@@ -26,7 +26,11 @@ import scala.util.Random
   *    (double BEGIN, COMMIT outside a tx, unknown savepoint) whose error
   *    strings must match SQLite's;
   *  - probes are plain column selects ordered by the integer PK, so the
-  *    value comparison is collation-free.
+  *    value comparison is collation-free; the exceptions are unordered
+  *    `SELECT *` probes of `log` (its rowids follow trigger firing
+  *    order), `plain` and an index-free `t0`, which pin SQLite's rowid
+  *    scan order (a table with a secondary index stays out: SQLite may
+  *    scan a covering index instead).
   */
 object OltpFuzz {
 
@@ -58,6 +62,9 @@ object OltpFuzz {
     private var t3Adv: Option[String] = None // "partial" | "expr" index armed
     private var hasT4 = false // WITHOUT ROWID table armed
     private var hasPlain = false // plain rowid table (no INTEGER PK) armed
+    // t0 has (or once had) a secondary index, so SQLite may answer an
+    // unordered scan from a covering index: no unordered t0 probes
+    private var t0Indexed = false
     private var hasLog = false
     private var hasView = false
     private var hasTrg2 = false
@@ -122,13 +129,15 @@ object OltpFuzz {
           "AFTER DELETE ON t0 BEGIN INSERT INTO log(tag) VALUES ('D:' || OLD.id); END"))
         x(s"CREATE TRIGGER trg $ev")
       }
-      if (chance(0.3)) x("CREATE INDEX idx_a ON t0(a)")
+      t0Indexed = t0HasUnique
+      if (chance(0.3)) { x("CREATE INDEX idx_a ON t0(a)"); t0Indexed = true }
       // a UNIQUE index (20%) gives t0 a SECOND uniqueness spec: conflict
       // policies then exercise multi-spec chains (a row skipped for one
       // spec keeps blocking the other) and REPLACE multi-victim deletes;
       // one variant collates it NOCASE (grammar v4) so case-folded
       // collisions run through every policy
       else if (chance(0.2)) {
+        t0Indexed = true
         r.nextInt(3) match {
           case 0 => x("CREATE UNIQUE INDEX uidx ON t0(b)")
           case 1 => x("CREATE UNIQUE INDEX uidx ON t0(a, b)")
@@ -400,7 +409,8 @@ object OltpFuzz {
         r.nextInt(4) match {
           case 0 if !t0HasD =>
             x("ALTER TABLE t0 ADD COLUMN d INTEGER DEFAULT 0"); t0HasD = true
-          case 1 => x("CREATE INDEX IF NOT EXISTS idx_a ON t0(a)")
+          case 1 =>
+            x("CREATE INDEX IF NOT EXISTS idx_a ON t0(a)"); t0Indexed = true
           case 2 => x("DROP INDEX IF EXISTS idx_a")
           case _ if t0HasD => x(s"UPDATE t0 SET d = d + 1 WHERE ${pred()}")
           case _ => x("ALTER TABLE t0 ADD COLUMN d INTEGER DEFAULT 0")
@@ -794,7 +804,13 @@ object OltpFuzz {
           "ORDER BY id")
       }
 
-    private def probe(): Unit = r.nextInt(9) match {
+    /** Unordered scans: SQLite answers them in rowid order. */
+    private def scanProbes(): Seq[String] =
+      (if (hasLog) Seq("SELECT * FROM log") else Nil) ++
+        (if (hasPlain) Seq("SELECT * FROM plain") else Nil) ++
+        (if (t0Indexed) Nil else Seq("SELECT * FROM t0"))
+
+    private def probe(): Unit = r.nextInt(10) match {
       case 0 => q("SELECT * FROM t0 ORDER BY id")
       case 1 => q("SELECT count(*) AS n FROM t0")
       case 2 => q(s"SELECT id, a FROM t0 WHERE a > ${int(-4, 6)} ORDER BY id")
@@ -814,6 +830,7 @@ object OltpFuzz {
           "sqlite_autoindex_t2_1", "sqlite_autoindex_tc_1"))})")
       case 7 => // full-column introspection incl. hidden generated slots
         q("PRAGMA table_xinfo(t0)")
+      case 8 if scanProbes().nonEmpty => q(pick(scanProbes()))
       case _ if hasLog => q("SELECT lid, tag FROM log ORDER BY lid")
       case _ => q("SELECT id, b FROM t0 ORDER BY id")
     }
@@ -829,6 +846,7 @@ object OltpFuzz {
       if (hasT4) q("SELECT k, v FROM t4")
       if (hasPlain) q("SELECT rowid, v FROM plain ORDER BY rowid")
       if (hasLog) q("SELECT lid, tag FROM log ORDER BY lid")
+      scanProbes().foreach(q)
       if (t0AutoInc) q("SELECT name, seq FROM sqlite_sequence ORDER BY name")
       // full catalog incl. automatic-index naming parity
       q("SELECT type, name, tbl_name FROM sqlite_master ORDER BY type, name")

@@ -349,7 +349,7 @@ class BigTableSpec extends SparkSpec {
     val db = mem()
     seedBig(db)
     // relocate a mid-table row physically (upsert rewrites its slice at the
-    // end of the store's layout) — its __ord must still place it at id 500
+    // end of the store's layout) — rowid order must still place it at id 500
     ok(db, "INSERT INTO big VALUES (500, 9, 'moved') " +
       "ON CONFLICT(id) DO UPDATE SET s = 'moved'")
     ok(db, "INSERT INTO big(v, s) VALUES (1, 'tail')")

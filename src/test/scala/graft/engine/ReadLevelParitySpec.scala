@@ -9,10 +9,6 @@ import java.nio.file.Files
   * run one pipeline, so each statement gets one envelope whichever path
   * answers it. Expected envelopes were captured from python3's sqlite3
   * (SQLite 3.40.1), as the other golden specs pin theirs.
-  *
-  * Statements over a rowid table carry an ORDER BY: a `Mem` table scans in
-  * its vector order where SQLite scans in rowid order (a separate, known
-  * difference that is the same at every level).
   */
 class ReadLevelParitySpec extends SparkSpec {
 

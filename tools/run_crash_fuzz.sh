@@ -21,4 +21,4 @@ exec env GRAFT_JAR="$JAR" java $ADD_OPENS \
   -Dspark.ui.enabled=false \
   -cp "$JAR:/opt/spark/jars/*" \
   graft.CrashReplayFuzz "$OUT" "$SEED" "$COUNT" \
-  2> >(grep -Ev 'WARN|INFO' >&2) < /dev/null
+  2> >(grep --line-buffered -Ev 'WARN|INFO' >&2) < /dev/null

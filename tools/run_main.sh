@@ -22,4 +22,4 @@ exec java $ADD_OPENS \
   ${FUZZ_JAVA_OPTS:-} \
   -cp "$JAR:/opt/spark/jars/*" \
   "graft.$MAIN" "$@" \
-  2> >(grep -Ev 'WARN|INFO' >&2) < /dev/null
+  2> >(grep --line-buffered -Ev 'WARN|INFO' >&2) < /dev/null

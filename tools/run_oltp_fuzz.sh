@@ -22,4 +22,4 @@ exec java $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$JAR:/opt/spark/jars/*" \
   graft.OltpFuzzRun "$OUT" "$SEED" "$COUNT" \
-  2> >(grep -Ev 'WARN|INFO' >&2) < /dev/null
+  2> >(grep --line-buffered -Ev 'WARN|INFO' >&2) < /dev/null
