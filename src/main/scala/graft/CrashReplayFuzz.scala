@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.engine.GraftDb
+import graft.engine.{Durability, GraftDb}
 import graft.command.{Json, Value}
 import java.io.PrintWriter
 import java.nio.file.{Files, Path, Paths}
@@ -139,7 +139,7 @@ object CrashReplayFuzz {
 
       // recovery in THIS JVM: replay the journal-committed prefix
       val journalLines: Seq[String] = {
-        val jf = dbPath.resolve("journal.jsonl")
+        val jf = Durability.journalPath(dbPath)
         if (Files.exists(jf)) Files.readAllLines(jf).asScala.toSeq
         else Seq.empty
       }
@@ -217,7 +217,7 @@ object CrashReplayChild {
     // journaled before apply like any statement — report its journal
     // LINE so check_crash.py can skip it in the sqlite replay (the
     // refusal is deterministic, so recovery re-refuses identically)
-    val jf = Paths.get(dbPath).resolve("journal.jsonl")
+    val jf = Durability.journalPath(Paths.get(dbPath))
     def jLines(): Int =
       if (!Files.exists(jf)) 0
       else {

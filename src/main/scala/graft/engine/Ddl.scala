@@ -155,6 +155,16 @@ object Ddl {
   private val refRe =
     """(?is).*REFERENCES\s+["`]?([A-Za-z_][A-Za-z0-9_]*)["`]?\s*(?:\(\s*([A-Za-z_][A-Za-z0-9_]*)\s*\))?.*""".r
 
+  val createViewRe =
+    """(?is)^\s*CREATE\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?["`]?([A-Za-z_][A-Za-z0-9_]*)["`]?\s+AS\s+(.+?)\s*;?\s*$""".r
+  val createTriggerRe =
+    ("""(?is)^\s*CREATE\s+(?:TEMP\s+|TEMPORARY\s+)?TRIGGER\s+(IF\s+NOT\s+EXISTS\s+)?""" +
+      """["`]?([A-Za-z_][A-Za-z0-9_]*)["`]?\s+""" +
+      """(BEFORE\s+|AFTER\s+|INSTEAD\s+OF\s+)?(INSERT|DELETE|UPDATE)(\s+OF\s+[A-Za-z0-9_,\s"`]+?)?\s+""" +
+      """ON\s+["`]?([A-Za-z_][A-Za-z0-9_]*)["`]?\s*""" +
+      """(FOR\s+EACH\s+ROW\s*)?(WHEN\b.+?)?""" +
+      """BEGIN\s+(.+?);?\s*END\s*;?\s*$""").r
+
   final case class Create(ifNotExists: Boolean, table: TableDef)
   final case class Drop(ifExists: Boolean, name: String)
 

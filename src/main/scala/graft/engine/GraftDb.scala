@@ -4,10 +4,11 @@ import graft.command._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, expr, lit, lower, rtrim}
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
-import com.fasterxml.jackson.databind.JsonNode
+import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import Mem.{memStore, memUpdated}
+import Store.ridSchema
 
 /** The engine database: dust's capability contract re-expressed on Spark.
   *
@@ -75,79 +76,11 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   private def ssql(sqlText: String): DataFrame =
     SqliteRewrite.run(session, sqlText, csLike)
 
-  /** Table row storage. A table's rows have one order, SQLite's: a rowid
-    * table is a B-tree keyed by rowid, so an unordered scan returns rows
-    * in rowid order (WITHOUT ROWID tables scan in PRIMARY KEY order,
-    * [[wrOrder]], over synthetic rowids). [[Mem]] is the driver-side
-    * vector, kept sorted by rowid — every write goes through [[memStore]].
-    * [[Big]] is the form a table spills to once it crosses
-    * [[maxDriverRows]] (SURVEY §7.4's partition-scoped copy-on-write):
-    * rows live as an immutable materialized DataFrame with a `__rowid`
-    * column ahead of the data columns, in no physical order (a read sorts
-    * by `__rowid`); every mutation derives a NEW DataFrame as a Spark job
-    * (never mutates, never collects the table), and constraint validation
-    * runs as joins/aggregations ([[validateBulk]]). Both are immutable
-    * values, so tx snapshots / savepoints / the `none`-level committed
-    * version are reference copies for either representation. Statement
-    * order — the order triggers fire and RETURNING lists rows in — is not
-    * a store order: each statement takes it from its own candidates. */
-  private sealed trait Store
-  private final case class Mem(rows: Vector[(Long, IndexedSeq[Any])])
-      extends Store
-  private final case class Big(df: DataFrame, n: Long) extends Store
-
-  /** The [[Mem]] store holding `kept` — rows of a rowid-ordered store,
-    * some dropped or rewritten in place under their own rowids — plus
-    * `added`, rows that are new or whose rowid changed, in any order.
-    * Most statements add at or near the tail (interleaved clients send
-    * ids slightly out of order), so only the rows after the splice point
-    * are merged; nothing re-sorts the store. */
-  private def memStore(kept: Vector[(Long, IndexedSeq[Any])],
-      added: Iterable[(Long, IndexedSeq[Any])] = Nil): Mem =
-    if (added.isEmpty) Mem(kept)
-    else {
-      val low = added.iterator.map(_._1).min
-      val at =
-        if (kept.isEmpty || kept.last._1 < low) kept.size
-        else kept.view.map(_._1).search(low).insertionPoint
-      Mem(kept.take(at) ++ (kept.drop(at) ++ added).sortBy(_._1))
-    }
-
-  /** `rows` after an UPDATE whose changed rows are `upd`, each as (old
-    * rowid, new rowid, values…): a row keeping its rowid is rewritten in
-    * place, a rekeyed one moves to its new place. */
-  private def memUpdated(rows: Vector[(Long, IndexedSeq[Any])],
-                         upd: Array[Row]): Mem = {
-    val byOld = upd.iterator.map(r => r.getLong(0) -> r).toMap
-    def row(r: Row) = (r.getLong(1), (2 until r.length).map(r.get).toIndexedSeq)
-    val moved = upd.filter(r => r.getLong(1) != r.getLong(0))
-    val gone = moved.iterator.map(_.getLong(0)).toSet
-    memStore(rows.collect { case (rid, v) if !gone(rid) =>
-      byOld.get(rid).fold((rid, v))(row) }, moved.map(row))
-  }
-
-  private final class TableState(
-      val d: TableDef,
-      val createSql: String,
-      var store: Store,
-      var nextRowId: Long,
-      // CREATE TEMP TABLE: connection-scoped — excluded from the manifest
-      // (never durable, never replicated: the journal's replayed temp
-      // statements are dropped at the end of recovery), hidden from
-      // sqlite_master (sqlite_temp_master lists it), dropped on close
-      val temp: Boolean = false) {
-    def copyState = new TableState(d, createSql, store, nextRowId, temp)
-    def rowCount: Long = store match {
-      case Mem(r) => r.size.toLong
-      case Big(_, n) => n
-    }
-  }
-
   private type Tables = mutable.LinkedHashMap[String, TableState]
   private var tables: Tables = mutable.LinkedHashMap.empty
   // secondary-index catalog (SQLite pass-through surface): metadata only —
   // Catalyst plans the scans — except UNIQUE indexes, which add uniqueness
-  // constraints enforced through validate()/the conflict policies.
+  // constraints enforced through validateIdx/the conflict policies.
   private var indexes: mutable.LinkedHashMap[String, Ddl.CreateIndex] =
     mutable.LinkedHashMap.empty
   // SQL views (SQLite pass-through): stored as their SELECT text, expanded
@@ -175,15 +108,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     }
     r
   }
-  @volatile private var appliedBatch = 0L // see journalSeq
   private var closed = false
   private val lock = new Object
-  // AFTER ROW triggers (SQLite pass-through surface, reference forwards
-  // CREATE TRIGGER verbatim to SQLite via db/src/db.rs:176): body is the
-  // raw statement list; NEW./OLD. substitute per affected row at fire time.
-  private final case class TriggerDef(name: String, event: String,
-                                      table: String, body: Seq[String],
-                                      sql: String)
   private var triggers: mutable.LinkedHashMap[String, TriggerDef] =
     mutable.LinkedHashMap.empty
   // triggers currently on the firing stack — SQLite's default
@@ -219,19 +145,6 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       views: mutable.LinkedHashMap[String, (String, String, String)],
       trigs: mutable.LinkedHashMap[String, TriggerDef])
   private val savepoints = mutable.ListBuffer.empty[Savepoint]
-  /** The schema objects a read resolves against: the live catalogs
-    * (weak/strong), the last committed ones (`none`) or a snapshot
-    * manifest's (`?version=N`, [[load]]). */
-  private final case class Catalog(
-      tables: Iterable[TableState],
-      indexes: Iterable[Ddl.CreateIndex],
-      views: Iterable[(String, String, String)],
-      triggers: Iterable[TriggerDef],
-      userVersion: Long,
-      schemaVersion: Long) {
-    def table(name: String): Option[TableState] =
-      tables.find(_.d.name.equalsIgnoreCase(name))
-  }
 
   private def liveCatalog(work: Tables): Catalog =
     Catalog(work.values, indexes.values, viewDefs.values, triggers.values,
@@ -249,29 +162,16 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
 
   // ---------- public API (the store seam, reference store/src/lib.rs:7-28) --
 
-  // Exclusive root ownership (ADVICE r10): open() takes a file lock on the
-  // root so a second open — same or another process — is refused instead of
-  // sweeping the live instance's big/ bucket files out from under it.
-  // Released at close(); the OS releases it if the process dies. SQLite's
-  // equivalent is its file-locking protocol; the error string matches its
-  // busy-handler surface.
-  private[engine] var rootLock
-      : Option[(java.nio.channels.FileChannel, java.nio.channels.FileLock)] =
-    None
-
   def close(): Either[String, Unit] = lock.synchronized {
     if (closed) Left("db connection is already closed")
     else {
-      closed = true; journalCloseStream()
+      closed = true
+      durability.foreach(_.close())
       // Big bucket files are NOT deleted here: a lock-free `none`-level
       // read may still be scanning them (it runs outside this lock by
       // design). Superseded generations are refcount-swept at
       // checkpoint time ([[sweepBigGenerations]]); whatever remains is
       // dead weight on disk until the next open() on this root sweeps it.
-      rootLock.foreach { case (ch, lk) =>
-        try { lk.release(); ch.close() } catch { case _: Exception => }
-      }
-      rootLock = None
       Right(())
     }
   }
@@ -399,7 +299,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           Left("level=none supports read statements only"))
       case _ => lock.synchronized {
         if (closed) return Left("db connection is already closed")
-        if (level == ReadLevel.Strong && journalSeq != appliedBatch)
+        if (level == ReadLevel.Strong && !durability.forall(_.caughtUp))
           return Left("strong read failed: journal not fully applied")
         // reads on this connection see the open explicit tx's
         // uncommitted state (SQLite: the tx is connection-scoped)
@@ -431,15 +331,16 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   /** Run a query batch on `s`: read statements through [[readOne]]
     * against `cat` (re-evaluated per statement, since a write may change
     * it), every other statement through `write`. The first error ends the
-    * batch. */
+    * batch. `files`: the tables are snapshot files, not `cat`'s stores. */
   private def runBatch(req: Request, s: SparkSession, cat: => Catalog,
-      register: => Unit)(write: String => Either[String, RowsResult])
+      register: => Unit, files: Boolean = false)(
+      write: String => Either[String, RowsResult])
       : Either[String, Seq[RowsResult]] = {
     val out = Seq.newBuilder[RowsResult]
     req.statements.foreach { st =>
       val sql = SqlText.bind(st.sql, st.parameters)
       if (sql.trim.nonEmpty)
-        (if (isRowReturning(sql)) readOne(s, cat, sql, register)
+        (if (isRowReturning(sql)) readOne(s, cat, sql, register, files)
          else write(sql)) match {
           case Right(r) => out += r
           case Left(e) => return Left(e)
@@ -450,9 +351,12 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
 
   /** One read statement against `cat`. The pragmas answer from the
     * catalog and the connection state; any other statement runs on `s`
-    * once `register` has brought its views up to date. */
+    * once `register` has brought its views up to date. A `__rid_` view
+    * lists its rows in rowid order only for a `Mem` store, not for a
+    * spilled one or (`files`) a snapshot file. */
   private def readOne(s: SparkSession, cat: Catalog, sql: String,
-                      register: => Unit): Either[String, RowsResult] = {
+                      register: => Unit, files: Boolean = false)
+      : Either[String, RowsResult] = {
     def arg(re: scala.util.matching.Regex) =
       re.findFirstMatchIn(sql).map(_.group(1))
     if (sql.trim.toUpperCase.startsWith("PRAGMA FOREIGN_KEYS"))
@@ -472,7 +376,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         // then map the collation names for Catalyst
         SqlText.mapCollations(SqlText.exposeRowid(
             SqlText.aliasSelectList(SqlText.fixQuotedIdents(sql)),
-            rowidInfoOf(cat.table)))
+            rowidInfoOf(cat.table, ts => !files && ts.store.isInstanceOf[Mem])))
           .map(q => envelope(SqliteRewrite.run(s, q, csLike)))
       } catch { case e: Exception => Left(friendlyError(e)) })
   }
@@ -916,7 +820,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       case "CREATE" => Ddl.parseCreateIndex(sql0) match {
         case Some(ci) => doCreateIndex(work, ci)
         case None => sql0 match {
-          case createViewRe(ine, name, select) =>
+          case Ddl.createViewRe(ine, name, select) =>
             doCreateView(work, ine != null, name, select, sql0)
           case _ => doCreate(work, sql0)
         }
@@ -972,7 +876,6 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     else friendlyError(e)
 
   private def friendlyError(e: Exception): String = {
-    if (sys.props.contains("graft.debugErrors")) e.printStackTrace()
     // Engine-raised errors travel wrapped when they fire inside UDF
     // evaluation ([FAILED_EXECUTE_UDF] … Lambda$… noise, VERDICT r14):
     // walk the cause chain and surface the clean engine message.
@@ -1217,7 +1120,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   private def valuePragma(cat: Catalog, name: String): RowsResult =
     name.toLowerCase match {
     case "integrity_check" | "quick_check" =>
-      // constraints hold by construction (validate() gates every commit)
+      // constraints hold by construction (validateIdx gates every commit)
       RowsResult(Seq(name.toLowerCase), Seq("text"),
         Seq(Seq(Value.Text("ok"))))
     case "collation_list" =>
@@ -1498,8 +1401,6 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       }
     }
 
-  private val createViewRe =
-    """(?is)^\s*CREATE\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?["`]?([A-Za-z_][A-Za-z0-9_]*)["`]?\s+AS\s+(.+?)\s*;?\s*$""".r
   private val dropViewRe =
     """(?is)^\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?["`]?([A-Za-z_][A-Za-z0-9_]*)["`]?\s*;?\s*$""".r
 
@@ -1522,13 +1423,6 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   // ---------- triggers (SQLite pass-through surface) ------------------------
 
   private val triggerKeywordRe = """(?is)^\s*CREATE\s+(?:TEMP\s+|TEMPORARY\s+)?TRIGGER\b""".r
-  private val createTriggerRe =
-    ("""(?is)^\s*CREATE\s+(?:TEMP\s+|TEMPORARY\s+)?TRIGGER\s+(IF\s+NOT\s+EXISTS\s+)?""" +
-      """["`]?([A-Za-z_][A-Za-z0-9_]*)["`]?\s+""" +
-      """(BEFORE\s+|AFTER\s+|INSTEAD\s+OF\s+)?(INSERT|DELETE|UPDATE)(\s+OF\s+[A-Za-z0-9_,\s"`]+?)?\s+""" +
-      """ON\s+["`]?([A-Za-z_][A-Za-z0-9_]*)["`]?\s*""" +
-      """(FOR\s+EACH\s+ROW\s*)?(WHEN\b.+?)?""" +
-      """BEGIN\s+(.+?);?\s*END\s*;?\s*$""").r
   private val dropTriggerRe =
     """(?is)^\s*DROP\s+TRIGGER\s+(IF\s+EXISTS\s+)?["`]?([A-Za-z_][A-Za-z0-9_]*)["`]?\s*;?\s*$""".r
 
@@ -1541,7 +1435,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * statement. */
   private def doCreateTrigger(work: Tables, sql: String): Either[String, Long] =
     sql match {
-      case createTriggerRe(ine, name, timing, event, ofCols, tname, _, when, body) =>
+      case Ddl.createTriggerRe(ine, name, timing, event, ofCols, tname, _, when, body) =>
         if (timing == null || !timing.trim.equalsIgnoreCase("AFTER"))
           return Left("only AFTER triggers are supported")
         if (ofCols != null)
@@ -2878,7 +2772,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           candidates.size.toLong, Some(lastId)))
       case Conflict.Ignore =>
         // skip candidates violating NOT NULL, CHECK or any uniqueness
-        // spec (SQLite: FK violations still abort — validate() after).
+        // spec (SQLite: FK violations still abort — validateIdx after).
         // AUTOINCREMENT rowids come from the statement's running register
         // (the tentative assignment): even a SKIPPED auto candidate
         // consumes its rowid there (probed live — OLTP fuzz V7), unlike
@@ -3224,7 +3118,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     val td = ts.d
     val specs = uniqueSpecs(td)
     val base = collectInteracting(td, big, specs, candidates)
-    // the untouched remainder, for self-referencing FK checks in validate()
+    // the untouched remainder, for self-referencing FK checks in validateIdx
     val miniRidDf =
       if (base.isEmpty) None
       else Some(session.createDataFrame(
@@ -3651,7 +3545,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   }
 
   /** Distributed NOT NULL / CHECK / FK validation for the bulk path: the
-    * same checks and error strings as [[validate]], as DataFrame jobs.
+    * same checks and error strings as [[validateIdx]], as DataFrame jobs.
     * `finalDf` is the post-statement table, used as the parent side of
     * self-referencing FKs. */
   private def validateBulk(work: Tables, td: TableDef, newDf: DataFrame,
@@ -5193,17 +5087,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * spilled path (equivalent for the uniqueness scan: any row a touched
     * row could conflict with is in the slice). `selfRemainder` is the
     * spilled path's untouched remainder, consulted (distributed) for
-    * self-referencing FKs whose parent value lies outside the slice. */
-  private def validate(
-      work: Tables, td: TableDef,
-      allRows: Vector[(Long, IndexedSeq[Any])],
-      newRows: Seq[IndexedSeq[Any]],
-      selfRemainder: Option[DataFrame] = None,
-      uniqueRemainder: Option[DataFrame] = None): Either[String, Unit] =
-    validateIdx(work, td, allRows, newRows, selfRemainder, uniqueRemainder)
-      .left.map(_._1)
-
-  /** [[validate]] plus the INDEX (in `newRows` order) of the first failing
+    * self-referencing FKs whose parent value lies outside the slice.
+    *
+    * A Left carries the INDEX (in `newRows` order) of the first failing
     * row, resolved with SQLite's per-row constraint priority — NOT NULL,
     * CHECK, UNIQUE, FOREIGN KEY (probed live against sqlite 3.40: a row
     * violating several reports the highest-priority one; across rows the
@@ -5380,14 +5266,15 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
 
   /** [[SqlText.RowidInfo]] lookup over a table lookup (rowid tables
     * only; WITHOUT ROWID has no rowid pseudo-column, probed live). */
-  private def rowidInfoOf(table: String => Option[TableState])(name: String)
+  private def rowidInfoOf(table: String => Option[TableState],
+      inRowidOrder: TableState => Boolean = _ => true)(name: String)
       : Option[SqlText.RowidInfo] =
     table(name).collect {
       case ts if !ts.d.withoutRowid =>
         SqlText.RowidInfo(ts.d.rowidAlias.map(_.name),
           ts.d.cols.exists(c => Set("rowid", "_rowid_", "oid")
             .contains(c.name.toLowerCase)),
-          ts.d.cols.map(_.name))
+          ts.d.cols.map(_.name), inRowidOrder(ts))
     }
 
   /** Token-level rowid substitution for UPDATE/DELETE: their executors
@@ -5675,11 +5562,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     live
   }
 
-  /** Reader-grace window for [[sweepBigGenerations]]: the newest K
-    * generation dirs per table are never swept, referenced or not
-    * (`-Dgraft.bigGenGrace=K`). */
-  private val bigGenGrace: Int =
-    math.max(1, sys.props.getOrElse("graft.bigGenGrace", "2").toInt)
+  /** Reader-grace window for [[sweepBigGenerations]]: the newest
+    * generation dirs per table that are never swept, referenced or not. */
+  private val BigGenGrace = 2
 
   /** Refcount-sweep superseded Big bucket generations at checkpoint time
     * (ADVICE r10): a generation dir no live version references — working,
@@ -5687,7 +5572,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * statement, so a long-running server no longer grows disk without
     * bound between restarts. Safety: (a) referenced dirs come from the
     * bucket maps of every live frame (see [[liveBigFrames]]'s invariant);
-    * (b) the newest [[bigGenGrace]] generations per table survive
+    * (b) the newest [[BigGenGrace]] generations per table survive
     * regardless, covering an in-flight lock-free `none` read that grabbed
     * a committed version just before it was superseded — such a read
     * outliving CheckpointEvery commits AND the grace window is the
@@ -5715,9 +5600,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           .filter(p => p.getFileName.toString.matches("g\\d+")).toVector
           .sortBy(_.getFileName.toString.drop(1).toLong)
         finally gs.close()
-      gens.dropRight(bigGenGrace).foreach { g =>
+      gens.dropRight(BigGenGrace).foreach { g =>
         if (!referenced.contains(g.toAbsolutePath.normalize))
-          try deleteRecursively(g) catch { case _: Exception => }
+          try Durability.deleteRecursively(g) catch { case _: Exception => }
       }
     }
   }
@@ -5795,12 +5680,6 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     bigFromFiles(files -- touched ++ listPidDirs(out), big.n - affected,
       big.df.schema)
   }
-
-  /** The row schema of every store frame and snapshot file: `__rowid`,
-    * then the data columns. */
-  private def ridSchema(d: TableDef): StructType =
-    StructType(StructField("__rowid", LongType, nullable = false) +:
-      d.schema.fields)
 
   /** The rowid-prefixed DataFrame of a store, for either representation,
     * on the engine session or (re-rooted) on `s`. */
@@ -6107,357 +5986,105 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     m
   }
 
-  // ---------- durability: journal + versioned parquet snapshots ------------
-  // The statement journal is the functional analog of dust's Raft log
-  // (DOC/DESIGN.md:49): an ordered, durable record of committed batches,
-  // appended BEFORE apply. The snapshot (SURVEY §7.4) is columnar: every
-  // checkpoint writes each table to root/v{N}/{table}.parquet — a Mem
-  // table as one file written on the driver ([[SnapshotWriter]], no Spark
-  // job), a spilled table by Spark's distributed writer — then atomically
-  // swaps manifest.json — a POINTER (version + table meta), not the data —
-  // and truncates the journal. The manifest names the version only after
-  // every table file is complete. Recovery = read the manifest's snapshot
-  // version, replay the journal suffix. Per-commit durability is the
-  // journal append alone; checkpoint cadence is [[CheckpointEvery]]
-  // batches, or an explicit [[checkpoint]].
-  //
-  // journalSeq, appliedBatch and version change under the lock only; they
-  // and the checkpoint figures are volatile so [[snapshotStatus]] can read
-  // them without it (`/status` never waits behind a writer).
+  // ---------- durability ([[Durability]]; an in-memory database has none) --
 
-  @volatile private var journalSeq = 0L
-  @volatile private var version = 0L
-  @volatile private var checkpoints = 0L
-  @volatile private var lastCheckpointMs = 0.0
-  // Snapshot cadence (batches between automatic checkpoints). Durability
-  // does NOT depend on this — the per-batch journal append is the commit;
-  // the checkpoint only compacts (bounds recovery replay and journal
-  // growth, DOC/DESIGN.md:54-55's "configurable number of changes"). Each
-  // checkpoint rewrites every table in full while it holds the lock — a
-  // Mem table on this thread, a spilled table as a Spark job — so its cost
-  // grows with the database and is amortized over the cadence; 512 keeps
-  // recovery replay at a few hundred statements (sub-second with the
-  // literal fast path).
-  private val CheckpointEvery = 512L
+  private val durability = root.map(new Durability(_, session))
 
-  // One long-lived append stream instead of an open/append/close cycle per
-  // batch (measured ~2 ms/batch — the second-largest single-row OLTP cost
-  // after snapshot cadence). flush() pushes each line to the OS exactly
-  // like the per-call Files.write did, so crash durability is unchanged;
-  // the stream is closed around journal truncation (checkpoint) and close().
-  private var journalOut: Option[java.io.OutputStream] = None
-
-  private def journalCloseStream(): Unit = {
-    journalOut.foreach(os => try os.close() catch { case _: Exception => })
-    journalOut = None
-  }
-
-  /** `returning` marks a query-path RETURNING statement: its replay arms
-    * the same capture, so a statement the live run refused at the driver
-    * cap ([[retTooMany]]) is refused again on reopen. */
   private def journalAppend(tx: Boolean, stmts: Seq[String],
                             returning: Boolean = false): Unit =
-    root.foreach { r =>
-      journalSeq += 1
-      val sb = pendingStreamBatch
-        .map(id => s""""streamBatch":$id,""").getOrElse("") +
-        (if (returning) "\"returning\":true," else "")
-      val line = s"""{"id":$journalSeq,$sb"transaction":$tx,"statements":[""" +
-        stmts.map(s => "\"" + Json.escape(s) + "\"").mkString(",") + "]}\n"
-      val os = journalOut.getOrElse {
-        val s = Files.newOutputStream(r.resolve("journal.jsonl"),
-          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-        journalOut = Some(s)
-        s
-      }
-      os.write(line.getBytes("UTF-8"))
-      os.flush()
-    }
+    durability.foreach(_.append(tx, stmts, pendingStreamBatch, returning))
 
   private def persist(): Unit = {
     publishCommitted()
     // the journal append already made this batch durable; snapshot on cadence
-    root.foreach { _ =>
-      if (journalSeq - appliedBatch >= CheckpointEvery) checkpointLocked()
-    }
+    if (durability.exists(_.checkpointDue)) checkpointLocked()
   }
 
-  /** Force a snapshot checkpoint (parquet version + manifest swap + journal
-    * truncation). No-op for in-memory databases. */
+  /** Force a checkpoint ([[Durability.checkpoint]]); a no-op in memory. */
   def checkpoint(): Either[String, Unit] = lock.synchronized {
     if (closed) Left("db connection is already closed")
     else { checkpointLocked(); Right(()) }
   }
 
-  private def checkpointLocked(): Unit = root.foreach { r =>
-    val t0 = System.nanoTime()
-    val next = version + 1
-    val vdir = r.resolve(s"v$next")
-    // a leftover of an interrupted checkpoint of this version: unpublished,
-    // so nothing reads it
-    deleteRecursively(vdir)
-    Files.createDirectories(vdir)
-    // TEMP tables are connection-scoped and never durable (ADVICE r14):
-    // they are excluded from the snapshot and the manifest below, so a
-    // restart — which is a new connection — never resurrects one.
-    tables.values.filterNot(_.temp).foreach { ts =>
-      // `__rowid` (the SQLite rowid, which also fixes the scan order) and
-      // the data columns. A Mem table is one driver-sized file written on
-      // this thread ([[SnapshotWriter]], no Spark job), in rowid order; a
-      // spilled table writes its partitions in parallel straight from the
-      // materialized version — the table never transits the driver.
-      val out = vdir.resolve(ts.d.name.toLowerCase + ".parquet")
-      ts.store match {
-        case Mem(rows) =>
-          SnapshotWriter.write(session, out, ridSchema(ts.d),
-            rows.iterator.map { case (rid, vals) => Row.fromSeq(rid +: vals) })
-        case Big(df, _) =>
-          df.write.mode("overwrite").parquet(out.toString)
-      }
-    }
-    appliedBatch = journalSeq
-    val sb = new StringBuilder
-    sb.append(s"""{"appliedBatch":$appliedBatch,"version":$next,""")
-    sb.append(s""""lastStreamBatch":$lastStreamBatch,""")
-    sb.append(s""""lastRowId":$lastRowId,"fk":$fkEnabled,"tables":[""")
-    sb.append(tables.values.filterNot(_.temp).map { ts =>
-      s"""{"createSql":"${Json.escape(ts.createSql)}","nextRowId":${ts.nextRowId}}"""
-    }.mkString(","))
-    sb.append("""],"indexes":[""")
-    sb.append(indexes.values.map(ix =>
-      "\"" + Json.escape(ix.sql) + "\"").mkString(","))
-    sb.append("""],"views":[""")
-    sb.append(viewDefs.values.map { case (_, _, sql) =>
-      "\"" + Json.escape(sql) + "\""
-    }.mkString(","))
-    sb.append("""],"triggers":[""")
-    sb.append(triggers.values.map(t =>
-      "\"" + Json.escape(t.sql) + "\"").mkString(","))
-    sb.append(s"""],"userVersion":$userVersion,"schemaVersion":$schemaVersion}""")
-    val manifest = sb.toString.getBytes("UTF-8")
-    // the version's own catalog, for reads of it after later DDL
-    Files.write(vdir.resolve("manifest.json"), manifest)
-    // pointer swap: readers always see a complete version
-    val tmp = r.resolve("manifest.json.tmp")
-    Files.write(tmp, manifest)
-    Files.move(tmp, r.resolve("manifest.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    // published: from here [[versions]], [[queryAsOf]] and `/status` see it
-    version = next
-    // journal truncation: everything ≤ appliedBatch is in the snapshot
-    // (close the append stream first — a delete under an open stream would
-    // keep appending to the unlinked inode)
-    journalCloseStream()
-    Files.deleteIfExists(r.resolve("journal.jsonl"))
-    // GC: retain the last `retainVersions` snapshots (≥2 so readers
-    // mid-swap always have the previous one); sweep EVERY older dir, not
-    // just the one that crossed the horizon this checkpoint — the knob
-    // can be lowered between runs (5 → 2) and the horizon must hold —
-    // the retention horizon of [[tableAsOf]], exactly a lakehouse VACUUM
-    versions().foreach { v =>
-      if (v <= version - retainVersions) deleteRecursively(r.resolve(s"v$v"))
-    }
-    // Big bucket generations superseded by partition-scoped mutations are
-    // refcount-swept on the same cadence (ADVICE r10 — previously deferred
-    // entirely to the next open(), unbounded disk growth for a long-lived
-    // server issuing scoped UPDATE/DELETEs)
-    sweepBigGenerations(r)
-    checkpoints += 1
-    lastCheckpointMs = (System.nanoTime() - t0) / 1e6
+  // superseded Big bucket generations are swept on the same cadence
+  private def checkpointLocked(): Unit = durability.foreach { d =>
+    d.checkpoint(liveCatalog(tables), lastStreamBatch, lastRowId, fkEnabled)(
+      sweepBigGenerations(d.root))
   }
 
-  // Snapshot retention for time-travel reads (-Dgraft.retainVersions=N,
-  // min 2). Each retained version is a full columnar copy of the
-  // database, so the knob trades disk for history depth — same contract
-  // as Delta/Iceberg retention before VACUUM.
-  private val retainVersions: Long =
-    math.max(2L, sys.props.getOrElse("graft.retainVersions", "2").toLong)
+  /** See [[Durability.status]]; zeros for an in-memory database. */
+  def snapshotStatus: GraftDb.SnapshotStatus =
+    durability.fold(GraftDb.SnapshotStatus(0L, 0L, 0L, 0.0))(_.status)
 
-  /** The snapshot state `/status` reports, read without the lock: the
-    * published snapshot version, the journal batches since that
-    * checkpoint, this instance's checkpoint count and the last
-    * checkpoint's duration. */
-  def snapshotStatus: GraftDb.SnapshotStatus = {
-    val applied = appliedBatch // before journalSeq: the difference stays >= 0
-    GraftDb.SnapshotStatus(version, journalSeq - applied, checkpoints,
-      lastCheckpointMs)
-  }
+  /** Versions readable by [[tableAsOf]] and [[queryAsOf]], ascending
+    * ([[Durability.versions]]); empty for in-memory databases. */
+  def versions(): Seq[Long] = durability.toSeq.flatMap(_.versions())
 
-  /** Snapshot versions currently readable by [[tableAsOf]] and
-    * [[queryAsOf]] (ascending): the retained `v{N}` dirs up to the
-    * published manifest's version. A dir above it is a checkpoint in
-    * progress, or the leftover of one that never published, and is not
-    * listed. Empty for in-memory databases. */
-  def versions(): Seq[Long] = root.toSeq.flatMap { r =>
-    val published = version
-    val s = Files.list(r)
-    try {
-      val out = Seq.newBuilder[Long]
-      s.forEach { p =>
-        val n = p.getFileName.toString
-        if (n.matches("v\\d+") && Files.isDirectory(p) &&
-          n.drop(1).toLong <= published) out += n.drop(1).toLong
-      }
-      out.result().sorted
-    } finally s.close()
-  }
-
-  /** The dir of a readable snapshot version (see [[versions]]). */
-  private def versionDir(version: Long): Either[String, Path] = root match {
-    case None => Left("time travel requires a disk-backed database")
-    case Some(r) =>
-      val vs = versions()
-      if (vs.contains(version)) Right(r.resolve(s"v$version"))
-      else Left(s"no snapshot at version $version " +
-        s"(retained: ${vs.mkString(",")})")
-  }
-
-  /** A table's snapshot file in `vdir`, as its rowid-prefixed frame on
-    * `s`. A file written before stores kept rowid order also carries an
-    * `__ord` column (the old insertion order), which is dropped. */
-  private def snapshotFrame(s: SparkSession, vdir: Path,
-                            table: String): Option[DataFrame] = {
-    val pq = vdir.resolve(table.toLowerCase + ".parquet")
-    if (Files.exists(pq)) Some(graft.Tables.readParquet(s, pq.toString)
-      .drop("__ord"))
-    else None
-  }
-
-  /** The catalog a version was written with: its own `v{N}/manifest.json`,
-    * or the root manifest for a version written before versions carried
-    * one. */
-  private def versionCatalog(vdir: Path): Catalog = {
-    val own = vdir.resolve("manifest.json")
-    readManifest(
-      if (Files.exists(own)) own else vdir.resolveSibling("manifest.json"))._2
-  }
+  /** The durability unit and the catalog of a readable version. */
+  private def versionCatalog(version: Long): Either[String, (Durability, Catalog)] =
+    durability.toRight("time travel requires a disk-backed database")
+      .flatMap(d => d.catalogAt(version).map((d, _)))
 
   /** Time-travel read: the committed contents of `table` at snapshot
-    * `version`, in SQLite's scan order, internal columns stripped.
-    *
-    * The statement journal (the Raft-log analog) makes checkpoints
-    * immutable full-copy snapshots, so AS OF reads are plain parquet
-    * scans of the retained v{N} dir — no replay, no locks, fully
-    * distributed. The horizon is the retention knob: versions older than
-    * `retainVersions` checkpoints are GC'd (ask for them → explicit
-    * error, never silently-current data).
-    */
+    * `version`, in SQLite's scan order, internal columns stripped — a
+    * plain parquet scan of an immutable version ([[Durability.versions]]),
+    * no replay, no lock. */
   def tableAsOf(table: String, version: Long): Either[String, DataFrame] =
-    versionDir(version).flatMap { vdir =>
-      versionCatalog(vdir).table(table)
-        .flatMap(ts => snapshotFrame(session, vdir, ts.d.name)
+    versionCatalog(version).flatMap { case (d, cat) =>
+      cat.table(table)
+        .flatMap(ts => d.frame(session, version, ts.d.name)
           .map(scanOrdered(ts.d, _, inRowidOrder = false)))
         .toRight(s"no snapshot of '$table' at version $version " +
-          s"(retained: ${versions().mkString(",")})")
+          s"(retained: ${d.versions().mkString(",")})")
     }
 
   /** Time-travel read batch — the SQL surface over [[tableAsOf]], wired to
-    * the envelope as `/db/query?version=N` (the same query-parameter shape
-    * as `?level=`). The same pipeline as [[query]] (SQLite semantics,
-    * rowid, collations, pragmas, `sqlite_master`) on a reader session
-    * whose tables are the v{version} snapshot files, under that version's
-    * own catalog (`v{N}/manifest.json`), so a table altered or dropped
-    * after N still reads as it was at N. A version written before
-    * versions carried a manifest reads under the current manifest's
-    * catalog. Only published versions ([[versions]]) are readable.
-    * Read statements only.
-    *
-    * Lock-free: snapshots are immutable full copies, so reads never see
-    * partial state. TOCTOU caveat (shared with every file-snapshot
-    * system): a concurrent checkpoint whose retention GC expires the
-    * requested version mid-read fails that read loudly (file-not-found →
-    * error envelope) — never silently-current data; re-query `versions()`
-    * and retry. */
+    * the envelope as `/db/query?version=N`. The same pipeline as [[query]]
+    * (SQLite semantics, rowid, collations, pragmas, `sqlite_master`) on a
+    * reader session whose tables are the version's files, under the
+    * catalog it was written with ([[Durability.catalogAt]]), so a table
+    * altered or dropped after N still reads as it was at N. Lock-free;
+    * read statements only. */
   def queryAsOf(req: Request, version: Long): Either[String, Seq[RowsResult]] = {
     if (closed) return Left("db connection is already closed")
-    versionDir(version).flatMap { vdir =>
-      val cat0 = versionCatalog(vdir)
+    versionCatalog(version).flatMap { case (d, cat0) =>
       val s = connSession()
       val frames = cat0.tables.toVector.flatMap(ts =>
-        snapshotFrame(s, vdir, ts.d.name).map((ts, _)))
+        d.frame(s, version, ts.d.name).map((ts, _)))
       val cat = cat0.copy(tables = frames.map(_._1))
       registerCatalog(s, cat,
         frames.map { case (ts, df) => (ts.d, df, false) })
-      runBatch(req, s, cat, ())(_ =>
+      runBatch(req, s, cat, (), files = true)(_ =>
         Left("version reads support read statements only"))
     }
   }
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally s.close()
-    }
-
-  /** The catalog a manifest records: its tables (with `nextRowId`, and an
-    * empty store [[load]] fills), indexes, views, triggers and pragma
-    * values. Shared by [[load]] and version reads. */
-  private def readManifest(mf: Path): (JsonNode, Catalog) = {
-    val n = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Files.readString(mf))
-    val ts = Vector.newBuilder[TableState]
-    n.path("tables").forEach { t =>
-      val createSql = t.path("createSql").asText()
-      Ddl.parseCreate(createSql).foreach { c =>
-        ts += new TableState(c.table, createSql, Mem(Vector.empty),
-          t.path("nextRowId").asLong(1))
-      }
-    }
-    val ixs = Vector.newBuilder[Ddl.CreateIndex]
-    n.path("indexes").forEach(s => ixs ++= Ddl.parseCreateIndex(s.asText()))
-    val views = Vector.newBuilder[(String, String, String)]
-    n.path("views").forEach { s =>
-      s.asText() match {
-        case createViewRe(_, name, select) => views += ((name, select, s.asText()))
-        case _ =>
-      }
-    }
-    val trigs = Vector.newBuilder[TriggerDef]
-    n.path("triggers").forEach { s =>
-      s.asText() match {
-        case createTriggerRe(_, name, _, event, _, tname, _, _, body) =>
-          trigs += TriggerDef(name, event.toUpperCase, tname,
-            SqlText.splitTopLevel(body, ';').map(_.trim).filter(_.nonEmpty),
-            s.asText())
-        case _ =>
-      }
-    }
-    (n, Catalog(ts.result(), ixs.result(), views.result(), trigs.result(),
-      n.path("userVersion").asLong(0), n.path("schemaVersion").asLong(0)))
-  }
-
-  private def load(): Unit = root.foreach { r =>
+  /** Open-time recovery: install the published snapshot, then replay the
+    * journal entries after it ([[Durability.recover]]). */
+  private def load(): Unit = durability.foreach { d =>
     // stale Big bucket files from a previous process (crash before close)
     // are dead — recovery rebuilds stores from the snapshot + journal
-    try deleteRecursively(r.resolve("big"))
+    try Durability.deleteRecursively(d.root.resolve("big"))
     catch { case _: Exception => }
-    val mf = r.resolve("manifest.json")
-    if (Files.exists(mf)) {
-      val (n, cat) = readManifest(mf)
-      appliedBatch = n.path("appliedBatch").asLong(0)
-      journalSeq = appliedBatch
-      lastStreamBatch = n.path("lastStreamBatch").asLong(-1)
-      version = n.path("version").asLong(0)
-      lastRowId = n.path("lastRowId").asLong(0)
-      fkEnabled = n.path("fk").asBoolean(false)
+    val (manifest, entries) = d.recover()
+    manifest.foreach { m =>
+      lastStreamBatch = m.lastStreamBatch; lastRowId = m.lastRowId; fkEnabled = m.fk
+      val cat = m.catalog
       cat.tables.foreach { ts =>
-        snapshotFrame(session, r.resolve(s"v$version"), ts.d.name).foreach {
-          df =>
-            val probe = df.limit(math.min(maxDriverRows,
-              Int.MaxValue - 2L).toInt + 1).collect()
-            ts.store =
-              if (probe.length > maxDriverRows)
-                // over-cap: stay Spark-resident. localCheckpoint detaches
-                // the store from the version dir so the rolling GC of old
-                // v{N} dirs can never pull files out from under it.
-                mkBig(df)
-              // a file written before stores kept rowid order lists its
-              // rows in the old insertion order
-              else memStore(Vector.empty, probe.map { row =>
-                (row.getLong(0), ts.d.cols.indices.map(i => row.get(i + 1)))
-              })
+        d.frame(session, m.version, ts.d.name).foreach { df =>
+          val probe = df.limit(math.min(maxDriverRows,
+            Int.MaxValue - 2L).toInt + 1).collect()
+          ts.store =
+            if (probe.length > maxDriverRows)
+              // over-cap: stay Spark-resident. localCheckpoint detaches
+              // the store from the version dir so the rolling GC of old
+              // v{N} dirs can never pull files out from under it.
+              mkBig(df)
+            // a file written before stores kept rowid order lists its
+            // rows in the old insertion order
+            else memStore(Vector.empty, probe.map { row =>
+              (row.getLong(0), ts.d.cols.indices.map(i => row.get(i + 1)))
+            })
         }
         tables(ts.d.name.toLowerCase) = ts
       }
@@ -6467,52 +6094,12 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       userVersion = cat.userVersion
       schemaVersion = cat.schemaVersion
     }
-    // crash recovery: replay journal entries after the manifest point
-    val jf = r.resolve("journal.jsonl")
-    if (Files.exists(jf)) {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val it = Files.readAllLines(jf).iterator()
-      var torn = false
-      while (it.hasNext && !torn) {
-        val line = it.next()
-        if (line.trim.nonEmpty) {
-          // A crash mid-append leaves a torn trailing line; the manifest is
-          // still intact, so stop replay there instead of failing open().
-          // ONLY a JSON parse failure is "torn" — an exception thrown
-          // while APPLYING a well-formed committed line must fail open()
-          // loudly instead (swallowing it here silently dropped every
-          // later committed transaction — caught by the crash-replay
-          // fuzzer, seed 400037, under a transient Spark error).
-          val parsed =
-            try Some(om.readTree(line))
-            catch { case _: Exception => torn = true; None }
-          parsed.foreach { n =>
-            val id = n.path("id").asLong(0)
-            if (id > appliedBatch) {
-              journalSeq = math.max(journalSeq, id) - 1 // re-append below
-              val stmts = Seq.newBuilder[Statement]
-              n.path("statements").forEach(s => stmts += Statement(s.asText))
-              val applied =
-                try executeReplay(n.path("transaction").asBoolean(false),
-                  stmts.result(), n.path("returning").asBoolean(false))
-                catch { case e: Exception =>
-                  throw new GraftDb.RecoveryFailed(
-                    s"journal replay failed at batch $id: " +
-                      Option(e.getMessage).getOrElse(e.toString), e)
-                }
-              // streaming watermark: a replayed stamp restores exactly-once
-              // dedup across the crash (re-delivered micro-batch → no-op).
-              // Only a stamp whose transaction APPLIED advances it — the
-              // journal is appended before execution, so a failed batch
-              // (constraint error) leaves a stamped line that must NOT
-              // swallow the source's re-delivery of those rows.
-              if (applied && n.has("streamBatch"))
-                lastStreamBatch =
-                  math.max(lastStreamBatch, n.path("streamBatch").asLong(-1))
-            }
-          }
-        }
-      }
+    // a replayed stream stamp restores exactly-once dedup across the crash,
+    // but only if its batch APPLIED: a failed batch's stamp must not
+    // swallow the source's re-delivery of its rows
+    d.replay(entries) { e =>
+      if (executeReplay(e))
+        e.streamBatch.foreach(b => lastStreamBatch = math.max(lastStreamBatch, b))
     }
     // crash semantics: a journal that ends inside an explicit BEGIN means
     // the connection died without COMMIT — the transaction rolls back
@@ -6538,17 +6125,16 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
 
   /** Re-run one journaled batch during recovery. Returns true iff the
     * batch applied (no failed statement rolled a tx back) — the streaming
-    * watermark must only advance on applied stamps. `returning` arms the
-    * RETURNING capture as the live query path did ([[journalAppend]]). */
-  private def executeReplay(tx: Boolean, stmts: Seq[Statement],
-                            returning: Boolean): Boolean = {
-    journalSeq += 1
+    * watermark must only advance on applied stamps. A `returning` entry
+    * arms the RETURNING capture as the live query path did. */
+  private def executeReplay(e: JournalEntry): Boolean = {
+    val tx = e.transaction
     if (tx && openTx.isDefined) { persist(); return false } // mirrors execute()
     val work: Tables = if (tx) snapshot() else tables
     var failed = false
     replayActive = true
-    try stmts.foreach { s =>
-      if (!failed && s.sql.trim.nonEmpty) {
+    try e.statements.foreach { sql =>
+      if (!failed && sql.trim.nonEmpty) {
         // A committed statement that THROWS here (stmtError escape) is a
         // transient suspect — retry once. An IDENTICAL second failure is
         // the deterministic live outcome (the live run produced the same
@@ -6577,8 +6163,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           csLike = preScalars._3; userVersion = preScalars._4
         }
         def run(): Either[String, Long] = {
-          retArmed = returning
-          try dispatch(work, tx, s.sql)
+          retArmed = e.returning
+          try dispatch(work, tx, sql)
           finally { retArmed = false; retCaptured = None }
         }
         val r: Either[String, Long] =
@@ -6609,14 +6195,6 @@ object GraftDb {
   final case class SnapshotStatus(version: Long, journalSinceCheckpoint: Long,
                                   checkpoints: Long, lastCheckpointMs: Double)
 
-  /** A well-formed committed journal line failed to APPLY on reopen —
-    * distinct from a torn trailing line (which just ends replay) and
-    * from an unusable root (the reference's open error). open() surfaces
-    * the message so the caller can retry instead of silently serving a
-    * truncated history. */
-  private[engine] final class RecoveryFailed(msg: String, cause: Throwable)
-    extends RuntimeException(msg, cause)
-
   /** Above this many rows a managed table spills from the driver-side
     * vector to the Spark-resident copy-on-write store (SURVEY §7.4) —
     * the boundary between exact-OLTP Mem semantics and distributed
@@ -6639,30 +6217,13 @@ object GraftDb {
       if (p.getParent != null && !Files.exists(p.getParent))
         return Left(s"unable to open database file: $path")
       Files.createDirectories(p)
-      // Exclusive root lock BEFORE load(): load() sweeps stale big/ bucket
-      // files, which must never happen while another live instance (this
-      // JVM or another process) still serves reads from them (ADVICE r10).
-      val ch = java.nio.channels.FileChannel.open(p.resolve(".graft.lock"),
-        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-      val lk =
-        try ch.tryLock()
-        catch { case _: java.nio.channels.OverlappingFileLockException => null }
-      if (lk == null) {
-        try ch.close() catch { case _: Exception => }
-        return Left(s"database is locked: $path")
-      }
-      try {
-        val db = new GraftDb(spark, Some(p), maxDriverRows)
-        db.rootLock = Some((ch, lk))
-        db.load()
-        Right(db)
-      } catch {
-        case e: Exception =>
-          try { lk.release(); ch.close() } catch { case _: Exception => }
-          throw e
-      }
+      // the durability unit takes the root lock BEFORE load()
+      val db = new GraftDb(spark, Some(p), maxDriverRows)
+      try { db.load(); Right(db) }
+      catch { case e: Exception => db.close(); throw e }
     } catch {
-      case e: RecoveryFailed => Left(e.getMessage)
+      case e: Durability.RecoveryFailed => Left(e.getMessage)
+      case _: Durability.Locked => Left(s"database is locked: $path")
       case _: Exception => Left(s"unable to open database file: $path")
     }
   }

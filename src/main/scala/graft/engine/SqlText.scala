@@ -235,10 +235,11 @@ object SqlText {
 
   /** What [[exposeRowid]] needs to know about a ROWID table: the INTEGER
     * PRIMARY KEY alias column (if any), whether a declared column shadows
-    * the rowid names, and the declared column list (for `*` expansion
-    * against the rid view). */
+    * the rowid names, the declared column list (for `*` expansion
+    * against the rid view) and whether the rid view already lists its
+    * rows in rowid order. */
   final case class RowidInfo(ipk: Option[String], shadowed: Boolean,
-                             cols: Seq[String])
+                             cols: Seq[String], inRowidOrder: Boolean = true)
 
   private val rowidNames = Set("ROWID", "_ROWID_", "OID")
   private def isWordC(c: Char) = Character.isLetterOrDigit(c) || c == '_'
@@ -271,8 +272,8 @@ object SqlText {
     *    token-level substitution, nothing else changes;
     *  - plain rowid tables: substitute `__rowid` and repoint table
     *    references at the engine's `__rid_<t>` view (aliased back to the
-    *    table name), expanding `*` to the declared columns so the star
-    *    contract is unchanged;
+    *    table name, and sorted by rowid unless `inRowidOrder`), expanding
+    *    `*` to the declared columns so the star contract is unchanged;
     *  - bare select items keep SQLite's column naming (`SELECT rowid` →
     *    column `rowid`) via an explicit alias.
     *
@@ -349,9 +350,6 @@ object SqlText {
       else if (c == '"' && !inS && !inB) inD = !inD
       else if (c == '`' && !inS && !inD) inB = !inB
       val quoted = inS || inD || inB
-      def kwAt(k: String): Boolean = !quoted && u.startsWith(k, i) &&
-        (i == 0 || !isWordC(u.charAt(i - 1))) &&
-        (i + k.length >= u.length || !isWordC(u.charAt(i + k.length)))
       if (!quoted && c == '(') { depth += 1; out.append(c); i += 1 }
       else if (!quoted && c == ')') {
         clause.remove(depth); depth -= 1; out.append(c); i += 1
@@ -394,7 +392,12 @@ object SqlText {
           word.equalsIgnoreCase(tname) &&
           (clause.getOrElse(depth, "") == "FROM") &&
           !(j < sql.length && (sql.charAt(j) == '(' || sql.charAt(j) == '.'))) {
-          out.append("__rid_").append(tname)
+          // SQLite's unordered scan is in rowid order; the rid view of a
+          // spilled store or snapshot file is not, and stays unsorted for
+          // the UPDATE/DELETE executors that read it
+          if (ri.inRowidOrder) out.append("__rid_").append(tname)
+          else out.append("(SELECT * FROM __rid_").append(tname)
+            .append(" ORDER BY `__rowid`)")
           // alias follows? else pin the original name
           var k2 = j
           while (k2 < sql.length && sql.charAt(k2).isWhitespace) k2 += 1

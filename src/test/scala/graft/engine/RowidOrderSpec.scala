@@ -104,6 +104,18 @@ class RowidOrderSpec extends SparkSpec {
           """[2,"b"],[3,"e"],[4,"f"]"""))
     }
 
+    test(s"$store reads rowid without ORDER BY in rowid order") {
+      scans(cap, "r", Seq("CREATE TABLE r(x TEXT)",
+          "INSERT INTO r VALUES ('a'),('b'),('c'),('d')",
+          "DELETE FROM r WHERE rowid IN (1, 3)",
+          "DELETE FROM r WHERE rowid = 4",
+          "INSERT INTO r VALUES ('e')",
+          "INSERT INTO r VALUES ('f')"),
+        "SELECT rowid AS r, x FROM r",
+        env(""""r","x"""", """"integer","text"""",
+          """[2,"b"],[3,"e"],[4,"f"]"""))
+    }
+
     test(s"$store gives a freed top rowid to the next auto rowid") {
       scans(cap, "s", Seq("CREATE TABLE s(id INTEGER PRIMARY KEY, x TEXT)",
           "INSERT INTO s(id, x) VALUES (1,'a'),(3,'b'),(5,'c'),(7,'d')",
@@ -200,7 +212,7 @@ class RowidOrderSpec extends SparkSpec {
         StructField("__ord", LongType, nullable = false),
         StructField("__rowid", LongType, nullable = false),
         StructField("id", LongType), StructField("x", StringType)))
-      SnapshotWriter.write(spark, file, schema, Iterator(
+      Durability.writeParquet(spark, file, schema, Iterator(
         Row(0L, 9L, 9L, "c"), Row(1L, 7L, 7L, "a"),
         Row(2L, 3L, 3L, "b"), Row(3L, 1L, 1L, "d")))
       val want = env(""""id","x"""", """"integer","text"""",

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
 /** A `Mem` table's checkpoint is written on the driver by
-  * [[SnapshotWriter]]: the files read back exactly (reopen and time
+  * [[Durability.writeParquet]]: the files read back exactly (reopen and time
   * travel), carry the footer Spark's own writer gives the same rows, start
   * no Spark job, and replace whatever an interrupted checkpoint left. */
 class SnapshotWriterSpec extends SparkSpec {
@@ -153,7 +153,7 @@ class SnapshotWriterSpec extends SparkSpec {
       val theirs = footer(ref)
       // the same rows through the writer read back bit for bit
       val direct = tmp().resolve("direct.parquet")
-      SnapshotWriter.write(spark, direct, schema, data.iterator)
+      Durability.writeParquet(spark, direct, schema, data.iterator)
       def bits(p: Path) = spark.read.parquet(p.toString).collect().toSeq
         .map(_.toSeq.map {
           case d: Double => java.lang.Double.doubleToRawLongBits(d)
