@@ -119,11 +119,19 @@ private[engine] object Manifest {
 private[engine] final class Durability(val root: Path, session: SparkSession) {
   import Durability._
 
+  // Snapshot retention for time-travel reads (-Dgraft.retainVersions=N,
+  // min 2). Each retained version is a full columnar copy of the
+  // database, so the knob trades disk for history depth — same contract
+  // as Delta/Iceberg retention before VACUUM.
+  private val retainVersions: Long =
+    math.max(2L, sys.props.getOrElse("graft.retainVersions", "2").toLong)
+
   // Exclusive root ownership (ADVICE r10): a second open — same or another
   // process — is refused ([[Durability.Locked]]) instead of sweeping the
   // live instance's big/ bucket files out from under it. Taken before
   // recovery, released at close(); the OS releases it if the process dies.
-  // SQLite's equivalent is its file-locking protocol.
+  // SQLite's equivalent is its file-locking protocol. Nothing that can fail
+  // runs after it in this constructor, so a failed open never holds it.
   private val (lockChannel, rootLock) = {
     val ch = FileChannel.open(root.resolve(".graft.lock"),
       StandardOpenOption.CREATE, StandardOpenOption.WRITE)
@@ -137,13 +145,6 @@ private[engine] final class Durability(val root: Path, session: SparkSession) {
   @volatile private var version = 0L
   @volatile private var checkpoints = 0L
   @volatile private var lastCheckpointMs = 0.0
-
-  // Snapshot retention for time-travel reads (-Dgraft.retainVersions=N,
-  // min 2). Each retained version is a full columnar copy of the
-  // database, so the knob trades disk for history depth — same contract
-  // as Delta/Iceberg retention before VACUUM.
-  private val retainVersions: Long =
-    math.max(2L, sys.props.getOrElse("graft.retainVersions", "2").toLong)
 
   // One long-lived append stream instead of an open/append/close cycle per
   // batch (measured ~2 ms/batch). flush() pushes each line to the OS, so a
@@ -278,20 +279,58 @@ private[engine] final class Durability(val root: Path, session: SparkSession) {
     else None
   }
 
+  /** The tables of the published manifest `m` with their rows. A table
+    * of at most `maxRows` rows gets them as its [[Mem]] store (a file
+    * written before stores kept rowid order lists them in the old
+    * insertion order, which [[Mem.memStore]] sorts); a larger one comes
+    * back with its file's frame, for the caller to keep Spark-resident. */
+  def restore(m: Manifest, maxRows: Long): Vector[(TableState, Option[DataFrame])] =
+    m.catalog.tables.toVector.map { ts =>
+      (ts, frame(session, m.version, ts.d.name).flatMap { df =>
+        val probe = df.limit(math.min(maxRows, Int.MaxValue - 2L).toInt + 1).collect()
+        if (probe.length > maxRows) Some(df)
+        else {
+          ts.store = Mem.memStore(Vector.empty, probe.map { row =>
+            (row.getLong(0), ts.d.cols.indices.map(i => row.get(i + 1)))
+          })
+          None
+        }
+      })
+    }
+
   /** Open-time recovery: the published manifest, if any, and the journal
     * entries it does not cover, up to the first torn line (a crash
-    * mid-append leaves one), for [[replay]]. */
+    * mid-append leaves one), for [[replay]]. The journal is cut back to
+    * the whole lines before the torn one, and a last whole line that the
+    * crash left without its newline gets one, so the next append starts
+    * a line of its own: appended after the torn bytes, an acknowledged
+    * batch would be unreadable at the next open, and so would every
+    * batch after it. */
   def recover(): (Option[Manifest], Vector[JournalEntry]) = {
     val mf = root.resolve(ManifestFile)
     val m = Option.when(Files.exists(mf))(Manifest.decode(Files.readString(mf)))
     m.foreach { m => appliedBatch = m.appliedBatch; version = m.version }
     journalSeq = appliedBatch
-    val entries =
-      if (!Files.exists(journal)) Vector.empty
-      else Files.readAllLines(journal).asScala.iterator
-        .filter(_.trim.nonEmpty).map(JournalEntry.decode)
-        .takeWhile(_.isDefined).flatten.filter(_.id > appliedBatch).toVector
-    (m, entries)
+    val bytes = if (Files.exists(journal)) Files.readAllBytes(journal) else Array[Byte]()
+    val entries = Vector.newBuilder[JournalEntry]
+    var end = 0 // just past the last whole line
+    var torn = false
+    while (!torn && end < bytes.length) {
+      val nl = bytes.indexOf('\n'.toByte, end)
+      val stop = if (nl < 0) bytes.length else nl
+      val line = new String(bytes, end, stop - end, UTF_8)
+      if (line.trim.nonEmpty) JournalEntry.decode(line) match {
+        case Some(e) => if (e.id > appliedBatch) entries += e
+        case None => torn = true
+      }
+      if (!torn) end = stop + 1
+    }
+    if (torn) {
+      val ch = FileChannel.open(journal, StandardOpenOption.WRITE)
+      try ch.truncate(end) finally ch.close()
+    } else if (end > bytes.length)
+      Files.write(journal, Array('\n'.toByte), StandardOpenOption.APPEND)
+    (m, entries.result())
   }
 
   /** Re-apply recovered `entries` in order through `apply`; later appends

@@ -331,16 +331,17 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   /** Run a query batch on `s`: read statements through [[readOne]]
     * against `cat` (re-evaluated per statement, since a write may change
     * it), every other statement through `write`. The first error ends the
-    * batch. `files`: the tables are snapshot files, not `cat`'s stores. */
+    * batch. `inRowidOrder`: whose `__rid_` view lists rows in rowid
+    * order ([[readOne]]). */
   private def runBatch(req: Request, s: SparkSession, cat: => Catalog,
-      register: => Unit, files: Boolean = false)(
+      register: => Unit, inRowidOrder: TableState => Boolean = liveOrder _)(
       write: String => Either[String, RowsResult])
       : Either[String, Seq[RowsResult]] = {
     val out = Seq.newBuilder[RowsResult]
     req.statements.foreach { st =>
       val sql = SqlText.bind(st.sql, st.parameters)
       if (sql.trim.nonEmpty)
-        (if (isRowReturning(sql)) readOne(s, cat, sql, register, files)
+        (if (isRowReturning(sql)) readOne(s, cat, sql, register, inRowidOrder)
          else write(sql)) match {
           case Right(r) => out += r
           case Left(e) => return Left(e)
@@ -349,13 +350,15 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     Right(out.result())
   }
 
+  private def liveOrder(ts: TableState): Boolean = ts.store.isInstanceOf[Mem]
+
   /** One read statement against `cat`. The pragmas answer from the
     * catalog and the connection state; any other statement runs on `s`
-    * once `register` has brought its views up to date. A `__rid_` view
-    * lists its rows in rowid order only for a `Mem` store, not for a
-    * spilled one or (`files`) a snapshot file. */
+    * once `register` has brought its views up to date. `inRowidOrder`
+    * holds for a table whose `__rid_` view lists its rows in rowid order:
+    * a live `Mem` store, not a spilled one or a snapshot file. */
   private def readOne(s: SparkSession, cat: Catalog, sql: String,
-                      register: => Unit, files: Boolean = false)
+      register: => Unit, inRowidOrder: TableState => Boolean = liveOrder _)
       : Either[String, RowsResult] = {
     def arg(re: scala.util.matching.Regex) =
       re.findFirstMatchIn(sql).map(_.group(1))
@@ -376,7 +379,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         // then map the collation names for Catalyst
         SqlText.mapCollations(SqlText.exposeRowid(
             SqlText.aliasSelectList(SqlText.fixQuotedIdents(sql)),
-            rowidInfoOf(cat.table, ts => !files && ts.store.isInstanceOf[Mem])))
+            rowidInfoOf(cat.table, inRowidOrder)))
           .map(q => envelope(SqliteRewrite.run(s, q, csLike)))
       } catch { case e: Exception => Left(friendlyError(e)) })
   }
@@ -6054,7 +6057,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       val cat = cat0.copy(tables = frames.map(_._1))
       registerCatalog(s, cat,
         frames.map { case (ts, df) => (ts.d, df, false) })
-      runBatch(req, s, cat, (), files = true)(_ =>
+      runBatch(req, s, cat, (), _ => false)(_ =>
         Left("version reads support read statements only"))
     }
   }
@@ -6069,30 +6072,17 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     val (manifest, entries) = d.recover()
     manifest.foreach { m =>
       lastStreamBatch = m.lastStreamBatch; lastRowId = m.lastRowId; fkEnabled = m.fk
-      val cat = m.catalog
-      cat.tables.foreach { ts =>
-        d.frame(session, m.version, ts.d.name).foreach { df =>
-          val probe = df.limit(math.min(maxDriverRows,
-            Int.MaxValue - 2L).toInt + 1).collect()
-          ts.store =
-            if (probe.length > maxDriverRows)
-              // over-cap: stay Spark-resident. localCheckpoint detaches
-              // the store from the version dir so the rolling GC of old
-              // v{N} dirs can never pull files out from under it.
-              mkBig(df)
-            // a file written before stores kept rowid order lists its
-            // rows in the old insertion order
-            else memStore(Vector.empty, probe.map { row =>
-              (row.getLong(0), ts.d.cols.indices.map(i => row.get(i + 1)))
-            })
-        }
+      d.restore(m, maxDriverRows).foreach { case (ts, overCap) =>
+        // an over-cap table stays Spark-resident; localCheckpoint detaches
+        // it from the version dir, which the rolling GC later deletes
+        overCap.foreach(df => ts.store = mkBig(df))
         tables(ts.d.name.toLowerCase) = ts
       }
+      val cat = m.catalog
       cat.indexes.foreach(ci => indexes(ci.name.toLowerCase) = ci)
       cat.views.foreach(v => viewDefs(v._1.toLowerCase) = v)
       cat.triggers.foreach(t => triggers(t.name.toLowerCase) = t)
-      userVersion = cat.userVersion
-      schemaVersion = cat.schemaVersion
+      userVersion = cat.userVersion; schemaVersion = cat.schemaVersion
     }
     // a replayed stream stamp restores exactly-once dedup across the crash,
     // but only if its batch APPLIED: a failed batch's stamp must not
@@ -6113,13 +6103,11 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     // are journaled like any statement) belonged to the DEAD connection —
     // drop them now that replay is done (ADVICE r14: they must never
     // survive a restart as permanent tables)
-    val replayedTemps = tables.collect { case (k, ts) if ts.temp => k }
-    replayedTemps.foreach(tables.remove)
+    tables.filterInPlace((_, ts) => !ts.temp)
     // a reopened database is a NEW connection: its changes()/
     // total_changes() registers start at zero (replay increments are
     // recovery bookkeeping, not this connection's statements)
-    lastChanges = 0L
-    totalChanges = 0L
+    lastChanges = 0L; totalChanges = 0L
     publishCommitted()
   }
 

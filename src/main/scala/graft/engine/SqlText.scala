@@ -239,7 +239,7 @@ object SqlText {
     * against the rid view) and whether the rid view already lists its
     * rows in rowid order. */
   final case class RowidInfo(ipk: Option[String], shadowed: Boolean,
-                             cols: Seq[String], inRowidOrder: Boolean = true)
+                             cols: Seq[String], inRowidOrder: Boolean)
 
   private val rowidNames = Set("ROWID", "_ROWID_", "OID")
   private def isWordC(c: Char) = Character.isLetterOrDigit(c) || c == '_'

@@ -158,7 +158,9 @@ class DurabilitySpec extends SparkSpec {
     assert((m.catalog.userVersion, m.catalog.schemaVersion) === ((7L, 5L)))
   }
 
-  test("a hand-written journal and manifest in the current format load") {
+  /** A db dir holding [[manifestText]], v1's one table file and a
+    * journal of `lines`. */
+  private def handWritten(lines: String*): Path = {
     val dir = tmp()
     Files.writeString(dir.resolve("manifest.json"), manifestText)
     // v1's one table file, written by Spark's own parquet writer
@@ -166,16 +168,22 @@ class DurabilitySpec extends SparkSpec {
       StructField("id", LongType), StructField("x", StringType)))
     spark.createDataFrame(Seq(Row(1L, 1L, "a")).asJava, schema).coalesce(1)
       .write.parquet(dir.resolve("v1").resolve("t.parquet").toString)
-    Files.writeString(Durability.journalPath(dir), Seq(
-      """{"id":2,"transaction":false,"statements":["INSERT INTO t VALUES (9, 'covered')"]}""",
-      """{"id":3,"transaction":false,"statements":["INSERT INTO t VALUES (2, 'b')"]}""",
-      """{"id":4,"streamBatch":5,"transaction":true,"statements":""" +
-        """["INSERT INTO t VALUES (3, 'c')","INSERT INTO t VALUES (4, 'd')"]}""",
-      """{"id":5,"returning":true,"transaction":false,"statements":""" +
-        """["DELETE FROM t WHERE id = 4 RETURNING id"]}""",
-      """{"id":6,"transaction":false,"statements":["INSERT INTO t VALUES (5, 'torn""")
-      .mkString("\n"))
-    val db = open(dir)
+    Files.writeString(Durability.journalPath(dir), lines.mkString("\n"))
+    dir
+  }
+
+  private val journalLines = Seq(
+    """{"id":2,"transaction":false,"statements":["INSERT INTO t VALUES (9, 'covered')"]}""",
+    """{"id":3,"transaction":false,"statements":["INSERT INTO t VALUES (2, 'b')"]}""",
+    """{"id":4,"streamBatch":5,"transaction":true,"statements":""" +
+      """["INSERT INTO t VALUES (3, 'c')","INSERT INTO t VALUES (4, 'd')"]}""",
+    """{"id":5,"returning":true,"transaction":false,"statements":""" +
+      """["DELETE FROM t WHERE id = 4 RETURNING id"]}""")
+  private val tornLine =
+    """{"id":6,"transaction":false,"statements":["INSERT INTO t VALUES (5, 'torn"""
+
+  test("a hand-written journal and manifest in the current format load") {
+    val db = open(handWritten(journalLines :+ tornLine: _*))
     try {
       assert(rows(db, "SELECT id, x FROM t") === Seq(
         Seq(Value.Integer(1), Value.Text("a")), Seq(Value.Integer(2), Value.Text("b")),
@@ -191,5 +199,26 @@ class DurabilitySpec extends SparkSpec {
       assert(rows(db, "SELECT name FROM sqlite_master WHERE type = 'index'") ===
         Seq(Seq(Value.Text("tx"))))
     } finally db.close()
+  }
+
+  /** Open `dir`, write one row, close; the reopened db must hold it after
+    * ids 1-3, and every journal line must decode. */
+  private def keepsNextWrite(dir: Path): Unit = {
+    val db = open(dir)
+    try exec(db, "INSERT INTO t VALUES (6, 'f')")
+    finally db.close()
+    assert(Files.readAllLines(Durability.journalPath(dir)).asScala
+      .forall(JournalEntry.decode(_).isDefined))
+    val reopened = open(dir)
+    try assert(texts(reopened, "t") === Seq("a", "b", "c", "f"))
+    finally reopened.close()
+  }
+
+  test("a torn journal tail is cut off, so the next write survives a reopen") {
+    keepsNextWrite(handWritten(journalLines :+ tornLine: _*))
+  }
+
+  test("a last journal line without its newline ends before the next write") {
+    keepsNextWrite(handWritten(journalLines: _*))
   }
 }
