@@ -288,49 +288,34 @@ private[engine] final class Durability(val root: Path, session: SparkSession) {
     m.catalog.tables.toVector.map { ts =>
       (ts, frame(session, m.version, ts.d.name).flatMap { df =>
         val probe = df.limit(math.min(maxRows, Int.MaxValue - 2L).toInt + 1).collect()
-        if (probe.length > maxRows) Some(df)
-        else {
-          ts.store = Mem.memStore(Vector.empty, probe.map { row =>
-            (row.getLong(0), ts.d.cols.indices.map(i => row.get(i + 1)))
-          })
-          None
-        }
+        if (probe.length <= maxRows) ts.store = Mem.memStore(Vector.empty,
+          probe.map(row => (row.getLong(0), ts.d.cols.indices.map(i => row.get(i + 1)))))
+        Option.when(probe.length > maxRows)(df)
       })
     }
 
   /** Open-time recovery: the published manifest, if any, and the journal
     * entries it does not cover, up to the first torn line (a crash
-    * mid-append leaves one), for [[replay]]. The journal is cut back to
-    * the whole lines before the torn one, and a last whole line that the
-    * crash left without its newline gets one, so the next append starts
-    * a line of its own: appended after the torn bytes, an acknowledged
-    * batch would be unreadable at the next open, and so would every
-    * batch after it. */
+    * mid-append leaves one), for [[replay]]. A journal that does not end
+    * in a whole line is first rewritten to the whole lines before the
+    * torn one: the next append must start a line of its own, or the next
+    * open would read it, and every batch after it, as torn. */
   def recover(): (Option[Manifest], Vector[JournalEntry]) = {
     val mf = root.resolve(ManifestFile)
     val m = Option.when(Files.exists(mf))(Manifest.decode(Files.readString(mf)))
     m.foreach { m => appliedBatch = m.appliedBatch; version = m.version }
     journalSeq = appliedBatch
-    val bytes = if (Files.exists(journal)) Files.readAllBytes(journal) else Array[Byte]()
-    val entries = Vector.newBuilder[JournalEntry]
-    var end = 0 // just past the last whole line
-    var torn = false
-    while (!torn && end < bytes.length) {
-      val nl = bytes.indexOf('\n'.toByte, end)
-      val stop = if (nl < 0) bytes.length else nl
-      val line = new String(bytes, end, stop - end, UTF_8)
-      if (line.trim.nonEmpty) JournalEntry.decode(line) match {
-        case Some(e) => if (e.id > appliedBatch) entries += e
-        case None => torn = true
-      }
-      if (!torn) end = stop + 1
+    val text = if (Files.exists(journal)) new String(Files.readAllBytes(journal), UTF_8) else ""
+    val whole = text.split('\n').toVector.filter(_.trim.nonEmpty)
+      .map(l => (l, JournalEntry.decode(l))).takeWhile(_._2.isDefined)
+    val kept = whole.map(_._1 + "\n").mkString
+    if (kept != text) {
+      val tmp = root.resolve("journal.jsonl.tmp")
+      Files.writeString(tmp, kept)
+      Files.move(tmp, journal,
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     }
-    if (torn) {
-      val ch = FileChannel.open(journal, StandardOpenOption.WRITE)
-      try ch.truncate(end) finally ch.close()
-    } else if (end > bytes.length)
-      Files.write(journal, Array('\n'.toByte), StandardOpenOption.APPEND)
-    (m, entries.result())
+    (m, whole.flatMap(_._2).filter(_.id > appliedBatch))
   }
 
   /** Re-apply recovered `entries` in order through `apply`; later appends

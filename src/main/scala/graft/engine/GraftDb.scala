@@ -6216,10 +6216,6 @@ object GraftDb {
     }
   }
 
-  def openWithDsn(spark: SparkSession, path: String, dsn: String): Either[String, GraftDb] =
-    if (dsn.contains("mode=memory")) Right(openInMemory(spark))
-    else open(spark, path)
-
   /** In-memory database (the reference's default mode, DOC/DESIGN.md:52). */
   def openInMemory(spark: SparkSession): GraftDb =
     openInMemory(spark, DefaultMaxDriverRows)
