@@ -75,10 +75,6 @@ private[engine] final class TableState(
     // sqlite_master (sqlite_temp_master lists it), dropped on close
     val temp: Boolean = false) {
   def copyState = new TableState(d, createSql, store, nextRowId, temp)
-  def rowCount: Long = store match {
-    case Mem(r) => r.size.toLong
-    case Big(_, n) => n
-  }
 }
 
 // AFTER ROW triggers (SQLite pass-through surface, reference forwards

@@ -6082,7 +6082,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       cat.indexes.foreach(ci => indexes(ci.name.toLowerCase) = ci)
       cat.views.foreach(v => viewDefs(v._1.toLowerCase) = v)
       cat.triggers.foreach(t => triggers(t.name.toLowerCase) = t)
-      userVersion = cat.userVersion; schemaVersion = cat.schemaVersion
+      userVersion = cat.userVersion
+      schemaVersion = cat.schemaVersion
     }
     // a replayed stream stamp restores exactly-once dedup across the crash,
     // but only if its batch APPLIED: a failed batch's stamp must not
@@ -6107,7 +6108,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     // a reopened database is a NEW connection: its changes()/
     // total_changes() registers start at zero (replay increments are
     // recovery bookkeeping, not this connection's statements)
-    lastChanges = 0L; totalChanges = 0L
+    lastChanges = 0L
+    totalChanges = 0L
     publishCommitted()
   }
 
