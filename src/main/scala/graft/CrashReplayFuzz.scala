@@ -182,6 +182,8 @@ object CrashReplayFuzz {
     case Value.Integer(i) => i.toString
     case Value.Real(d) => d.toString
     case Value.Text(t) => Json.escapeQ(t)
+    case Value.Blob(b) => // as its X'..' literal
+      Json.escapeQ(b.map("%02X".format(_)).mkString("X'", "", "'"))
     case other => Json.escapeQ(s"!nonfuzz:$other")
   }
 

@@ -141,6 +141,9 @@ private[engine] final class Durability(val root: Path, session: SparkSession) {
   }
 
   @volatile private var journalSeq = 0L
+  // the last batch applied to the in-memory state, and the last one the
+  // published snapshot covers
+  @volatile private var inMemory = 0L
   @volatile private var appliedBatch = 0L
   @volatile private var version = 0L
   @volatile private var checkpoints = 0L
@@ -169,8 +172,13 @@ private[engine] final class Durability(val root: Path, session: SparkSession) {
   /** The cadence test: [[CheckpointEvery]] batches since the last one. */
   def checkpointDue: Boolean = journalSeq - appliedBatch >= CheckpointEvery
 
-  /** No journal batch is outside the published snapshot. */
-  def caughtUp: Boolean = journalSeq == appliedBatch
+  /** Every batch appended so far is applied in memory, whatever its
+    * outcome (a failed statement or a rolled-back transaction is applied
+    * as the error it gave). */
+  def applied(): Unit = inMemory = journalSeq
+
+  /** No journal batch is ahead of the in-memory state. */
+  def caughtUp: Boolean = journalSeq == inMemory
 
   private def closeJournal(): Unit = {
     journalOut.foreach(os => try os.close() catch { case _: Exception => })
@@ -305,6 +313,7 @@ private[engine] final class Durability(val root: Path, session: SparkSession) {
     val m = Option.when(Files.exists(mf))(Manifest.decode(Files.readString(mf)))
     m.foreach { m => appliedBatch = m.appliedBatch; version = m.version }
     journalSeq = appliedBatch
+    inMemory = appliedBatch
     val text = if (Files.exists(journal)) new String(Files.readAllBytes(journal), UTF_8) else ""
     val whole = text.split('\n').toVector.filter(_.trim.nonEmpty)
       .map(l => (l, JournalEntry.decode(l))).takeWhile(_._2.isDefined)

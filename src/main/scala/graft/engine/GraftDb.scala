@@ -1,12 +1,13 @@
 package graft.engine
 
 import graft.command._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, expr, lit, lower, rtrim}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, expr, lit, lower}
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import Constraints.{Spec, conflicts, key}
 import Mem.{memStore, memUpdated}
 import Store.ridSchema
 
@@ -80,7 +81,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   private var tables: Tables = mutable.LinkedHashMap.empty
   // secondary-index catalog (SQLite pass-through surface): metadata only —
   // Catalyst plans the scans — except UNIQUE indexes, which add uniqueness
-  // constraints enforced through validateIdx/the conflict policies.
+  // constraints enforced through [[Constraints]]/the conflict policies.
   private var indexes: mutable.LinkedHashMap[String, Ddl.CreateIndex] =
     mutable.LinkedHashMap.empty
   // SQL views (SQLite pass-through): stored as their SELECT text, expanded
@@ -266,7 +267,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     }
     // the wrapper tx's COMMIT/ROLLBACK releases savepoints made in it
     if (req.transaction) savepoints.clear()
-    if (!req.transaction || !rolledBack) persist()
+    if (!req.transaction || !rolledBack) persist() else applied()
     Right(results.result())
   }
 
@@ -319,8 +320,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                 case Some((base, retList)) => runReturning(sql, base, retList)
                 case None =>
                   journalAppend(tx = false, Seq(sql))
-                  dispatch(tables, reqTx = false, sql).map { _ =>
-                    persist(); RowsResult(Nil, Nil, Nil)
+                  dispatch(tables, reqTx = false, sql) match {
+                    case Left(e) => applied(); Left(e)
+                    case Right(_) => persist(); Right(RowsResult(Nil, Nil, Nil))
                   }
               }
             }
@@ -527,7 +529,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     retArmed = true; retCaptured = None
     val r = try dispatch(tables, reqTx = false, base) finally retArmed = false
     val out = r match {
-      case Left(err) => Left(err)
+      case Left(err) => applied(); Left(err)
       case Right(_) =>
         persist()
         retCaptured match {
@@ -878,6 +880,12 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         !e.isInstanceOf[org.apache.spark.sql.AnalysisException]) throw e
     else friendlyError(e)
 
+  /** The constraint layer over the tables `work`, this connection's index
+    * catalog and its FK flag. */
+  private def constraints(work: Tables): Constraints =
+    new Constraints(session, indexes.values, fkEnabled,
+      n => work.get(n.toLowerCase), stmtError)
+
   private def friendlyError(e: Exception): String = {
     // Engine-raised errors travel wrapped when they fire inside UDF
     // evaluation ([FAILED_EXECUTE_UDF] … Lambda$… noise, VERDICT r14):
@@ -1123,7 +1131,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   private def valuePragma(cat: Catalog, name: String): RowsResult =
     name.toLowerCase match {
     case "integrity_check" | "quick_check" =>
-      // constraints hold by construction (validateIdx gates every commit)
+      // constraints hold by construction ([[Constraints]] gates every commit)
       RowsResult(Seq(name.toLowerCase), Seq("text"),
         Seq(Seq(Value.Text("ok"))))
     case "collation_list" =>
@@ -1177,7 +1185,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         }
         // collations are resolved at CREATE time (SQLite 3.40, probed:
         // `CREATE TABLE bad(z TEXT COLLATE NOSUCH)` fails immediately)
-        td.cols.find(c => !knownCollations(c.collate)).foreach { c =>
+        td.cols.find(c => !Constraints.knownCollations(c.collate)).foreach { c =>
           return Left(s"no such collation sequence: ${c.collate}")
         }
         // composite-constraint shape errors (SQLite 3.40 texts, probed)
@@ -1780,7 +1788,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
 
   /** CREATE [UNIQUE] INDEX: catalog metadata (Catalyst plans the scans);
     * a UNIQUE index additionally enforces tuple uniqueness — existing rows
-    * are validated now, future writes via [[uniqueSpecs]]. SQLite surface
+    * are validated now, future writes via [[Constraints]]. SQLite surface
     * per the reference's pass-through (`db/src/db.rs:176`). */
   private def doCreateIndex(work: Tables,
                             ci: Ddl.CreateIndex): Either[String, Long] = {
@@ -1792,7 +1800,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     ci.cols.zipWithIndex.find { case (c, k) =>
       ci.exprOf(k).isEmpty && ts.d.colIndex(c) < 0
     }.foreach { case (c, _) => return Left(s"no such column: $c") }
-    ci.colls.find(cl => cl.nonEmpty && !knownCollations(cl))
+    ci.colls.find(cl => cl.nonEmpty && !Constraints.knownCollations(cl))
       .foreach(cl => return Left(s"no such collation sequence: $cl"))
     if (ci.advanced) {
       // SQLite resolves index expressions and the partial predicate at
@@ -1817,44 +1825,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           } else friendlyError(ex))
         }
       }
-      if (ci.unique) {
-        // pre-scan the existing rows under the index's own semantics
-        val sp = xSpecOf(ts.d, ci)
-        checkAdvanced(ts.d, storeDf(ts.d, ts.store), Seq(sp))
-          .foreach(e => return Left(e))
-      }
-      indexes(ci.name.toLowerCase) = ci
-      return Right(0)
     }
-    if (ci.unique) {
-      val idxs = ci.cols.map(ts.d.colIndex)
-      // unspecified index-column collation = the COLUMN's (SQLite);
-      // non-TEXT columns always compare BINARY
-      val colls = idxs.zipWithIndex.map { case (cidx, k) =>
-        val o = ci.collOf(k)
-        if (ts.d.cols(cidx).sparkType != StringType) "BINARY"
-        else if (o.isEmpty) ts.d.cols(cidx).collate else o
-      }
-      val desc = ci.cols.map(c => s"${ts.d.name}.$c").mkString(", ")
-      ts.store match {
-        case Mem(rows) =>
-          val seen = mutable.HashSet[Seq[Any]]()
-          rows.foreach { case (_, r) =>
-            val key = specKey(idxs, colls, r)
-            if (!key.contains(null) && !seen.add(key))
-              return Left(s"UNIQUE constraint failed: $desc")
-          }
-        case Big(df, _) =>
-          // distributed pre-scan: keys with a NULL never conflict (SQLite)
-          val names = idxs.map(ts.d.cols(_).name)
-          val dup = df
-            .filter(names.map(col(_).isNotNull).reduce(_ && _))
-            .groupBy(names.lazyZip(colls).map((nm, cl) =>
-              normCol(col(nm), cl)).toSeq: _*).count()
-            .filter(col("count") > 1).limit(1).count()
-          if (dup > 0) return Left(s"UNIQUE constraint failed: $desc")
-      }
-    }
+    constraints(work).newIndex(ts, ci).foreach(e => return Left(e))
     indexes(ci.name.toLowerCase) = ci
     Right(0)
   }
@@ -2286,260 +2258,6 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     -1
   }
 
-  /** Uniqueness constraints of a table as (column indexes, error text):
-    * PK / UNIQUE columns in declaration order, then UNIQUE indexes. */
-  // ---------- collation (SQLite BINARY | NOCASE | RTRIM) ------------------
-  // NOCASE folds ASCII A-Z only (sqlite3UpperToLower); RTRIM ignores
-  // trailing spaces (0x20). Constraint paths compare NORMALIZED keys —
-  // lower-folded / right-trimmed — which matches SQLite's comparator
-  // exactly for ASCII text. The distributed legs use Spark's lower()/
-  // rtrim() (Unicode lower vs SQLite's ASCII fold — a documented
-  // divergence on non-ASCII case pairs only).
-
-  private val knownCollations = Set("BINARY", "NOCASE", "RTRIM")
-
-  /** Normalize one value under a collation (non-TEXT values pass through —
-    * SQLite collations only affect text comparison). */
-  private def collNorm(v: Any, coll: String): Any = v match {
-    case s: String => coll match {
-      case "NOCASE" =>
-        var i = 0; var needs = false
-        while (i < s.length && !needs) {
-          val c = s.charAt(i); if (c >= 'A' && c <= 'Z') needs = true; i += 1
-        }
-        if (!needs) s
-        else {
-          val a = s.toCharArray
-          var j = 0
-          while (j < a.length) {
-            val c = a(j); if (c >= 'A' && c <= 'Z') a(j) = (c + 32).toChar
-            j += 1
-          }
-          new String(a)
-        }
-      case "RTRIM" =>
-        var e = s.length
-        while (e > 0 && s.charAt(e - 1) == ' ') e -= 1
-        if (e == s.length) s else s.substring(0, e)
-      case _ => s
-    }
-    case other => other
-  }
-
-  /** A spec key for comparison: values at `idxs`, normalized per the
-    * spec's collations. */
-  private def specKey(idxs: Seq[Int], colls: Seq[String],
-                      vals: IndexedSeq[Any]): Seq[Any] =
-    idxs.lazyZip(colls).map((i, c) => collNorm(vals(i), c))
-
-  /** DataFrame column for collation-aware key comparison (grouping,
-    * joins, windows): lower() for NOCASE, rtrim() for RTRIM. The input is
-    * re-collated to UTF8_BINARY first — a source column may carry a
-    * collated TYPE from the query views, and mixing it into lower()/joins
-    * untreated trips Spark's INDETERMINATE_COLLATION analysis. */
-  private def normCol(c: Column, coll: String): Column = coll match {
-    case "NOCASE" =>
-      lower(org.apache.spark.sql.functions.collate(c, "UTF8_BINARY"))
-    case "RTRIM" =>
-      rtrim(org.apache.spark.sql.functions.collate(c, "UTF8_BINARY"))
-    case _ => c
-  }
-
-  /** Collations for a spec resolved from the COLUMN definitions. An index
-    * created with explicit per-column collations registers its own spec
-    * (see [[uniqueSpecs]]); everything else takes the column's. Non-TEXT
-    * columns always compare BINARY (collation only affects text). */
-  private def specColls(td: TableDef, idxs: Seq[Int]): Seq[String] =
-    idxs.map { i =>
-      val c = td.cols(i)
-      if (c.sparkType == StringType) c.collate else "BINARY"
-    }
-
-  /** A uniqueness spec: column indexes, SQLite error-text description, and
-    * the per-column collation each key position compares under. */
-  private type USpec = (Seq[Int], String, Seq[String])
-
-  private def uniqueSpecs(td: TableDef): Seq[USpec] = {
-    def ofSet(cs: Seq[String]): Option[USpec] = {
-      val idxs = cs.map(td.colIndex)
-      if (idxs.forall(_ >= 0))
-        Some((idxs, cs.map(c => s"${td.name}.$c").mkString(", "),
-          specColls(td, idxs)))
-      else None
-    }
-    // a composite table-level PRIMARY KEY is a tuple-level unique spec in
-    // clause order (the clause order also governs SQLite's error text)
-    val pkSpec = if (td.pkSet.isEmpty) Nil else ofSet(td.pkSet).toSeq
-    val colSpecs = td.cols.zipWithIndex.collect {
-      case (c, i) if c.pk || c.unique =>
-        (Seq(i), s"${td.name}.${c.name}", specColls(td, Seq(i)))
-    }
-    val setSpecs = td.uniqueSets.flatMap(ofSet)
-    val idxSpecs = indexes.values.toSeq
-      .filter(ix => ix.unique && !ix.advanced &&
-        ix.table.equalsIgnoreCase(td.name))
-      .flatMap { ix =>
-        val idxs = ix.cols.map(td.colIndex)
-        if (idxs.forall(_ >= 0))
-          // an index column's collation defaults to the COLUMN's (SQLite);
-          // an explicit `COLLATE c` in the index overrides it
-          Some((idxs, ix.cols.map(c => s"${td.name}.$c").mkString(", "),
-            idxs.zipWithIndex.map { case (ci, k) =>
-              val o = ix.collOf(k)
-              if (td.cols(ci).sparkType != StringType) "BINARY"
-              else if (o.isEmpty) td.cols(ci).collate else o
-            }))
-        else None
-      }
-    // SQLite's within-row REPORTING order when one row violates several
-    // unique constraints (probed live; OLTP fuzz V7): the rowid itself
-    // first, then the table's index list — which SQLite PREPENDS to as
-    // each index is created, so named indexes newest-first, then
-    // table-level clauses and column constraints in reverse declaration
-    // order. Only the error text depends on this order; conflict/victim
-    // SETS are order-independent.
-    val (aliasSpec, otherCols) = colSpecs.partition { case (idxs, _, _) =>
-      idxs.sizeIs == 1 && td.cols(idxs.head).isRowidAlias }
-    aliasSpec ++ idxSpecs.reverse ++ setSpecs.reverse ++ pkSpec ++
-      otherCols.reverse
-  }
-
-  // ---------- partial & expression unique indexes -------------------------
-  // `CREATE UNIQUE INDEX … ON t(expr[, …]) [WHERE pred]` (VERDICT r12 #2).
-  // These cannot key the slice/window machinery (their keys are computed,
-  // their row set predicate-filtered), so they enforce as a FINAL-STATE
-  // duplicate scan: exact for the plain ABORT paths (insert, update, bulk),
-  // zero cost for tables without one. Conflict POLICIES (OR IGNORE /
-  // REPLACE / FAIL / upsert / UPDATE OR x) would need the computed keys
-  // inside the sequential resolution loops — a loud documented boundary
-  // instead of a silent divergence. Non-unique advanced indexes are
-  // catalog-only (a full-scan engine has nothing to maintain).
-
-  private final case class XSpec(name: String, keys: Seq[String],
-      where: Option[String], err: String)
-
-  /** SQLite's error text: an index with any EXPRESSION position reports
-    * `index 'name'`; a plain-column (partial) one keeps the column list
-    * (probed live, 3.40). */
-  private def xSpecOf(td: TableDef, ix: Ddl.CreateIndex): XSpec = {
-    val keys = ix.cols.indices.map { k =>
-      val e = ix.exprOf(k)
-      val base = if (e.nonEmpty) s"($e)" else s"`${ix.cols(k)}`"
-      val coll = {
-        val o = ix.collOf(k)
-        if (o.nonEmpty) o
-        else if (e.isEmpty) {
-          val ci = td.colIndex(ix.cols(k))
-          if (ci >= 0 && td.cols(ci).sparkType == StringType)
-            td.cols(ci).collate
-          else "BINARY"
-        } else "BINARY"
-      }
-      coll match {
-        case "NOCASE" => s"lower($base)"
-        case "RTRIM" => s"rtrim($base)"
-        case _ => base
-      }
-    }
-    val desc =
-      if (ix.exprs.forall(_.isEmpty))
-        ix.cols.map(c => s"${td.name}.$c").mkString(", ")
-      else s"index '${ix.name}'"
-    XSpec(ix.name, keys, ix.where, s"UNIQUE constraint failed: $desc")
-  }
-
-  private def advancedSpecs(td: TableDef): Seq[XSpec] =
-    indexes.values.toSeq
-      .filter(ix => ix.unique && ix.advanced &&
-        ix.table.equalsIgnoreCase(td.name))
-      .map(xSpecOf(td, _))
-
-  /** Duplicate scan over a final-state frame exposing the table's data
-    * columns (extra bookkeeping columns are fine). Keys with any NULL
-    * position never conflict (SQLite). */
-  private def checkAdvanced(td: TableDef, df: DataFrame,
-      specs: Seq[XSpec]): Option[String] = {
-    specs.foreach { sp =>
-      try {
-        val base = sp.where.map(w => df.filter(s"COALESCE(($w), false)"))
-          .getOrElse(df)
-        val keyed = base.selectExpr(sp.keys.zipWithIndex.map {
-          case (k, i) => s"($k) AS __xk$i" }: _*)
-        val nn = sp.keys.indices.map(i => col(s"__xk$i").isNotNull)
-          .reduce(_ && _)
-        val dup = keyed.filter(nn)
-          .groupBy(sp.keys.indices.map(i => col(s"__xk$i")): _*)
-          .count().filter(col("count") > 1).limit(1).count()
-        if (dup > 0) return Some(sp.err)
-      } catch { case e: Exception => return Some(stmtError(e)) }
-    }
-    None
-  }
-
-  /** [[checkAdvanced]] for the driver-row insert paths: `allRows` is the
-    * tentative final Mem/slice state, `remainder` the untouched spilled
-    * rows when the slice path is in play. Returns (error, position in
-    * `allRows` of the first VIOLATING row) — the LATER of each duplicate
-    * pair, so callers can reproduce SQLite's partial-advance
-    * last_insert_rowid on aborted multi-row inserts (fuzz seeds
-    * 310082/310083). Remainder rows order before every allRows row. */
-  private def advCheckRows(td: TableDef,
-      allRows: Vector[(Long, IndexedSeq[Any])],
-      remainder: Option[DataFrame]): Option[(String, Int)] = {
-    val specs = advancedSpecs(td)
-    if (specs.isEmpty) return None
-    val posSchema = StructType(
-      StructField("__pos", LongType, nullable = false) +: td.schema.fields)
-    val rowsDf = session.createDataFrame(
-      allRows.zipWithIndex.map { case ((_, v), i) =>
-        Row.fromSeq(i.toLong +: v) }.asJava, posSchema)
-    val full = remainder match {
-      case Some(keep) =>
-        keep.select(lit(-1L).as("__pos") +:
-          td.cols.map(c => col(c.name)): _*).unionAll(rowsDf)
-      case None => rowsDf
-    }
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.row_number
-    specs.foreach { sp =>
-      try {
-        val base = sp.where.map(w => full.filter(s"COALESCE(($w), false)"))
-          .getOrElse(full)
-        val keyed = base.selectExpr("__pos" +:
-          sp.keys.zipWithIndex.map { case (k, i) => s"($k) AS __xk$i" }: _*)
-        val nn = sp.keys.indices.map(i => col(s"__xk$i").isNotNull)
-          .reduce(_ && _)
-        val w = Window
-          .partitionBy(sp.keys.indices.map(i => col(s"__xk$i")): _*)
-          .orderBy(col("__pos"))
-        val bad = keyed.filter(nn)
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") > 1)
-          .agg(expr("min(__pos)")).head()
-        if (!bad.isNullAt(0))
-          return Some((sp.err, math.max(bad.getLong(0), 0L).toInt))
-      } catch { case e: Exception => return Some((stmtError(e), 0)) }
-    }
-    None
-  }
-
-  /** Policy statements cannot resolve against an advanced index — fail
-    * loudly instead of silently diverging from SQLite. */
-  private def advPolicyBoundary(td: TableDef): Option[String] =
-    advancedSpecs(td).headOption.map(sp =>
-      s"conflict resolution over a partial or expression index is not " +
-        s"supported: ${sp.name} (drop the index or use plain INSERT/UPDATE)")
-
-  /** Does `vals` conflict with `row` on any spec? (SQLite: NULLs in any
-    * indexed column never conflict; text positions compare under the
-    * spec's collation.) */
-  private def conflicts(specs: Seq[USpec],
-                        row: IndexedSeq[Any], vals: IndexedSeq[Any]): Boolean =
-    specs.exists { case (idxs, _, colls) =>
-      val key = specKey(idxs, colls, vals)
-      !key.contains(null) && specKey(idxs, colls, row) == key
-    }
-
   /** Shared INSERT pipeline: `source` is either a VALUES tail or a SELECT
     * text; both evaluate through Catalyst and cast to column affinities.
     * `policy` resolves uniqueness conflicts (abort/ignore/replace/upsert).
@@ -2584,8 +2302,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     }.toMap
     // conflict policies cannot resolve against partial/expression
     // indexes — the sequential loops have no computed keys for them
+    val checks = constraints(work)
     if (policy != Conflict.Abort)
-      advPolicyBoundary(td).foreach(e => return Left(e))
+      checks.policyBoundary(td).foreach(e => return Left(e))
     // WITHOUT ROWID: inserts never touch last_insert_rowid (probed live —
     // the connection counter keeps its previous value); the internal
     // per-row ids remain pure store bookkeeping
@@ -2685,10 +2404,10 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         val explicitFlags = cand3.map(_._3)
         ts.store match {
           case Mem(memRows) =>
-            applyPolicySeq(td, policy, memRows, candidates, lastId,
+            applyPolicySeq(checks, td, policy, memRows, candidates, lastId,
               explicitFlags, autoBase, rowidIdx).flatMap {
               case (kept, added, touched, insRids, affected, lastOpt) =>
-                validateIdx(work, td, kept ++ added, touched) match {
+                checks.rows(td, kept ++ added, touched) match {
                   case Left((err, k)) =>
                     // SQLite: rows inserted BEFORE the failing row still
                     // advance last_insert_rowid even though the statement
@@ -2752,7 +2471,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * points from `autoBase` (the statement-time max+1), because SQLite
     * consumes a rowid only on a real insert — a skipped or upsert-updated
     * candidate leaves the counter untouched (probed live; ReturningSpec). */
-  private def applyPolicySeq(td: TableDef, policy: Conflict,
+  private def applyPolicySeq(checks: Constraints, td: TableDef,
+      policy: Conflict,
       base: Vector[(Long, IndexedSeq[Any])],
       candidates: IndexedSeq[(Long, IndexedSeq[Any])], lastId: Long,
       explicitFlags: IndexedSeq[Boolean], autoBase: Long, rowidIdx: Int)
@@ -2760,6 +2480,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                         Vector[(Long, IndexedSeq[Any])],
                         Seq[IndexedSeq[Any]], IndexedSeq[Option[Long]],
                         Long, Option[Long])] = {
+    val specs = checks.uniqueSpecs(td)
     def inserts(rows: Seq[(Long, IndexedSeq[Any])]) =
       Some(rows.map(r => ("INSERT", Some(r._2): Option[IndexedSeq[Any]],
         None: Option[IndexedSeq[Any]])))
@@ -2767,7 +2488,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       case Conflict.Abort | Conflict.Fail =>
         captureRet(td, candidates.toVector)
         insertFirings = inserts(candidates)
-        // conflicts surface through validateIdx's uniqueness scan; the
+        // conflicts surface through the uniqueness scan of the check; the
         // FAIL prefix (rows before the first failing candidate) is cut
         // there, where the failing index is known
         Right((base, candidates.toVector, candidates.map(_._2),
@@ -2775,29 +2496,14 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           candidates.size.toLong, Some(lastId)))
       case Conflict.Ignore =>
         // skip candidates violating NOT NULL, CHECK or any uniqueness
-        // spec (SQLite: FK violations still abort — validateIdx after).
+        // spec (SQLite: FK violations still abort — the check after).
         // AUTOINCREMENT rowids come from the statement's running register
         // (the tentative assignment): even a SKIPPED auto candidate
         // consumes its rowid there (probed live — OLTP fuzz V7), unlike
         // plain rowid tables where skips never consume.
         val autoInc = td.cols.exists(_.autoInc)
-        val specs = uniqueSpecs(td)
-        val checkFailed: Set[Int] =
-          if (td.checks.isEmpty || candidates.isEmpty) Set.empty
-          else {
-            val idxSchema = StructType(
-              StructField("__i", IntegerType, nullable = false) +:
-                td.schema.fields)
-            val cdf = session.createDataFrame(
-              candidates.zipWithIndex.map { case ((_, vals), i) =>
-                Row.fromSeq(i +: vals)
-              }.asJava, idxSchema)
-            val ok = td.checks
-              .map(c => s"COALESCE((${c._2}), true)").mkString(" AND ")
-            try cdf.filter(s"NOT ($ok)").select("__i")
-              .collect().map(_.getInt(0)).toSet
-            catch { case _: Exception => Set.empty[Int] }
-          }
+        val checkFailed = checks.checkFailures(td, candidates.map(_._2))
+          .flatMap(_._2).toSet
         var landed = Vector.empty[(Long, IndexedSeq[Any])]
         var nextAuto = autoBase
         candidates.zipWithIndex.foreach { case ((rid0, vals0), ci) =>
@@ -2828,7 +2534,6 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         // the displaced images feed fkParentDelta's ON DELETE action leg
         // (a row applied by this statement and displaced later is a
         // victim too — same contract as the trigger tape)
-        val specs = uniqueSpecs(td)
         var cur = base
         var landed = Vector.empty[(Long, IndexedSeq[Any])]
         val victims = Vector.newBuilder[IndexedSeq[Any]]
@@ -2852,28 +2557,26 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           candidates.map(c => Some(c._1)), candidates.size.toLong,
           Some(lastId)))
       case Conflict.Upsert(clauses) =>
-        val all = uniqueSpecs(td)
         // Phase 1 — target validation, clause order (probed live: every
         // clause's target resolves before ANY SET list does; an unknown
         // target column reports `no such column` from its own clause
         // position, an existing-but-unconstrained target reports the
         // ordinal-prefixed text — no ordinal on a single-clause upsert)
-        val clauseSpecs: IndexedSeq[Seq[USpec]] =
+        val clauseSpecs: IndexedSeq[Seq[Spec]] =
           clauses.zipWithIndex.map { case (cl, k) =>
             cl.cols match {
               case Some(cs) =>
                 cs.find(c => td.colIndex(c) < 0).foreach(c =>
                   return Left(s"no such column: $c"))
                 val want = cs.map(_.toLowerCase).toSet
-                val m = all.filter { case (idxs, _, _) =>
-                  idxs.map(i => td.cols(i).name.toLowerCase).toSet == want
-                }
+                val m = specs.filter(
+                  _.names.map(_.toLowerCase).toSet == want)
                 if (m.isEmpty) return Left(
                   (if (clauses.sizeIs > 1) ordinal(k + 1) + " " else "") +
                     "ON CONFLICT clause does not match any PRIMARY KEY or " +
                     "UNIQUE constraint")
                 m
-              case None => all
+              case None => specs
             }
           }.toIndexedSeq
         // resolve SET expressions: a bare excluded.col pulls the incoming
@@ -2973,10 +2676,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               case Left(e) => Some(e)
               case Right(lbl) => lbl.map(l => s"CHECK constraint failed: $l")
             }
-          }.orElse(all.collectFirst {
-            case spec if rows.zipWithIndex.exists { case ((_, r), j) =>
-              j != exclude && conflicts(Seq(spec), r, img) } =>
-              s"UNIQUE constraint failed: ${spec._2}"
+          }.orElse(specs.collectFirst {
+            case sp if rows.zipWithIndex.exists { case ((_, r), j) =>
+              j != exclude && sp.clash(r, img) } => sp.err
           })
         // exact firing tape for the trigger layer: SQLite fires the upsert
         // UPDATE trigger for every CONFLICTING candidate (even when DO
@@ -3001,7 +2703,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             vals0.updated(rowidIdx, rid: Any) else vals0
           // the FIRST clause (statement order) whose target constraint
           // this candidate violates applies; unmatched violations fall
-          // through to validateIdx's normal constraint error (probed live)
+          // through to the check's normal constraint error (probed live)
           var hit = -1
           var ck = -1
           var k = 0
@@ -3030,7 +2732,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                 case (ci, Const(v)) => upd(ci) = v
                 case (ci, RowExpr(f)) => upd(ci) = f(orow, vals)
               }
-              // one shared instance: validateIdx maps a clash back to the
+              // one shared instance: the check maps a clash back to the
               // statement row by object identity (gens recompute BEFORE
               // the instance is shared — per-conflict driver work, the
               // same statement-sized cost model as RowExpr)
@@ -3078,38 +2780,6 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     }
   }
 
-  /** Rows of a spilled table that share a uniqueness key with any
-    * candidate: one broadcast semi-join per spec, collected. Bounded by
-    * candidates × specs rows — spec keys are unique in the table by
-    * invariant — never by the table. Returns (rid, vals) in rowid order. */
-  private def collectInteracting(td: TableDef, big: Big,
-      specs: Seq[USpec],
-      candidates: IndexedSeq[(Long, IndexedSeq[Any])])
-      : Vector[(Long, IndexedSeq[Any])] = {
-    if (specs.isEmpty || candidates.isEmpty) return Vector.empty
-    val n = td.cols.size
-    val out = mutable.HashMap[Long, IndexedSeq[Any]]()
-    specs.foreach { case (idxs, _, colls) =>
-      val names = idxs.map(td.cols(_).name)
-      // probe with NORMALIZED keys against normalized table columns so a
-      // NOCASE/RTRIM collision lands in the interacting slice
-      val keys = candidates.map(c => specKey(idxs, colls, c._2))
-        .filterNot(_.contains(null)).distinct
-      if (keys.nonEmpty) {
-        val kschema = StructType(idxs.map(i =>
-          StructField("__q_" + td.cols(i).name, td.cols(i).sparkType)).toArray)
-        val kdf = session.createDataFrame(
-          keys.map(k => Row.fromSeq(k)).asJava, kschema)
-        val cond = names.lazyZip(colls).map((nm, cl) =>
-          normCol(col(nm), cl) === col("__q_" + nm)).reduce(_ && _)
-        big.df.join(broadcast(kdf), cond, "left_semi").collect().foreach { r =>
-          out(r.getLong(0)) = (1 to n).map(r.get).toIndexedSeq
-        }
-      }
-    }
-    out.toVector.sortBy(_._1)
-  }
-
   /** INSERT of a driver-sized candidate batch into a spilled table: run the
     * exact sequential policy on the interacting slice, then merge the slice
     * diff back with an anti-join + union — IO proportional to the batch
@@ -3119,9 +2789,10 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       nextId: Long, lastId: Long, explicitFlags: IndexedSeq[Boolean],
       autoBase: Long, rowidIdx: Int): Either[String, Long] = {
     val td = ts.d
-    val specs = uniqueSpecs(td)
-    val base = collectInteracting(td, big, specs, candidates)
-    // the untouched remainder, for self-referencing FK checks in validateIdx
+    val checks = constraints(work)
+    val base = checks.interacting(big.df, td, checks.uniqueSpecs(td),
+      candidates.map(_._2))
+    // the untouched remainder, for self-referencing FK checks
     val miniRidDf =
       if (base.isEmpty) None
       else Some(session.createDataFrame(
@@ -3142,14 +2813,14 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       case Conflict.Upsert(cls) if cls.exists(_.sets.nonEmpty) => Some(keep)
       case _ => None
     }
-    applyPolicySeq(td, policy, base, candidates, lastId,
+    applyPolicySeq(checks, td, policy, base, candidates, lastId,
       explicitFlags, autoBase, rowidIdx).flatMap {
       case (kept, added, touched0, insRids, affected0, lastOpt0) =>
         // (rows to install, affected, nextRowId, new lastRowId) — cut to
         // the OR FAIL prefix when validation names a failing index
         val resolved: Either[String, (Vector[(Long, IndexedSeq[Any])],
             Long, Long, Option[Long])] =
-          validateIdx(work, td, kept ++ added, touched0,
+          checks.rows(td, kept ++ added, touched0,
             selfRemainder = Some(keep),
             uniqueRemainder = probeRemainder) match {
             case Left((err, k)) =>
@@ -3289,91 +2960,18 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     val newNextId =
       math.max(ridBase + stats.getLong(3), stats.getLong(1) + 1L)
     val lastRid = if (candN == 0) lastRowId else stats.getLong(2)
-    val specs = uniqueSpecs(td)
-    def specCols(idxs: Seq[Int]) = idxs.map(td.cols(_).name)
-    def notNullKeys(names: Seq[String]) =
-      names.map(col(_).isNotNull).reduce(_ && _)
+    val checks = constraints(work)
+    val specs = checks.uniqueSpecs(td)
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{max, row_number}
     policy match {
       case Conflict.Abort | Conflict.Fail =>
         // Per-ROW precedence (SQLite, probed live — the r11 set-wise
         // NOT NULL-first ordering was wrong, caught by the OLTP fuzzer):
-        // the EARLIEST failing candidate decides; a row violating several
-        // constraints reports NOT NULL → CHECK → UNIQUE → FK. Each leg is
-        // a min(__ord) aggregate — the same job shapes as the old
-        // limit(1) probes, but comparable across legs.
-        def minOrd(df: DataFrame): Option[Long] = {
-          val r = df.agg(expr("min(__ord)")).head()
-          if (r.isNullAt(0)) None else Some(r.getLong(0))
-        }
-        var bestFail: Option[(Long, Int, String)] = None
-        def reportAt(ord: Option[Long], pri: Int, msg: String): Unit =
-          ord.foreach { o =>
-            if (bestFail.forall { case (bo, bp, _) =>
-                  o < bo || (o == bo && pri < bp) })
-              bestFail = Some((o, pri, msg))
-          }
-        td.cols.foreach { c =>
-          if (c.notNull && !c.isRowidAlias)
-            reportAt(minOrd(candDf.filter(col(c.name).isNull)), 0,
-              s"NOT NULL constraint failed: ${td.name}.${c.name}")
-        }
-        td.checks.foreach { case (label, ex) =>
-          val bad =
-            try minOrd(candDf.filter(s"NOT COALESCE(($ex), true)"))
-            catch { case _: Exception => None } // unresolvable expr: ignore
-          reportAt(bad, 1, s"CHECK constraint failed: $label")
-        }
-        specs.foreach { case (idxs, desc, colls) =>
-          val names = specCols(idxs)
-          val nn = notNullKeys(names)
-          def nc(n2: String) =
-            normCol(col(n2), colls(names.indexOf(n2)))
-          // intra-batch: the LATER of each duplicate pair is the failing row
-          val w = Window.partitionBy(names.map(nc): _*).orderBy(col("__ord"))
-          reportAt(minOrd(candDf.filter(nn)
-              .withColumn("__rn", row_number().over(w))
-              .filter(col("__rn") > 1)),
-            2, s"UNIQUE constraint failed: $desc")
-          val keyed = big.df
-            .select(names.map(n2 => nc(n2).as("__q_" + n2)): _*)
-          val cond = names.map(n2 => nc(n2) === col("__q_" + n2)).reduce(_ && _)
-          reportAt(minOrd(candDf.filter(nn).join(keyed, cond, "left_semi")),
-            2, s"UNIQUE constraint failed: $desc")
-        }
+        // the EARLIEST failing candidate decides
         val merged = big.df.union(candDf.drop("__ord"))
-        if (fkEnabled) {
-          td.cols.foreach { c =>
-            c.ref.foreach { case (refTable, refColOpt) =>
-              work.get(refTable.toLowerCase) match {
-                case None => reportAt(Some(Long.MinValue), 3,
-                  "FOREIGN KEY constraint failed")
-                case Some(parent) =>
-                  val refCol =
-                    if (refColOpt.nonEmpty) refColOpt
-                    else parent.d.rowidAlias.map(_.name).getOrElse("")
-                  val pIdx = parent.d.colIndex(refCol)
-                  if (pIdx < 0) reportAt(Some(Long.MinValue), 3,
-                    "FOREIGN KEY constraint failed")
-                  else {
-                    val pdf =
-                      if (parent.d.name.equalsIgnoreCase(td.name)) merged
-                      else storeDf(parent.d, parent.store)
-                    val pvals = pdf
-                      .select(col(parent.d.cols(pIdx).name).as("__graft_p"))
-                      .filter(col("__graft_p").isNotNull)
-                    reportAt(minOrd(candDf.filter(col(c.name).isNotNull)
-                        .join(pvals, col(c.name) === col("__graft_p"),
-                          "left_anti")),
-                      3, "FOREIGN KEY constraint failed")
-                  }
-              }
-            }
-          }
-        }
-        bestFail match {
-          case Some((o, _, msg)) =>
+        checks.insertFrame(td, candDf, big.df, merged) match {
+          case Some((o, msg)) =>
             // partial-abort last_insert_rowid: candidates before the
             // failing row still advance the counter (SQLite, probed live)
             val prev = candDf.filter(col("__ord") < o)
@@ -3394,7 +2992,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               Right(st.getLong(0))
             } else Left(msg)
           case None =>
-            checkAdvanced(td, merged, advancedSpecs(td)) match {
+            checks.advanced(td, merged) match {
               case Some(m) => Left(m)
               case None =>
                 ts.store = mkBig(merged)
@@ -3420,23 +3018,15 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         // Per-spec resolution: intra-batch first-per-key window + anti-join
         // vs the table. Exact for a single spec; for ≥2 specs it is the
         // documented fallback (chained cross-spec conflicts — see Scaladoc).
-        def perSpecResolve(df0: DataFrame): DataFrame = {
-          var k = df0
-          specs.foreach { case (idxs, _, colls) =>
-            val names = specCols(idxs)
-            val nn = notNullKeys(names)
-            def nc(n2: String) = normCol(col(n2), colls(names.indexOf(n2)))
+        def perSpecResolve(df0: DataFrame): DataFrame =
+          specs.foldLeft(df0) { (k, sp) =>
             // intra-batch: first occurrence per key wins (candidate order)
-            val w = Window.partitionBy(names.map(nc): _*).orderBy(col("__ord"))
-            k = k.withColumn("__rn", row_number().over(w))
-              .filter(!nn || col("__rn") === 1).drop("__rn")
+            val w = Window.partitionBy(sp.cols: _*).orderBy(col("__ord"))
             // vs table: NULL keys never match an equi-join → they survive
-            val keyed = big.df.select(names.map(n2 => nc(n2).as("__t_" + n2)): _*)
-            val cond = names.map(n2 => nc(n2) === col("__t_" + n2)).reduce(_ && _)
-            k = k.join(keyed, cond, "left_anti")
+            sp.join(k.withColumn("__rn", row_number().over(w))
+              .filter(!sp.notNull || col("__rn") === 1).drop("__rn"),
+              big.df, "left_anti")
           }
-          k
-        }
         val resolved: DataFrame =
           if (specs.size < 2) perSpecResolve(kept)
           else {
@@ -3448,13 +3038,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             // interacting slice (exact SQLite order), the rest distributed.
             import org.apache.spark.sql.functions.{count, lit}
             var m = kept
-            val flags = specs.zipWithIndex.map { case ((idxs, _, colls), i) =>
-              val names = specCols(idxs)
-              def nc(n2: String) = normCol(col(n2), colls(names.indexOf(n2)))
-              m = m.withColumn(s"__c$i",
-                notNullKeys(names) &&
-                  count(lit(1)).over(
-                    Window.partitionBy(names.map(nc): _*)) > 1)
+            val flags = specs.zipWithIndex.map { case (sp, i) =>
+              m = m.withColumn(s"__c$i", sp.notNull &&
+                count(lit(1)).over(Window.partitionBy(sp.cols: _*)) > 1)
               s"__c$i"
             }
             val mC = m.localCheckpoint()
@@ -3467,7 +3053,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             else {
               val cCands = cRows.toIndexedSeq.map(r =>
                 (r.getLong(1), (2 until 2 + nCols).map(r.get).toIndexedSeq))
-              var cur = collectInteracting(td, big, specs, cCands)
+              var cur = checks.interacting(big.df, td, specs, cCands.map(_._2))
               val sv = Vector.newBuilder[Long]
               cCands.foreach { case (rid2, vals) =>
                 if (!cur.exists { case (_, r) => conflicts(specs, r, vals) }) {
@@ -3490,7 +3076,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
           }
         val keptC = resolved.localCheckpoint()
         val merged = big.df.union(keptC.drop("__ord"))
-        validateBulk(work, td, keptC, merged).map { _ =>
+        checks.bulk(td, keptC, merged).map { _ =>
           val ks = keptC.selectExpr("count(*) AS c",
             "max_by(__rowid, __ord) AS last").head()
           ts.store = mkBig(merged)
@@ -3510,31 +3096,19 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         // window and retain a row SQLite deletes (chained cross-spec
         // conflict).
         var flagged = candDf
-        val mxFlags = specs.zipWithIndex.map { case ((idxs, _, colls), i) =>
-          val names = specCols(idxs)
-          val nn = notNullKeys(names)
-          def nc(n2: String) = normCol(col(n2), colls(names.indexOf(n2)))
-          val w = Window.partitionBy(names.map(nc): _*)
-          flagged = flagged.withColumn(s"__mx$i",
-            !nn || col("__ord") === max(col("__ord")).over(w))
+        val mxFlags = specs.zipWithIndex.map { case (sp, i) =>
+          flagged = flagged.withColumn(s"__mx$i", !sp.notNull || col("__ord") ===
+            max(col("__ord")).over(Window.partitionBy(sp.cols: _*)))
           s"__mx$i"
         }
         val surv =
           if (mxFlags.isEmpty) candDf
           else flagged.filter(mxFlags.map(col).reduce(_ && _))
             .drop(mxFlags: _*)
-        var keepT = big.df
-        specs.foreach { case (idxs, _, colls) =>
-          val names = specCols(idxs)
-          val nn = notNullKeys(names)
-          def nc(n2: String) = normCol(col(n2), colls(names.indexOf(n2)))
-          val keyed = candDf.filter(nn)
-            .select(names.map(n2 => nc(n2).as("__q_" + n2)): _*)
-          val cond = names.map(n2 => nc(n2) === col("__q_" + n2)).reduce(_ && _)
-          keepT = keepT.join(keyed, cond, "left_anti")
-        }
+        val keepT = specs.foldLeft(big.df)((t, sp) =>
+          sp.join(t, candDf.filter(sp.notNull), "left_anti"))
         val merged = keepT.union(surv.drop("__ord"))
-        validateBulk(work, td, candDf, merged).map { _ =>
+        checks.bulk(td, candDf, merged).map { _ =>
           ts.store = mkBig(merged)
           ts.nextRowId = newNextId
           noteLid(lastRid)
@@ -3545,64 +3119,6 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         Left("ON CONFLICT DO UPDATE/NOTHING is not supported for a bulk " +
           s"INSERT ... SELECT above $maxDriverRows rows")
     }
-  }
-
-  /** Distributed NOT NULL / CHECK / FK validation for the bulk path: the
-    * same checks and error strings as [[validateIdx]], as DataFrame jobs.
-    * `finalDf` is the post-statement table, used as the parent side of
-    * self-referencing FKs. */
-  private def validateBulk(work: Tables, td: TableDef, newDf: DataFrame,
-                           finalDf: DataFrame): Either[String, Unit] =
-    validateNotNullCheckBulk(td, newDf).flatMap(_ =>
-      checkAdvanced(td, finalDf, advancedSpecs(td)).toLeft(())).flatMap(_ =>
-      validateFkDf(work, td, newDf, finalDf))
-
-  /** The NOT NULL and CHECK legs of [[validateBulk]], separable so the
-    * Abort branch can run them BEFORE its uniqueness probes (SQLite
-    * error-precedence parity: NOT NULL → CHECK → UNIQUE → FK). */
-  private def validateNotNullCheckBulk(td: TableDef,
-                                       newDf: DataFrame): Either[String, Unit] = {
-    td.cols.foreach { c =>
-      if (c.notNull && !c.isRowidAlias &&
-        newDf.filter(col(c.name).isNull).limit(1).count() > 0)
-        return Left(s"NOT NULL constraint failed: ${td.name}.${c.name}")
-    }
-    td.checks.foreach { case (label, ex) =>
-      val bad =
-        try newDf.filter(s"NOT COALESCE(($ex), true)").limit(1).count()
-        catch { case _: Exception => 0L } // unresolvable expr: ignore
-      if (bad > 0) return Left(s"CHECK constraint failed: $label")
-    }
-    Right(())
-  }
-
-  /** Distributed FK check: every non-null referencing value in `newDf`
-    * must exist in the parent column (`finalDf` for self-references). */
-  private def validateFkDf(work: Tables, td: TableDef, newDf: DataFrame,
-                           finalDf: DataFrame): Either[String, Unit] = {
-    if (fkEnabled) {
-      td.cols.foreach { c =>
-        c.ref.foreach { case (refTable, refColOpt) =>
-          val parent = work.get(refTable.toLowerCase)
-            .getOrElse(return Left("FOREIGN KEY constraint failed"))
-          val refCol =
-            if (refColOpt.nonEmpty) refColOpt
-            else parent.d.rowidAlias.map(_.name).getOrElse("")
-          val pIdx = parent.d.colIndex(refCol)
-          if (pIdx < 0) return Left("FOREIGN KEY constraint failed")
-          val pdf =
-            if (parent.d.name.equalsIgnoreCase(td.name)) finalDf
-            else storeDf(parent.d, parent.store)
-          val pvals = pdf.select(col(parent.d.cols(pIdx).name).as("__graft_p"))
-            .filter(col("__graft_p").isNotNull)
-          val dangling = newDf.filter(col(c.name).isNotNull)
-            .join(pvals, col(c.name) === col("__graft_p"), "left_anti")
-            .limit(1).count()
-          if (dangling > 0) return Left("FOREIGN KEY constraint failed")
-        }
-      }
-    }
-    Right(())
   }
 
   private val updateRe =
@@ -3643,8 +3159,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     * specs, CHECKs, NOT NULL columns or (enabled) FK columns, every policy
     * degenerates to the plain set-based path — no sequential resolution
     * needed and no driver cap paid. */
-  private def policyTrivial(td: TableDef, setCols: Iterable[String]): Boolean =
-    uniqueSpecs(td).isEmpty && advancedSpecs(td).isEmpty &&
+  private def policyTrivial(checks: Constraints, td: TableDef,
+                            setCols: Iterable[String]): Boolean =
+    checks.uniqueSpecs(td).isEmpty && checks.advancedSpecs(td).isEmpty &&
       td.checks.isEmpty &&
       !td.cols.exists(c => c.notNull && !c.isRowidAlias) &&
       !(fkEnabled && td.cols.exists(_.ref.isDefined)) &&
@@ -3704,7 +3221,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         // scan order — route to the sequential simulation unless nothing
         // on this table can conflict (then every policy IS the plain path)
         if (policy != "ABORT" && policy != "ROLLBACK" &&
-            !policyTrivial(td, sets.keys))
+            !policyTrivial(constraints(work), td, sets.keys))
           return doUpdatePolicy(work, ts, alias, sets, whereText, policy)
         registerViews(work)
         val cond = if (whereText.trim.isEmpty) "true" else s"(${whereText.trim})"
@@ -3752,7 +3269,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         val changedDf = ssql(withGenLevels(td,
           s"SELECT `__rowid`, $proj FROM ${ridView(td.name)} AS `$eff` " +
             s"WHERE $cond", Seq("__rowid")))
-        val res0 = validateUpdatePerRow(work, td, beforeAllDf, newDf,
+        val res0 = constraints(work).update(td, beforeAllDf, newDf,
           changedDf, changedOldDf).map { _ =>
           // RETURNING: matched rows' NEW images in rowid (scan) order
           captureRet(td, changedDf.orderBy("__rowid").collect()
@@ -3833,6 +3350,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       alias: Option[String], sets: Map[String, String], whereText: String,
       policy: String): Either[String, Long] = {
     val td = ts.d
+    val checks = constraints(work)
     val eff = alias.getOrElse("__rv")
     val n = td.cols.size
     val ridRekey = td.rowidAlias.exists(c =>
@@ -3841,7 +3359,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         t.table.equalsIgnoreCase(td.name) && t.event == "UPDATE"))
       return Left("UPDATE of the INTEGER PRIMARY KEY with UPDATE row " +
         "triggers armed is not supported (rekeying breaks the firing tape)")
-    advPolicyBoundary(td).foreach(e => return Left(e))
+    checks.policyBoundary(td).foreach(e => return Left(e))
     registerViews(work)
     val cond = if (whereText.trim.isEmpty) "true" else s"(${whereText.trim})"
     def capMsg = s"too many rows for OR $policy conflict resolution on " +
@@ -3911,15 +3429,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       captureRet(td, Vector.empty)
       return Right(0)
     }
-    val specs = uniqueSpecs(td)
-    def norm(v: Any): Any = v match {
-      case b: Array[Byte] => b.toSeq
-      case x => x
-    }
-    def keyOf(vals: IndexedSeq[Any], idxs: Seq[Int],
-              colls: Seq[String]): IndexedSeq[Any] =
-      idxs.lazyZip(colls).map((i, cl) =>
-        norm(collNorm(vals(i), cl))).toIndexedSeq
+    val specs = checks.uniqueSpecs(td)
     // tracked rows: the matched set plus every unchanged row whose key
     // under some spec collides with a candidate new key (the only
     // unchanged rows any skip/displace decision can involve)
@@ -3931,33 +3441,16 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     val baseDf = ridDf(ts)
     val unchangedDf = baseDf.join(broadcast(ridsDf(changedRidSet)),
       col("__rowid") === col("__qr"), "left_anti")
-    var partnersDf: Option[DataFrame] = None
-    specs.foreach { case (idxs, _, colls) =>
-      val keys = changed.iterator
-        .map(c => specKey(idxs, colls, c.nw).toIndexedSeq)
-        .filter(!_.contains(null)).toSeq.distinct
-      if (keys.nonEmpty) {
-        val kschema = StructType(idxs.zipWithIndex.map { case (ci, j) =>
-          StructField(s"__k$j", td.schema.fields(ci).dataType,
-            nullable = true) })
-        val kdf =
-          session.createDataFrame(keys.map(Row.fromSeq(_)).asJava, kschema)
-        val on = idxs.zipWithIndex.map { case (ci, j) =>
-          normCol(col(td.cols(ci).name), colls(j)) === col(s"__k$j") }
-          .reduce(_ && _)
-        val sj = unchangedDf.join(broadcast(kdf), on, "left_semi")
-        partnersDf = Some(partnersDf.map(_.unionAll(sj)).getOrElse(sj))
+    val partners: Vector[(Long, IndexedSeq[Any])] =
+      checks.probe(unchangedDf, td, specs, changed.map(_.nw)) match {
+        case None => Vector.empty
+        case Some(pdf) =>
+          val rows =
+            try collectCapped(pdf.dropDuplicates("__rowid"), maxDriverRows)
+            catch { case _: TriggerDiffTooLarge => return Left(capMsg) }
+          rows.iterator.map(r =>
+            (r.getLong(0), (1 to n).map(r.get).toIndexedSeq)).toVector
       }
-    }
-    val partners: Vector[(Long, IndexedSeq[Any])] = partnersDf match {
-      case None => Vector.empty
-      case Some(pdf) =>
-        val rows =
-          try collectCapped(pdf.dropDuplicates("__rowid"), maxDriverRows)
-          catch { case _: TriggerDiffTooLarge => return Left(capMsg) }
-        rows.iterator.map(r =>
-          (r.getLong(0), (1 to n).map(r.get).toIndexedSeq)).toVector
-    }
     val trackedRidSet = mutable.HashSet[Long]() ++
       changedRidSet ++ partners.iterator.map(_._1)
     // child-side FK membership for the candidate new values: static
@@ -3966,17 +3459,11 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     final case class FkC(ci: Int, selfRef: Boolean, parentCol: Int,
         exists: mutable.Set[Any])
     var fkChecks = Vector.empty[FkC]
-    if (fkEnabled) td.cols.zipWithIndex.foreach { case (c, ci) =>
-      c.ref.foreach { case (refTable, refColOpt) =>
-        val parent = work.getOrElse(refTable.toLowerCase,
-          return Left("FOREIGN KEY constraint failed"))
-        val refCol =
-          if (refColOpt.nonEmpty) refColOpt
-          else parent.d.rowidAlias.map(_.name).getOrElse("")
-        val pIdx = parent.d.colIndex(refCol)
-        if (pIdx < 0) return Left("FOREIGN KEY constraint failed")
+    checks.fkRefs(td).foreach {
+      case (_, None) => return Left(Constraints.FkError)
+      case (ci, Some((parent, pIdx))) =>
         val cands = changed.iterator.map(_.nw(ci))
-          .filter(_ != null).toSeq.distinct
+          .filter(_ != null).toSeq.distinctBy(key(_))
         if (cands.nonEmpty) {
           val selfRef = parent.d.name.equalsIgnoreCase(td.name)
           val pBase =
@@ -3991,35 +3478,27 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             .select(col(parent.d.cols(pIdx).name).as("__pv"))
             .filter(col("__pv").isNotNull)
             .join(broadcast(cdf), col("__pv") === col("__kv"), "left_semi")
-            .distinct().collect().iterator.map(r => norm(r.get(0)))
-          fkChecks :+= FkC(ci, selfRef, parent.d.colIndex(refCol), ex)
+            .distinct().collect().iterator.map(r => key(r.get(0)))
+          fkChecks :+= FkC(ci, selfRef, pIdx, ex)
         }
-      }
     }
     // ---- the sequential simulation (pure driver work) ----
     val cur = mutable.HashMap[Long, IndexedSeq[Any]]()
     changed.foreach(c => cur(c.rid) = c.old)
     partners.foreach(p => cur(p._1) = p._2)
     val dirty = mutable.HashSet[Long]()
-    val keyIdx = specs.map { case (idxs, _, colls) =>
-      val m = mutable.HashMap[IndexedSeq[Any], Long]()
-      cur.foreach { case (rid, vals) =>
-        val k = keyOf(vals, idxs, colls)
-        if (!k.contains(null)) m(k) = rid
-      }
+    val keyIdx = specs.map { sp =>
+      val m = mutable.HashMap[Seq[Any], Long]()
+      cur.foreach { case (rid, vals) => sp.key(vals).foreach(m(_) = rid) }
       m
-    }.toIndexedSeq
+    }
     def dropKeys(rid: Long, vals: IndexedSeq[Any]): Unit =
-      specs.zipWithIndex.foreach { case ((idxs, _, colls), s) =>
-        val k = keyOf(vals, idxs, colls)
-        if (!k.contains(null) && keyIdx(s).get(k).contains(rid))
-          keyIdx(s) -= k
-      }
+      specs.lazyZip(keyIdx).foreach((sp, m) => sp.key(vals).foreach { k =>
+        if (m.get(k).contains(rid)) m -= k
+      })
     def putKeys(rid: Long, vals: IndexedSeq[Any]): Unit =
-      specs.zipWithIndex.foreach { case ((idxs, _, colls), s) =>
-        val k = keyOf(vals, idxs, colls)
-        if (!k.contains(null)) keyIdx(s)(k) = rid
-      }
+      specs.lazyZip(keyIdx).foreach((sp, m) =>
+        sp.key(vals).foreach(m(_) = rid))
     lazy val defVals: Map[Int, Any] = td.cols.zipWithIndex.collect {
       case (c, i) if c.notNull && c.default.isDefined =>
         i -> ssql(
@@ -4032,28 +3511,20 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     // (untracked rows never change during the statement, so the before
     // DF is exact); at most one per spec per supplemented row.
     def supplementPartners(nw: IndexedSeq[Any]): Unit =
-      specs.zipWithIndex.foreach { case ((idxs, _, colls), s) =>
-        val k = keyOf(nw, idxs, colls)
-        if (!k.contains(null) && !keyIdx(s).contains(k)) {
-          val flt = idxs.lazyZip(colls).map((ci, cl) =>
-            normCol(col(td.cols(ci).name), cl) <=>
-              org.apache.spark.sql.functions.lit(collNorm(nw(ci), cl)))
-            .reduce(_ && _)
-          baseDf.filter(flt).collect().foreach { r =>
-            val rid = r.getLong(0)
-            if (!trackedRidSet.contains(rid)) {
+      specs.lazyZip(keyIdx).foreach { (sp, m) =>
+        if (sp.key(nw).exists(!m.contains(_)))
+          checks.interacting(baseDf, td, Seq(sp), Seq(nw)).foreach {
+            case (rid, vals) if !trackedRidSet.contains(rid) =>
               trackedRidSet += rid
-              val vals = (1 to n).map(r.get).toIndexedSeq
               cur(rid) = vals
               putKeys(rid, vals)
               // the row is tracked now: the evolving cur-scan is the
               // authority for self-referential FK membership, not the
               // static untracked-exists snapshot taken at prep time
               fkChecks.foreach(fc =>
-                if (fc.selfRef) fc.exists -= norm(vals(fc.parentCol)))
-            }
+                if (fc.selfRef) fc.exists -= key(vals(fc.parentCol)))
+            case _ =>
           }
-        }
       }
     val tape = Vector.newBuilder[
       (String, Option[IndexedSeq[Any]], Option[IndexedSeq[Any]])]
@@ -4126,30 +3597,24 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               if (abortErr.isEmpty && !skip && !failed) {
                 if (keysChanged) supplementPartners(nw)
                 if (policy == "REPLACE") {
-                  specs.zipWithIndex.foreach { case ((idxs, _, colls), s) =>
-                    val k = keyOf(nw, idxs, colls)
-                    if (!k.contains(null))
-                      keyIdx(s).get(k).filter(_ != c0.rid).foreach { v =>
-                        val vVals = cur(v)
-                        updVictims += vVals
-                        dropKeys(v, vVals)
-                        cur -= v
-                        dirty -= v
-                      }
+                  specs.lazyZip(keyIdx).foreach { (sp, m) =>
+                    sp.key(nw).flatMap(m.get).filter(_ != c0.rid).foreach { v =>
+                      val vVals = cur(v)
+                      updVictims += vVals
+                      dropKeys(v, vVals)
+                      cur -= v
+                      dirty -= v
+                    }
                   }
                 } else {
-                  val hit = specs.zipWithIndex.collectFirst {
-                    case ((idxs, desc, colls), s) if {
-                      val k = keyOf(nw, idxs, colls)
-                      !k.contains(null) &&
-                        keyIdx(s).get(k).exists(_ != c0.rid)
-                    } => desc
+                  val hit = specs.lazyZip(keyIdx).collectFirst {
+                    case (sp, m) if sp.key(nw).flatMap(m.get)
+                      .exists(_ != c0.rid) => sp
                   }
-                  hit.foreach { desc =>
+                  hit.foreach { sp =>
                     if (policy == "IGNORE") skip = true
                     else {
-                      pendingFailError =
-                        Some(s"UNIQUE constraint failed: $desc")
+                      pendingFailError = Some(sp.err)
                       failed = true
                     }
                   }
@@ -4165,9 +3630,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                   if (abortErr.isEmpty) {
                     val v = nw(fc.ci)
                     if (v != null) {
-                      val ok = fc.exists(norm(v)) || (fc.selfRef &&
+                      val ok = fc.exists(key(v)) || (fc.selfRef &&
                         cur.valuesIterator.exists(t =>
-                          norm(t(fc.parentCol)) == norm(v)))
+                          key(t(fc.parentCol)) == key(v)))
                       if (!ok)
                         abortErr = Some("FOREIGN KEY constraint failed")
                     }
@@ -4227,9 +3692,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             val pname = td.cols(pi).name
             val rewrites = tapeRows.iterator.collect {
               case (_, Some(nw), Some(old))
-                if old(pi) != null && norm(old(pi)) != norm(nw(pi)) =>
+                if old(pi) != null && key(old(pi)) != key(nw(pi)) =>
                 old(pi)
-            }.toSeq.distinct
+            }.toSeq.distinctBy(key(_))
             if (rewrites.nonEmpty) {
               val vdf = session.createDataFrame(
                 rewrites.map(Row(_)).asJava,
@@ -4238,8 +3703,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               val present = finalDf.select(col(pname).as("__pv"))
                 .join(broadcast(vdf), col("__pv") === col("__kv"),
                   "left_semi").distinct().collect()
-                .iterator.map(r => norm(r.get(0))).toSet
-              val lost = rewrites.filterNot(v => present(norm(v)))
+                .iterator.map(r => key(r.get(0))).toSet
+              val lost = rewrites.filterNot(v => present(key(v)))
               if (lost.nonEmpty) {
                 val ldf = session.createDataFrame(
                   lost.map(Row(_)).asJava,
@@ -4504,7 +3969,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         s"SELECT $ridSel, $projCols $joinAll", Seq("__rowid")))
       val changedDf = ssql(withGenLevels(td,
         s"SELECT b.`__rowid`, $projCols $joinMatched", Seq("__rowid")))
-      validateUpdatePerRow(work, td, beforeAllDf, newDf, changedDf,
+      constraints(work).update(td, beforeAllDf, newDf, changedDf,
         changedOldDf).map { _ =>
         captureRet(td, changedDf.orderBy("__rowid").collect()
           .toVector.map { r =>
@@ -4578,104 +4043,6 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       Some(s"""cannot $verb generated column "${td.cols(ci).name}"""")
     else None
 
-  /** SQLite-exact UPDATE validation: per ROW, in rowid scan order, against
-    * the LIVE table state. Uniqueness for each updated row i is checked
-    * against already-updated rows' NEW keys (j < i), not-yet-updated rows'
-    * OLD keys (j > i), and unmatched rows' keys — so TRANSIENT collisions
-    * fail exactly where SQLite fails (probed live, OLTP-fuzz seed 5002:
-    * `a = a + 1` over unique {1,2} fails; over {2,1} succeeds; swaps
-    * fail; a final-state check accepts all three). Constraint precedence
-    * is the per-row NOT NULL > CHECK > UNIQUE > FK at the earliest
-    * failing rowid. All legs are min(__rowid) aggregates/joins bounded by
-    * the changed set (the unmatched leg scans the table once — the same
-    * cost the old changed×all probe paid). */
-  private def validateUpdatePerRow(work: Tables, td: TableDef,
-      beforeAllDf: DataFrame, newAllDf: DataFrame,
-      changedNewDf: DataFrame, changedOldDf: DataFrame)
-      : Either[String, Unit] = {
-    var best: Option[(Long, Int, String)] = None
-    def reportAt(rid: Option[Long], pri: Int, msg: String): Unit =
-      rid.foreach { o =>
-        if (best.forall { case (bo, bp, _) =>
-              o < bo || (o == bo && pri < bp) })
-          best = Some((o, pri, msg))
-      }
-    def minRid(df: DataFrame, c: String = "__rowid"): Option[Long] = {
-      val r = df.agg(expr(s"min($c)")).head()
-      if (r.isNullAt(0)) None else Some(r.getLong(0))
-    }
-    td.cols.foreach { c =>
-      if (c.notNull && !c.isRowidAlias)
-        reportAt(minRid(changedNewDf.filter(col(c.name).isNull)), 0,
-          s"NOT NULL constraint failed: ${td.name}.${c.name}")
-    }
-    td.checks.foreach { case (label, ex) =>
-      val bad =
-        try minRid(changedNewDf.filter(s"NOT COALESCE(($ex), true)"))
-        catch { case _: Exception => None } // unresolvable expr: ignore
-      reportAt(bad, 1, s"CHECK constraint failed: $label")
-    }
-    uniqueSpecs(td).foreach { case (idxs, desc, colls) =>
-      val names = idxs.map(td.cols(_).name)
-      def keyed(df: DataFrame, ridAs: String, pfx: String): DataFrame =
-        df.select(col("__rowid").as(ridAs) +:
-          names.lazyZip(colls).map((n2, cl) =>
-            normCol(col(n2), cl).as(pfx + n2)).toSeq: _*)
-      val iNew = keyed(changedNewDf, "__i", "__ki_")
-        .filter(names.map(n2 => col("__ki_" + n2).isNotNull).reduce(_ && _))
-      val keyEq = names.map(n2 =>
-        col("__ki_" + n2) === col("__kj_" + n2)).reduce(_ && _)
-      val jNew = keyed(changedNewDf, "__j", "__kj_")
-      val jOld = keyed(changedOldDf, "__j", "__kj_")
-      val uOld = keyed(beforeAllDf.join(
-          changedOldDf.select(col("__rowid").as("__m")),
-          col("__rowid") === col("__m"), "left_anti"), "__j", "__kj_")
-      val msg = s"UNIQUE constraint failed: $desc"
-      reportAt(minRid(iNew.join(jNew, keyEq && col("__j") < col("__i")),
-        "__i"), 2, msg)
-      reportAt(minRid(iNew.join(jOld, keyEq && col("__j") > col("__i")),
-        "__i"), 2, msg)
-      reportAt(minRid(iNew.join(uOld, keyEq), "__i"), 2, msg)
-    }
-    if (fkEnabled) {
-      td.cols.foreach { c =>
-        c.ref.foreach { case (refTable, refColOpt) =>
-          work.get(refTable.toLowerCase) match {
-            case None => reportAt(Some(Long.MinValue), 3,
-              "FOREIGN KEY constraint failed")
-            case Some(parent) =>
-              val refCol =
-                if (refColOpt.nonEmpty) refColOpt
-                else parent.d.rowidAlias.map(_.name).getOrElse("")
-              val pIdx = parent.d.colIndex(refCol)
-              if (pIdx < 0) reportAt(Some(Long.MinValue), 3,
-                "FOREIGN KEY constraint failed")
-              else {
-                val pdf =
-                  if (parent.d.name.equalsIgnoreCase(td.name)) newAllDf
-                  else storeDf(parent.d, parent.store)
-                val pvals = pdf
-                  .select(col(parent.d.cols(pIdx).name).as("__graft_p"))
-                  .filter(col("__graft_p").isNotNull)
-                reportAt(minRid(changedNewDf.filter(col(c.name).isNotNull)
-                    .join(pvals, col(c.name) === col("__graft_p"),
-                      "left_anti")),
-                  3, "FOREIGN KEY constraint failed")
-              }
-          }
-        }
-      }
-    }
-    best match {
-      case Some((_, _, m)) => Left(m)
-      case None =>
-        // partial/expression unique indexes: final-state scan over the
-        // full NEW frame (a row UPDATEd into a partial set must collide,
-        // probed live)
-        checkAdvanced(td, newAllDf, advancedSpecs(td)).toLeft(())
-    }
-  }
-
   private val deleteRe =
     """(?is)^\s*DELETE\s+FROM\s+[`"]?([A-Za-z_][A-Za-z0-9_]*)[`"]?\s*(?:WHERE\s+(.+?))?\s*;?\s*$""".r
 
@@ -4732,7 +4099,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     }
     def stmt(ch: TableState, ci: Int, keys: Seq[Any]): Option[String] = {
       val cc = ch.d.cols(ci)
-      val ks = keys.filter(_ != null).distinct
+      val ks = keys.filter(_ != null).distinctBy(key(_))
       if (ks.isEmpty) return None
       val base = s"`${cc.name}` IN (${ks.map(sqlLiteral).mkString(", ")})"
       Some(cc.fkDelete match {
@@ -4823,7 +4190,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
         if (lostSet.isEmpty) Nil
         else collectCapped(beforeDf.select(col("__rowid"), col(c))
           .filter(col(c).isInCollection(lostSet)).orderBy("__rowid"),
-          maxDriverRows).map(_.get(1)).distinct
+          maxDriverRows).map(_.get(1)).distinctBy(key(_))
       pi -> ordered
     }.toMap
     // ON DELETE actions fire per displaced ROW's key, in displacement
@@ -4835,7 +4202,7 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       if (!deleteLike) Map.empty
       else victims match {
         case Some(vs) => refd.map(pi =>
-          pi -> vs.iterator.map(_(pi)).filter(_ != null).toSeq.distinct)
+          pi -> vs.iterator.map(_(pi)).filter(_ != null).toSeq.distinctBy(key(_)))
           .toMap
         case None => lost
       }
@@ -4891,9 +4258,9 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     }
     val stmts: Seq[String] =
       if (triggers.nonEmpty)
-        actionLost.values.flatten.toSeq.distinct.flatMap(k =>
+        actionLost.values.flatten.toSeq.distinctBy(key(_)).flatMap(k =>
           acts.flatMap { case (ch, i, pi) =>
-            if (actionLost.getOrElse(pi, Nil).contains(k))
+            if (actionLost.getOrElse(pi, Nil).exists(key(_) == key(k)))
               stmt(ch, i, Seq(k)) else None })
       else acts.flatMap { case (ch, i, pi) =>
         stmt(ch, i, actionLost.getOrElse(pi, Nil)) }
@@ -5052,10 +4419,10 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
               (child.store, doomed, remaining) match {
                 case (Mem(childRows), Left(doomRows), Left(remRows)) =>
                   val doomedVals =
-                    doomRows.map(_._2(pIdx)).filter(_ != null).toSet
+                    doomRows.map(r => key(r._2(pIdx))).filter(_ != null).toSet
                   val side = if (selfRef) remRows else childRows
                   if (side.exists { case (_, vals) =>
-                        vals(i) != null && doomedVals.contains(vals(i)) })
+                        vals(i) != null && doomedVals.contains(key(vals(i))) })
                     return Left("FOREIGN KEY constraint failed")
                 case _ =>
                   val doomDf = doomed.fold(
@@ -5080,189 +4447,6 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       }
     }
     Right(())
-  }
-
-  /** Constraint checks with SQLite's exact error strings
-    * (`db/src/db.rs:373,762`): NOT NULL → UNIQUE → FOREIGN KEY.
-    *
-    * `allRows` is the candidate post-statement state of the mutated table —
-    * the whole table on the Mem path, or just the interacting slice on the
-    * spilled path (equivalent for the uniqueness scan: any row a touched
-    * row could conflict with is in the slice). `selfRemainder` is the
-    * spilled path's untouched remainder, consulted (distributed) for
-    * self-referencing FKs whose parent value lies outside the slice.
-    *
-    * A Left carries the INDEX (in `newRows` order) of the first failing
-    * row, resolved with SQLite's per-row constraint priority — NOT NULL,
-    * CHECK, UNIQUE, FOREIGN KEY (probed live against sqlite 3.40: a row
-    * violating several reports the highest-priority one; across rows the
-    * EARLIEST failing row wins regardless of constraint kind). Callers use
-    * the index to reproduce last_insert_rowid() on aborted statements. */
-  private def validateIdx(
-      work: Tables, td: TableDef,
-      allRows: Vector[(Long, IndexedSeq[Any])],
-      newRows: Seq[IndexedSeq[Any]],
-      selfRemainder: Option[DataFrame] = None,
-      uniqueRemainder: Option[DataFrame] = None)
-      : Either[(String, Int), Unit] = {
-    var bestIdx = Int.MaxValue
-    var bestPri = Int.MaxValue
-    var bestMsg = ""
-    def report(idx: Int, pri: Int, msg: String): Unit =
-      if (idx < bestIdx || (idx == bestIdx && pri < bestPri)) {
-        bestIdx = idx; bestPri = pri; bestMsg = msg
-      }
-    td.cols.zipWithIndex.foreach { case (c, i) =>
-      if (c.notNull && !c.isRowidAlias)
-        newRows.zipWithIndex.foreach { case (r, k) =>
-          if (r(i) == null)
-            report(k, 0, s"NOT NULL constraint failed: ${td.name}.${c.name}")
-        }
-    }
-    // CHECK constraints evaluate through Catalyst over the touched rows;
-    // a NULL result passes (SQLite: unknown is not a failure)
-    if (td.checks.nonEmpty && newRows.nonEmpty) {
-      val idxSchema = StructType(
-        StructField("__vi", IntegerType, nullable = false) +:
-          td.schema.fields)
-      val df = session.createDataFrame(
-        newRows.zipWithIndex.map { case (r, k) =>
-          Row.fromSeq(k +: r)
-        }.asJava, idxSchema)
-      td.checks.foreach { case (label, ex) =>
-        val bad =
-          try df.filter(s"NOT COALESCE(($ex), true)").select("__vi")
-            .collect().map(_.getInt(0))
-          catch { case _: Exception => Array.empty[Int] } // unresolvable: ignore
-        bad.foreach(report(_, 1, s"CHECK constraint failed: $label"))
-      }
-    }
-    // statement row -> its index, by OBJECT IDENTITY (applyPolicySeq
-    // shares instances between its returned rows and `newRows`, and two
-    // candidates may carry the SAME explicit rowid — a rid-keyed map
-    // would collapse them onto the first)
-    val identIdx =
-      new java.util.IdentityHashMap[IndexedSeq[Any], java.lang.Integer]()
-    newRows.zipWithIndex.foreach { case (r, k) =>
-      if (!identIdx.containsKey(r)) identIdx.put(r, Int.box(k))
-    }
-    def idxOf(r: IndexedSeq[Any]): Option[Int] =
-      Option(identIdx.get(r)).map(_.intValue)
-    uniqueSpecs(td).foreach { case (idxs, desc, colls) =>
-      val seen = mutable.HashMap[Seq[Any], IndexedSeq[Any]]()
-      allRows.foreach { case (_, r) =>
-        val key = specKey(idxs, colls, r)
-        if (!key.contains(null)) {
-          seen.get(key) match {
-            case Some(firstRow) =>
-              val k = idxOf(r).orElse(idxOf(firstRow)).getOrElse(0)
-              report(k, 2, s"UNIQUE constraint failed: $desc")
-            case None => seen(key) = r
-          }
-        }
-      }
-      // DO UPDATE SET can write a unique column to a value that was never
-      // among the candidates' own keys, so the interacting slice cannot
-      // contain the remainder row it may now collide with — probe the
-      // untouched remainder with the touched rows' keys (broadcast
-      // semi-join, bounded by the statement, never by the table).
-      uniqueRemainder.foreach { keep =>
-        val keys = newRows.map(r => specKey(idxs, colls, r))
-          .filterNot(_.contains(null)).distinct
-        if (keys.nonEmpty) {
-          val names = idxs.map(td.cols(_).name)
-          val kschema = StructType(idxs.map(i =>
-            StructField("__q_" + td.cols(i).name,
-              td.cols(i).sparkType)).toArray)
-          val kdf = session.createDataFrame(
-            keys.map(k => Row.fromSeq(k)).asJava, kschema)
-          val cond = names.lazyZip(colls).map((nm, cl) =>
-            normCol(col(nm), cl) === col("__q_" + nm)).reduce(_ && _)
-          // collect the CLASHING keys (bounded by the statement's own key
-          // set) so the failure maps back to the first statement row
-          val clash = kdf.join(
-              keep.select(names.map(col): _*), cond, "left_semi")
-            .collect().map(_.toSeq).toSet
-          if (clash.nonEmpty) {
-            val k = newRows.indexWhere { r =>
-              val key = specKey(idxs, colls, r)
-              !key.contains(null) && clash.contains(key)
-            }
-            report(math.max(k, 0), 2, s"UNIQUE constraint failed: $desc")
-          }
-        }
-      }
-    }
-    if (fkEnabled) {
-      td.cols.zipWithIndex.foreach { case (c, i) =>
-        c.ref.foreach { case (refTable, refColOpt) =>
-          work.get(refTable.toLowerCase) match {
-            case None => report(0, 3, "FOREIGN KEY constraint failed")
-            case Some(parent) =>
-              val refCol =
-                if (refColOpt.nonEmpty) refColOpt
-                else parent.d.rowidAlias.map(_.name).getOrElse("")
-              val pIdx = parent.d.colIndex(refCol)
-              if (pIdx < 0) report(0, 3, "FOREIGN KEY constraint failed")
-              else {
-                val need = newRows.map(_(i)).filter(_ != null).distinct
-                if (need.nonEmpty) {
-                  val selfRef = parent.d.name.equalsIgnoreCase(td.name)
-                  // driver set for Mem-resident parents / the local slice …
-                  val local: Set[Any] = (parent.store, selfRef) match {
-                    case (_, true) =>
-                      allRows.map(_._2(pIdx)).filter(_ != null).toSet
-                    case (Mem(rows), _) =>
-                      rows.map(_._2(pIdx)).filter(_ != null).toSet
-                    case _ => Set.empty
-                  }
-                  var missing = need.filterNot(local.contains)
-                  if (missing.nonEmpty) {
-                    // … anti-join for spilled parents / untouched remainder;
-                    // collect the still-missing VALUES (bounded by the
-                    // statement) so the failure maps to its first row
-                    val pdf: Option[DataFrame] = (parent.store, selfRef) match {
-                      case (_, true) => selfRemainder
-                      case (b: Big, _) => Some(storeDf(parent.d, b))
-                      case _ => None
-                    }
-                    pdf.foreach { p =>
-                      val pc = parent.d.cols(pIdx).name
-                      val mdf = session.createDataFrame(
-                        missing.map(v => Row(v)).asJava,
-                        StructType(Seq(StructField("__graft_v",
-                          parent.d.cols(pIdx).sparkType))))
-                      missing = mdf.join(
-                        p.select(col(pc).as("__graft_p"))
-                          .filter(col("__graft_p").isNotNull),
-                        col("__graft_v") === col("__graft_p"), "left_anti")
-                        .collect().map(_.get(0)).toSeq
-                    }
-                    if (missing.nonEmpty) {
-                      val bad = missing.toSet
-                      val k = newRows.indexWhere(r =>
-                        r(i) != null && bad.contains(r(i)))
-                      report(math.max(k, 0), 3,
-                        "FOREIGN KEY constraint failed")
-                    }
-                  }
-                }
-              }
-          }
-        }
-      }
-    }
-    if (bestIdx == Int.MaxValue) {
-      // partial/expression unique indexes: exact final-state scan; the
-      // violating allRows position maps back to its statement-row index
-      // so aborted inserts keep SQLite's partial-advance lid semantics
-      advCheckRows(td, allRows, selfRemainder).foreach { case (m, pos) =>
-        val k =
-          if (pos < allRows.size) idxOf(allRows(pos)._2).getOrElse(0) else 0
-        return Left((m, k))
-      }
-      Right(())
-    } else Left((bestMsg, bestIdx))
   }
 
   // ---------- query execution ---------------------------------------------
@@ -5997,7 +5181,11 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                             returning: Boolean = false): Unit =
     durability.foreach(_.append(tx, stmts, pendingStreamBatch, returning))
 
+  /** The batch just appended is applied in memory ([[Durability.applied]]). */
+  private def applied(): Unit = durability.foreach(_.applied())
+
   private def persist(): Unit = {
+    applied()
     publishCommitted()
     // the journal append already made this batch durable; snapshot on cadence
     if (durability.exists(_.checkpointDue)) checkpointLocked()
@@ -6010,9 +5198,13 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
   }
 
   // superseded Big bucket generations are swept on the same cadence
+  // a stream batch's own persist() may run the cadence checkpoint before
+  // ingestBatch advances the watermark: the checkpoint truncates the
+  // batch's stamped journal line, so it publishes that stamp itself
   private def checkpointLocked(): Unit = durability.foreach { d =>
-    d.checkpoint(liveCatalog(tables), lastStreamBatch, lastRowId, fkEnabled)(
-      sweepBigGenerations(d.root))
+    d.checkpoint(liveCatalog(tables),
+      pendingStreamBatch.fold(lastStreamBatch)(math.max(lastStreamBatch, _)),
+      lastRowId, fkEnabled)(sweepBigGenerations(d.root))
   }
 
   /** See [[Durability.status]]; zeros for an in-memory database. */
@@ -6175,7 +5367,10 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
       }
     } finally replayActive = false
     if (tx && !failed) tables = work
-    persist()
+    // a cadence checkpoint here publishes an applied batch's stamp, as
+    // the live ingestBatch's does
+    pendingStreamBatch = e.streamBatch.filter(_ => !failed)
+    try persist() finally pendingStreamBatch = None
     !failed
   }
 }

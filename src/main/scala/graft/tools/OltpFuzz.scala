@@ -16,10 +16,11 @@ import scala.util.Random
   * last_insert_id, and probe SELECT results.
   *
   * Determinism by construction, same philosophy as SqlFuzz:
-  *  - integer + text domain only (no floats); probes order by integer
-  *    ids, and the grammar-v4 collation arms (NOCASE/RTRIM tables,
-  *    collated unique indexes, expression-level COLLATE) always add an
-  *    id tiebreaker so collation-equal rows compare deterministically;
+  *  - integer + text domain (no floats), plus BLOB keys that probes
+  *    read through hex(); probes order by integer ids, and the grammar-v4
+  *    collation arms (NOCASE/RTRIM tables, collated unique indexes,
+  *    expression-level COLLATE) always add an id tiebreaker so
+  *    collation-equal rows compare deterministically;
   *  - small value pools so UNIQUE/PK/CHECK/FK collisions actually happen;
   *  - the generator tracks transaction depth and live savepoint names so
   *    MOST emitted tx ops are valid, with deliberate invalid ones
@@ -62,6 +63,7 @@ object OltpFuzz {
     private var t3Adv: Option[String] = None // "partial" | "expr" index armed
     private var hasT4 = false // WITHOUT ROWID table armed
     private var hasPlain = false // plain rowid table (no INTEGER PK) armed
+    private var hasTb = false // BLOB-keyed table and its FK child armed
     // t0 has (or once had) a secondary index, so SQLite may answer an
     // unordered scan from a covering index: no unordered t0 probes
     private var t0Indexed = false
@@ -198,11 +200,29 @@ object OltpFuzz {
           x(s"INSERT INTO plain VALUES ('${word()}')")
         }
       }
+      // BLOB keys (grammar v8): a UNIQUE BLOB column from a tiny X'..'
+      // pool plus an FK child, so byte-equal keys collide under every
+      // policy and a child finds its parent by content; probes select
+      // hex(k), keeping BLOB cells out of the envelope
+      if (chance(0.3)) {
+        hasTb = true
+        x("CREATE TABLE tb (id INTEGER NOT NULL PRIMARY KEY, k BLOB UNIQUE, " +
+          "v INTEGER)")
+        x("CREATE TABLE tbc (id INTEGER NOT NULL PRIMARY KEY, " +
+          "bk BLOB REFERENCES tb(k), c INTEGER)")
+        if (chance(0.6)) x("PRAGMA foreign_keys=ON")
+        (1 to int(1, 3)).foreach { _ =>
+          x(s"INSERT OR IGNORE INTO tb(k, v) VALUES (${blob()}, ${int(0, 9)})")
+        }
+      }
       // a few guaranteed rows so early UPDATE/DELETE have targets
       (1 to int(2, 5)).foreach { _ =>
         x(s"INSERT INTO t0(a, b) VALUES (${int(-3, 9)}, '${word()}')")
       }
     }
+
+    private def blob(): String =
+      pick(Seq("X'01'", "X'0102'", "X'02'", "X'ff'", "X'0A0B'"))
 
     private def word(): String =
       pick(Seq("ada", "bo", "cy", "dee", "eli", "fi", "gus",
@@ -225,7 +245,21 @@ object OltpFuzz {
       case _ => s"a % ${int(2, 4)} = 0"
     }
 
-    private def step(): Unit = r.nextInt(37) match {
+    private def step(): Unit = r.nextInt(38) match {
+      case 37 => // BLOB-keyed traffic (grammar v8)
+        if (hasTb) r.nextInt(8) match {
+          case 0 => x(s"INSERT INTO tb(k, v) VALUES (${blob()}, ${int(0, 9)})")
+          case 1 => x(s"INSERT OR ${pick(Seq("IGNORE", "REPLACE"))} INTO " +
+            s"tb(k, v) VALUES (${blob()}, ${int(0, 9)})")
+          case 2 => x(s"INSERT INTO tb(k, v) VALUES (${blob()}, ${int(0, 9)}) " +
+            "ON CONFLICT(k) DO UPDATE SET v = v + excluded.v")
+          case 3 => x(s"UPDATE OR ${pick(Seq("IGNORE", "REPLACE", "ABORT"))} " +
+            s"tb SET k = ${blob()} WHERE id = ${int(1, 6)}")
+          case 4 => x(s"INSERT INTO tbc(bk, c) VALUES (${blob()}, ${int(0, 5)})")
+          case 5 => x(s"DELETE FROM tb WHERE k = ${blob()}")
+          case 6 => q("SELECT id, hex(k), v FROM tb ORDER BY id")
+          case _ => q("SELECT id, hex(bk), c FROM tbc ORDER BY id")
+        } else probe()
       case 32 | 33 => selectShapeProbe() // grammar v7 (VERDICT r14):
       // DISTINCT lists, no-FROM tails, IS/hex/negative-LIMIT forms
       case 34 => connStateProbe() // grammar v7: connection registers
@@ -845,6 +879,10 @@ object OltpFuzz {
       if (t3Adv.isDefined) q("SELECT id, a, b FROM t3 ORDER BY id")
       if (hasT4) q("SELECT k, v FROM t4")
       if (hasPlain) q("SELECT rowid, v FROM plain ORDER BY rowid")
+      if (hasTb) {
+        q("SELECT id, hex(k), v FROM tb ORDER BY id")
+        q("SELECT id, hex(bk), c FROM tbc ORDER BY id")
+      }
       if (hasLog) q("SELECT lid, tag FROM log ORDER BY lid")
       scanProbes().foreach(q)
       if (t0AutoInc) q("SELECT name, seq FROM sqlite_sequence ORDER BY name")

@@ -119,6 +119,26 @@ class DurabilitySpec extends SparkSpec {
     recovers(dir, Seq(1L, 2L))
   }
 
+  test("a stream batch whose own write runs the cadence checkpoint keeps its stamp") {
+    val dir = tmp()
+    val db = open(dir)
+    try {
+      exec(db, "CREATE TABLE t(k INTEGER, v TEXT)")
+      // the ingested batch is the one the checkpoint cadence falls on
+      (1L to Durability.CheckpointEvery - 2).foreach(i =>
+        exec(db, s"INSERT INTO t VALUES ($i, 'r')"))
+      assert(db.ingestBatch("t", 7, Seq(Seq(1000L, "s"))) === Right(1L))
+      assert(db.snapshotStatus.journalSinceCheckpoint === 0L)
+    } finally db.close()
+    val again = open(dir)
+    try {
+      assert(again.streamBatchWatermark === 7L)
+      assert(again.ingestBatch("t", 7, Seq(Seq(1000L, "s"))) === Right(0L))
+      assert(rows(again, "SELECT COUNT(*) FROM t WHERE k = 1000") ===
+        Seq(Seq(Value.Integer(1))))
+    } finally again.close()
+  }
+
   test("a journal entry round-trips with its stream stamp and RETURNING mark") {
     val stamped = JournalEntry(7, transaction = true,
       Seq("INSERT INTO t VALUES ('q\"uo\\te\nline')", "DELETE FROM t"),

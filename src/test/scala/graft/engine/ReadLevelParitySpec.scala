@@ -49,6 +49,16 @@ class ReadLevelParitySpec extends SparkSpec {
     db
   }
 
+  test("a strong read on a file-backed db sees a write before the next checkpoint") {
+    val db = open()
+    try {
+      exec(db, "CREATE TABLE t(k INTEGER, v TEXT)", "INSERT INTO t VALUES (1,'a')")
+      val want = """[{"columns":["k","v"],"types":["integer","text"],"values":[[1,"a"]]}]"""
+      assert(render(db.query(req("SELECT k, v FROM t"), ReadLevel.Strong)) === want)
+      assert(render(db.query(req("SELECT k, v FROM t"), ReadLevel.Weak)) === want)
+    } finally db.close()
+  }
+
   test("SQLite semantics at every level: integer division, rowid, LIKE, views") {
     val db = evidenceDb()
     try {

@@ -94,8 +94,10 @@ for line in open(path):
         for t in rec["tables"]:
             if t not in names:
                 continue
+            # a BLOB cell is dumped as its X'..' literal
             srows = sorted(
-                [list(r) for r in cur.execute(f"SELECT * FROM {t}")],
+                [[f"X'{v.hex().upper()}'" if isinstance(v, bytes) else v
+                  for v in r] for r in cur.execute(f"SELECT * FROM {t}")],
                 key=repr)
             grows = sorted(rec["tables"][t], key=repr)
             if srows != grows:
