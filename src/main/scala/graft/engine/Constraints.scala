@@ -15,7 +15,8 @@ import scala.jdk.CollectionConverters._
   * under the column's collation, a BLOB by its bytes. Here every
   * driver-side comparison goes through [[Constraints.key]], every frame
   * comparison through a [[Constraints.Spec]]'s normalized key columns,
-  * and every probe of a frame for driver-held keys through [[probe]].
+  * and every probe of a frame for driver-held keys through [[probe]]
+  * (a spec's keys) or [[present]] (one column's values).
   *
   * Errors keep SQLite's per-row priority: across rows the earliest
   * failing row wins, within one row NOT NULL > CHECK > UNIQUE > FOREIGN
@@ -174,6 +175,19 @@ private[engine] final class Constraints(session: SparkSession,
         (r.getLong(0), (1 to td.cols.size).map(r.get).toIndexedSeq))
         .distinctBy(_._1).toVector.sortBy(_._1))
 
+  /** The keys of the values of column `c` of `df` that are among `vals`
+    * (of type `t`): a broadcast semi-join bounded by `vals`. */
+  def present(df: DataFrame, c: String, t: DataType,
+              vals: Seq[Any]): Set[Any] =
+    if (vals.isEmpty) Set.empty
+    else {
+      val vdf = session.createDataFrame(vals.map(Row(_)).asJava,
+        StructType(Seq(StructField("__kv", t))))
+      df.select(col(c).as("__pv"))
+        .join(broadcast(vdf), col("__pv") === col("__kv"), "left_semi")
+        .distinct().collect().iterator.map(r => key(r.get(0))).toSet
+    }
+
   /** Each enforced FOREIGN KEY column of `td` with its parent table and
     * parent column; None when either does not exist, which fails every
     * statement writing the table. Empty while FKs are off. */
@@ -287,21 +301,16 @@ private[engine] final class Constraints(session: SparkSession,
             case _ => Set.empty
           }
           var missing = need.filterNot(v => local.contains(key(v)))
-          // … anti-join for spilled parents / the untouched remainder;
-          // collect the still-missing VALUES (bounded by the statement)
+          // … a probe of spilled parents / the untouched remainder
           val pdf: Option[DataFrame] = (parent.store, selfRef) match {
             case (_, true) => selfRemainder
             case (b: Big, _) => Some(b.df)
             case _ => None
           }
           if (missing.nonEmpty) pdf.foreach { p =>
-            val mdf = session.createDataFrame(
-              missing.map(v => Row(v)).asJava,
-              StructType(Seq(StructField("__graft_v",
-                parent.d.cols(pIdx).sparkType))))
-            missing = mdf.join(parentValues(p, parent.d, pIdx),
-              col("__graft_v") === col("__graft_p"), "left_anti")
-              .collect().map(_.get(0)).toSeq
+            val pc = parent.d.cols(pIdx)
+            val found = present(p, pc.name, pc.sparkType, missing)
+            missing = missing.filterNot(v => found(key(v)))
           }
           if (missing.nonEmpty) {
             val bad = missing.map(key(_)).toSet
@@ -406,12 +415,13 @@ private[engine] final class Constraints(session: SparkSession,
 
   /** The check of a bulk statement whose policy already resolved its
     * conflicts: the first failing leg (NOT NULL, CHECK, then FOREIGN KEY)
-    * over the landing rows `newDf` (with `__ord`), then the partial and
-    * expression indexes over the post-statement frame `finalDf`. */
+    * over the landing rows `newDf` (with `__ord`); `finalDf` is the
+    * post-statement table. A policy statement never reaches a table with
+    * a partial or expression index ([[policyBoundary]]). */
   def bulk(td: TableDef, newDf: DataFrame,
            finalDf: DataFrame): Either[String, Unit] =
     frameFailures(td, newDf, "__ord", finalDf)(_ => Nil).headOption
-      .map(_._3).orElse(advanced(td, finalDf)).toLeft(())
+      .map(_._3).toLeft(())
 
   /** The frame of a table's current store. */
   private def frame(ts: TableState): DataFrame = ts.store match {
@@ -555,15 +565,17 @@ private[engine] object Constraints {
     specs.exists(_.clash(row, vals))
 
   /** Calls `dup` with each row whose key under `sp` an earlier row
-    * already holds, and that earlier row. */
+    * already holds, and that earlier row. One hash lookup per row: every
+    * driver-row statement scans its whole table here. */
   private def duplicates(rows: Iterable[IndexedSeq[Any]], sp: Spec)(
       dup: (IndexedSeq[Any], IndexedSeq[Any]) => Unit): Unit = {
     val seen = mutable.HashMap[Seq[Any], IndexedSeq[Any]]()
-    rows.foreach(r => sp.key(r).foreach { k =>
-      seen.get(k) match {
-        case Some(first) => dup(r, first)
-        case None => seen(k) = r
-      }
+    rows.foreach(r => sp.key(r) match {
+      case Some(k) =>
+        val n = seen.size
+        val first = seen.getOrElseUpdate(k, r)
+        if (seen.size == n) dup(r, first)
+      case None =>
     })
   }
 

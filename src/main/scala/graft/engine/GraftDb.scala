@@ -3470,15 +3470,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
             if (!selfRef) storeDf(parent.d, parent.store)
             else baseDf.join(broadcast(ridsDf(trackedRidSet)),
               col("__rowid") === col("__qr"), "left_anti")
-          val cdf = session.createDataFrame(
-            cands.map(Row(_)).asJava,
-            StructType(Seq(StructField("__kv",
-              td.schema.fields(ci).dataType, nullable = true))))
-          val ex = mutable.HashSet[Any]() ++ pBase
-            .select(col(parent.d.cols(pIdx).name).as("__pv"))
-            .filter(col("__pv").isNotNull)
-            .join(broadcast(cdf), col("__pv") === col("__kv"), "left_semi")
-            .distinct().collect().iterator.map(r => key(r.get(0)))
+          val ex = mutable.HashSet[Any]() ++ checks.present(pBase,
+            parent.d.cols(pIdx).name, td.schema.fields(ci).dataType, cands)
           fkChecks :+= FkC(ci, selfRef, pIdx, ex)
         }
     }
@@ -3696,20 +3689,10 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                 old(pi)
             }.toSeq.distinctBy(key(_))
             if (rewrites.nonEmpty) {
-              val vdf = session.createDataFrame(
-                rewrites.map(Row(_)).asJava,
-                StructType(Seq(StructField("__kv",
-                  td.schema.fields(pi).dataType, nullable = true))))
-              val present = finalDf.select(col(pname).as("__pv"))
-                .join(broadcast(vdf), col("__pv") === col("__kv"),
-                  "left_semi").distinct().collect()
-                .iterator.map(r => key(r.get(0))).toSet
-              val lost = rewrites.filterNot(v => present(key(v)))
+              val kept = checks.present(finalDf, pname,
+                td.schema.fields(pi).dataType, rewrites)
+              val lost = rewrites.filterNot(v => kept(key(v)))
               if (lost.nonEmpty) {
-                val ldf = session.createDataFrame(
-                  lost.map(Row(_)).asJava,
-                  StructType(Seq(StructField("__kv",
-                    td.schema.fields(pi).dataType, nullable = true))))
                 val orphaned = work.values.exists { ch =>
                   ch.d.cols.exists { cc =>
                     cc.ref.exists { case (rt, rc) =>
@@ -3722,11 +3705,8 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
                       val chDf =
                         if (ch.d.name.equalsIgnoreCase(td.name)) finalDf
                         else storeDf(ch.d, ch.store)
-                      chDf.select(col(cc.name).as("__cv"))
-                        .filter(col("__cv").isNotNull)
-                        .join(broadcast(ldf),
-                          col("__cv") === col("__kv"), "left_semi")
-                        .limit(1).count() > 0
+                      checks.present(chDf, cc.name,
+                        td.schema.fields(pi).dataType, lost).nonEmpty
                     }
                   }
                 }
@@ -5197,10 +5177,10 @@ final class GraftDb private (parent: SparkSession, root: Option[Path],
     else { checkpointLocked(); Right(()) }
   }
 
-  // superseded Big bucket generations are swept on the same cadence
-  // a stream batch's own persist() may run the cadence checkpoint before
+  // superseded Big bucket generations are swept on the same cadence.
+  // A stream batch's own persist() may run the cadence checkpoint before
   // ingestBatch advances the watermark: the checkpoint truncates the
-  // batch's stamped journal line, so it publishes that stamp itself
+  // batch's stamped journal line, so it publishes that stamp itself.
   private def checkpointLocked(): Unit = durability.foreach { d =>
     d.checkpoint(liveCatalog(tables),
       pendingStreamBatch.fold(lastStreamBatch)(math.max(lastStreamBatch, _)),
